@@ -222,6 +222,7 @@ object Bench {
   // ---------------------------------------------------------------- //
 
   private def orchestrate(): Unit = {
+    dropStaleSummary()
     val names = SparkEntry.queries.keys.toSeq.sorted
     // st last: streaming leaves the most residue on the host (tmpfs
     // checkpoint pages, RocksDB temp dirs) — even across processes the
@@ -444,11 +445,8 @@ object Bench {
     // probe output notes it on stderr so a forgotten env var cannot
     // silently flatter a number.
     sys.env.get("GRAFT_SPARK_EXTRA").foreach { s =>
-      System.err.println(s"[bench] GRAFT_SPARK_EXTRA active: $s")
-      s.split(";").filter(_.nonEmpty).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2); builder.config(k, v) }
-    }
-    val spark = builder.getOrCreate()
+      System.err.println(s"[bench] GRAFT_SPARK_EXTRA active: $s") }
+    val spark = GraftSessions.withExtraConf(builder).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Warm up JIT/codegen + page cache so the first measured query isn't
     // charged the session's startup cost.
@@ -741,6 +739,12 @@ object Bench {
   /** Fixed sibling path of BENCH_FULL.json holding the exact short
     * summary line (driver-parse fallback when stdout is decorated). */
   private[graft] def summaryPath: String = outPath("BENCH_SUMMARY.json")
+
+  /** Run at orchestrator start: a run that crashes before [[emit]] must
+    * leave no summary, not the previous run's, for a launcher to read
+    * as this run's. */
+  private[graft] def dropStaleSummary(): Boolean =
+    java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(summaryPath))
 
   /** Artifact directory — cwd for the real bench; the
     * `graft.bench.out.dir` property lets the spec exercise [[emit]]

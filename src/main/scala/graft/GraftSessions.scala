@@ -49,4 +49,22 @@ object GraftSessions {
       .config("spark.sql.shuffle.partitions", cpus)) {
       case (b, (k, v)) => b.config(k, v)
     }
+
+  /** `builder` plus the ad-hoc conf overrides of a local experiment,
+    * `GRAFT_SPARK_EXTRA="spark.x=1;spark.y=2"`. Verify, Bench and
+    * StProfile opt in; [[builder]] never reads the variable. */
+  def withExtraConf(builder: SparkSession.Builder): SparkSession.Builder =
+    sys.env.get("GRAFT_SPARK_EXTRA").fold(builder)(parseExtraConf(_)
+      .foldLeft(builder) { case (b, (k, v)) => b.config(k, v) })
+
+  /** `k1=v1;k2=v2` as pairs. Empty tokens are skipped; a token without
+    * `=`, or with an empty key, fails with a message naming it. */
+  def parseExtraConf(spec: String): Seq[(String, String)] =
+    spec.split(";").toSeq.filter(_.nonEmpty).map { kv =>
+      kv.split("=", 2) match {
+        case Array(k, v) if k.nonEmpty => k -> v
+        case _ => throw new IllegalArgumentException(
+          s"GRAFT_SPARK_EXTRA entry '$kv' is not key=value")
+      }
+    }
 }

@@ -28,11 +28,7 @@ object StProfile {
     val builder = GraftSessions.builder("32")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows", "false")
-    // Ad-hoc conf overrides for floor experiments, e.g.
-    // GRAFT_SPARK_EXTRA="spark.x=1;spark.y=2" (same contract as Verify).
-    sys.env.get("GRAFT_SPARK_EXTRA").foreach(_.split(";").filter(_.nonEmpty)
-      .foreach { kv => val Array(k, v) = kv.split("=", 2); builder.config(k, v) })
-    val spark = builder.getOrCreate()
+    val spark = GraftSessions.withExtraConf(builder).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     final case class Batch(query: String, batchId: Long,

@@ -8,12 +8,8 @@ object Verify {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // Shared driver-session contract (incl. the strict plan guard —
     // see GraftSessions.common, pinned by PlanGuardSpec).
-    val builder = GraftSessions.builder(cpus)
-    // Ad-hoc conf overrides for local experiments, e.g.
-    // GRAFT_SPARK_EXTRA="spark.x=1;spark.y=2".
-    sys.env.get("GRAFT_SPARK_EXTRA").foreach(_.split(";").filter(_.nonEmpty)
-      .foreach { kv => val Array(k, v) = kv.split("=", 2); builder.config(k, v) })
-    val spark = builder.getOrCreate()
+    val spark = GraftSessions.withExtraConf(GraftSessions.builder(cpus))
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

@@ -1,11 +1,14 @@
 package graft.queries
 
 import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import scala.collection.concurrent.TrieMap
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.{DecimalType, StructType}
 import graft.core._
 import graft.core.Codecs._
+import graft.operators.BatchExecutor.{Emitted, SinkTable}
 import graft.sources.Sources
 import graft.streaming.{FileLookups, LookupFile, StreamExecutor,
   StreamSinks, StreamVisitor}
@@ -198,55 +201,151 @@ object StreamingQueries {
     arr
   }
 
-  /** State-shard sizing for the fixture replays. The reference binds
-    * state shards to TOPIC partitions — a goka processor runs exactly
-    * one state store per input partition (`/root/reference/
-    * partition_processor.go:60-72`), so shard count scales with the
-    * topic, never with worker count. Spark instead defaults
-    * stateful-operator partitioning to `spark.sql.shuffle.partitions`
-    * (= cores here), which over-shards small topics: every micro-batch
-    * pays one RocksDB load+commit+changelog-upload per shard, so a
-    * 100k-row fixture at 32 shards is per-batch-overhead-bound
-    * (measured on this host: st01 20.0 s at 32 shards vs 5.0 s at 8,
-    * identical results, identical cores). The shard count is DERIVED
-    * from the staged topic by [[bindShardsToTopic]] at source
-    * declaration; this wrapper only scopes the conf change so the
-    * session's batch queries keep their own partitioning. A 100 TB
-    * deployment's shard count rises with the topic's partition count —
-    * the knob scales with data volume, not core count. */
-  private def withStateShards[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val old = spark.conf.get(key)
-    try body finally spark.conf.set(key, old)
+  // ---------------------------------------------------------------- //
+  //  The replay runner: one topic source, one sink per shape, one     //
+  //  start/drain/stop path for every st query.                        //
+  // ---------------------------------------------------------------- //
+
+  /** A streaming query not started yet: a sink bound to its input. */
+  private[queries] type Start = () => StreamingQuery
+
+  private val MessageSchema = Encoders.product[Message].schema
+  private val ShardsKey = "spark.sql.shuffle.partitions"
+
+  /** Per session, its own shard count from before the first [[topic]]
+    * binding that no [[withQueries]] has put back yet. */
+  private val unboundShards = TrieMap.empty[SparkSession, String]
+
+  /** A staged directory as a file stream source, one file per
+    * micro-batch (file mtimes order the batches, see [[stageFile]]).
+    * Only `*.parquet` files are messages: st05 keeps its lookup file
+    * beside them. The stateless lake replays (st51-st53) read through
+    * it directly: no state store, so no shard binding. */
+  private def fileSource(spark: SparkSession, dir: String,
+      schema: StructType): DataFrame =
+    spark.readStream.schema(schema)
+      .option("maxFilesPerTrigger", 1)
+      .option("pathGlobFilter", "*.parquet")
+      .parquet(dir)
+
+  /** The staged topic `staging` as a stream source, with the session's
+    * state-shard count bound to the topic's partition count: the
+    * reference's shards-follow-topic-partitions rule
+    * (`partition_processor.go:60-72`: one partition processor, hence
+    * one state store, per TOPIC partition, never per worker). A staged
+    * directory models one topic and its parquet files are its
+    * partitions; the floor of 2 keeps a single-file replay from
+    * collapsing the fold to one task. Spark instead sizes stateful
+    * operators by `spark.sql.shuffle.partitions` (= cores here), which
+    * over-shards small topics: every micro-batch pays one RocksDB
+    * load + commit + changelog upload per shard (measured: st01 20.0 s
+    * at 32 shards vs 5.0 s at 8, identical results and cores). The
+    * value in force at `.start()` fixes a query's shard count, so the
+    * binding happens here, after staging; [[withQueries]] puts the
+    * session's own value back, so batch queries keep theirs. */
+  private def topic(spark: SparkSession, staging: String,
+      schema: StructType): DataFrame = {
+    bindShards(spark, staging)
+    fileSource(spark, staging, schema)
   }
 
-  /** Bind the session's state-shard count to a staged topic's partition
-    * count — the reference's shards-follow-topic-partitions rule
-    * (`/root/reference/partition_processor.go:60-72`: one partition
-    * processor per TOPIC partition, never per worker). A staged
-    * directory models one topic; its parquet files are its partitions.
-    * Called exactly where the topic is declared as a stream source:
-    * staging is complete by then, the query has not started, and the
-    * value of `spark.sql.shuffle.partitions` at `.start()` is what
-    * fixes the state store's shard count. GRAFT_STATE_SHARDS remains
-    * as an explicit override for topic layouts that are not
-    * file-per-partition; the floor of 2 keeps a single-file replay
-    * from collapsing the fold to one task. Returns the path so call
-    * sites stay one-expression: `.parquet(bindShardsToTopic(spark, staging))`. */
-  private def bindShardsToTopic(spark: SparkSession, staging: String): String = {
+  private def bindShards(spark: SparkSession, staging: String): Unit = {
     val ls = new java.io.File(staging).listFiles()
     val files = if (ls == null) 0 else ls.count(_.getName.endsWith(".parquet"))
-    spark.conf.set("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("GRAFT_STATE_SHARDS", math.max(2, files).toString))
-    staging
+    unboundShards.putIfAbsent(spark, spark.conf.get(ShardsKey))
+    spark.conf.set(ShardsKey, math.max(2, files).toString)
   }
 
-  private def runToTable(spark: SparkSession, df: DataFrame,
-      mode: String = "update"): DataFrame = {
-    val name = s"stream_result_${nameSeq.incrementAndGet()}"
-    val q = df.writeStream.format("memory").queryName(name)
+  /** [[topic]] over staged [[Message]]s. */
+  private def messageTopic(spark: SparkSession,
+      staging: String): Dataset[Message] =
+    topic(spark, staging, MessageSchema).as(Encoders.product[Message])
+
+  /** A relay topic that an upstream query of the same chain writes: no
+    * batch cap (each batch takes what the upstream has written so far)
+    * and no binding (the chain keeps its source topic's shard count). */
+  private def relayTopic(spark: SparkSession, dir: String): Dataset[Message] =
+    spark.readStream.schema(MessageSchema).parquet(dir)
+      .as(Encoders.product[Message])
+
+  // Sinks, one per shape; each is a Start for withQueries to run.
+
+  /** An in-memory table named `name` — in update mode the changelog of
+    * upserts, in append mode each row once. */
+  private[queries] def memorySink(df: DataFrame, name: String,
+      mode: String): Start =
+    () => df.writeStream.format("memory").queryName(name)
       .outputMode(mode).start()
-    try q.processAllAvailable() finally q.stop()
+
+  /** `each(batch, batchId)` consumes every micro-batch — usually by
+    * appending it to a parquet table ([[parquetSink]]), the recoverable
+    * sink a deployment uses. With `ckpt` the query can restart from
+    * that checkpoint; without, Spark keeps a temporary one and deletes
+    * it on stop. */
+  private def batchSink(df: DataFrame, mode: String,
+      ckpt: Option[String])(each: (DataFrame, Long) => Unit): Start = () => {
+    val w = df.writeStream.outputMode(mode)
+    ckpt.fold(w)(w.option("checkpointLocation", _))
+      .foreachBatch { (b: Dataset[Row], id: Long) => each(b, id) }
+      .start()
+  }
+
+  /** [[batchSink]] appending `f` of each micro-batch to parquet `dir`. */
+  private[queries] def parquetSink(df: DataFrame, dir: String, mode: String,
+      ckpt: Option[String])(f: DataFrame => DataFrame): Start =
+    batchSink(df, mode, ckpt)((b, _) => f(b).write.mode("append").parquet(dir))
+
+  /** The exactly-once parquet file sink, partitioned by `partitionCol`:
+    * its `_spark_metadata` commit log hides a half-written batch from
+    * readers of `path`. */
+  private def fileSink(df: DataFrame, path: String, ckpt: String,
+      partitionCol: String): Start =
+    () => df.writeStream.format("parquet").option("path", path)
+      .option("checkpointLocation", ckpt).partitionBy(partitionCol).start()
+
+  /** [[StreamSinks.routeOutputs]]: each output topic to its own
+    * directory (a chain's relays), the table changelog to `tableDir`;
+    * checkpointed in a dir deleted at JVM exit. */
+  private def routed(out: Dataset[Emitted],
+      dirByTopic: Map[String, String], tableDir: Option[String]): Start =
+    () => StreamSinks.routeOutputs(out, dirByTopic,
+      tempDir("graft_sinks_ckpt"), tableDir)
+
+  /** The one lifecycle of every st query, goka's `Cleanup` discipline
+    * (`processor.go:720-749`: a group stops all its partition
+    * processors, whichever one failed): start `starts` in order, run
+    * `body` over the started queries (usually [[drain]]), then stop
+    * every query that started, in reverse order, on every path. The
+    * first error is rethrown and a failing `stop()` is added to it as
+    * suppressed. Last, the shard count [[topic]] bound is put back. */
+  private[queries] def withQueries[T](spark: SparkSession)(starts: Start*)(
+      body: Seq[StreamingQuery] => T): T = {
+    val started = scala.collection.mutable.ArrayBuffer.empty[StreamingQuery]
+    var first: Throwable = null
+    def fail(t: Throwable): Unit =
+      if (first == null) first = t else first.addSuppressed(t)
+    val result =
+      try { starts.foreach(s => started += s()); Some(body(started.toSeq)) }
+      catch { case t: Throwable => fail(t); None }
+    try started.reverseIterator.foreach { q =>
+      try q.stop() catch { case t: Throwable => fail(t) }
+    } finally unboundShards.remove(spark).foreach(spark.conf.set(ShardsKey, _))
+    if (first != null) throw first
+    result.get
+  }
+
+  /** The usual [[withQueries]] body: drain each query in start order,
+    * so a chain's upstream query has written all of its relay output
+    * before the consumer drains it. */
+  private[queries] def drain(queries: Seq[StreamingQuery]): Unit =
+    queries.foreach(_.processAllAvailable())
+
+  /** Drain `upstream` and then `df` into a memory table ([[memorySink]])
+    * and read the table back; it outlives its stopped query. */
+  private def runToTable(spark: SparkSession, df: DataFrame, mode: String,
+      upstream: Start*): DataFrame = {
+    val name = s"stream_result_${nameSeq.incrementAndGet()}"
+    withQueries(spark)(upstream :+ memorySink(df, name, mode): _*)(drain)
     spark.table(name)
   }
 
@@ -330,7 +429,7 @@ object StreamingQueries {
     * files-arriving-in-a-directory incremental ingest. No driver-side
     * collect/MemoryStream: that would serialize the whole fixture into
     * one task binary, a non-starter at real scale. */
-  def streamCount(spark: SparkSession, dir: String): DataFrame = withStateShards(spark) {
+  def streamCount(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val graph = GroupGraph.define("stream-counter")(
       Input("events", StringCodec, ProcessCallback { (ctx, _) =>
@@ -339,17 +438,14 @@ object StreamingQueries {
       }),
       Persist(Int64Codec))
     val staged = stagedEvents(spark, dir)
-    val stream = spark.readStream
-      .schema(Sources.eventMessages(spark, dir).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(bindShardsToTopic(spark, staged)).as[Message]
+    val stream = messageTopic(spark, staged)
     val out = new StreamExecutor(graph).run(spark, stream)
-    import graft.operators.BatchExecutor.SinkTable
     val table = out.filter(_.sink == SinkTable)
       .map(e => (e.key, Int64Codec.decode(e.value))).toDF("key", "cnt")
     // update-mode memory sink appends upserts; latest per key wins.
     // cnt only grows, so max(cnt) == last upsert.
-    runToTable(spark, table).groupBy(col("key")).agg(max(col("cnt")).as("cnt"))
+    runToTable(spark, table, "update")
+      .groupBy(col("key")).agg(max(col("cnt")).as("cnt"))
   }
 
   /** Streaming ingest-time exact dedup — d01's online twin and the point
@@ -366,9 +462,8 @@ object StreamingQueries {
     * the state store across batches; within a batch the executor applies
     * rows in timestamp order. First-seen therefore equals min(doc_id)
     * and the result hash-matches d01's batch oracle. */
-  def streamDedup(spark: SparkSession, dir: String): DataFrame = withStateShards(spark) {
+  def streamDedup(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import graft.operators.BatchExecutor.SinkTable
     val codec = Codecs.twoLongs[DedupState](s => (s.keep, s.cnt))(DedupState.apply)
     val graph = GroupGraph.define("stream-dedup")(
       Input("docs", Int64Codec, ProcessCallback { (ctx, msg) =>
@@ -384,10 +479,7 @@ object StreamingQueries {
       expr("timestamp_micros(doc_id)"), col("doc_id"))
     val staging = tempDir("graft_stream_dedup")
     stageTwoBatches(spark, msgs, staging)
-    val stream = spark.readStream
-      .schema(org.apache.spark.sql.Encoders.product[Message].schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(bindShardsToTopic(spark, staging)).as[Message]
+    val stream = messageTopic(spark, staging)
     val out = new StreamExecutor(graph).run(spark, stream)
     val table = out.filter(_.sink == SinkTable)
       .map { e =>
@@ -399,7 +491,7 @@ object StreamingQueries {
     // would re-seed keep with its own first doc_id and the final upsert
     // would carry it, so this collapse genuinely exercises first-seen
     // state carry where a min() could mask the regression.
-    runToTable(spark, table).groupBy(col("fp"))
+    runToTable(spark, table, "update").groupBy(col("fp"))
       .agg(max_by(col("keep_id"), col("cnt")).as("keep_id"),
         max(col("cnt")).as("cnt"))
   }
@@ -431,9 +523,8 @@ object StreamingQueries {
     * grows, so max_by(own, n) keeps the LAST upsert per doc — a state
     * regression that re-seeded `own` mid-stream would surface, not be
     * masked by a min() collapse. */
-  def streamNearDup(spark: SparkSession, dir: String): DataFrame = withStateShards(spark) {
+  def streamNearDup(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import graft.operators.BatchExecutor.SinkTable
     val bucketGraph = GroupGraph.define("bucket-owner")(
       Input("buckets", Int64Codec, ProcessCallback { (ctx, msg) =>
         val id = msg.asInstanceOf[Long]
@@ -464,28 +555,16 @@ object StreamingQueries {
     val staging = tempDir("graft_stream_neardup")
     val relayDir = tempDir("graft_stream_neardup_relay")
     stageTwoBatches(spark, msgs, staging)
-    val msgSchema = org.apache.spark.sql.Encoders.product[Message].schema
-    val stream1 = spark.readStream.schema(msgSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(bindShardsToTopic(spark, staging)).as[Message]
-    val q1 = StreamSinks.routeOutputs(
-      new StreamExecutor(bucketGraph).run(spark, stream1),
-      Map("owners" -> relayDir))
-    val stream2 = spark.readStream.schema(msgSchema)
-      .parquet(relayDir).as[Message]
-    val table = new StreamExecutor(collectGraph).run(spark, stream2)
+    val owners = routed(new StreamExecutor(bucketGraph)
+      .run(spark, messageTopic(spark, staging)),
+      Map("owners" -> relayDir), None)
+    val table = new StreamExecutor(collectGraph)
+      .run(spark, relayTopic(spark, relayDir))
       .filter(_.sink == SinkTable)
       .map { e =>
         val s = codec.decode(e.value); (e.key, s.own, s.n)
       }.toDF("doc_key", "own", "n")
-    val name = s"stream_result_${nameSeq.incrementAndGet()}"
-    val q2 = table.writeStream.format("memory").queryName(name)
-      .outputMode("update").start()
-    try {
-      q1.processAllAvailable() // bucket owners drain both batches
-      q2.processAllAvailable() // collector drains the relay it fed
-    } finally { q1.stop(); q2.stop() }
-    spark.table(name).groupBy(col("doc_key"))
+    runToTable(spark, table, "update", owners).groupBy(col("doc_key"))
       .agg(max_by(col("own"), col("n")).as("own"))
       .select(col("doc_key").cast("long").as("doc_id"),
         when(col("own") < col("doc_key").cast("long"), col("own"))
@@ -518,9 +597,8 @@ object StreamingQueries {
     * the same per-message cost the reference's lookup processors pay
     * (`examples/3-messaging`'s translator), and no batch re-scan of the
     * corpus is ever needed to admit a new document. */
-  def streamDecontaminate(spark: SparkSession, dir: String): DataFrame = withStateShards(spark) {
+  def streamDecontaminate(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import graft.operators.BatchExecutor.SinkTable
     val codec = Codecs.twoLongs[DecontamState](s => (s.n, s.hits))(DecontamState.apply)
     val graph = GroupGraph.define("stream-decontam")(
       Input("shingles", StringCodec, ProcessCallback { (ctx, msg) =>
@@ -551,17 +629,14 @@ object StreamingQueries {
       col("s"), expr("timestamp_micros(doc_id)"), col("doc_id"))
     val staging = tempDir("graft_stream_decontam")
     stageTwoBatches(spark, msgs, staging)
-    val stream = spark.readStream
-      .schema(org.apache.spark.sql.Encoders.product[Message].schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(bindShardsToTopic(spark, staging)).as[Message]
+    val stream = messageTopic(spark, staging)
     val out = new StreamExecutor(graph).run(spark, stream,
       lookupSnapshots = Map("bench" -> benchSet))
     val table = out.filter(_.sink == SinkTable)
       .map { e =>
         val s = codec.decode(e.value); (e.key, s.n, s.hits)
       }.toDF("doc_key", "n", "hits")
-    runToTable(spark, table).groupBy(col("doc_key"))
+    runToTable(spark, table, "update").groupBy(col("doc_key"))
       .agg(max(col("n")).as("n_shingles"),
         max_by(col("hits"), col("n")).as("n_shared"))
       .select(col("doc_key").cast("long").as("doc_id"),
@@ -606,9 +681,8 @@ object StreamingQueries {
     * fingerprint, decontam state by doc, the bench replica is bounded
     * by the eval suite — every stage is the proven st08/st11 shape and
     * the chain adds no new shuffle beyond the two keyed exchanges. */
-  def streamCurate(spark: SparkSession, dir: String): DataFrame = withStateShards(spark) {
+  def streamCurate(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import graft.operators.BatchExecutor.SinkTable
     val dedupCodec =
       Codecs.twoLongs[DedupState](s => (s.keep, s.cnt))(DedupState.apply)
     val dedupGraph = GroupGraph.define("curate-dedup")(
@@ -651,14 +725,10 @@ object StreamingQueries {
     val staging = tempDir("graft_stream_curate")
     val relayDir = tempDir("graft_stream_curate_relay")
     stageTwoBatches(spark, msgs, staging)
-    val msgSchema = org.apache.spark.sql.Encoders.product[Message].schema
 
     // Stage 1+2: stateless gate + re-key by fingerprint, then the keyed
     // first-seen fold; admitted docs relay onto the `kept` topic.
-    val stream1 = spark.readStream.schema(msgSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(bindShardsToTopic(spark, staging)).as[Message]
-    val gated = stream1.toDF()
+    val gated = messageTopic(spark, staging).toDF()
       .withColumn("text", col("value").cast("string"))
       // minStopHits = 1: fixture calibration, see PipelineQueries.gopher
       .where(graft.ops.TextAnalysis.gopherKeep(col("text"), minStopHits = 1))
@@ -666,15 +736,12 @@ object StreamingQueries {
         lit("gated").as("topic"), col("partition"), col("offset"),
         col("timestamp"), col("headers"))
       .as[Message]
-    val q1 = StreamSinks.routeOutputs(
-      new StreamExecutor(dedupGraph).run(spark, gated),
-      Map("kept" -> relayDir))
+    val kept = routed(new StreamExecutor(dedupGraph).run(spark, gated),
+      Map("kept" -> relayDir), None)
 
     // Stage 3: admitted docs explode into distinct shingle messages
     // (stateless, native kernel), then the lookup-probe fold.
-    val stream2 = spark.readStream.schema(msgSchema)
-      .parquet(relayDir).as[Message]
-    val shingleDf = stream2.toDF()
+    val shingleDf = relayTopic(spark, relayDir).toDF()
       .withColumn("text", col("value").cast("string"))
     val shingleMsgs = shingleDf
       .select(col("key"), col("offset"), col("timestamp"),
@@ -691,14 +758,7 @@ object StreamingQueries {
       .map { e =>
         val s = decontamCodec.decode(e.value); (e.key, s.n, s.hits)
       }.toDF("doc_key", "n", "hits")
-    val name = s"stream_result_${nameSeq.incrementAndGet()}"
-    val q2 = table.writeStream.format("memory").queryName(name)
-      .outputMode("update").start()
-    try {
-      q1.processAllAvailable() // gate + dedup drain both batches
-      q2.processAllAvailable() // decontam drains the relay it fed
-    } finally { q1.stop(); q2.stop() }
-    spark.table(name).groupBy(col("doc_key"))
+    runToTable(spark, table, "update", kept).groupBy(col("doc_key"))
       .agg(max(col("n")).as("n_shingles"),
         max_by(col("hits"), col("n")).as("n_shared"))
       .select(col("doc_key").cast("long").as("doc_id"),
@@ -733,14 +793,22 @@ object StreamingQueries {
           new java.sql.Timestamp(i + 1L), Map.empty[String, Array[Byte]])
       }
       msgs.repartition(2).write.mode("overwrite").parquet(staging)
-      // Same shard binding as st03 itself, so the warmed machinery
-      // (per-shard store instances included) matches the timed path;
-      // withStateShards restores the session's partition count after.
-      withStateShards(spark) {
-        new StreamExecutor(GokaQueries.pingpongGraph)
-          .runWithLoopback(spark, bindShardsToTopic(spark, staging),
-            results)
-      }
+      // Same path as st03 itself, so the warmed machinery (per-shard
+      // store instances included) matches the timed one.
+      runPingpong(spark, staging, results)
+    }
+
+  /** The pingpong graph through [[StreamExecutor.runWithLoopback]],
+    * which starts, drains and stops its own query; the shards follow
+    * the staged topic's partitions like every [[topic]] source's, and
+    * the feedback topic inherits them (reference graph.go:476-483: the
+    * loop topic is group-private with the group's partition count). */
+  private def runPingpong(spark: SparkSession, staging: String,
+      results: String): Unit =
+    withQueries(spark)() { _ =>
+      bindShards(spark, staging)
+      new StreamExecutor(GokaQueries.pingpongGraph)
+        .runWithLoopback(spark, staging, results)
     }
 
   /** Streaming loopback through a real feedback topic: the same
@@ -750,24 +818,11 @@ object StreamingQueries {
     * consumed by trailing micro-batches of the SAME query. Must
     * hash-match g06's oracle — proving the feedback path preserves the
     * fixpoint semantics. */
-  def streamLoopback(spark: SparkSession, dir: String): DataFrame = withStateShards(spark) {
-    import spark.implicits._
-    import graft.operators.BatchExecutor.SinkTable
-    val graph = GokaQueries.pingpongGraph
+  def streamLoopback(spark: SparkSession, dir: String): DataFrame = {
     val staging = tempDir("graft_stream_loop")
     val results = tempDir("graft_stream_loop_out")
     copyParquetFiles(stagedEvents(spark, dir), staging)
-    // Shards follow the staged topic's partitions, like every other st
-    // query — this was the ONE streaming path that never bound them, so
-    // it ran one RocksDB shard per session core (32 in the bench):
-    // StProfile showed each of its 4 micro-batches paying a per-shard
-    // commit/changelog file-sync summed at 14-70 s across shards, the
-    // r15 "st01 20 s at 32 shards vs 5 s at 8" finding reproduced on
-    // the loopback path. The feedback topic inherits the source's
-    // partitioning (reference graph.go:476-483: the loop topic is
-    // group-private with the group's partition count).
-    new StreamExecutor(graph).runWithLoopback(
-      spark, bindShardsToTopic(spark, staging), results)
+    runPingpong(spark, staging, results)
     // Update-mode upserts accumulate in resultDir; cnt only grows, so
     // max(cnt) == the final table row per key.
     spark.read.parquet(results)
@@ -786,9 +841,8 @@ object StreamingQueries {
     * DuckDB oracle expresses — and the fixture is split into two
     * micro-batches at the median timestamp, so flags set in batch 1 must
     * survive in keyed state to gate batch-2 events. */
-  def streamJoinRefresh(spark: SparkSession, dir: String): DataFrame = withStateShards(spark) {
+  def streamJoinRefresh(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import graft.operators.BatchExecutor.SinkTable
     val graph = GroupGraph.define("flagged")(
       Input("events", StringCodec, ProcessCallback { (ctx, _) =>
         if (ctx.join("flags") == "on") {
@@ -808,14 +862,12 @@ object StreamingQueries {
     // early flags, batch 2 the events they must keep gating.
     val staging = tempDir("graft_stream_join")
     stageTwoBatches(spark, all, staging)
-    val stream = spark.readStream
-      .schema(org.apache.spark.sql.Encoders.product[Message].schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(bindShardsToTopic(spark, staging)).as[Message]
+    val stream = messageTopic(spark, staging)
     val out = new StreamExecutor(graph).run(spark, stream)
     val table = out.filter(_.sink == SinkTable)
       .map(e => (e.key, Int64Codec.decode(e.value))).toDF("key", "cnt")
-    runToTable(spark, table).groupBy(col("key")).agg(max(col("cnt")).as("cnt"))
+    runToTable(spark, table, "update")
+      .groupBy(col("key")).agg(max(col("cnt")).as("cnt"))
   }
 
   /** Stream doing `ctx.lookup` against a table that MUTATES mid-stream —
@@ -838,9 +890,8 @@ object StreamingQueries {
     * intermittently fired around the wrong batch under full-run load.
     * [[FileLookups.recentResolutions]] records which snapshot each batch
     * actually resolved, so LookupsSpec can assert the v1→v2 handover. */
-  def streamLookupRefresh(spark: SparkSession, dir: String): DataFrame = withStateShards(spark) {
+  def streamLookupRefresh(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import graft.operators.BatchExecutor.SinkTable
     val graph = GroupGraph.define("rated")(
       Input("events", StringCodec, ProcessCallback { (ctx, _) =>
         val rate = ctx.lookup("rates", "multiplier") match {
@@ -857,29 +908,21 @@ object StreamingQueries {
     val ratesFile = java.nio.file.Paths
       .get(staging, "rates.lkp").toString
     LookupFile.write(ratesFile, Map("multiplier" -> Int64Codec.encode(1L)))
-    val stream = spark.readStream
-      .schema(org.apache.spark.sql.Encoders.product[Message].schema)
-      .option("maxFilesPerTrigger", 1)
-      .option("pathGlobFilter", "*.parquet")
-      .parquet(bindShardsToTopic(spark, staging)).as[Message]
-    val out = new StreamExecutor(graph).runWith(spark, stream,
-      Map.empty, FileLookups(Map("rates" -> ratesFile)))
+    val out = new StreamExecutor(graph).runWith(spark,
+      messageTopic(spark, staging), Map.empty,
+      FileLookups(Map("rates" -> ratesFile)))
     val table = out.filter(_.sink == SinkTable)
       .map(e => (e.key, Int64Codec.decode(e.value))).toDF("key", "cnt")
     val resultDir = tempDir("graft_stream_lookup_out")
     val ckpt = tempDir("graft_stream_lookup_ckpt")
-    val q = table.writeStream.outputMode("update")
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.write.mode("append").parquet(resultDir); ()
-      }.start()
-    try {
+    withQueries(spark)(parquetSink(table, resultDir, "update", Some(ckpt))(
+        identity)) { case Seq(q) =>
       q.processAllAvailable() // early half fully drained under v1
       LookupFile.write(ratesFile,
         Map("multiplier" -> Int64Codec.encode(2L)))
       copyParquetFiles(pending, staging) // reveal the late half
       q.processAllAvailable() // late half drained under v2
-    } finally q.stop()
+    }
     // cnt only grows; max(cnt) collapses update-mode upserts.
     spark.read.parquet(resultDir)
       .groupBy(col("key")).agg(max(col("cnt")).as("cnt"))
@@ -899,9 +942,8 @@ object StreamingQueries {
     * first appear late getting no doubling (they were not in the state
     * when the visit ran). The pending-dir barrier makes the sequencing
     * deterministic, as in st05. */
-  def streamVisitor(spark: SparkSession, dir: String): DataFrame = withStateShards(spark) {
+  def streamVisitor(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import graft.operators.BatchExecutor.SinkTable
     val graph = GroupGraph.define("visited")(
       Input("events", StringCodec, ProcessCallback { (ctx, _) =>
         val cur = ctx.value match { case null => 0L; case n: Long => n }
@@ -916,26 +958,23 @@ object StreamingQueries {
     val staging = tempDir("graft_stream_visit")
     val pending = tempDir("graft_stream_visit_pending")
     stageSplit(spark, Sources.eventMessages(spark, dir), staging, pending)
-    val stream = spark.readStream
-      .schema(org.apache.spark.sql.Encoders.product[Message].schema)
-      .option("pathGlobFilter", "*.parquet")
-      .parquet(bindShardsToTopic(spark, staging)).as[Message]
-    val table = new StreamExecutor(graph).run(spark, stream)
+    val table = new StreamExecutor(graph)
+      .run(spark, messageTopic(spark, staging))
       .filter(_.sink == SinkTable)
       .map(e => (e.key, Int64Codec.decode(e.value))).toDF("key", "cnt")
+    val resultDir = tempDir("graft_stream_visit_out")
     val ckpt = tempDir("graft_stream_visit_ckpt")
-    val name = s"stream_result_${nameSeq.incrementAndGet()}"
-    val q = table.writeStream.format("memory").queryName(name)
-      .outputMode("update").option("checkpointLocation", ckpt).start()
-    try {
+    withQueries(spark)(parquetSink(table, resultDir, "update", Some(ckpt))(
+        identity)) { case Seq(q) =>
       q.processAllAvailable() // early half → per-key counts
       StreamVisitor.visitLive(spark, graph, ckpt, staging, "double")
       q.processAllAvailable() // visit batch doubles every live key
       copyParquetFiles(pending, staging) // reveal the late half
       q.processAllAvailable() // late events build on visited state
-    } finally q.stop()
+    }
     // per-key upserts only grow (doubling + increments): max = final.
-    spark.table(name).groupBy(col("key")).agg(max(col("cnt")).as("cnt"))
+    spark.read.parquet(resultDir)
+      .groupBy(col("key")).agg(max(col("cnt")).as("cnt"))
   }
 
   /** Chained STREAMING topologies — g16's twin and the reference's
@@ -949,33 +988,19 @@ object StreamingQueries {
     * batches AND the relay grows incrementally while the blocker is
     * already running — the hop is stream-to-stream, not batch handoff.
     * Must hash-match g16's oracle. */
-  def streamChained(spark: SparkSession, dir: String): DataFrame = withStateShards(spark) {
+  def streamChained(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import graft.operators.BatchExecutor.SinkTable
     val staging = stagedEventsSplit(spark, dir)
     val relayDir = tempDir("graft_stream_chain_relay")
-    val msgSchema = org.apache.spark.sql.Encoders.product[Message].schema
-    val stream1 = spark.readStream.schema(msgSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(bindShardsToTopic(spark, staging)).as[Message]
-    val q1 = StreamSinks.routeOutputs(
-      new StreamExecutor(GokaQueries.detectorGraph).run(spark, stream1),
-      Map("blocks" -> relayDir))
-    val stream2 = spark.readStream.schema(msgSchema)
-      .parquet(relayDir).as[Message]
+    val detector = routed(new StreamExecutor(GokaQueries.detectorGraph)
+      .run(spark, messageTopic(spark, staging)),
+      Map("blocks" -> relayDir), None)
     val table = new StreamExecutor(GokaQueries.blockerGraph)
-      .run(spark, stream2)
+      .run(spark, relayTopic(spark, relayDir))
       .filter(_.sink == SinkTable)
       .map(e => (e.key, Int64Codec.decode(e.value))).toDF("key", "n_blocks")
-    val name = s"stream_result_${nameSeq.incrementAndGet()}"
-    val q2 = table.writeStream.format("memory").queryName(name)
-      .outputMode("update").start()
-    try {
-      q1.processAllAvailable() // detector drains both event batches
-      q2.processAllAvailable() // blocker drains the relay it produced
-    } finally { q1.stop(); q2.stop() }
     // n_blocks only grows; max collapses update-mode upserts.
-    spark.table(name).groupBy(col("key"))
+    runToTable(spark, table, "update", detector).groupBy(col("key"))
       .agg(max(col("n_blocks")).as("n_blocks"))
   }
 
@@ -993,7 +1018,7 @@ object StreamingQueries {
     * races with `processAllAvailable()` (observed: the max-ts session
     * intermittently unemitted). Sentinel sessions themselves are never
     * closed and are filtered out. Hash-matches q17's batch oracle. */
-  def streamSession(spark: SparkSession, dir: String): DataFrame = withStateShards(spark) {
+  def streamSession(spark: SparkSession, dir: String): DataFrame = {
     // Staged from the normalized Sources.table path (ts = TIMESTAMP,
     // whatever the fixture's physical encoding) — never a pinned raw
     // schema, which silently corrupts when the writer changes.
@@ -1015,9 +1040,7 @@ object StreamingQueries {
       lit(0.0).as("value"), lit("{}").as("props"))
     stageFile(sentinel(2), staging, "b3.parquet", now - 60000)
     stageFile(sentinel(4), staging, "b4.parquet", now - 30000)
-    val sessions = spark.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(bindShardsToTopic(spark, staging))
+    val sessions = topic(spark, staging, ev.schema)
       .withWatermark("ts", "1 second")
       .groupBy(col("user_id"), session_window(col("ts"), "1 hour"))
       .agg(count(lit(1)).as("cnt"))
@@ -1029,7 +1052,7 @@ object StreamingQueries {
     // the watermark node by the optimizer, silently dropping the
     // sentinel rows before they can advance the watermark (observed:
     // rows=0 per sentinel batch, final session never flushed).
-    runToTable(spark, sessions, mode = "append")
+    runToTable(spark, sessions, "append")
       .filter(col("key") =!= "-1")
   }
 
@@ -1045,7 +1068,7 @@ object StreamingQueries {
     * collect / MemoryStream (which serializes the whole fixture into one
     * task binary and breaks whole-stage codegen); scans stay parallel and
     * the same pipeline swaps to `readStream.format("kafka")` unchanged. */
-  def streamTumble(spark: SparkSession, dir: String): DataFrame = withStateShards(spark) {
+  def streamTumble(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types._
     // Staged from the normalized Sources.table path (ts = TIMESTAMP,
     // whatever the fixture's physical encoding) — never a pinned raw
@@ -1061,9 +1084,7 @@ object StreamingQueries {
       "b1.parquet", now - 120000)
     stageFile(ev.filter(unix_micros(col("ts")) > midUs), staging,
       "b2.parquet", now - 60000)
-    val windowed = spark.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(bindShardsToTopic(spark, staging))
+    val windowed = topic(spark, staging, ev.schema)
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 day"), col("event_type"))
       .agg(count(lit(1)).as("cnt"),
@@ -1071,7 +1092,7 @@ object StreamingQueries {
           .as("total_value"))
       .select(date_format(col("window.start"), "yyyy-MM-dd").as("day"),
         col("event_type"), col("cnt"), col("total_value"))
-    runToTable(spark, windowed)
+    runToTable(spark, windowed, "update")
       .groupBy(col("day"), col("event_type"))
       .agg(max(col("cnt")).as("cnt"),
         max_by(col("total_value"), col("cnt")).as("total_value"))
@@ -1098,9 +1119,8 @@ object StreamingQueries {
     * O(1) work per event, no rescans. The sink collapse is per-field
     * max — valid because the state machine is monotone (fields set
     * once, never unset). */
-  def streamFunnel(spark: SparkSession, dir: String): DataFrame = withStateShards(spark) {
+  def streamFunnel(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import graft.operators.BatchExecutor.SinkTable
     val codec = Codecs.threeLongs[FunnelState](
       s => (s.t1, s.t2, s.t3))(FunnelState.apply)
     val graph = GroupGraph.define("stream-funnel")(
@@ -1126,15 +1146,12 @@ object StreamingQueries {
     // batch ≤ median ts < late batch) for per-key ts order to hold
     // globally — hash-split staging loses 3 purchases at sf0.01.
     val staging = stagedEventsSplit(spark, dir)
-    val stream = spark.readStream
-      .schema(Sources.eventMessages(spark, dir).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(bindShardsToTopic(spark, staging)).as[Message]
+    val stream = messageTopic(spark, staging)
     val out = new StreamExecutor(graph).run(spark, stream)
     val table = out.filter(_.sink == SinkTable).map { e =>
       val s = codec.decode(e.value); (e.key, s.t1, s.t2, s.t3)
     }.toDF("user_id", "t1", "t2", "t3")
-    runToTable(spark, table).groupBy(col("user_id"))
+    runToTable(spark, table, "update").groupBy(col("user_id"))
       .agg(max(col("t1")).as("t1"), max(col("t2")).as("t2"),
         max(col("t3")).as("t3"))
       .agg(count(when(col("t1") > 0, 1)).as("u1"),
@@ -1160,9 +1177,8 @@ object StreamingQueries {
     * the sink collapse is last-writer-wins (max_by on the strictly
     * increasing update counter), and the q26 min-chain runs
     * declaratively on the resolved (t1, clicks, purchases) row. */
-  def streamFunnelUnordered(spark: SparkSession, dir: String): DataFrame = withStateShards(spark) {
+  def streamFunnelUnordered(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import graft.operators.BatchExecutor.SinkTable
     val graph = GroupGraph.define("stream-funnel-ooo")(
       Input("events", StringCodec, ProcessCallback { (ctx, msg) =>
         val ts = graft.operators.BatchExecutor.tsMicros(ctx.timestamp)
@@ -1177,17 +1193,14 @@ object StreamingQueries {
     // events land in BOTH files, so the second micro-batch delivers
     // events that precede already-processed ones.
     val staged = stagedEvents(spark, dir)
-    val stream = spark.readStream
-      .schema(Sources.eventMessages(spark, dir).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(bindShardsToTopic(spark, staged)).as[Message]
+    val stream = messageTopic(spark, staged)
     val out = new StreamExecutor(graph).run(spark, stream)
     val table = out.filter(_.sink == SinkTable).map { e =>
       val a = Codecs.LongArrayCodec.decode(e.value)
       val (t1, t2, t3) = FunnelBuffer.resolve(a)
       (e.key, a(0), t1, t2, t3)
     }.toDF("user_id", "n", "t1", "t2", "t3")
-    runToTable(spark, table).groupBy(col("user_id"))
+    runToTable(spark, table, "update").groupBy(col("user_id"))
       .agg(max_by(struct(col("t1"), col("t2"), col("t3")), col("n")).as("s"))
       .agg(count(when(col("s.t1") > 0, 1)).as("u1"),
         count(when(col("s.t2") > 0, 1)).as("u2"),
@@ -1216,7 +1229,7 @@ object StreamingQueries {
     * per-event emission IS the batch frame row — so st15 shares q28's
     * oracle verbatim. Each event emits exactly once (no upsert
     * collapse needed — the output topic is append-shaped). */
-  def streamSlidingWindow(spark: SparkSession, dir: String): DataFrame = withStateShards(spark) {
+  def streamSlidingWindow(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val windowUs = 3600L * 1000000L
     val graph = GroupGraph.define("stream-sliding")(
@@ -1247,16 +1260,13 @@ object StreamingQueries {
       col("ts"), col("event_id"))
     val staging = tempDir("graft_stream_sliding")
     stageTwoBatches(spark, msgs, staging)
-    val stream = spark.readStream
-      .schema(org.apache.spark.sql.Encoders.product[Message].schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(bindShardsToTopic(spark, staging)).as[Message]
+    val stream = messageTopic(spark, staging)
     val out = new StreamExecutor(graph).run(spark, stream)
     val table = out.filter(_.sink == "winstats").map { e =>
       val parts = new String(e.value, "UTF-8").split('|')
       (e.key.toLong, parts(0).toLong, parts(1).toLong)
     }.toDF("event_id", "n_hour", "sum_micros")
-    runToTable(spark, table)
+    runToTable(spark, table, "update")
       .select(col("event_id"), col("n_hour"),
         (col("sum_micros").cast("double") / lit(1000000.0)).as("sum_hour"))
   }
@@ -1276,9 +1286,8 @@ object StreamingQueries {
     * state. O(active-weeks) bytes per user; the (cohort, offset) rollup
     * happens on the collapsed user-level table — never on the event
     * stream. */
-  def streamRetention(spark: SparkSession, dir: String): DataFrame = withStateShards(spark) {
+  def streamRetention(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import graft.operators.BatchExecutor.SinkTable
     val codec = Codecs.LongArrayCodec
     // epoch day 0 = Thursday; Monday-of-week = d - ((d + 3) mod 7)
     def mondayOf(tsMicros: Long): Long = {
@@ -1303,15 +1312,12 @@ object StreamingQueries {
       }),
       Persist(codec))
     val staging = stagedEventsSplit(spark, dir)
-    val stream = spark.readStream
-      .schema(Sources.eventMessages(spark, dir).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(bindShardsToTopic(spark, staging)).as[Message]
+    val stream = messageTopic(spark, staging)
     val out = new StreamExecutor(graph).run(spark, stream)
     val table = out.filter(_.sink == SinkTable).map { e =>
       (e.key, codec.decode(e.value))
     }.toDF("user_id", "state")
-    runToTable(spark, table).groupBy(col("user_id"))
+    runToTable(spark, table, "update").groupBy(col("user_id"))
       .agg(max(col("state")).as("state"))
       .select(element_at(col("state"), 1).as("cohort_day"),
         explode(expr("slice(state, 2, size(state) - 1)")).as("off"))
@@ -1339,9 +1345,8 @@ object StreamingQueries {
     * collapse is max_by that total. Result hash-matches c04's batch
     * oracle. At 100 TB stage 1 shards by fingerprint, stage 2's state
     * is card-sized — the live dashboard form of the dataset card. */
-  def streamCard(spark: SparkSession, dir: String): DataFrame = withStateShards(spark) {
+  def streamCard(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import graft.operators.BatchExecutor.SinkTable
     val fpCodec = Codecs.json[CardFpState]
     val fpGraph = GroupGraph.define("card-fps")(
       Input("docs", StringCodec, ProcessCallback { (ctx, msg) =>
@@ -1394,17 +1399,13 @@ object StreamingQueries {
     val relayA = tempDir("graft_stream_card_arrivals")
     val relayD = tempDir("graft_stream_card_dups")
     stageTwoBatches(spark, msgs, staging)
-    val msgSchema = org.apache.spark.sql.Encoders.product[Message].schema
 
-    val stream1 = spark.readStream.schema(msgSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(bindShardsToTopic(spark, staging)).as[Message]
-    val q1 = StreamSinks.routeOutputs(
-      new StreamExecutor(fpGraph).run(spark, stream1),
-      Map("arrivals" -> relayA, "dups" -> relayD))
+    val fps = routed(new StreamExecutor(fpGraph)
+      .run(spark, messageTopic(spark, staging)),
+      Map("arrivals" -> relayA, "dups" -> relayD), None)
 
     def relay(dirIn: String, topic: String) =
-      spark.readStream.schema(msgSchema).parquet(dirIn)
+      relayTopic(spark, dirIn)
         .select(col("key"), col("value"), lit(topic).as("topic"),
           col("partition"), col("offset"), col("timestamp"), col("headers"))
     val both = relay(relayA, "arrivals").union(relay(relayD, "dups"))
@@ -1413,14 +1414,7 @@ object StreamingQueries {
       .filter(_.sink == SinkTable)
       .map { e => (e.key, Codecs.LongArrayCodec.decode(e.value)) }
       .toDF("cell", "state")
-    val name = s"stream_result_${nameSeq.incrementAndGet()}"
-    val q2 = table.writeStream.format("memory").queryName(name)
-      .outputMode("update").start()
-    try {
-      q1.processAllAvailable()
-      q2.processAllAvailable()
-    } finally { q1.stop(); q2.stop() }
-    spark.table(name).groupBy(col("cell"))
+    runToTable(spark, table, "update", fps).groupBy(col("cell"))
       .agg(max_by(col("state"),
         element_at(col("state"), 1) + element_at(col("state"), 5))
         .as("state"))
@@ -1466,9 +1460,8 @@ object StreamingQueries {
     * 100 TB stages 1-2 shard by (stratum, token) across the cluster
     * and stage 3's state is the k-row sketch per stratum — the
     * mergeable-sketch serving layer, maintained at ingest. */
-  def streamKmv(spark: SparkSession, dir: String): DataFrame = withStateShards(spark) {
+  def streamKmv(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import graft.operators.BatchExecutor.SinkTable
     val k = 16
     def firstSeen(group: String, in: String, outT: String) =
       GroupGraph.define(group)(
@@ -1515,18 +1508,14 @@ object StreamingQueries {
     val relayW = tempDir("graft_stream_kmv_words")
     val relayH = tempDir("graft_stream_kmv_hashes")
     stageTwoBatches(spark, msgs, staging)
-    val msgSchema = org.apache.spark.sql.Encoders.product[Message].schema
 
-    val stream1 = spark.readStream.schema(msgSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(bindShardsToTopic(spark, staging)).as[Message]
-    val q1 = StreamSinks.routeOutputs(
+    val words = routed(
       new StreamExecutor(firstSeen("kmv-words", "tokens", "firstwords"))
-        .run(spark, stream1),
-      Map("firstwords" -> relayW))
+        .run(spark, messageTopic(spark, staging)),
+      Map("firstwords" -> relayW), None)
 
     // stateless re-key between stages: (stratum|word) → (stratum|h32)
-    val words2 = spark.readStream.schema(msgSchema).parquet(relayW)
+    val words2 = relayTopic(spark, relayW)
     val stratum2 = substring_index(col("key"), "|", 1)
     val hw2 = graft.functions.Hashes.h32(col("value").cast("string"))
     val hashMsgs = words2
@@ -1535,14 +1524,14 @@ object StreamingQueries {
         lit("hashes").as("topic"), col("partition"), col("offset"),
         col("timestamp"), col("headers"))
       .as[Message]
-    val q2 = StreamSinks.routeOutputs(
+    val hashes = routed(
       new StreamExecutor(firstSeen("kmv-hashes", "hashes", "firsthashes"))
         .run(spark, hashMsgs),
-      Map("firsthashes" -> relayH))
+      Map("firsthashes" -> relayH), None)
 
     // stage 3 consumes both relays, re-keyed to the bare stratum
     def rekeyed(dirIn: String, topic: String) =
-      spark.readStream.schema(msgSchema).parquet(dirIn)
+      relayTopic(spark, dirIn)
         .select(substring_index(col("key"), "|", 1).as("key"), col("value"),
           lit(topic).as("topic"), col("partition"), col("offset"),
           col("timestamp"), col("headers"))
@@ -1552,15 +1541,7 @@ object StreamingQueries {
       .filter(_.sink == SinkTable)
       .map { e => (e.key, Codecs.LongArrayCodec.decode(e.value)) }
       .toDF("stratum", "state")
-    val name = s"stream_result_${nameSeq.incrementAndGet()}"
-    val q3 = table.writeStream.format("memory").queryName(name)
-      .outputMode("update").start()
-    try {
-      q1.processAllAvailable()
-      q2.processAllAvailable()
-      q3.processAllAvailable()
-    } finally { q1.stop(); q2.stop(); q3.stop() }
-    spark.table(name).groupBy(col("stratum"))
+    runToTable(spark, table, "update", words, hashes).groupBy(col("stratum"))
       .agg(max_by(col("state"),
         element_at(col("state"), 1) + element_at(col("state"), 2))
         .as("state"))
@@ -1593,9 +1574,8 @@ object StreamingQueries {
     * oracle convicts BOTH recovery failure modes: state lost across
     * the restart makes post-restart counts too LOW; source offsets
     * lost (the early half re-consumed) makes them too HIGH. */
-  def streamRecover(spark: SparkSession, dir: String): DataFrame = withStateShards(spark) {
+  def streamRecover(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import graft.operators.BatchExecutor.SinkTable
     val graph = GroupGraph.define("stream-recover")(
       Input("events", StringCodec, ProcessCallback { (ctx, _) =>
         val cur = ctx.value match { case null => 0L; case n: Long => n }
@@ -1612,23 +1592,15 @@ object StreamingQueries {
     // foreachBatch sink — the recoverable sink shape a real
     // deployment uses, and the surviving record of BOTH phases.
     def phase(): Long = {
-      val stream = spark.readStream
-        .schema(Sources.eventMessages(spark, dir).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(bindShardsToTopic(spark, staging)).as[Message]
+      val stream = messageTopic(spark, staging)
       val table = new StreamExecutor(graph).run(spark, stream)
         .filter(_.sink == SinkTable)
         .map(e => (e.key, Int64Codec.decode(e.value))).toDF("key", "cnt")
-      val q = table.writeStream.outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: Dataset[org.apache.spark.sql.Row], _: Long) =>
-          b.write.mode("append").parquet(resultDir); ()
-        }
-        .start()
-      try {
+      withQueries(spark)(parquetSink(table, resultDir, "update", Some(ckpt))(
+          identity)) { case Seq(q) =>
         q.processAllAvailable()
         q.recentProgress.iterator.map(_.numInputRows).sum
-      } finally q.stop()
+      }
     }
     val earlyRows = phase() // consumes the early half, then "crashes"
     copyParquetFiles(lateDir, staging)
@@ -1687,34 +1659,30 @@ object StreamingQueries {
     * so latest-state recovery is field-wise max/min, order-free.
     * avg derives from the final sum/count, exactly as q33 derives it
     * from merged partials. */
-  def streamMv(spark: SparkSession, dir: String): DataFrame =
-    withStateShards(spark) {
-      val staging = tempDir("graft_stream_mv")
-      stageTwoBatches(spark,
-        Sources.messages(Sources.table(spark, dir, "events"), "events",
-          col("event_type"), col("value").cast("string"), col("ts"),
-          col("event_id")),
-        staging)
-      val src = spark.readStream
-        .schema(Sources.eventMessages(spark, dir).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(bindShardsToTopic(spark, staging))
-      val mv = src
-        .select(col("key").as("event_type"),
-          col("value").cast("string")
-            .cast(org.apache.spark.sql.types.DecimalType(18, 6)).as("v"))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"), sum(col("v")).as("sv"),
-          min(col("v")).as("minv"), max(col("v")).as("maxv"))
-      runToTable(spark, mv, mode = "update")
-        .groupBy(col("event_type"))
-        .agg(max(col("n")).as("n_events"),
-          max(col("sv")).cast("double").as("sum_value"),
-          min(col("minv")).cast("double").as("min_value"),
-          max(col("maxv")).cast("double").as("max_value"))
-        .withColumn("avg_value",
-          col("sum_value") / col("n_events").cast("double"))
-    }
+  def streamMv(spark: SparkSession, dir: String): DataFrame = {
+    val staging = tempDir("graft_stream_mv")
+    stageTwoBatches(spark,
+      Sources.messages(Sources.table(spark, dir, "events"), "events",
+        col("event_type"), col("value").cast("string"), col("ts"),
+        col("event_id")),
+      staging)
+    val src = topic(spark, staging, MessageSchema)
+    val mv = src
+      .select(col("key").as("event_type"),
+        col("value").cast("string")
+          .cast(org.apache.spark.sql.types.DecimalType(18, 6)).as("v"))
+      .groupBy(col("event_type"))
+      .agg(count(lit(1)).as("n"), sum(col("v")).as("sv"),
+        min(col("v")).as("minv"), max(col("v")).as("maxv"))
+    runToTable(spark, mv, "update")
+      .groupBy(col("event_type"))
+      .agg(max(col("n")).as("n_events"),
+        max(col("sv")).cast("double").as("sum_value"),
+        min(col("minv")).cast("double").as("min_value"),
+        max(col("maxv")).cast("double").as("max_value"))
+      .withColumn("avg_value",
+        col("sum_value") / col("n_events").cast("double"))
+  }
 
   /** st22: q32's online twin — the CDC feed applied into an SCD2
     * temporal dimension AT INGEST, per-user keyed state instead of the
@@ -1732,9 +1700,8 @@ object StreamingQueries {
     * rather than silently mis-versioning. At 100 TB this is the
     * "maintain the dimension table live" mode: per-key state is the
     * user's version history, sharded by key across the cluster. */
-  def streamScd2(spark: SparkSession, dir: String): DataFrame = withStateShards(spark) {
+  def streamScd2(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import graft.operators.BatchExecutor.SinkTable
     val codec = Codecs.LongArrayCodec
     val graph = GroupGraph.define("stream-scd2")(
       Input("events", StringCodec, ProcessCallback { (ctx, msg) =>
@@ -1756,17 +1723,14 @@ object StreamingQueries {
       Sources.eventMessages(spark, dir,
         value = floor(col("value") / 100.0d).cast("long").cast("string")),
       staging)
-    val stream = spark.readStream
-      .schema(Sources.eventMessages(spark, dir).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(bindShardsToTopic(spark, staging)).as[Message]
+    val stream = messageTopic(spark, staging)
     val out = new StreamExecutor(graph).run(spark, stream)
     val table = out.filter(_.sink == SinkTable).map { e =>
       (e.key, codec.decode(e.value))
     }.toDF("user_id", "state")
     val byVersion = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id")).orderBy(col("version"))
-    runToTable(spark, table).groupBy(col("user_id"))
+    runToTable(spark, table, "update").groupBy(col("user_id"))
       .agg(max(col("state")).as("state"))
       .select(col("user_id").cast("long").as("user_id"),
         explode(expr(
@@ -1799,50 +1763,42 @@ object StreamingQueries {
     * produce. At 100 TB: state is one entry per live key hashed across
     * shards, TTL'd by the watermark — dedup-on-ingest with O(keys in
     * window) memory, the streaming face of d01/d10's batch passes. */
-  def streamDedupWatermark(spark: SparkSession, dir: String): DataFrame =
-    withStateShards(spark) {
-      val staging = stagedEventsSplit(spark, dir)
-      val keyed = spark.readStream
-        .schema(Sources.eventMessages(spark, dir).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(bindShardsToTopic(spark, staging))
-        .select(col("key").cast("long").as("user_id"),
-          col("value").cast("string").as("event_type"),
-          col("timestamp").as("ts"))
-        .withColumn("hour_start", date_trunc("hour", col("ts")))
-        .withWatermark("ts", "2 hours")
-      val dedup = keyed
-        .dropDuplicatesWithinWatermark("user_id", "event_type", "hour_start")
-        .select(col("user_id"), col("event_type"),
-          unix_micros(col("hour_start")).as("hour_us"))
-      runToTable(spark, dedup, mode = "append")
-    }
+  def streamDedupWatermark(spark: SparkSession, dir: String): DataFrame = {
+    val staging = stagedEventsSplit(spark, dir)
+    val keyed = topic(spark, staging, MessageSchema)
+      .select(col("key").cast("long").as("user_id"),
+        col("value").cast("string").as("event_type"),
+        col("timestamp").as("ts"))
+      .withColumn("hour_start", date_trunc("hour", col("ts")))
+      .withWatermark("ts", "2 hours")
+    val dedup = keyed
+      .dropDuplicatesWithinWatermark("user_id", "event_type", "hour_start")
+      .select(col("user_id"), col("event_type"),
+        unix_micros(col("hour_start")).as("hour_us"))
+    runToTable(spark, dedup, "append")
+  }
 
-  def streamIntervalJoin(spark: SparkSession, dir: String): DataFrame =
-    withStateShards(spark) {
-      val staging = stagedEventsSplit(spark, dir)
-      val src = spark.readStream
-        .schema(Sources.eventMessages(spark, dir).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(bindShardsToTopic(spark, staging))
-      val views = src.filter(col("value").cast("string") === "view")
-        .select(col("key").cast("long").as("user_id"),
-          col("offset").as("view_id"), col("timestamp").as("ts_v"))
-        .withWatermark("ts_v", "2 hours")
-      val purchases = src.filter(col("value").cast("string") === "purchase")
-        .select(col("key").cast("long").as("p_user"),
-          col("offset").as("purchase_id"), col("timestamp").as("ts_p"))
-        .withWatermark("ts_p", "2 hours")
-      val joined = views.join(purchases,
-        col("user_id") === col("p_user") &&
-          col("ts_p") > col("ts_v") &&
-          col("ts_p") <= col("ts_v") + expr("INTERVAL 1 HOUR"))
-      runToTable(spark, joined.select(col("user_id"), col("view_id"),
-          col("purchase_id"),
-          (unix_micros(col("ts_p")) - unix_micros(col("ts_v")))
-            .as("lag_us")),
-        mode = "append")
-    }
+  def streamIntervalJoin(spark: SparkSession, dir: String): DataFrame = {
+    val staging = stagedEventsSplit(spark, dir)
+    val src = topic(spark, staging, MessageSchema)
+    val views = src.filter(col("value").cast("string") === "view")
+      .select(col("key").cast("long").as("user_id"),
+        col("offset").as("view_id"), col("timestamp").as("ts_v"))
+      .withWatermark("ts_v", "2 hours")
+    val purchases = src.filter(col("value").cast("string") === "purchase")
+      .select(col("key").cast("long").as("p_user"),
+        col("offset").as("purchase_id"), col("timestamp").as("ts_p"))
+      .withWatermark("ts_p", "2 hours")
+    val joined = views.join(purchases,
+      col("user_id") === col("p_user") &&
+        col("ts_p") > col("ts_v") &&
+        col("ts_p") <= col("ts_v") + expr("INTERVAL 1 HOUR"))
+    runToTable(spark, joined.select(col("user_id"), col("view_id"),
+        col("purchase_id"),
+        (unix_micros(col("ts_p")) - unix_micros(col("ts_v")))
+          .as("lag_us")),
+      mode = "append")
+  }
 
   /** st24: streaming ANN serving — the ONLINE half of s25's
     * train-once/serve-many lifecycle. The IVF index (centroids +
@@ -1861,40 +1817,32 @@ object StreamingQueries {
     * are corpus-sized but reached ONLY by cell-id equi-join — a query
     * batch touches its probed cells, never the corpus; per-batch cost
     * is O(queries × cell size) + fixed micro-batch overhead. */
-  def streamAnnServe(spark: SparkSession, dir: String): DataFrame =
-    withStateShards(spark) {
-      import graft.ops.Vectors
-      val e = Sources.table(spark, dir, "embeddings")
-      val (cents, _) = Vectors.kmeansFit(e, col("vec_id"), col("embedding"),
-        k = 16, iters = 2)
-      val idxDir = tempDir("graft_ann_serve_idx")
-      cents.write.mode("overwrite").parquet(s"$idxDir/centroids")
-      Vectors.ivfInvertedLists(e, col("vec_id"), col("embedding"), cents)
-        .write.mode("overwrite").parquet(s"$idxDir/lists")
-      val storedCents = spark.read.parquet(s"$idxDir/centroids")
-      val lists = spark.read.parquet(s"$idxDir/lists")
-      val q = e.filter(col("vec_id") < 10)
-      val staging = tempDir("graft_ann_serve")
-      val now = System.currentTimeMillis()
-      stageFile(q.filter(col("vec_id") < 5), staging, "b1.parquet",
-        now - 120000)
-      stageFile(q.filter(col("vec_id") >= 5), staging, "b2.parquet",
-        now - 60000)
-      val resultDir = tempDir("graft_ann_serve_out") + "/table"
-      val stream = spark.readStream.schema(q.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(bindShardsToTopic(spark, staging))
-      val sq = stream.writeStream.outputMode("append")
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-          Vectors.ivfServeTopK(lists, storedCents, batch.toDF(),
-            col("vec_id"), col("embedding"), k = 10)
-            .write.mode("append").parquet(resultDir)
-          ()
-        }
-        .start()
-      try sq.processAllAvailable() finally sq.stop()
-      spark.read.parquet(resultDir)
-    }
+  def streamAnnServe(spark: SparkSession, dir: String): DataFrame = {
+    import graft.ops.Vectors
+    val e = Sources.table(spark, dir, "embeddings")
+    val (cents, _) = Vectors.kmeansFit(e, col("vec_id"), col("embedding"),
+      k = 16, iters = 2)
+    val idxDir = tempDir("graft_ann_serve_idx")
+    cents.write.mode("overwrite").parquet(s"$idxDir/centroids")
+    Vectors.ivfInvertedLists(e, col("vec_id"), col("embedding"), cents)
+      .write.mode("overwrite").parquet(s"$idxDir/lists")
+    val storedCents = spark.read.parquet(s"$idxDir/centroids")
+    val lists = spark.read.parquet(s"$idxDir/lists")
+    val q = e.filter(col("vec_id") < 10)
+    val staging = tempDir("graft_ann_serve")
+    val now = System.currentTimeMillis()
+    stageFile(q.filter(col("vec_id") < 5), staging, "b1.parquet",
+      now - 120000)
+    stageFile(q.filter(col("vec_id") >= 5), staging, "b2.parquet",
+      now - 60000)
+    val resultDir = tempDir("graft_ann_serve_out") + "/table"
+    withQueries(spark)(parquetSink(topic(spark, staging, q.schema),
+        resultDir, "append", None) { batch =>
+      Vectors.ivfServeTopK(lists, storedCents, batch,
+        col("vec_id"), col("embedding"), k = 10)
+    })(drain)
+    spark.read.parquet(resultDir)
+  }
 
   /** st25: streaming index ADD — s26's online twin and st24's write-side
     * complement: the index is trained once on the base corpus, then the
@@ -1911,41 +1859,33 @@ object StreamingQueries {
     * broadcast centroids + an append of new files into the lists
     * layout — O(batch) work regardless of index size; compaction of
     * small appended files is ordinary parquet housekeeping. */
-  def streamAnnIndexAdd(spark: SparkSession, dir: String): DataFrame =
-    withStateShards(spark) {
-      import graft.ops.Vectors
-      val e = Sources.table(spark, dir, "embeddings")
-      val base = e.filter(col("vec_id") % 10 =!= 7)
-      val arrivals = e.filter(col("vec_id") % 10 === 7)
-      val (cents, _) = Vectors.kmeansFit(base, col("vec_id"),
-        col("embedding"), k = 16, iters = 2)
-      val idxDir = tempDir("graft_ivf_stream_add")
-      cents.write.mode("overwrite").parquet(s"$idxDir/centroids")
-      Vectors.ivfInvertedLists(base, col("vec_id"), col("embedding"), cents)
-        .write.mode("overwrite").parquet(s"$idxDir/lists")
-      val storedCents = spark.read.parquet(s"$idxDir/centroids")
-      val staging = tempDir("graft_ann_add_stage")
-      val now = System.currentTimeMillis()
-      stageFile(arrivals.filter(col("vec_id") % 20 === 7), staging,
-        "b1.parquet", now - 120000)
-      stageFile(arrivals.filter(col("vec_id") % 20 === 17), staging,
-        "b2.parquet", now - 60000)
-      val stream = spark.readStream.schema(arrivals.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(bindShardsToTopic(spark, staging))
-      val sq = stream.writeStream.outputMode("append")
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-          Vectors.ivfInvertedLists(batch.toDF(), col("vec_id"),
-              col("embedding"), storedCents)
-            .write.mode("append").parquet(s"$idxDir/lists")
-          ()
-        }
-        .start()
-      try sq.processAllAvailable() finally sq.stop()
-      Vectors.ivfServeTopK(spark.read.parquet(s"$idxDir/lists"),
-        storedCents, e.filter(col("vec_id") < 10),
-        col("vec_id"), col("embedding"), k = 10)
-    }
+  def streamAnnIndexAdd(spark: SparkSession, dir: String): DataFrame = {
+    import graft.ops.Vectors
+    val e = Sources.table(spark, dir, "embeddings")
+    val base = e.filter(col("vec_id") % 10 =!= 7)
+    val arrivals = e.filter(col("vec_id") % 10 === 7)
+    val (cents, _) = Vectors.kmeansFit(base, col("vec_id"),
+      col("embedding"), k = 16, iters = 2)
+    val idxDir = tempDir("graft_ivf_stream_add")
+    cents.write.mode("overwrite").parquet(s"$idxDir/centroids")
+    Vectors.ivfInvertedLists(base, col("vec_id"), col("embedding"), cents)
+      .write.mode("overwrite").parquet(s"$idxDir/lists")
+    val storedCents = spark.read.parquet(s"$idxDir/centroids")
+    val staging = tempDir("graft_ann_add_stage")
+    val now = System.currentTimeMillis()
+    stageFile(arrivals.filter(col("vec_id") % 20 === 7), staging,
+      "b1.parquet", now - 120000)
+    stageFile(arrivals.filter(col("vec_id") % 20 === 17), staging,
+      "b2.parquet", now - 60000)
+    withQueries(spark)(parquetSink(topic(spark, staging, arrivals.schema),
+        s"$idxDir/lists", "append", None) { batch =>
+      Vectors.ivfInvertedLists(batch, col("vec_id"), col("embedding"),
+        storedCents)
+    })(drain)
+    Vectors.ivfServeTopK(spark.read.parquet(s"$idxDir/lists"),
+      storedCents, e.filter(col("vec_id") < 10),
+      col("vec_id"), col("embedding"), k = 10)
+  }
 
   /** st26: streaming LM quality gate — the CCNet head/middle/tail gate
     * (t20) applied AT INGEST, st24's train-once/serve-online lifecycle
@@ -1968,45 +1908,36 @@ object StreamingQueries {
     * per-doc fold — O(batch), independent of corpus size; refreshing
     * the gate is re-running the offline fit, exactly CCNet's own
     * retrain cadence. */
-  def streamLmGate(spark: SparkSession, dir: String): DataFrame =
-    withStateShards(spark) {
-      import graft.ops.TextAnalysis
-      val d = Sources.table(spark, dir, "documents")
-      val modelDir = tempDir("graft_lm_gate_model")
-      TextAnalysis.bigramLmFit(d, col("text"))
-        .write.mode("overwrite").parquet(s"$modelDir/bigrams")
-      val cb = spark.read.parquet(s"$modelDir/bigrams")
-      val scoredFull = TextAnalysis
-        .bigramLmScoreWith(d, col("text"), col("doc_id"), cb)
-        .join(d.select(col("doc_id"), col("lang")), Seq("doc_id"))
-      TextAnalysis.ccnetBounds(scoredFull)
-        .write.mode("overwrite").parquet(s"$modelDir/bounds")
-      val bounds = spark.read.parquet(s"$modelDir/bounds")
-      val docsIn = d.select(col("doc_id"), col("text"), col("lang"))
-      val staging = tempDir("graft_lm_gate_stage")
-      val now = System.currentTimeMillis()
-      stageFile(docsIn.filter(col("doc_id") % 2 === 0), staging,
-        "b1.parquet", now - 120000)
-      stageFile(docsIn.filter(col("doc_id") % 2 === 1), staging,
-        "b2.parquet", now - 60000)
-      val resultDir = tempDir("graft_lm_gate_out") + "/table"
-      val stream = spark.readStream.schema(docsIn.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(bindShardsToTopic(spark, staging))
-      val sq = stream.writeStream.outputMode("append")
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-          val b = batch.toDF()
-          val scored = TextAnalysis
-            .bigramLmScoreWith(b, col("text"), col("doc_id"), cb)
-            .join(b.select(col("doc_id"), col("lang")), Seq("doc_id"))
-          TextAnalysis.ccnetBucketed(scored, bounds)
-            .write.mode("append").parquet(resultDir)
-          ()
-        }
-        .start()
-      try sq.processAllAvailable() finally sq.stop()
-      spark.read.parquet(resultDir)
-    }
+  def streamLmGate(spark: SparkSession, dir: String): DataFrame = {
+    import graft.ops.TextAnalysis
+    val d = Sources.table(spark, dir, "documents")
+    val modelDir = tempDir("graft_lm_gate_model")
+    TextAnalysis.bigramLmFit(d, col("text"))
+      .write.mode("overwrite").parquet(s"$modelDir/bigrams")
+    val cb = spark.read.parquet(s"$modelDir/bigrams")
+    val scoredFull = TextAnalysis
+      .bigramLmScoreWith(d, col("text"), col("doc_id"), cb)
+      .join(d.select(col("doc_id"), col("lang")), Seq("doc_id"))
+    TextAnalysis.ccnetBounds(scoredFull)
+      .write.mode("overwrite").parquet(s"$modelDir/bounds")
+    val bounds = spark.read.parquet(s"$modelDir/bounds")
+    val docsIn = d.select(col("doc_id"), col("text"), col("lang"))
+    val staging = tempDir("graft_lm_gate_stage")
+    val now = System.currentTimeMillis()
+    stageFile(docsIn.filter(col("doc_id") % 2 === 0), staging,
+      "b1.parquet", now - 120000)
+    stageFile(docsIn.filter(col("doc_id") % 2 === 1), staging,
+      "b2.parquet", now - 60000)
+    val resultDir = tempDir("graft_lm_gate_out") + "/table"
+    withQueries(spark)(parquetSink(topic(spark, staging, docsIn.schema),
+        resultDir, "append", None) { b =>
+      val scored = TextAnalysis
+        .bigramLmScoreWith(b, col("text"), col("doc_id"), cb)
+        .join(b.select(col("doc_id"), col("lang")), Seq("doc_id"))
+      TextAnalysis.ccnetBucketed(scored, bounds)
+    })(drain)
+    spark.read.parquet(resultDir)
+  }
 
   /** st27: streaming table profile — data-quality MONITORING of a live
     * feed: every micro-batch computes its mergeable partial profile
@@ -2031,34 +1962,26 @@ object StreamingQueries {
     * artifact grows by #columns rows per batch and compacts by
     * pre-merging (the merge is associative — micro-batch → hourly →
     * daily); nothing downstream ever touches raw history. */
-  def streamProfile(spark: SparkSession, dir: String): DataFrame =
-    withStateShards(spark) {
-      import graft.ops.Profiling
-      val e = Sources.table(spark, dir, "events")
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          col("props"))
-      val staging = tempDir("graft_stream_profile_stage")
-      val now = System.currentTimeMillis()
-      stageFile(e.filter(col("event_id") % 2 === 0), staging,
-        "b1.parquet", now - 120000)
-      stageFile(e.filter(col("event_id") % 2 === 1), staging,
-        "b2.parquet", now - 60000)
-      val artifactDir = tempDir("graft_stream_profile_art") + "/partials"
-      val stream = spark.readStream.schema(e.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(bindShardsToTopic(spark, staging))
-      val sq = stream.writeStream.outputMode("append")
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-          Profiling.kmvProfilePartial(batch.toDF(),
-              longCols = Seq("event_id", "user_id"),
-              strCols = Seq("event_type", "props"))
-            .write.mode("append").parquet(artifactDir)
-          ()
-        }
-        .start()
-      try sq.processAllAvailable() finally sq.stop()
-      Profiling.kmvProfileMerge(spark.read.parquet(artifactDir))
-    }
+  def streamProfile(spark: SparkSession, dir: String): DataFrame = {
+    import graft.ops.Profiling
+    val e = Sources.table(spark, dir, "events")
+      .select(col("event_id"), col("user_id"), col("event_type"),
+        col("props"))
+    val staging = tempDir("graft_stream_profile_stage")
+    val now = System.currentTimeMillis()
+    stageFile(e.filter(col("event_id") % 2 === 0), staging,
+      "b1.parquet", now - 120000)
+    stageFile(e.filter(col("event_id") % 2 === 1), staging,
+      "b2.parquet", now - 60000)
+    val artifactDir = tempDir("graft_stream_profile_art") + "/partials"
+    withQueries(spark)(parquetSink(topic(spark, staging, e.schema),
+        artifactDir, "append", None) { batch =>
+      Profiling.kmvProfilePartial(batch,
+        longCols = Seq("event_id", "user_id"),
+        strCols = Seq("event_type", "props"))
+    })(drain)
+    Profiling.kmvProfileMerge(spark.read.parquet(artifactDir))
+  }
 
   /** st28: late-data QUARANTINE — the dead-letter accounting Spark's
     * own watermark does not give you: `withWatermark` silently DROPS
@@ -2083,52 +2006,45 @@ object StreamingQueries {
     * nothing here adds state beyond what the windowed aggregate
     * already keeps, and the quarantine table is exactly as queryable
     * as the main one (reprocessing late data = reading it back). */
-  def streamQuarantine(spark: SparkSession, dir: String): DataFrame =
-    withStateShards(spark) {
-      val ev = Sources.table(spark, dir, "events")
-        .select(col("event_id"), col("ts"))
-      val staging = tempDir("graft_stream_quar_stage")
-      val now = System.currentTimeMillis()
-      stageFile(ev.filter(col("event_id") % 5 =!= 0), staging,
-        "b1.parquet", now - 120000)
-      stageFile(ev.filter(col("event_id") % 5 === 0), staging,
-        "b2.parquet", now - 60000)
-      val outDir = tempDir("graft_stream_quar_out")
-      val ontimeDir = outDir + "/ontime"
-      val lateDir = outDir + "/late"
-      val delayUs = 30L * 60 * 1000000
-      @volatile var wmUs = Long.MinValue
-      val stream = spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(bindShardsToTopic(spark, staging))
-      val sq = stream.writeStream.outputMode("append")
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-          val b = batch.toDF().localCheckpoint()
-          val wm = wmUs
-          b.filter(unix_micros(col("ts")) >= wm)
-            .groupBy(date_trunc("hour", col("ts")).as("window_start"))
-            .agg(count(lit(1)).as("cnt"))
-            .write.mode("append").parquet(ontimeDir)
-          b.filter(unix_micros(col("ts")) < wm)
-            .groupBy(date_trunc("hour", col("ts")).as("window_start"))
-            .agg(count(lit(1)).as("cnt"))
-            .write.mode("append").parquet(lateDir)
-          val mx = b.agg(max(unix_micros(col("ts")))).head()
-          if (!mx.isNullAt(0))
-            wmUs = math.max(wmUs, mx.getLong(0) - delayUs)
-          ()
-        }
-        .start()
-      try sq.processAllAvailable() finally sq.stop()
-      val ontime = spark.read.parquet(ontimeDir)
-        .groupBy(col("window_start")).agg(sum(col("cnt")).as("ontime_cnt"))
-      val late = spark.read.parquet(lateDir)
-        .groupBy(col("window_start")).agg(sum(col("cnt")).as("late_cnt"))
-      ontime.join(late, Seq("window_start"), "full_outer")
-        .select(col("window_start"),
-          coalesce(col("ontime_cnt"), lit(0L)).as("ontime_cnt"),
-          coalesce(col("late_cnt"), lit(0L)).as("late_cnt"))
-    }
+  def streamQuarantine(spark: SparkSession, dir: String): DataFrame = {
+    val ev = Sources.table(spark, dir, "events")
+      .select(col("event_id"), col("ts"))
+    val staging = tempDir("graft_stream_quar_stage")
+    val now = System.currentTimeMillis()
+    stageFile(ev.filter(col("event_id") % 5 =!= 0), staging,
+      "b1.parquet", now - 120000)
+    stageFile(ev.filter(col("event_id") % 5 === 0), staging,
+      "b2.parquet", now - 60000)
+    val outDir = tempDir("graft_stream_quar_out")
+    val ontimeDir = outDir + "/ontime"
+    val lateDir = outDir + "/late"
+    val delayUs = 30L * 60 * 1000000
+    @volatile var wmUs = Long.MinValue
+    withQueries(spark)(batchSink(topic(spark, staging, ev.schema), "append",
+        None) { (batch, _) =>
+      val b = batch.localCheckpoint()
+      val wm = wmUs
+      b.filter(unix_micros(col("ts")) >= wm)
+        .groupBy(date_trunc("hour", col("ts")).as("window_start"))
+        .agg(count(lit(1)).as("cnt"))
+        .write.mode("append").parquet(ontimeDir)
+      b.filter(unix_micros(col("ts")) < wm)
+        .groupBy(date_trunc("hour", col("ts")).as("window_start"))
+        .agg(count(lit(1)).as("cnt"))
+        .write.mode("append").parquet(lateDir)
+      val mx = b.agg(max(unix_micros(col("ts")))).head()
+      if (!mx.isNullAt(0))
+        wmUs = math.max(wmUs, mx.getLong(0) - delayUs)
+    })(drain)
+    val ontime = spark.read.parquet(ontimeDir)
+      .groupBy(col("window_start")).agg(sum(col("cnt")).as("ontime_cnt"))
+    val late = spark.read.parquet(lateDir)
+      .groupBy(col("window_start")).agg(sum(col("cnt")).as("late_cnt"))
+    ontime.join(late, Seq("window_start"), "full_outer")
+      .select(col("window_start"),
+        coalesce(col("ontime_cnt"), lit(0L)).as("ontime_cnt"),
+        coalesce(col("late_cnt"), lit(0L)).as("late_cnt"))
+  }
 
   /** st29: streaming heavy hitters — q36's Misra-Gries summaries
     * maintained ONLINE: each micro-batch folds into its own
@@ -2140,32 +2056,23 @@ object StreamingQueries {
     * st27 lifecycle for frequency instead of profile). Counts add
     * across batches, so in the exact regime the merged answer equals
     * q36's batch answer — one oracle for both. */
-  def streamHeavyHitters(spark: SparkSession, dir: String): DataFrame =
-    withStateShards(spark) {
-      import graft.ops.Profiling
-      val ev = Sources.table(spark, dir, "events")
-        .select(col("event_id"), col("user_id"))
-      val staging = tempDir("graft_stream_hh_stage")
-      val now = System.currentTimeMillis()
-      stageFile(ev.filter(col("event_id") % 2 === 0), staging,
-        "b1.parquet", now - 120000)
-      stageFile(ev.filter(col("event_id") % 2 === 1), staging,
-        "b2.parquet", now - 60000)
-      val artifactDir = tempDir("graft_stream_hh_art") + "/partials"
-      val stream = spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(bindShardsToTopic(spark, staging))
-      val sq = stream.writeStream.outputMode("append")
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-          Profiling.heavyHittersPartial(batch.toDF(), col("user_id"),
-              m = 131072)
-            .write.mode("append").parquet(artifactDir)
-          ()
-        }
-        .start()
-      try sq.processAllAvailable() finally sq.stop()
-      Profiling.heavyHittersTopK(spark.read.parquet(artifactDir), k = 20)
-    }
+  def streamHeavyHitters(spark: SparkSession, dir: String): DataFrame = {
+    import graft.ops.Profiling
+    val ev = Sources.table(spark, dir, "events")
+      .select(col("event_id"), col("user_id"))
+    val staging = tempDir("graft_stream_hh_stage")
+    val now = System.currentTimeMillis()
+    stageFile(ev.filter(col("event_id") % 2 === 0), staging,
+      "b1.parquet", now - 120000)
+    stageFile(ev.filter(col("event_id") % 2 === 1), staging,
+      "b2.parquet", now - 60000)
+    val artifactDir = tempDir("graft_stream_hh_art") + "/partials"
+    withQueries(spark)(parquetSink(topic(spark, staging, ev.schema),
+        artifactDir, "append", None) { batch =>
+      Profiling.heavyHittersPartial(batch, col("user_id"), m = 131072)
+    })(drain)
+    Profiling.heavyHittersTopK(spark.read.parquet(artifactDir), k = 20)
+  }
 
   /** st31: streaming incremental near-dup ingest — d23's stored band
     * index under LIVE arrivals, the full CDC-dedup lifecycle: every
@@ -2185,42 +2092,35 @@ object StreamingQueries {
     * + a parquet append of (doc, band, sig) rows; the probe is an
     * equi-join against an index that only ever GROWS by band rows,
     * never gets re-built. */
-  def streamNearDupProbe(spark: SparkSession, dir: String): DataFrame =
-    withStateShards(spark) {
-      import graft.ops.Dedup
-      val d = Sources.table(spark, dir, "documents")
-      val base = d.filter(col("doc_id") % 10 =!= 7)
-      val arrivals = d.select(col("doc_id"), col("text"))
-        .filter(col("doc_id") % 10 === 7)
-      val idxDir = tempDir("graft_lsh_stream_idx")
-      Dedup.lshBandIndex(base, col("text"), col("doc_id"))
-        .write.mode("overwrite").parquet(s"$idxDir/bands")
-      val staging = tempDir("graft_lsh_stream_stage")
-      val now = System.currentTimeMillis()
-      stageFile(arrivals.filter(col("doc_id") % 20 === 7), staging,
-        "b1.parquet", now - 120000)
-      stageFile(arrivals.filter(col("doc_id") % 20 === 17), staging,
-        "b2.parquet", now - 60000)
-      val resultDir = tempDir("graft_lsh_stream_out") + "/table"
-      val stream = spark.readStream.schema(arrivals.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(bindShardsToTopic(spark, staging))
-      val sq = stream.writeStream.outputMode("append")
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-          val b = batch.toDF().localCheckpoint()
-          // probe the index AS IT STANDS (fresh read per batch)...
-          Dedup.probeNearDupIndex(b, d, col("text"), col("doc_id"),
-              spark.read.parquet(s"$idxDir/bands"))
-            .write.mode("append").parquet(resultDir)
-          // ...then admit this batch's bands for the batches after it
-          Dedup.lshBandIndex(b, col("text"), col("doc_id"))
-            .write.mode("append").parquet(s"$idxDir/bands")
-          ()
-        }
-        .start()
-      try sq.processAllAvailable() finally sq.stop()
-      spark.read.parquet(resultDir)
-    }
+  def streamNearDupProbe(spark: SparkSession, dir: String): DataFrame = {
+    import graft.ops.Dedup
+    val d = Sources.table(spark, dir, "documents")
+    val base = d.filter(col("doc_id") % 10 =!= 7)
+    val arrivals = d.select(col("doc_id"), col("text"))
+      .filter(col("doc_id") % 10 === 7)
+    val idxDir = tempDir("graft_lsh_stream_idx")
+    Dedup.lshBandIndex(base, col("text"), col("doc_id"))
+      .write.mode("overwrite").parquet(s"$idxDir/bands")
+    val staging = tempDir("graft_lsh_stream_stage")
+    val now = System.currentTimeMillis()
+    stageFile(arrivals.filter(col("doc_id") % 20 === 7), staging,
+      "b1.parquet", now - 120000)
+    stageFile(arrivals.filter(col("doc_id") % 20 === 17), staging,
+      "b2.parquet", now - 60000)
+    val resultDir = tempDir("graft_lsh_stream_out") + "/table"
+    withQueries(spark)(batchSink(topic(spark, staging, arrivals.schema),
+        "append", None) { (batch, _) =>
+      val b = batch.localCheckpoint()
+      // probe the index AS IT STANDS (fresh read per batch)...
+      Dedup.probeNearDupIndex(b, d, col("text"), col("doc_id"),
+          spark.read.parquet(s"$idxDir/bands"))
+        .write.mode("append").parquet(resultDir)
+      // ...then admit this batch's bands for the batches after it
+      Dedup.lshBandIndex(b, col("text"), col("doc_id"))
+        .write.mode("append").parquet(s"$idxDir/bands")
+    })(drain)
+    spark.read.parquet(resultDir)
+  }
 
   /** st30: streaming CEP — q37's greedy non-overlapping
     * view→click→purchase counter run AT INGEST as a per-user keyed
@@ -2235,47 +2135,42 @@ object StreamingQueries {
     * verbatim. State is written on every message (not only on
     * transitions) so pattern-free users still emit their 0 row, as the
     * batch side does. */
-  def streamCep(spark: SparkSession, dir: String): DataFrame =
-    withStateShards(spark) {
-      import spark.implicits._
-      import graft.operators.BatchExecutor.SinkTable
-      val graph = GroupGraph.define("stream-cep")(
-        Input("events", StringCodec, ProcessCallback { (ctx, msg) =>
-          val acc = ctx.value match {
-            case null => 0L
-            case a: Long => a
-            case a: java.lang.Long => a.longValue
-          }
-          val c = msg.asInstanceOf[String] match {
-            case "view" => 1L
-            case "click" => 2L
-            case "purchase" => 3L
-            case _ => 0L
-          }
-          val next = (acc % 10, c) match {
-            case (0L, 1L) => acc + 1
-            case (1L, 2L) => acc + 1
-            case (2L, 3L) => acc + 8
-            case _ => acc
-          }
-          ctx.setValue(next)
-        }),
-        Persist(Int64Codec))
-      val staging = stagedEventsSplit(spark, dir)
-      val stream = spark.readStream
-        .schema(Sources.eventMessages(spark, dir).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(bindShardsToTopic(spark, staging)).as[Message]
-      val out = new StreamExecutor(graph).run(spark, stream)
-      val table = out.filter(_.sink == SinkTable)
-        .map(e => (e.key, Int64Codec.decode(e.value)))
-        .toDF("user_id", "acc")
-      runToTable(spark, table)
-        .groupBy(col("user_id"))
-        .agg((max(col("acc")) / 10).cast("long").as("n_matches"))
-        .select(col("user_id").cast("long").as("user_id"),
-          col("n_matches"))
-    }
+  def streamCep(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    val graph = GroupGraph.define("stream-cep")(
+      Input("events", StringCodec, ProcessCallback { (ctx, msg) =>
+        val acc = ctx.value match {
+          case null => 0L
+          case a: Long => a
+          case a: java.lang.Long => a.longValue
+        }
+        val c = msg.asInstanceOf[String] match {
+          case "view" => 1L
+          case "click" => 2L
+          case "purchase" => 3L
+          case _ => 0L
+        }
+        val next = (acc % 10, c) match {
+          case (0L, 1L) => acc + 1
+          case (1L, 2L) => acc + 1
+          case (2L, 3L) => acc + 8
+          case _ => acc
+        }
+        ctx.setValue(next)
+      }),
+      Persist(Int64Codec))
+    val staging = stagedEventsSplit(spark, dir)
+    val stream = messageTopic(spark, staging)
+    val out = new StreamExecutor(graph).run(spark, stream)
+    val table = out.filter(_.sink == SinkTable)
+      .map(e => (e.key, Int64Codec.decode(e.value)))
+      .toDF("user_id", "acc")
+    runToTable(spark, table, "update")
+      .groupBy(col("user_id"))
+      .agg((max(col("acc")) / 10).cast("long").as("n_matches"))
+      .select(col("user_id").cast("long").as("user_id"),
+        col("n_matches"))
+  }
 
   /** st32: q39's duration-capped sessionization maintained AT INGEST —
     * the sequential per-user recurrence (anchor resets on every split,
@@ -2287,44 +2182,39 @@ object StreamingQueries {
     * the final state equals the batch fold's; both counters are
     * monotone, so the update-mode changelog's max per key is that
     * final state and q39's oracle is shared verbatim. */
-  def streamCappedSession(spark: SparkSession, dir: String): DataFrame =
-    withStateShards(spark) {
-      import spark.implicits._
-      import graft.operators.BatchExecutor.SinkTable
-      val gapUs = 24L * 3600 * 1000000
-      val capUs = 48L * 3600 * 1000000
-      val graph = GroupGraph.define("stream-capped-session")(
-        Input("events", StringCodec, ProcessCallback { (ctx, _) =>
-          val t = graft.operators.BatchExecutor.tsMicros(ctx.timestamp)
-          val (anchor, prev, nsess, ncap) = ctx.value match {
-            case null => (0L, 0L, 0L, 0L)
-            case s: String =>
-              val p = s.split(',')
-              (p(0).toLong, p(1).toLong, p(2).toLong, p(3).toLong)
-          }
-          val next =
-            if (nsess == 0L || t - prev > gapUs) (t, t, nsess + 1, ncap)
-            else if (t - anchor > capUs) (t, t, nsess + 1, ncap + 1)
-            else (anchor, t, nsess, ncap)
-          ctx.setValue(s"${next._1},${next._2},${next._3},${next._4}")
-        }),
-        Persist(StringCodec))
-      val staging = stagedEventsSplit(spark, dir)
-      val stream = spark.readStream
-        .schema(Sources.eventMessages(spark, dir).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(bindShardsToTopic(spark, staging)).as[Message]
-      val out = new StreamExecutor(graph).run(spark, stream)
-      val table = out.filter(_.sink == SinkTable)
-        .map(e => (e.key, StringCodec.decode(e.value)))
-        .toDF("user_id", "st")
-      runToTable(spark, table)
-        .select(col("user_id").cast("long").as("user_id"),
-          split(col("st"), ",").as("p"))
-        .groupBy(col("user_id"))
-        .agg(max(element_at(col("p"), 3).cast("long")).as("n_sessions"),
-          max(element_at(col("p"), 4).cast("long")).as("n_cap_splits"))
-    }
+  def streamCappedSession(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    val gapUs = 24L * 3600 * 1000000
+    val capUs = 48L * 3600 * 1000000
+    val graph = GroupGraph.define("stream-capped-session")(
+      Input("events", StringCodec, ProcessCallback { (ctx, _) =>
+        val t = graft.operators.BatchExecutor.tsMicros(ctx.timestamp)
+        val (anchor, prev, nsess, ncap) = ctx.value match {
+          case null => (0L, 0L, 0L, 0L)
+          case s: String =>
+            val p = s.split(',')
+            (p(0).toLong, p(1).toLong, p(2).toLong, p(3).toLong)
+        }
+        val next =
+          if (nsess == 0L || t - prev > gapUs) (t, t, nsess + 1, ncap)
+          else if (t - anchor > capUs) (t, t, nsess + 1, ncap + 1)
+          else (anchor, t, nsess, ncap)
+        ctx.setValue(s"${next._1},${next._2},${next._3},${next._4}")
+      }),
+      Persist(StringCodec))
+    val staging = stagedEventsSplit(spark, dir)
+    val stream = messageTopic(spark, staging)
+    val out = new StreamExecutor(graph).run(spark, stream)
+    val table = out.filter(_.sink == SinkTable)
+      .map(e => (e.key, StringCodec.decode(e.value)))
+      .toDF("user_id", "st")
+    runToTable(spark, table, "update")
+      .select(col("user_id").cast("long").as("user_id"),
+        split(col("st"), ",").as("p"))
+      .groupBy(col("user_id"))
+      .agg(max(element_at(col("p"), 3).cast("long")).as("n_sessions"),
+        max(element_at(col("p"), 4).cast("long")).as("n_cap_splits"))
+  }
 
   /** st33: streaming admission control — a per-key arrival-order quota
     * enforced AT INGEST (the rate-cap every production intake runs so
@@ -2337,52 +2227,47 @@ object StreamingQueries {
     * boundary event. State is 3 longs per key; O(keys), never O(events).
     * Differs from t26's quota mix (quality-ranked batch allocation):
     * this is the online arrival-order form. */
-  def streamAdmission(spark: SparkSession, dir: String): DataFrame =
-    withStateShards(spark) {
-      import spark.implicits._
-      import graft.operators.BatchExecutor.SinkTable
-      val cap = 300L
-      val graph = GroupGraph.define("stream-admission")(
-        Input("events", StringCodec, ProcessCallback { (ctx, msg) =>
-          val (adm, rej, last) = ctx.value match {
-            case null => (0L, 0L, -1L)
-            case s: String =>
-              val p = s.split(',')
-              (p(0).toLong, p(1).toLong, p(2).toLong)
-          }
-          val eid = msg.asInstanceOf[String].toLong
-          val next =
-            if (adm < cap) (adm + 1, rej, eid) else (adm, rej + 1, last)
-          ctx.setValue(s"${next._1},${next._2},${next._3}")
-        }),
-        Persist(StringCodec))
-      val staging = tempDir("graft_admission_split")
-      stageTwoBatches(spark,
-        Sources.messages(Sources.table(spark, dir, "events"), "events",
-          col("event_type"), col("event_id"), col("ts"), col("event_id")),
-        staging)
-      val stream = spark.readStream
-        .schema(Sources.eventMessages(spark, dir).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(bindShardsToTopic(spark, staging)).as[Message]
-      val out = new StreamExecutor(graph).run(spark, stream)
-      val table = out.filter(_.sink == SinkTable)
-        .map(e => (e.key, StringCodec.decode(e.value)))
-        .toDF("event_type", "st")
-      // last_admitted is NOT monotone (ids arrive in ts order), so the
-      // changelog's final row is selected by the version adm+rej —
-      // which increments on every message — not by per-column max.
-      runToTable(spark, table)
-        .select(col("event_type"), split(col("st"), ",").as("p"))
-        .withColumn("ver", element_at(col("p"), 1).cast("long") +
-          element_at(col("p"), 2).cast("long"))
-        .groupBy(col("event_type"))
-        .agg(max_by(col("p"), col("ver")).as("p"))
-        .select(col("event_type"),
-          element_at(col("p"), 1).cast("long").as("admitted"),
-          element_at(col("p"), 2).cast("long").as("rejected"),
-          element_at(col("p"), 3).cast("long").as("last_admitted"))
-    }
+  def streamAdmission(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    val cap = 300L
+    val graph = GroupGraph.define("stream-admission")(
+      Input("events", StringCodec, ProcessCallback { (ctx, msg) =>
+        val (adm, rej, last) = ctx.value match {
+          case null => (0L, 0L, -1L)
+          case s: String =>
+            val p = s.split(',')
+            (p(0).toLong, p(1).toLong, p(2).toLong)
+        }
+        val eid = msg.asInstanceOf[String].toLong
+        val next =
+          if (adm < cap) (adm + 1, rej, eid) else (adm, rej + 1, last)
+        ctx.setValue(s"${next._1},${next._2},${next._3}")
+      }),
+      Persist(StringCodec))
+    val staging = tempDir("graft_admission_split")
+    stageTwoBatches(spark,
+      Sources.messages(Sources.table(spark, dir, "events"), "events",
+        col("event_type"), col("event_id"), col("ts"), col("event_id")),
+      staging)
+    val stream = messageTopic(spark, staging)
+    val out = new StreamExecutor(graph).run(spark, stream)
+    val table = out.filter(_.sink == SinkTable)
+      .map(e => (e.key, StringCodec.decode(e.value)))
+      .toDF("event_type", "st")
+    // last_admitted is NOT monotone (ids arrive in ts order), so the
+    // changelog's final row is selected by the version adm+rej —
+    // which increments on every message — not by per-column max.
+    runToTable(spark, table, "update")
+      .select(col("event_type"), split(col("st"), ",").as("p"))
+      .withColumn("ver", element_at(col("p"), 1).cast("long") +
+        element_at(col("p"), 2).cast("long"))
+      .groupBy(col("event_type"))
+      .agg(max_by(col("p"), col("ver")).as("p"))
+      .select(col("event_type"),
+        element_at(col("p"), 1).cast("long").as("admitted"),
+        element_at(col("p"), 2).cast("long").as("rejected"),
+        element_at(col("p"), 3).cast("long").as("last_admitted"))
+  }
 
   /** st35: LEFT OUTER stream-stream interval join — the semantics st20
     * (inner) cannot give: a view with NO purchase in its hour window
@@ -2400,46 +2285,43 @@ object StreamingQueries {
     * At 100 TB: state is bounded by the watermark horizon per key —
     * exactly the production outer-join deployment shape; the sentinel
     * corresponds to the real world's steadily advancing event time. */
-  def streamOuterJoin(spark: SparkSession, dir: String): DataFrame =
-    withStateShards(spark) {
-      val ev = Sources.table(spark, dir, "events")
-      val maxUs = ev.agg(unix_micros(max(col("ts"))).as("m"))
-        .head().getLong(0)
-      val sentinels = spark.range(2).select(
-        lit(-1L).as("user_id"),
-        when(col("id") === 0, "view").otherwise("purchase")
-          .as("event_type"),
-        timestamp_micros(lit(maxUs + 30L * 86400000000L)).as("ts"),
-        (-col("id") - 1L).as("event_id"))
-      val msgs = Sources.messages(
-        ev.select(col("user_id"), col("event_type"), col("ts"),
-          col("event_id")).unionByName(sentinels),
-        "events", col("user_id"), col("event_type"), col("ts"),
-        col("event_id"))
-      val staging = tempDir("graft_outer_join")
-      stageTwoBatches(spark, msgs, staging)
-      val src = spark.readStream.schema(msgs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(bindShardsToTopic(spark, staging))
-      val views = src.filter(col("value").cast("string") === "view")
-        .select(col("key").cast("long").as("user_id"),
-          col("offset").as("view_id"), col("timestamp").as("ts_v"))
-        .withWatermark("ts_v", "1 hour")
-      val purchases = src.filter(col("value").cast("string") === "purchase")
-        .select(col("key").cast("long").as("p_user"),
-          col("offset").as("purchase_id"), col("timestamp").as("ts_p"))
-        .withWatermark("ts_p", "1 hour")
-      val joined = views.join(purchases,
-        col("user_id") === col("p_user") &&
-          col("ts_p") > col("ts_v") &&
-          col("ts_p") <= col("ts_v") + expr("INTERVAL 1 HOUR"),
-        "leftOuter")
-      runToTable(spark, joined.select(col("user_id"), col("view_id"),
-          coalesce(col("purchase_id"), lit(-1L)).as("purchase_id"),
-          coalesce(unix_micros(col("ts_p")) - unix_micros(col("ts_v")),
-            lit(-1L)).as("lag_us")), mode = "append")
-        .filter(col("user_id") >= 0)
-    }
+  def streamOuterJoin(spark: SparkSession, dir: String): DataFrame = {
+    val ev = Sources.table(spark, dir, "events")
+    val maxUs = ev.agg(unix_micros(max(col("ts"))).as("m"))
+      .head().getLong(0)
+    val sentinels = spark.range(2).select(
+      lit(-1L).as("user_id"),
+      when(col("id") === 0, "view").otherwise("purchase")
+        .as("event_type"),
+      timestamp_micros(lit(maxUs + 30L * 86400000000L)).as("ts"),
+      (-col("id") - 1L).as("event_id"))
+    val msgs = Sources.messages(
+      ev.select(col("user_id"), col("event_type"), col("ts"),
+        col("event_id")).unionByName(sentinels),
+      "events", col("user_id"), col("event_type"), col("ts"),
+      col("event_id"))
+    val staging = tempDir("graft_outer_join")
+    stageTwoBatches(spark, msgs, staging)
+    val src = topic(spark, staging, msgs.schema)
+    val views = src.filter(col("value").cast("string") === "view")
+      .select(col("key").cast("long").as("user_id"),
+        col("offset").as("view_id"), col("timestamp").as("ts_v"))
+      .withWatermark("ts_v", "1 hour")
+    val purchases = src.filter(col("value").cast("string") === "purchase")
+      .select(col("key").cast("long").as("p_user"),
+        col("offset").as("purchase_id"), col("timestamp").as("ts_p"))
+      .withWatermark("ts_p", "1 hour")
+    val joined = views.join(purchases,
+      col("user_id") === col("p_user") &&
+        col("ts_p") > col("ts_v") &&
+        col("ts_p") <= col("ts_v") + expr("INTERVAL 1 HOUR"),
+      "leftOuter")
+    runToTable(spark, joined.select(col("user_id"), col("view_id"),
+        coalesce(col("purchase_id"), lit(-1L)).as("purchase_id"),
+        coalesce(unix_micros(col("ts_p")) - unix_micros(col("ts_v")),
+          lit(-1L)).as("lag_us")), mode = "append")
+      .filter(col("user_id") >= 0)
+  }
 
   /** st37: streaming ingest INTO the partitioned lake — the c13 layout
     * produced by the streaming path, which is how a production events
@@ -2456,38 +2338,29 @@ object StreamingQueries {
     * operational cost it leaves behind is small files per
     * (micro-batch × partition) — exactly the debt c15's compaction
     * pass retires. */
-  def streamLakeIngest(spark: SparkSession, dir: String): DataFrame =
-    withStateShards(spark) {
-      val ev = Sources.table(spark, dir, "events")
-      val msgs = Sources.messages(ev, "events", col("user_id"),
-        col("event_type"), col("ts"), col("event_id"))
-      val staging = tempDir("graft_lake_ingest_src")
-      stageTwoBatches(spark, msgs, staging)
-      val lake = tempDir("graft_lake_ingest_lake")
-      val ckpt = tempDir("graft_lake_ingest_ckpt")
-      val src = spark.readStream.schema(msgs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(bindShardsToTopic(spark, staging))
-      val q = src.select(
-          col("key").cast("long").as("user_id"),
-          col("value").cast("string").as("event_type"),
-          col("offset").as("event_id"),
-          to_date(col("timestamp")).as("event_date"))
-        .writeStream.format("parquet")
-        .option("path", lake)
-        .option("checkpointLocation", ckpt)
-        .partitionBy("event_date")
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      spark.read.parquet(lake)
-        .filter(col("event_date")
-          .between(lit("2024-01-10"), lit("2024-01-16")))
-        .groupBy(col("event_date"), col("event_type"))
-        .agg(count(lit(1)).as("n_events"),
-          sum(col("event_id")).as("id_sum"),
-          countDistinct(col("user_id")).as("n_users"))
-        .withColumn("event_date", col("event_date").cast("string"))
-    }
+  def streamLakeIngest(spark: SparkSession, dir: String): DataFrame = {
+    val ev = Sources.table(spark, dir, "events")
+    val msgs = Sources.messages(ev, "events", col("user_id"),
+      col("event_type"), col("ts"), col("event_id"))
+    val staging = tempDir("graft_lake_ingest_src")
+    stageTwoBatches(spark, msgs, staging)
+    val lake = tempDir("graft_lake_ingest_lake")
+    val ckpt = tempDir("graft_lake_ingest_ckpt")
+    val rows = topic(spark, staging, msgs.schema).select(
+      col("key").cast("long").as("user_id"),
+      col("value").cast("string").as("event_type"),
+      col("offset").as("event_id"),
+      to_date(col("timestamp")).as("event_date"))
+    withQueries(spark)(fileSink(rows, lake, ckpt, "event_date"))(drain)
+    spark.read.parquet(lake)
+      .filter(col("event_date")
+        .between(lit("2024-01-10"), lit("2024-01-16")))
+      .groupBy(col("event_date"), col("event_type"))
+      .agg(count(lit(1)).as("n_events"),
+        sum(col("event_id")).as("id_sum"),
+        countDistinct(col("user_id")).as("n_users"))
+      .withColumn("event_date", col("event_date").cast("string"))
+  }
 
   /** st36: streaming right-to-be-forgotten — c14's erasure lifecycle
     * applied ONLINE, the way a deployment actually receives GDPR
@@ -2505,56 +2378,51 @@ object StreamingQueries {
     * counter (the count column RESETS at erasure, so per-column max
     * would resurrect pre-erasure state — st33's version-counter
     * lesson). */
-  def streamForget(spark: SparkSession, dir: String): DataFrame =
-    withStateShards(spark) {
-      import spark.implicits._
-      import graft.operators.BatchExecutor.SinkTable
-      val graph = GroupGraph.define("stream-forget")(
-        Inputs(Seq("events", "erasures"), StringCodec,
-          ProcessCallback { (ctx, _) =>
-            val (cnt, erased, dropped, seen) = ctx.value match {
-              case null => (0L, 0L, 0L, 0L)
-              case s: String =>
-                val p = s.split(',')
-                (p(0).toLong, p(1).toLong, p(2).toLong, p(3).toLong)
-            }
-            val next =
-              if (ctx.topic == "erasures") (0L, 1L, dropped, seen + 1)
-              else if (erased == 1L) (cnt, 1L, dropped + 1, seen + 1)
-              else (cnt + 1, 0L, 0L, seen + 1)
-            ctx.setValue(s"${next._1},${next._2},${next._3},${next._4}")
-          }),
-        Persist(StringCodec))
-      val ev = Sources.table(spark, dir, "events")
-      val controls = ev.select(col("user_id")).distinct()
-        .filter(col("user_id") % 7 === 3)
-        .select(col("user_id"), lit("erase").as("v"),
-          to_timestamp(lit("2024-01-16 00:00:00")).as("ts"),
-          (-col("user_id") - 1L).as("event_id"))
-      val msgs = Sources.messages(ev, "events", col("user_id"),
-          col("event_type"), col("ts"), col("event_id"))
-        .unionByName(Sources.messages(controls, "erasures",
-          col("user_id"), col("v"), col("ts"), col("event_id")))
-      val staging = tempDir("graft_forget_stream")
-      stageTwoBatches(spark, msgs, staging)
-      val stream = spark.readStream
-        .schema(msgs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(bindShardsToTopic(spark, staging)).as[Message]
-      val out = new StreamExecutor(graph).run(spark, stream)
-      val table = out.filter(_.sink == SinkTable)
-        .map(e => (e.key, StringCodec.decode(e.value)))
-        .toDF("user_id", "st")
-      runToTable(spark, table)
-        .select(col("user_id"), split(col("st"), ",").as("p"))
-        .withColumn("seen", element_at(col("p"), 4).cast("long"))
-        .groupBy(col("user_id"))
-        .agg(max_by(col("p"), col("seen")).as("p"))
-        .select(col("user_id").cast("long").as("user_id"),
-          element_at(col("p"), 1).cast("long").as("n_events"),
-          (element_at(col("p"), 2).cast("long") === 1L).as("erased"),
-          element_at(col("p"), 3).cast("long").as("n_dropped"))
-    }
+  def streamForget(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    val graph = GroupGraph.define("stream-forget")(
+      Inputs(Seq("events", "erasures"), StringCodec,
+        ProcessCallback { (ctx, _) =>
+          val (cnt, erased, dropped, seen) = ctx.value match {
+            case null => (0L, 0L, 0L, 0L)
+            case s: String =>
+              val p = s.split(',')
+              (p(0).toLong, p(1).toLong, p(2).toLong, p(3).toLong)
+          }
+          val next =
+            if (ctx.topic == "erasures") (0L, 1L, dropped, seen + 1)
+            else if (erased == 1L) (cnt, 1L, dropped + 1, seen + 1)
+            else (cnt + 1, 0L, 0L, seen + 1)
+          ctx.setValue(s"${next._1},${next._2},${next._3},${next._4}")
+        }),
+      Persist(StringCodec))
+    val ev = Sources.table(spark, dir, "events")
+    val controls = ev.select(col("user_id")).distinct()
+      .filter(col("user_id") % 7 === 3)
+      .select(col("user_id"), lit("erase").as("v"),
+        to_timestamp(lit("2024-01-16 00:00:00")).as("ts"),
+        (-col("user_id") - 1L).as("event_id"))
+    val msgs = Sources.messages(ev, "events", col("user_id"),
+        col("event_type"), col("ts"), col("event_id"))
+      .unionByName(Sources.messages(controls, "erasures",
+        col("user_id"), col("v"), col("ts"), col("event_id")))
+    val staging = tempDir("graft_forget_stream")
+    stageTwoBatches(spark, msgs, staging)
+    val stream = messageTopic(spark, staging)
+    val out = new StreamExecutor(graph).run(spark, stream)
+    val table = out.filter(_.sink == SinkTable)
+      .map(e => (e.key, StringCodec.decode(e.value)))
+      .toDF("user_id", "st")
+    runToTable(spark, table, "update")
+      .select(col("user_id"), split(col("st"), ",").as("p"))
+      .withColumn("seen", element_at(col("p"), 4).cast("long"))
+      .groupBy(col("user_id"))
+      .agg(max_by(col("p"), col("seen")).as("p"))
+      .select(col("user_id").cast("long").as("user_id"),
+        element_at(col("p"), 1).cast("long").as("n_events"),
+        (element_at(col("p"), 2).cast("long") === 1L).as("erased"),
+        element_at(col("p"), 3).cast("long").as("n_dropped"))
+  }
 
   /** st38: forward-fill maintained ONLINE — q44's `LAST_VALUE IGNORE
     * NULLS` as live per-user keyed state: the state is the latest
@@ -2568,48 +2436,44 @@ object StreamingQueries {
     * would sink to its store. The double rides through state and
     * emission as its shortest-round-trip string, so the shared q44
     * oracle hash-matches bit-for-bit. */
-  def streamForwardFill(spark: SparkSession, dir: String): DataFrame =
-    withStateShards(spark) {
-      import spark.implicits._
-      val graph = GroupGraph.define("stream-forward-fill")(
-        Input("events", StringCodec, ProcessCallback { (ctx, msg) =>
-          // value = "<event_id>|<ts_us>|<event_type>|<value>"
-          val p = msg.asInstanceOf[String].split('|')
-          if (p(2) == "purchase") ctx.setValue(p(3))
-          val filled = ctx.value match {
-            case null => ""
-            case s: String => s
-          }
-          ctx.emit("filled", p(0), s"${ctx.key}|${p(1)}|$filled")
-        }),
-        Persist(StringCodec), Output("filled", StringCodec))
-      val staging = tempDir("graft_fill_split")
-      val ev = Sources.table(spark, dir, "events")
-        .filter(col("user_id") % 5 === 2)
-      stageTwoBatches(spark,
-        Sources.messages(ev, "events", col("user_id"),
-          concat_ws("|", col("event_id"), unix_micros(col("ts")),
-            col("event_type"), col("value")),
-          col("ts"), col("event_id")),
-        staging)
-      val stream = spark.readStream
-        .schema(Sources.eventMessages(spark, dir).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(bindShardsToTopic(spark, staging)).as[Message]
-      val out = new StreamExecutor(graph).run(spark, stream)
-      val filled = out.filter(_.sink == "filled")
-        .map(e => (e.key, StringCodec.decode(e.value)))
-        .toDF("event_id", "row")
-      runToTable(spark, filled)
-        .select(col("event_id").cast("long").as("event_id"),
-          split(col("row"), "\\|").as("p"))
-        .select(element_at(col("p"), 1).cast("long").as("user_id"),
-          col("event_id"),
-          element_at(col("p"), 2).cast("long").as("ts_us"),
-          when(element_at(col("p"), 3) === "", lit(null).cast("double"))
-            .otherwise(element_at(col("p"), 3).cast("double"))
-            .as("last_purchase_value"))
-    }
+  def streamForwardFill(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    val graph = GroupGraph.define("stream-forward-fill")(
+      Input("events", StringCodec, ProcessCallback { (ctx, msg) =>
+        // value = "<event_id>|<ts_us>|<event_type>|<value>"
+        val p = msg.asInstanceOf[String].split('|')
+        if (p(2) == "purchase") ctx.setValue(p(3))
+        val filled = ctx.value match {
+          case null => ""
+          case s: String => s
+        }
+        ctx.emit("filled", p(0), s"${ctx.key}|${p(1)}|$filled")
+      }),
+      Persist(StringCodec), Output("filled", StringCodec))
+    val staging = tempDir("graft_fill_split")
+    val ev = Sources.table(spark, dir, "events")
+      .filter(col("user_id") % 5 === 2)
+    stageTwoBatches(spark,
+      Sources.messages(ev, "events", col("user_id"),
+        concat_ws("|", col("event_id"), unix_micros(col("ts")),
+          col("event_type"), col("value")),
+        col("ts"), col("event_id")),
+      staging)
+    val stream = messageTopic(spark, staging)
+    val out = new StreamExecutor(graph).run(spark, stream)
+    val filled = out.filter(_.sink == "filled")
+      .map(e => (e.key, StringCodec.decode(e.value)))
+      .toDF("event_id", "row")
+    runToTable(spark, filled, "update")
+      .select(col("event_id").cast("long").as("event_id"),
+        split(col("row"), "\\|").as("p"))
+      .select(element_at(col("p"), 1).cast("long").as("user_id"),
+        col("event_id"),
+        element_at(col("p"), 2).cast("long").as("ts_us"),
+        when(element_at(col("p"), 3) === "", lit(null).cast("double"))
+          .otherwise(element_at(col("p"), 3).cast("double"))
+          .as("last_purchase_value"))
+  }
 
   /** st39: sweep-line peak concurrency maintained ONLINE — q45 as
     * live keyed state. The ingested stream IS the boundary-point
@@ -2622,49 +2486,44 @@ object StreamingQueries {
     * the fold is order-free (same-sign deltas commute through
     * cur/peak). The changelog's final row per day is `max_by` the
     * monotone applied-count; the shared q45 oracle hash-matches. */
-  def streamPeakConcurrency(spark: SparkSession, dir: String): DataFrame =
-    withStateShards(spark) {
-      import spark.implicits._
-      import graft.operators.BatchExecutor.SinkTable
-      val graph = GroupGraph.define("stream-peak-concurrency")(
-        Input("points", StringCodec, ProcessCallback { (ctx, msg) =>
-          val delta = msg.asInstanceOf[String].toLong
-          val (cur, peak, n) = ctx.value match {
-            case null => (0L, 0L, 0L)
-            case s: String =>
-              val p = s.split(',')
-              (p(0).toLong, p(1).toLong, p(2).toLong)
-          }
-          val c2 = cur + delta
-          ctx.setValue(s"$c2,${math.max(peak, c2)},${n + 1L}")
-        }),
-        Persist(StringCodec))
-      val pts = graft.queries.Relational.concurrencyPoints(
-        Sources.table(spark, dir, "events"))
-      val staging = tempDir("graft_peak_split")
-      stageTwoBatches(spark,
-        Sources.messages(pts, "points", col("day"), col("delta"),
-          timestamp_micros(col("t") * 2 +
-            when(col("delta") === 1, 1L).otherwise(0L)),
-          col("event_id")),
-        staging)
-      val stream = spark.readStream
-        .schema(Sources.eventMessages(spark, dir).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(bindShardsToTopic(spark, staging)).as[Message]
-      val out = new StreamExecutor(graph).run(spark, stream)
-      val table = out.filter(_.sink == SinkTable)
-        .map(e => (e.key, StringCodec.decode(e.value)))
-        .toDF("k", "st")
-      runToTable(spark, table)
-        .select(col("k"), split(col("st"), ",").as("p"))
-        .withColumn("n", element_at(col("p"), 3).cast("long"))
-        .groupBy(col("k"))
-        .agg(max_by(col("p"), col("n")).as("p"))
-        .select(date_format(date_add(lit("1970-01-01").cast("date"),
-          col("k").cast("int")), "yyyy-MM-dd").as("day"),
-          element_at(col("p"), 2).cast("long").as("peak_concurrent"))
-    }
+  def streamPeakConcurrency(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    val graph = GroupGraph.define("stream-peak-concurrency")(
+      Input("points", StringCodec, ProcessCallback { (ctx, msg) =>
+        val delta = msg.asInstanceOf[String].toLong
+        val (cur, peak, n) = ctx.value match {
+          case null => (0L, 0L, 0L)
+          case s: String =>
+            val p = s.split(',')
+            (p(0).toLong, p(1).toLong, p(2).toLong)
+        }
+        val c2 = cur + delta
+        ctx.setValue(s"$c2,${math.max(peak, c2)},${n + 1L}")
+      }),
+      Persist(StringCodec))
+    val pts = graft.queries.Relational.concurrencyPoints(
+      Sources.table(spark, dir, "events"))
+    val staging = tempDir("graft_peak_split")
+    stageTwoBatches(spark,
+      Sources.messages(pts, "points", col("day"), col("delta"),
+        timestamp_micros(col("t") * 2 +
+          when(col("delta") === 1, 1L).otherwise(0L)),
+        col("event_id")),
+      staging)
+    val stream = messageTopic(spark, staging)
+    val out = new StreamExecutor(graph).run(spark, stream)
+    val table = out.filter(_.sink == SinkTable)
+      .map(e => (e.key, StringCodec.decode(e.value)))
+      .toDF("k", "st")
+    runToTable(spark, table, "update")
+      .select(col("k"), split(col("st"), ",").as("p"))
+      .withColumn("n", element_at(col("p"), 3).cast("long"))
+      .groupBy(col("k"))
+      .agg(max_by(col("p"), col("n")).as("p"))
+      .select(date_format(date_add(lit("1970-01-01").cast("date"),
+        col("k").cast("int")), "yyyy-MM-dd").as("day"),
+        element_at(col("p"), 2).cast("long").as("peak_concurrent"))
+  }
 
   /** st41: usage metering maintained ONLINE — q49's time-weighted
     * accumulation as live keyed state per (user, day): each arrival
@@ -2673,68 +2532,63 @@ object StreamingQueries {
     * held to midnight) is folded at READ time, mirroring st40's
     * open-day treatment. 4 longs per key, meter-read semantics at any
     * instant; shares q49's oracle bit-for-bit. */
-  def streamMetering(spark: SparkSession, dir: String): DataFrame =
-    withStateShards(spark) {
-      import spark.implicits._
-      import graft.operators.BatchExecutor.SinkTable
-      val dayUs = 86400000000L
-      val graph = GroupGraph.define("stream-metering")(
-        Input("events", StringCodec, ProcessCallback { (ctx, msg) =>
-          val t = graft.operators.BatchExecutor.tsMicros(ctx.timestamp)
-          val vc = msg.asInstanceOf[String].toLong
-          // state = (t_first, t_last, vc_last, acc, n)
-          val next = ctx.value match {
-            case null => (t, t, vc, 0L, 1L)
-            case s: String =>
-              val p = s.split(',')
-              val (t0, pt, pvc, acc, n) = (p(0).toLong, p(1).toLong,
-                p(2).toLong, p(3).toLong, p(4).toLong)
-              (t0, t, vc, acc + pvc * (t - pt), n + 1L)
-          }
-          ctx.setValue(
-            s"${next._1},${next._2},${next._3},${next._4},${next._5}")
-        }),
-        Persist(StringCodec))
-      val staging = tempDir("graft_meter_split")
-      val ev = Sources.table(spark, dir, "events")
-      stageTwoBatches(spark,
-        Sources.messages(ev, "events",
-          concat_ws("|", col("user_id"),
-            expr("unix_micros(ts) div 86400000000")),
-          floor(col("value") * 100.0d).cast("long"),
-          col("ts"), col("event_id")),
-        staging)
-      val stream = spark.readStream
-        .schema(Sources.eventMessages(spark, dir).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(bindShardsToTopic(spark, staging)).as[Message]
-      val out = new StreamExecutor(graph).run(spark, stream)
-      val table = out.filter(_.sink == SinkTable)
-        .map(e => (e.key, StringCodec.decode(e.value)))
-        .toDF("k", "st")
-      runToTable(spark, table)
-        .select(split(col("k"), "\\|").as("kk"),
-          split(col("st"), ",").as("p"))
-        .select(
-          element_at(col("kk"), 1).cast("long").as("user_id"),
-          element_at(col("kk"), 2).cast("long").as("day"),
-          element_at(col("p"), 1).cast("long").as("t0"),
-          element_at(col("p"), 2).cast("long").as("t"),
-          element_at(col("p"), 3).cast("long").as("vc"),
-          element_at(col("p"), 4).cast("long").as("acc"),
-          element_at(col("p"), 5).cast("long").as("n"))
-        .groupBy(col("user_id"), col("day"))
-        .agg(max_by(struct(col("t0"), col("t"), col("vc"), col("acc")),
-          col("n")).as("s"), max(col("n")).as("n_obs"))
-        .select(col("user_id"),
-          date_format(date_add(lit("1970-01-01").cast("date"),
-            col("day").cast("int")), "yyyy-MM-dd").as("day"),
-          (col("s.acc") +
-            col("s.vc") * ((col("day") + 1L) * dayUs - col("s.t")))
-            .as("weighted_sum"),
-          ((col("day") + 1L) * dayUs - col("s.t0")).as("dur_us"),
-          col("n_obs"))
-    }
+  def streamMetering(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    val dayUs = 86400000000L
+    val graph = GroupGraph.define("stream-metering")(
+      Input("events", StringCodec, ProcessCallback { (ctx, msg) =>
+        val t = graft.operators.BatchExecutor.tsMicros(ctx.timestamp)
+        val vc = msg.asInstanceOf[String].toLong
+        // state = (t_first, t_last, vc_last, acc, n)
+        val next = ctx.value match {
+          case null => (t, t, vc, 0L, 1L)
+          case s: String =>
+            val p = s.split(',')
+            val (t0, pt, pvc, acc, n) = (p(0).toLong, p(1).toLong,
+              p(2).toLong, p(3).toLong, p(4).toLong)
+            (t0, t, vc, acc + pvc * (t - pt), n + 1L)
+        }
+        ctx.setValue(
+          s"${next._1},${next._2},${next._3},${next._4},${next._5}")
+      }),
+      Persist(StringCodec))
+    val staging = tempDir("graft_meter_split")
+    val ev = Sources.table(spark, dir, "events")
+    stageTwoBatches(spark,
+      Sources.messages(ev, "events",
+        concat_ws("|", col("user_id"),
+          expr("unix_micros(ts) div 86400000000")),
+        floor(col("value") * 100.0d).cast("long"),
+        col("ts"), col("event_id")),
+      staging)
+    val stream = messageTopic(spark, staging)
+    val out = new StreamExecutor(graph).run(spark, stream)
+    val table = out.filter(_.sink == SinkTable)
+      .map(e => (e.key, StringCodec.decode(e.value)))
+      .toDF("k", "st")
+    runToTable(spark, table, "update")
+      .select(split(col("k"), "\\|").as("kk"),
+        split(col("st"), ",").as("p"))
+      .select(
+        element_at(col("kk"), 1).cast("long").as("user_id"),
+        element_at(col("kk"), 2).cast("long").as("day"),
+        element_at(col("p"), 1).cast("long").as("t0"),
+        element_at(col("p"), 2).cast("long").as("t"),
+        element_at(col("p"), 3).cast("long").as("vc"),
+        element_at(col("p"), 4).cast("long").as("acc"),
+        element_at(col("p"), 5).cast("long").as("n"))
+      .groupBy(col("user_id"), col("day"))
+      .agg(max_by(struct(col("t0"), col("t"), col("vc"), col("acc")),
+        col("n")).as("s"), max(col("n")).as("n_obs"))
+      .select(col("user_id"),
+        date_format(date_add(lit("1970-01-01").cast("date"),
+          col("day").cast("int")), "yyyy-MM-dd").as("day"),
+        (col("s.acc") +
+          col("s.vc") * ((col("day") + 1L) * dayUs - col("s.t")))
+          .as("weighted_sum"),
+        ((col("day") + 1L) * dayUs - col("s.t0")).as("dur_us"),
+        col("n_obs"))
+  }
 
   /** st44: session-path analysis maintained ONLINE — q54's journey
     * table live at ingest: per-user state carries the OPEN session
@@ -2746,77 +2600,63 @@ object StreamingQueries {
     * only in state; the read unions the per-user final open path with
     * the completed-path counts, so the total equals the batch
     * sessionization exactly (shared q54-semantics oracle). */
-  def streamSessionPaths(spark: SparkSession, dir: String): DataFrame =
-    withStateShards(spark) {
-      import spark.implicits._
-      import graft.operators.BatchExecutor.SinkTable
-      val gapUs = 1800000000L
-      val stage1 = GroupGraph.define("session-path")(
-        Input("events", StringCodec, ProcessCallback { (ctx, msg) =>
-          val t = graft.operators.BatchExecutor.tsMicros(ctx.timestamp)
-          val typ = msg.asInstanceOf[String]
-          ctx.value match {
-            case null =>
-              ctx.setValue(s"$t,1,1,$typ")
-            case s: String =>
-              val Array(lastTs, m, n, path) = s.split(",", 4)
-              if (t - lastTs.toLong > gapUs) {
-                ctx.emit("paths", path, 1L)
-                ctx.setValue(s"$t,${m.toLong + 1},1,$typ")
-              } else {
-                val n2 = n.toLong + 1
-                val p2 = if (n2 <= 5) s"$path>$typ" else path
-                ctx.setValue(s"$t,${m.toLong + 1},$n2,$p2")
-              }
-          }
-        }),
-        Persist(StringCodec), Output("paths", Int64Codec))
-      val counter = GroupGraph.define("path-counts")(
-        Input("paths", Int64Codec, ProcessCallback { (ctx, _) =>
-          ctx.value match {
-            case null => ctx.setValue(1L)
-            case n: Long => ctx.setValue(n + 1L)
-          }
-        }),
-        Persist(Int64Codec))
-      val staging = stagedEventsSplit(spark, dir)
-      val relay = tempDir("graft_path_relay")
-      val msgSchema = org.apache.spark.sql.Encoders.product[Message].schema
-      val stream1 = spark.readStream.schema(msgSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(bindShardsToTopic(spark, staging)).as[Message]
-      val tableDir = tempDir("graft_path_table")
-      val q1 = StreamSinks.routeOutputs(
-        new StreamExecutor(stage1).run(spark, stream1),
-        Map("paths" -> relay), tableDir = Some(tableDir))
-      val stream2 = spark.readStream.schema(msgSchema)
-        .parquet(relay).as[Message]
-      val closedTable = new StreamExecutor(counter).run(spark, stream2)
-        .filter(_.sink == SinkTable)
-        .map(e => (e.key, Int64Codec.decode(e.value)))
-        .toDF("path", "n")
-      val closedName = s"stream_result_${nameSeq.incrementAndGet()}"
-      val qClosed = closedTable.writeStream.format("memory")
-        .queryName(closedName).outputMode("update").start()
-      try {
-        q1.processAllAvailable()
-        qClosed.processAllAvailable()
-      } finally { q1.stop(); qClosed.stop() }
-      val open = spark.read.parquet(tableDir)
-        .select(col("key").as("user"),
-          split(col("value").cast("string"), ",", 4).as("p"))
-        .withColumn("m", element_at(col("p"), 2).cast("long"))
-        .groupBy(col("user"))
-        .agg(max_by(element_at(col("p"), 4), col("m")).as("path"))
-        .groupBy(col("path")).agg(count(lit(1)).as("n"))
-      val closed = spark.table(closedName)
-        .groupBy(col("path")).agg(max(col("n")).as("n"))
-      closed.unionByName(open)
-        .groupBy(col("path"))
-        .agg(sum(col("n")).as("n_sessions"))
-        .orderBy(col("n_sessions").desc, col("path"))
-        .limit(10)
-    }
+  def streamSessionPaths(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    val gapUs = 1800000000L
+    val stage1 = GroupGraph.define("session-path")(
+      Input("events", StringCodec, ProcessCallback { (ctx, msg) =>
+        val t = graft.operators.BatchExecutor.tsMicros(ctx.timestamp)
+        val typ = msg.asInstanceOf[String]
+        ctx.value match {
+          case null =>
+            ctx.setValue(s"$t,1,1,$typ")
+          case s: String =>
+            val Array(lastTs, m, n, path) = s.split(",", 4)
+            if (t - lastTs.toLong > gapUs) {
+              ctx.emit("paths", path, 1L)
+              ctx.setValue(s"$t,${m.toLong + 1},1,$typ")
+            } else {
+              val n2 = n.toLong + 1
+              val p2 = if (n2 <= 5) s"$path>$typ" else path
+              ctx.setValue(s"$t,${m.toLong + 1},$n2,$p2")
+            }
+        }
+      }),
+      Persist(StringCodec), Output("paths", Int64Codec))
+    val counter = GroupGraph.define("path-counts")(
+      Input("paths", Int64Codec, ProcessCallback { (ctx, _) =>
+        ctx.value match {
+          case null => ctx.setValue(1L)
+          case n: Long => ctx.setValue(n + 1L)
+        }
+      }),
+      Persist(Int64Codec))
+    val staging = stagedEventsSplit(spark, dir)
+    val relay = tempDir("graft_path_relay")
+    val tableDir = tempDir("graft_path_table")
+    val sessions = routed(new StreamExecutor(stage1)
+      .run(spark, messageTopic(spark, staging)),
+      Map("paths" -> relay), Some(tableDir))
+    val closedTable = new StreamExecutor(counter)
+      .run(spark, relayTopic(spark, relay))
+      .filter(_.sink == SinkTable)
+      .map(e => (e.key, Int64Codec.decode(e.value)))
+      .toDF("path", "n")
+    val closed = runToTable(spark, closedTable, "update", sessions)
+      .groupBy(col("path")).agg(max(col("n")).as("n"))
+    val open = spark.read.parquet(tableDir)
+      .select(col("key").as("user"),
+        split(col("value").cast("string"), ",", 4).as("p"))
+      .withColumn("m", element_at(col("p"), 2).cast("long"))
+      .groupBy(col("user"))
+      .agg(max_by(element_at(col("p"), 4), col("m")).as("path"))
+      .groupBy(col("path")).agg(count(lit(1)).as("n"))
+    closed.unionByName(open)
+      .groupBy(col("path"))
+      .agg(sum(col("n")).as("n_sessions"))
+      .orderBy(col("n_sessions").desc, col("path"))
+      .limit(10)
+  }
 
   /** st43: association mining maintained ONLINE — q52's basket lift
     * as live state: stage 1 keys by (user, day) and keeps the basket's
@@ -2829,92 +2669,77 @@ object StreamingQueries {
     * the read assembles pairs × supports × total into q52's exact
     * integer table (domain-sized joins, broadcast). Repeats emit
     * nothing, so out-of-order repeats are harmless; shared oracle. */
-  def streamBasketLift(spark: SparkSession, dir: String): DataFrame =
-    withStateShards(spark) {
-      import spark.implicits._
-      import graft.operators.BatchExecutor.SinkTable
-      val types = Seq("click", "error", "purchase", "signup", "view")
-      val idxOf = types.zipWithIndex.toMap
-      val stage1 = GroupGraph.define("basket-bits")(
-        Input("events", StringCodec, ProcessCallback { (ctx, msg) =>
-          val t = msg.asInstanceOf[String]
-          val i = idxOf(t)
-          val mask = ctx.value match {
-            case null => 0L
-            case m: Long => m
-          }
-          if ((mask & (1L << i)) == 0L) {
-            if (mask == 0L) ctx.emit("incr", "tot", 1L)
-            ctx.emit("incr", s"sup|$t", 1L)
-            types.foreach { o =>
-              val j = idxOf(o)
-              if ((mask & (1L << j)) != 0L) {
-                val (a, b) = if (o < t) (o, t) else (t, o)
-                ctx.emit("incr", s"pair|$a|$b", 1L)
-              }
+  def streamBasketLift(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    val types = Seq("click", "error", "purchase", "signup", "view")
+    val idxOf = types.zipWithIndex.toMap
+    val stage1 = GroupGraph.define("basket-bits")(
+      Input("events", StringCodec, ProcessCallback { (ctx, msg) =>
+        val t = msg.asInstanceOf[String]
+        val i = idxOf(t)
+        val mask = ctx.value match {
+          case null => 0L
+          case m: Long => m
+        }
+        if ((mask & (1L << i)) == 0L) {
+          if (mask == 0L) ctx.emit("incr", "tot", 1L)
+          ctx.emit("incr", s"sup|$t", 1L)
+          types.foreach { o =>
+            val j = idxOf(o)
+            if ((mask & (1L << j)) != 0L) {
+              val (a, b) = if (o < t) (o, t) else (t, o)
+              ctx.emit("incr", s"pair|$a|$b", 1L)
             }
-            ctx.setValue(mask | (1L << i))
           }
-        }),
-        Persist(Int64Codec), Output("incr", Int64Codec))
-      val counter = GroupGraph.define("basket-counts")(
-        Input("incr", Int64Codec, ProcessCallback { (ctx, _) =>
-          ctx.value match {
-            case null => ctx.setValue(1L)
-            case n: Long => ctx.setValue(n + 1L)
-          }
-        }),
-        Persist(Int64Codec))
-      val staging = tempDir("graft_basket_split")
-      val ev = Sources.table(spark, dir, "events")
-      stageTwoBatches(spark,
-        Sources.messages(ev, "events",
-          concat_ws("|", col("user_id"),
-            expr("unix_micros(ts) div 86400000000")),
-          col("event_type"), col("ts"), col("event_id")),
-        staging)
-      val relay = tempDir("graft_basket_relay")
-      val msgSchema = org.apache.spark.sql.Encoders.product[Message].schema
-      val stream1 = spark.readStream.schema(msgSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(bindShardsToTopic(spark, staging)).as[Message]
-      val q1 = StreamSinks.routeOutputs(
-        new StreamExecutor(stage1).run(spark, stream1),
-        Map("incr" -> relay))
-      val stream2 = spark.readStream.schema(msgSchema)
-        .parquet(relay).as[Message]
-      val table = new StreamExecutor(counter).run(spark, stream2)
-        .filter(_.sink == SinkTable)
-        .map(e => (e.key, Int64Codec.decode(e.value)))
-        .toDF("k", "n")
-      val name = s"stream_result_${nameSeq.incrementAndGet()}"
-      val q2 = table.writeStream.format("memory").queryName(name)
-        .outputMode("update").start()
-      try {
-        q1.processAllAvailable()
-        q2.processAllAvailable()
-      } finally { q1.stop(); q2.stop() }
-      val counts = spark.table(name)
-        .groupBy(col("k")).agg(max(col("n")).as("n"))
-        .localCheckpoint()
-      val pairs = counts.filter(col("k").startsWith("pair|"))
-        .select(split(col("k"), "\\|").as("p"), col("n").as("n_ab"))
-        .select(element_at(col("p"), 2).as("ta"),
-          element_at(col("p"), 3).as("tb"), col("n_ab"))
-      val sup = counts.filter(col("k").startsWith("sup|"))
-        .select(substring_index(col("k"), "|", -1).as("t"),
-          col("n").as("ns"))
-      val tot = counts.filter(col("k") === "tot")
-        .select(col("n").as("n_baskets"))
-      pairs
-        .join(broadcast(sup.select(col("t").as("ta"), col("ns").as("n_a"))),
-          Seq("ta"))
-        .join(broadcast(sup.select(col("t").as("tb"), col("ns").as("n_b"))),
-          Seq("tb"))
-        .crossJoin(broadcast(tot))
-        .select(col("ta"), col("tb"), col("n_a"), col("n_b"),
-          col("n_ab"), col("n_baskets"))
-    }
+          ctx.setValue(mask | (1L << i))
+        }
+      }),
+      Persist(Int64Codec), Output("incr", Int64Codec))
+    val counter = GroupGraph.define("basket-counts")(
+      Input("incr", Int64Codec, ProcessCallback { (ctx, _) =>
+        ctx.value match {
+          case null => ctx.setValue(1L)
+          case n: Long => ctx.setValue(n + 1L)
+        }
+      }),
+      Persist(Int64Codec))
+    val staging = tempDir("graft_basket_split")
+    val ev = Sources.table(spark, dir, "events")
+    stageTwoBatches(spark,
+      Sources.messages(ev, "events",
+        concat_ws("|", col("user_id"),
+          expr("unix_micros(ts) div 86400000000")),
+        col("event_type"), col("ts"), col("event_id")),
+      staging)
+    val relay = tempDir("graft_basket_relay")
+    val baskets = routed(new StreamExecutor(stage1)
+      .run(spark, messageTopic(spark, staging)), Map("incr" -> relay), None)
+    val table = new StreamExecutor(counter)
+      .run(spark, relayTopic(spark, relay))
+      .filter(_.sink == SinkTable)
+      .map(e => (e.key, Int64Codec.decode(e.value)))
+      .toDF("k", "n")
+    val counts = runToTable(spark, table, "update", baskets)
+      .groupBy(col("k")).agg(max(col("n")).as("n"))
+      .localCheckpoint()
+    val pairs = counts.filter(col("k").startsWith("pair|"))
+      .select(split(col("k"), "\\|").as("p"), col("n").as("n_ab"))
+      .select(element_at(col("p"), 2).as("ta"),
+        element_at(col("p"), 3).as("tb"), col("n_ab"))
+    val sup = counts.filter(col("k").startsWith("sup|"))
+      .select(substring_index(col("k"), "|", -1).as("t"),
+        col("n").as("ns"))
+    val tot = counts.filter(col("k") === "tot")
+      .select(col("n").as("n_baskets"))
+    pairs
+      .join(broadcast(sup.select(col("t").as("ta"), col("ns").as("n_a"))),
+        Seq("ta"))
+      .join(broadcast(sup.select(col("t").as("tb"), col("ns").as("n_b"))),
+        Seq("tb"))
+      .crossJoin(broadcast(tot))
+      .select(col("ta"), col("tb"), col("n_a"), col("n_b"),
+        col("n_ab"), col("n_baskets"))
+  }
 
   /** st42: frequent-sequence mining maintained ONLINE — q51's
     * trigram discovery as two chained live stages: stage 1 keeps each
@@ -2927,9 +2752,8 @@ object StreamingQueries {
     * happens at read; state is 2 small strings per user + one counter
     * per observed trigram (≤ |type-domain|³). */
   def streamFrequentSequences(spark: SparkSession, dir: String)
-      : DataFrame = withStateShards(spark) {
+      : DataFrame = {
     import spark.implicits._
-    import graft.operators.BatchExecutor.SinkTable
     val lastTwo = GroupGraph.define("seq-last-two")(
       Input("events", StringCodec, ProcessCallback { (ctx, msg) =>
         val cur = msg.asInstanceOf[String]
@@ -2953,27 +2777,14 @@ object StreamingQueries {
       Persist(Int64Codec))
     val staging = stagedEventsSplit(spark, dir)
     val relay = tempDir("graft_seq_relay")
-    val msgSchema = org.apache.spark.sql.Encoders.product[Message].schema
-    val stream1 = spark.readStream.schema(msgSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(bindShardsToTopic(spark, staging)).as[Message]
-    val q1 = StreamSinks.routeOutputs(
-      new StreamExecutor(lastTwo).run(spark, stream1),
-      Map("trigrams" -> relay))
-    val stream2 = spark.readStream.schema(msgSchema)
-      .parquet(relay).as[Message]
-    val table = new StreamExecutor(counter).run(spark, stream2)
+    val trigrams = routed(new StreamExecutor(lastTwo)
+      .run(spark, messageTopic(spark, staging)), Map("trigrams" -> relay), None)
+    val table = new StreamExecutor(counter)
+      .run(spark, relayTopic(spark, relay))
       .filter(_.sink == SinkTable)
       .map(e => (e.key, Int64Codec.decode(e.value)))
       .toDF("trigram", "n")
-    val name = s"stream_result_${nameSeq.incrementAndGet()}"
-    val q2 = table.writeStream.format("memory").queryName(name)
-      .outputMode("update").start()
-    try {
-      q1.processAllAvailable()
-      q2.processAllAvailable()
-    } finally { q1.stop(); q2.stop() }
-    spark.table(name)
+    runToTable(spark, table, "update", trigrams)
       .groupBy(col("trigram")).agg(max(col("n")).as("n"))
       .select(split(col("trigram"), "\\|").as("p"), col("n"))
       .select(element_at(col("p"), 1).as("e1"),
@@ -2995,60 +2806,55 @@ object StreamingQueries {
     * fold bit-for-bit (shared recursive-CTE oracle). Per-key
     * event-time order across micro-batches: executor in-batch
     * (ts, offset) sort + time-split staging, as st13/st34. */
-  def streamEwma(spark: SparkSession, dir: String): DataFrame =
-    withStateShards(spark) {
-      import spark.implicits._
-      import graft.operators.BatchExecutor.SinkTable
-      val dayUs = 86400000000L
-      val graph = GroupGraph.define("stream-ewma")(
-        Input("events", StringCodec, ProcessCallback { (ctx, _) =>
-          val d = graft.operators.BatchExecutor
-            .tsMicros(ctx.timestamp) / dayUs
-          val (day, cnt, s, n, m) = ctx.value match {
-            case null => (d, 0L, -1L, 0L, 0L)
-            case st: String =>
-              val p = st.split(',')
-              (p(0).toLong, p(1).toLong, p(2).toLong, p(3).toLong,
-                p(4).toLong)
+  def streamEwma(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    val dayUs = 86400000000L
+    val graph = GroupGraph.define("stream-ewma")(
+      Input("events", StringCodec, ProcessCallback { (ctx, _) =>
+        val d = graft.operators.BatchExecutor
+          .tsMicros(ctx.timestamp) / dayUs
+        val (day, cnt, s, n, m) = ctx.value match {
+          case null => (d, 0L, -1L, 0L, 0L)
+          case st: String =>
+            val p = st.split(',')
+            (p(0).toLong, p(1).toLong, p(2).toLong, p(3).toLong,
+              p(4).toLong)
+        }
+        val next =
+          if (d == day) (day, cnt + 1L, s, n, m + 1L)
+          else {
+            // close the open day, start d
+            val s2 = if (s < 0L) cnt * 64L else (cnt * 64L + 7L * s) >> 3
+            require(d > day, s"out-of-order day $d after $day for " +
+              s"user ${ctx.key} — the staged replay must be time-ordered")
+            (d, 1L, s2, n + 1L, m + 1L)
           }
-          val next =
-            if (d == day) (day, cnt + 1L, s, n, m + 1L)
-            else {
-              // close the open day, start d
-              val s2 = if (s < 0L) cnt * 64L else (cnt * 64L + 7L * s) >> 3
-              require(d > day, s"out-of-order day $d after $day for " +
-                s"user ${ctx.key} — the staged replay must be time-ordered")
-              (d, 1L, s2, n + 1L, m + 1L)
-            }
-          ctx.setValue(
-            s"${next._1},${next._2},${next._3},${next._4},${next._5}")
-        }),
-        Persist(StringCodec))
-      val staging = stagedEventsSplit(spark, dir)
-      val stream = spark.readStream
-        .schema(Sources.eventMessages(spark, dir).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(bindShardsToTopic(spark, staging)).as[Message]
-      val out = new StreamExecutor(graph).run(spark, stream)
-      val table = out.filter(_.sink == SinkTable)
-        .map(e => (e.key, StringCodec.decode(e.value)))
-        .toDF("k", "st")
-      runToTable(spark, table)
-        .select(col("k").cast("long").as("user_id"),
-          split(col("st"), ",").as("p"))
-        .withColumn("m", element_at(col("p"), 5).cast("long"))
-        .groupBy(col("user_id"))
-        .agg(max_by(col("p"), col("m")).as("p"))
-        .select(col("user_id"),
-          (element_at(col("p"), 4).cast("long") + 1L).as("n_days"),
-          {
-            val cnt = element_at(col("p"), 2).cast("long")
-            val s = element_at(col("p"), 3).cast("long")
-            when(s < 0L, cnt * 64L)
-              .otherwise(shiftright(cnt * 64L + s * 7L, 3))
-              .as("ewma_x64")
-          })
-    }
+        ctx.setValue(
+          s"${next._1},${next._2},${next._3},${next._4},${next._5}")
+      }),
+      Persist(StringCodec))
+    val staging = stagedEventsSplit(spark, dir)
+    val stream = messageTopic(spark, staging)
+    val out = new StreamExecutor(graph).run(spark, stream)
+    val table = out.filter(_.sink == SinkTable)
+      .map(e => (e.key, StringCodec.decode(e.value)))
+      .toDF("k", "st")
+    runToTable(spark, table, "update")
+      .select(col("k").cast("long").as("user_id"),
+        split(col("st"), ",").as("p"))
+      .withColumn("m", element_at(col("p"), 5).cast("long"))
+      .groupBy(col("user_id"))
+      .agg(max_by(col("p"), col("m")).as("p"))
+      .select(col("user_id"),
+        (element_at(col("p"), 4).cast("long") + 1L).as("n_days"),
+        {
+          val cnt = element_at(col("p"), 2).cast("long")
+          val s = element_at(col("p"), 3).cast("long")
+          when(s < 0L, cnt * 64L)
+            .otherwise(shiftright(cnt * 64L + s * 7L, 3))
+            .as("ewma_x64")
+        })
+  }
 
   /** st34: OHLC bars maintained ONLINE — q40's ordered aggregation as
     * live per-(day, type) keyed state: open fixes on the first arrival,
@@ -3060,57 +2866,52 @@ object StreamingQueries {
     * `max_by(state, n)`. Doubles ride through state via
     * `Double.toString`, which round-trips bit-exactly, so the shared
     * q40 oracle hash-matches. */
-  def streamOhlc(spark: SparkSession, dir: String): DataFrame =
-    withStateShards(spark) {
-      import spark.implicits._
-      import graft.operators.BatchExecutor.SinkTable
-      val dayUs = 86400L * 1000000L
-      val graph = GroupGraph.define("stream-ohlc")(
-        Input("events", StringCodec, ProcessCallback { (ctx, msg) =>
-          val v = msg.asInstanceOf[String].toDouble
-          val next = ctx.value match {
-            case null => (v, v, v, v, 1L)
-            case s: String =>
-              val p = s.split(',')
-              (p(0).toDouble, math.max(p(1).toDouble, v),
-                math.min(p(2).toDouble, v), v, p(4).toLong + 1L)
-          }
-          ctx.setValue(
-            s"${next._1},${next._2},${next._3},${next._4},${next._5}")
-        }),
-        Persist(StringCodec))
-      val staging = tempDir("graft_ohlc_split")
-      val ev = Sources.table(spark, dir, "events")
-      stageTwoBatches(spark,
-        Sources.messages(ev, "events",
-          concat(expr(s"unix_micros(ts) div $dayUs"),
-            lit("|"), col("event_type")),
-          col("value"), col("ts"), col("event_id")),
-        staging)
-      val stream = spark.readStream
-        .schema(Sources.eventMessages(spark, dir).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(bindShardsToTopic(spark, staging)).as[Message]
-      val out = new StreamExecutor(graph).run(spark, stream)
-      val table = out.filter(_.sink == SinkTable)
-        .map(e => (e.key, StringCodec.decode(e.value)))
-        .toDF("k", "st")
-      runToTable(spark, table)
-        .select(split(col("k"), "\\|").as("kk"),
-          split(col("st"), ",").as("p"))
-        .withColumn("n", element_at(col("p"), 5).cast("long"))
-        .groupBy(col("kk"))
-        .agg(max_by(col("p"), col("n")).as("p"))
-        .select(
-          timestamp_micros(element_at(col("kk"), 1).cast("long") * dayUs)
-            .as("day"),
-          element_at(col("kk"), 2).as("event_type"),
-          element_at(col("p"), 1).cast("double").as("open"),
-          element_at(col("p"), 2).cast("double").as("high"),
-          element_at(col("p"), 3).cast("double").as("low"),
-          element_at(col("p"), 4).cast("double").as("close"),
-          element_at(col("p"), 5).cast("long").as("n_events"))
-    }
+  def streamOhlc(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    val dayUs = 86400L * 1000000L
+    val graph = GroupGraph.define("stream-ohlc")(
+      Input("events", StringCodec, ProcessCallback { (ctx, msg) =>
+        val v = msg.asInstanceOf[String].toDouble
+        val next = ctx.value match {
+          case null => (v, v, v, v, 1L)
+          case s: String =>
+            val p = s.split(',')
+            (p(0).toDouble, math.max(p(1).toDouble, v),
+              math.min(p(2).toDouble, v), v, p(4).toLong + 1L)
+        }
+        ctx.setValue(
+          s"${next._1},${next._2},${next._3},${next._4},${next._5}")
+      }),
+      Persist(StringCodec))
+    val staging = tempDir("graft_ohlc_split")
+    val ev = Sources.table(spark, dir, "events")
+    stageTwoBatches(spark,
+      Sources.messages(ev, "events",
+        concat(expr(s"unix_micros(ts) div $dayUs"),
+          lit("|"), col("event_type")),
+        col("value"), col("ts"), col("event_id")),
+      staging)
+    val stream = messageTopic(spark, staging)
+    val out = new StreamExecutor(graph).run(spark, stream)
+    val table = out.filter(_.sink == SinkTable)
+      .map(e => (e.key, StringCodec.decode(e.value)))
+      .toDF("k", "st")
+    runToTable(spark, table, "update")
+      .select(split(col("k"), "\\|").as("kk"),
+        split(col("st"), ",").as("p"))
+      .withColumn("n", element_at(col("p"), 5).cast("long"))
+      .groupBy(col("kk"))
+      .agg(max_by(col("p"), col("n")).as("p"))
+      .select(
+        timestamp_micros(element_at(col("kk"), 1).cast("long") * dayUs)
+          .as("day"),
+        element_at(col("kk"), 2).as("event_type"),
+        element_at(col("p"), 1).cast("double").as("open"),
+        element_at(col("p"), 2).cast("double").as("high"),
+        element_at(col("p"), 3).cast("double").as("low"),
+        element_at(col("p"), 4).cast("double").as("close"),
+        element_at(col("p"), 5).cast("long").as("n_events"))
+  }
 
   /** st48: the attribution-WINDOWED funnel maintained ONLINE — q60's
     * bounded chain as live keyed state: 3 step timestamps + a counter
@@ -3122,54 +2923,49 @@ object StreamingQueries {
     * three-valued outcome the batch conditional mins produce. The
     * read collapses the changelog and counts locked steps; shares
     * q60's oracle. */
-  def streamWindowedFunnel(spark: SparkSession, dir: String): DataFrame =
-    withStateShards(spark) {
-      import spark.implicits._
-      import graft.operators.BatchExecutor.SinkTable
-      val dayUs = 86400000000L
-      val graph = GroupGraph.define("stream-wfunnel")(
-        Input("events", StringCodec, ProcessCallback { (ctx, msg) =>
-          val t = graft.operators.BatchExecutor.tsMicros(ctx.timestamp)
-          val typ = msg.asInstanceOf[String]
-          val (t1, t2, t3, n) = ctx.value match {
-            case null => (0L, 0L, 0L, 0L)
-            case s: String =>
-              val p = s.split(',')
-              (p(0).toLong, p(1).toLong, p(2).toLong, p(3).toLong)
-          }
-          val next = typ match {
-            case "view" if t1 == 0L => (t, t2, t3, n + 1)
-            case "click" if t1 > 0L && t2 == 0L &&
-              t > t1 && t <= t1 + dayUs => (t1, t, t3, n + 1)
-            case "purchase" if t2 > 0L && t3 == 0L &&
-              t > t2 && t <= t2 + 3L * dayUs => (t1, t2, t, n + 1)
-            case _ => (t1, t2, t3, n + 1)
-          }
-          ctx.setValue(s"${next._1},${next._2},${next._3},${next._4}")
-        }),
-        Persist(StringCodec))
-      val staging = stagedEventsSplit(spark, dir)
-      val stream = spark.readStream
-        .schema(Sources.eventMessages(spark, dir).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(bindShardsToTopic(spark, staging)).as[Message]
-      val out = new StreamExecutor(graph).run(spark, stream)
-      val table = out.filter(_.sink == SinkTable)
-        .map(e => (e.key, StringCodec.decode(e.value)))
-        .toDF("k", "st")
-      runToTable(spark, table)
-        .select(col("k"), split(col("st"), ",").as("p"))
-        .withColumn("n", element_at(col("p"), 4).cast("long"))
-        .groupBy(col("k"))
-        .agg(max_by(col("p"), col("n")).as("p"))
-        .select(element_at(col("p"), 1).cast("long").as("t1"),
-          element_at(col("p"), 2).cast("long").as("t2"),
-          element_at(col("p"), 3).cast("long").as("t3"))
-        .agg(sum(when(col("t1") > 0L, 1L).otherwise(0L)).as("n_viewed"),
-          sum(when(col("t2") > 0L, 1L).otherwise(0L)).as("n_clicked_1d"),
-          sum(when(col("t3") > 0L, 1L).otherwise(0L))
-            .as("n_purchased_3d"))
-    }
+  def streamWindowedFunnel(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    val dayUs = 86400000000L
+    val graph = GroupGraph.define("stream-wfunnel")(
+      Input("events", StringCodec, ProcessCallback { (ctx, msg) =>
+        val t = graft.operators.BatchExecutor.tsMicros(ctx.timestamp)
+        val typ = msg.asInstanceOf[String]
+        val (t1, t2, t3, n) = ctx.value match {
+          case null => (0L, 0L, 0L, 0L)
+          case s: String =>
+            val p = s.split(',')
+            (p(0).toLong, p(1).toLong, p(2).toLong, p(3).toLong)
+        }
+        val next = typ match {
+          case "view" if t1 == 0L => (t, t2, t3, n + 1)
+          case "click" if t1 > 0L && t2 == 0L &&
+            t > t1 && t <= t1 + dayUs => (t1, t, t3, n + 1)
+          case "purchase" if t2 > 0L && t3 == 0L &&
+            t > t2 && t <= t2 + 3L * dayUs => (t1, t2, t, n + 1)
+          case _ => (t1, t2, t3, n + 1)
+        }
+        ctx.setValue(s"${next._1},${next._2},${next._3},${next._4}")
+      }),
+      Persist(StringCodec))
+    val staging = stagedEventsSplit(spark, dir)
+    val stream = messageTopic(spark, staging)
+    val out = new StreamExecutor(graph).run(spark, stream)
+    val table = out.filter(_.sink == SinkTable)
+      .map(e => (e.key, StringCodec.decode(e.value)))
+      .toDF("k", "st")
+    runToTable(spark, table, "update")
+      .select(col("k"), split(col("st"), ",").as("p"))
+      .withColumn("n", element_at(col("p"), 4).cast("long"))
+      .groupBy(col("k"))
+      .agg(max_by(col("p"), col("n")).as("p"))
+      .select(element_at(col("p"), 1).cast("long").as("t1"),
+        element_at(col("p"), 2).cast("long").as("t2"),
+        element_at(col("p"), 3).cast("long").as("t3"))
+      .agg(sum(when(col("t1") > 0L, 1L).otherwise(0L)).as("n_viewed"),
+        sum(when(col("t2") > 0L, 1L).otherwise(0L)).as("n_clicked_1d"),
+        sum(when(col("t3") > 0L, 1L).otherwise(0L))
+          .as("n_purchased_3d"))
+  }
 
   /** st47: interval-union COVERAGE maintained ONLINE — q59's
     * running-max sweep as live keyed state: 4 longs per user (running
@@ -3181,47 +2977,42 @@ object StreamingQueries {
     * event-time order as st40; equal-timestamp arrivals contribute 0
     * in either order (identical intervals), matching the batch
     * tie-break exactly. */
-  def streamIntervalCoverage(spark: SparkSession, dir: String): DataFrame =
-    withStateShards(spark) {
-      import spark.implicits._
-      import graft.operators.BatchExecutor.SinkTable
-      val winUs = 1800000000L
-      val graph = GroupGraph.define("stream-coverage")(
-        Input("events", StringCodec, ProcessCallback { (ctx, _) =>
-          val s = graft.operators.BatchExecutor.tsMicros(ctx.timestamp)
-          val e = s + winUs
-          ctx.value match {
-            case null => ctx.setValue(s"$e,$winUs,1,1")
-            case st: String =>
-              val p = st.split(',')
-              val (em, cov, blk, n) = (p(0).toLong, p(1).toLong,
-                p(2).toLong, p(3).toLong)
-              val contrib = math.max(0L, e - math.max(s, em))
-              val blk2 = if (em < s) blk + 1 else blk
-              ctx.setValue(
-                s"${math.max(em, e)},${cov + contrib},$blk2,${n + 1}")
-          }
-        }),
-        Persist(StringCodec))
-      val staging = stagedEventsSplit(spark, dir)
-      val stream = spark.readStream
-        .schema(Sources.eventMessages(spark, dir).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(bindShardsToTopic(spark, staging)).as[Message]
-      val out = new StreamExecutor(graph).run(spark, stream)
-      val table = out.filter(_.sink == SinkTable)
-        .map(e => (e.key, StringCodec.decode(e.value)))
-        .toDF("k", "st")
-      runToTable(spark, table)
-        .select(col("k").cast("long").as("user_id"),
-          split(col("st"), ",").as("p"))
-        .withColumn("n", element_at(col("p"), 4).cast("long"))
-        .groupBy(col("user_id"))
-        .agg(max_by(col("p"), col("n")).as("p"), max(col("n")).as("n"))
-        .select(col("user_id"), col("n").as("n_events"),
-          element_at(col("p"), 2).cast("long").as("covered_us"),
-          element_at(col("p"), 3).cast("long").as("n_blocks"))
-    }
+  def streamIntervalCoverage(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    val winUs = 1800000000L
+    val graph = GroupGraph.define("stream-coverage")(
+      Input("events", StringCodec, ProcessCallback { (ctx, _) =>
+        val s = graft.operators.BatchExecutor.tsMicros(ctx.timestamp)
+        val e = s + winUs
+        ctx.value match {
+          case null => ctx.setValue(s"$e,$winUs,1,1")
+          case st: String =>
+            val p = st.split(',')
+            val (em, cov, blk, n) = (p(0).toLong, p(1).toLong,
+              p(2).toLong, p(3).toLong)
+            val contrib = math.max(0L, e - math.max(s, em))
+            val blk2 = if (em < s) blk + 1 else blk
+            ctx.setValue(
+              s"${math.max(em, e)},${cov + contrib},$blk2,${n + 1}")
+        }
+      }),
+      Persist(StringCodec))
+    val staging = stagedEventsSplit(spark, dir)
+    val stream = messageTopic(spark, staging)
+    val out = new StreamExecutor(graph).run(spark, stream)
+    val table = out.filter(_.sink == SinkTable)
+      .map(e => (e.key, StringCodec.decode(e.value)))
+      .toDF("k", "st")
+    runToTable(spark, table, "update")
+      .select(col("k").cast("long").as("user_id"),
+        split(col("st"), ",").as("p"))
+      .withColumn("n", element_at(col("p"), 4).cast("long"))
+      .groupBy(col("user_id"))
+      .agg(max_by(col("p"), col("n")).as("p"), max(col("n")).as("n"))
+      .select(col("user_id"), col("n").as("n_events"),
+        element_at(col("p"), 2).cast("long").as("covered_us"),
+        element_at(col("p"), 3).cast("long").as("n_blocks"))
+  }
 
   /** st46: the SPATIAL close-pair join maintained ONLINE — q55's
     * lossless grid protocol as live keyed state: each arriving point
@@ -3244,93 +3035,88 @@ object StreamingQueries {
     * the per-message Scala pairing stays proportionate (production:
     * per-cell list state + finer grid). Oracle: q55's SQL over the
     * same subsample. */
-  def streamSpatialJoin(spark: SparkSession, dir: String): DataFrame =
-    withStateShards(spark) {
-      import spark.implicits._
-      import graft.operators.BatchExecutor.SinkTable
-      val cellSide = 1000L
-      val r2 = 1000000L
-      val stage1 = GroupGraph.define("stream-spatial")(
-        Input("cells", StringCodec, ProcessCallback { (ctx, msg) =>
-          val Array(idS, xS, yS, hS) =
-            msg.asInstanceOf[String].split(",", 4)
-          val (pid, x, y) = (idS.toLong, xS.toLong, yS.toLong)
-          // state = "n,sum,min|id:x:y;id:x:y;..."
-          val (n0, sum0, min0, stored) = ctx.value match {
-            case null => (0L, 0L, Long.MaxValue, Vector.empty[String])
-            case s: String =>
-              val Array(st, pts) = s.split("\\|", 2)
-              val p = st.split(',')
-              (p(0).toLong, p(1).toLong, p(2).toLong,
-                if (pts.isEmpty) Vector.empty[String]
-                else pts.split(';').toVector)
+  def streamSpatialJoin(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    val cellSide = 1000L
+    val r2 = 1000000L
+    val stage1 = GroupGraph.define("stream-spatial")(
+      Input("cells", StringCodec, ProcessCallback { (ctx, msg) =>
+        val Array(idS, xS, yS, hS) =
+          msg.asInstanceOf[String].split(",", 4)
+        val (pid, x, y) = (idS.toLong, xS.toLong, yS.toLong)
+        // state = "n,sum,min|id:x:y;id:x:y;..."
+        val (n0, sum0, min0, stored) = ctx.value match {
+          case null => (0L, 0L, Long.MaxValue, Vector.empty[String])
+          case s: String =>
+            val Array(st, pts) = s.split("\\|", 2)
+            val p = st.split(',')
+            (p(0).toLong, p(1).toLong, p(2).toLong,
+              if (pts.isEmpty) Vector.empty[String]
+              else pts.split(';').toVector)
+        }
+        var (n, sum, mn) = (n0, sum0, min0)
+        stored.foreach { q =>
+          val p = q.split(':')
+          val (qid, qx, qy) = (p(0).toLong, p(1).toLong, p(2).toLong)
+          if (qid != pid) {
+            val d2 = (x - qx) * (x - qx) + (y - qy) * (y - qy)
+            if (d2 < r2) { n += 1; sum += d2; mn = math.min(mn, d2) }
           }
-          var (n, sum, mn) = (n0, sum0, min0)
-          stored.foreach { q =>
-            val p = q.split(':')
-            val (qid, qx, qy) = (p(0).toLong, p(1).toLong, p(2).toLong)
-            if (qid != pid) {
-              val d2 = (x - qx) * (x - qx) + (y - qy) * (y - qy)
-              if (d2 < r2) { n += 1; sum += d2; mn = math.min(mn, d2) }
-            }
-          }
-          val pts2 = if (hS == "1") stored :+ s"$pid:$x:$y" else stored
-          ctx.setValue(s"$n,$sum,$mn|${pts2.mkString(";")}")
-        }),
-        Persist(StringCodec))
-      val pts = graft.queries.Relational.spatialPoints(
-        Sources.table(spark, dir, "events"))
-        .filter(col("id") % 20L === 0L)
-        .withColumn("cx", expr(s"x div $cellSide"))
-        .withColumn("cy", expr(s"y div $cellSide"))
-      val fanned = pts.select(col("id"), col("ts"), col("x"), col("y"),
-          col("cx"), col("cy"),
-          explode(expr(
-            "flatten(transform(sequence(-1, 1), dx -> " +
-              "transform(sequence(-1, 1), dy -> " +
-              "struct(dx AS dx, dy AS dy))))")).as("nb"))
-        .select(col("id"), col("ts"), col("x"), col("y"),
-          (col("cx") + col("nb.dx")).as("nx"),
-          (col("cy") + col("nb.dy")).as("ny"),
-          (col("nb.dx") === 0 && col("nb.dy") === 0)
-            .cast("int").as("h"),
-          ((col("nb.dx") + 1) * 3 + col("nb.dy") + 1).as("idx"))
-      val staging = tempDir("graft_spatial_split")
-      stageTwoBatches(spark,
-        Sources.messages(fanned, "cells",
-          concat_ws("|", col("nx"), col("ny")),
-          concat_ws(",", col("id"), col("x"), col("y"), col("h")),
-          col("ts"), col("id") * 9L + col("idx")),
-        staging)
-      val msgSchema = org.apache.spark.sql.Encoders.product[Message].schema
-      val stream1 = spark.readStream.schema(msgSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(bindShardsToTopic(spark, staging)).as[Message]
-      val table = new StreamExecutor(stage1).run(spark, stream1)
-        .filter(_.sink == SinkTable)
-        .map(e => (e.key, StringCodec.decode(e.value)))
-        .toDF("k", "st")
-      // changelog collapse: the partial (n,sum,min) is monotone in n
-      // per cell, so the final row per cell is max_by n; the cross-
-      // cell merge is commutative (disjoint pair sets).
-      runToTable(spark, table)
-        .select(col("k"),
-          split(split(col("st"), "\\|").getItem(0), ",").as("p"))
-        .select(col("k"),
-          element_at(col("p"), 1).cast("long").as("n"),
-          element_at(col("p"), 2).cast("long").as("s"),
-          element_at(col("p"), 3).cast("long").as("m"))
-        .groupBy(col("k"))
-        .agg(max_by(struct(col("n"), col("s"), col("m")), col("n"))
-          .as("c"))
-        .agg(sum(col("c.n")).as("n_close_pairs"),
-          sum(col("c.s")).as("sum0"),
-          min(when(col("c.n") > 0L, col("c.m"))).as("min_d2"))
-        .select(coalesce(col("n_close_pairs"), lit(0L))
-            .as("n_close_pairs"),
-          col("min_d2"),
-          when(col("n_close_pairs") > 0L, col("sum0")).as("d2_sum"))
-    }
+        }
+        val pts2 = if (hS == "1") stored :+ s"$pid:$x:$y" else stored
+        ctx.setValue(s"$n,$sum,$mn|${pts2.mkString(";")}")
+      }),
+      Persist(StringCodec))
+    val pts = graft.queries.Relational.spatialPoints(
+      Sources.table(spark, dir, "events"))
+      .filter(col("id") % 20L === 0L)
+      .withColumn("cx", expr(s"x div $cellSide"))
+      .withColumn("cy", expr(s"y div $cellSide"))
+    val fanned = pts.select(col("id"), col("ts"), col("x"), col("y"),
+        col("cx"), col("cy"),
+        explode(expr(
+          "flatten(transform(sequence(-1, 1), dx -> " +
+            "transform(sequence(-1, 1), dy -> " +
+            "struct(dx AS dx, dy AS dy))))")).as("nb"))
+      .select(col("id"), col("ts"), col("x"), col("y"),
+        (col("cx") + col("nb.dx")).as("nx"),
+        (col("cy") + col("nb.dy")).as("ny"),
+        (col("nb.dx") === 0 && col("nb.dy") === 0)
+          .cast("int").as("h"),
+        ((col("nb.dx") + 1) * 3 + col("nb.dy") + 1).as("idx"))
+    val staging = tempDir("graft_spatial_split")
+    stageTwoBatches(spark,
+      Sources.messages(fanned, "cells",
+        concat_ws("|", col("nx"), col("ny")),
+        concat_ws(",", col("id"), col("x"), col("y"), col("h")),
+        col("ts"), col("id") * 9L + col("idx")),
+      staging)
+    val stream1 = messageTopic(spark, staging)
+    val table = new StreamExecutor(stage1).run(spark, stream1)
+      .filter(_.sink == SinkTable)
+      .map(e => (e.key, StringCodec.decode(e.value)))
+      .toDF("k", "st")
+    // changelog collapse: the partial (n,sum,min) is monotone in n
+    // per cell, so the final row per cell is max_by n; the cross-
+    // cell merge is commutative (disjoint pair sets).
+    runToTable(spark, table, "update")
+      .select(col("k"),
+        split(split(col("st"), "\\|").getItem(0), ",").as("p"))
+      .select(col("k"),
+        element_at(col("p"), 1).cast("long").as("n"),
+        element_at(col("p"), 2).cast("long").as("s"),
+        element_at(col("p"), 3).cast("long").as("m"))
+      .groupBy(col("k"))
+      .agg(max_by(struct(col("n"), col("s"), col("m")), col("n"))
+        .as("c"))
+      .agg(sum(col("c.n")).as("n_close_pairs"),
+        sum(col("c.s")).as("sum0"),
+        min(when(col("c.n") > 0L, col("c.m"))).as("min_d2"))
+      .select(coalesce(col("n_close_pairs"), lit(0L))
+          .as("n_close_pairs"),
+        col("min_d2"),
+        when(col("n_close_pairs") > 0L, col("sum0")).as("d2_sum"))
+  }
 
   /** st45: daily anomaly flags maintained ONLINE — q41's trailing-
     * 7-day z-test as live keyed state per event_type. State is O(1):
@@ -3347,114 +3133,100 @@ object StreamingQueries {
     * (in-batch (ts, offset) sort + time-split staging) makes
     * day-close well-defined, and st40's loud out-of-order `require`
     * guards the assumption. Shares q41's oracle bit-for-bit. */
-  def streamAnomaly(spark: SparkSession, dir: String): DataFrame =
-    withStateShards(spark) {
-      import spark.implicits._
-      import graft.operators.BatchExecutor.SinkTable
-      val dayUs = 86400000000L
-      val stage1 = GroupGraph.define("stream-anomaly")(
-        Input("events", StringCodec, ProcessCallback { (ctx, _) =>
-          val d = graft.operators.BatchExecutor
-            .tsMicros(ctx.timestamp) / dayUs
-          ctx.value match {
-            case null => ctx.setValue(s"$d,1,1,")
-            case st: String =>
-              val Array(day0, cnt0, m0, ring0) = st.split(",", 4)
-              val (day, cnt, m) = (day0.toLong, cnt0.toLong, m0.toLong)
-              if (d == day) ctx.setValue(s"$day,${cnt + 1},${m + 1},$ring0")
-              else {
-                require(d > day, s"out-of-order day $d after $day for " +
-                  s"type ${ctx.key} — the staged replay must be time-ordered")
-                val ring = if (ring0.isEmpty) Vector.empty[Long]
-                  else ring0.split(';').toVector
-                    .map(_.split(':')(1).toLong)
-                val n = ring.size
-                val s = ring.sum
-                val q = ring.map(c => c * c).sum
-                val flag = n >= 3 &&
-                  (BigInt(n) * cnt - s).pow(2) >
-                    4 * (BigInt(n) * q - BigInt(s) * BigInt(s))
-                ctx.emit("days", s"$day|${ctx.key}",
-                  s"$cnt,${if (flag) 1 else 0}")
-                val ring2 = ((if (ring0.isEmpty) Vector.empty[String]
-                  else ring0.split(';').toVector) :+ s"$day:$cnt")
-                  .takeRight(7)
-                ctx.setValue(s"$d,1,${m + 1},${ring2.mkString(";")}")
-              }
-          }
-        }),
-        Persist(StringCodec), Output("days", StringCodec))
-      val stage2 = GroupGraph.define("anomaly-days")(
-        Input("days", StringCodec, ProcessCallback { (ctx, msg) =>
-          ctx.setValue(msg.asInstanceOf[String])
-        }),
-        Persist(StringCodec))
-      val staging = tempDir("graft_anomaly_split")
-      stageTwoBatches(spark,
-        Sources.messages(Sources.table(spark, dir, "events"), "events",
-          col("event_type"), lit(1L), col("ts"), col("event_id")),
-        staging)
-      val relay = tempDir("graft_anomaly_relay")
-      val msgSchema = org.apache.spark.sql.Encoders.product[Message].schema
-      val stream1 = spark.readStream.schema(msgSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(bindShardsToTopic(spark, staging)).as[Message]
-      val tableDir = tempDir("graft_anomaly_table")
-      val q1 = StreamSinks.routeOutputs(
-        new StreamExecutor(stage1).run(spark, stream1),
-        Map("days" -> relay), tableDir = Some(tableDir))
-      val stream2 = spark.readStream.schema(msgSchema)
-        .parquet(relay).as[Message]
-      val closedTable = new StreamExecutor(stage2).run(spark, stream2)
-        .filter(_.sink == SinkTable)
-        .map(e => (e.key, StringCodec.decode(e.value)))
-        .toDF("k", "v")
-      val closedName = s"stream_result_${nameSeq.incrementAndGet()}"
-      val qClosed = closedTable.writeStream.format("memory")
-        .queryName(closedName).outputMode("update").start()
-      try {
-        q1.processAllAvailable()
-        qClosed.processAllAvailable()
-      } finally { q1.stop(); qClosed.stop() }
-      val closed = spark.table(closedName)
-        .groupBy(col("k")).agg(max(col("v")).as("v"))
-        .select(split(col("k"), "\\|").as("kk"),
-          split(col("v"), ",").as("p"))
-        .select(
-          timestamp_micros(element_at(col("kk"), 1).cast("long") * dayUs)
-            .as("day"),
-          element_at(col("kk"), 2).as("event_type"),
-          element_at(col("p"), 1).cast("long").as("cnt"),
-          (element_at(col("p"), 2) === "1").as("is_anomaly"))
-      // The still-open last day per type: q41's test over the parsed
-      // ring, in exact DECIMAL(19) like the batch plan.
-      val d19 = (c: org.apache.spark.sql.Column) =>
-        c.cast(org.apache.spark.sql.types.DecimalType(19, 0))
-      val open = spark.read.parquet(tableDir)
-        .select(col("key").as("event_type"),
-          split(col("value").cast("string"), ",", 4).as("p"))
-        .withColumn("m", element_at(col("p"), 3).cast("long"))
-        .groupBy(col("event_type"))
-        .agg(max_by(col("p"), col("m")).as("p"))
-        .select(col("event_type"),
-          element_at(col("p"), 1).cast("long").as("day"),
-          element_at(col("p"), 2).cast("long").as("cnt"),
-          transform(
-            filter(split(element_at(col("p"), 4), ";"), x => x =!= ""),
-            x => split_part(x, lit(":"), lit(2)).cast("long")).as("ring"))
-        .withColumn("n", size(col("ring")).cast("long"))
-        .withColumn("s", aggregate(col("ring"), lit(0L), (a, x) => a + x))
-        .withColumn("q",
-          aggregate(col("ring"), lit(0L), (a, x) => a + x * x))
-        .select(timestamp_micros(col("day") * dayUs).as("day"),
-          col("event_type"), col("cnt"),
-          (col("n") >= 3L &&
-            d19(col("n") * col("cnt") - col("s")) *
-              d19(col("n") * col("cnt") - col("s")) >
-            lit(4) * (d19(col("n")) * d19(col("q")) -
-              d19(col("s")) * d19(col("s")))).as("is_anomaly"))
-      closed.unionByName(open)
-    }
+  def streamAnomaly(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    val dayUs = 86400000000L
+    val stage1 = GroupGraph.define("stream-anomaly")(
+      Input("events", StringCodec, ProcessCallback { (ctx, _) =>
+        val d = graft.operators.BatchExecutor
+          .tsMicros(ctx.timestamp) / dayUs
+        ctx.value match {
+          case null => ctx.setValue(s"$d,1,1,")
+          case st: String =>
+            val Array(day0, cnt0, m0, ring0) = st.split(",", 4)
+            val (day, cnt, m) = (day0.toLong, cnt0.toLong, m0.toLong)
+            if (d == day) ctx.setValue(s"$day,${cnt + 1},${m + 1},$ring0")
+            else {
+              require(d > day, s"out-of-order day $d after $day for " +
+                s"type ${ctx.key} — the staged replay must be time-ordered")
+              val ring = if (ring0.isEmpty) Vector.empty[Long]
+                else ring0.split(';').toVector
+                  .map(_.split(':')(1).toLong)
+              val n = ring.size
+              val s = ring.sum
+              val q = ring.map(c => c * c).sum
+              val flag = n >= 3 &&
+                (BigInt(n) * cnt - s).pow(2) >
+                  4 * (BigInt(n) * q - BigInt(s) * BigInt(s))
+              ctx.emit("days", s"$day|${ctx.key}",
+                s"$cnt,${if (flag) 1 else 0}")
+              val ring2 = ((if (ring0.isEmpty) Vector.empty[String]
+                else ring0.split(';').toVector) :+ s"$day:$cnt")
+                .takeRight(7)
+              ctx.setValue(s"$d,1,${m + 1},${ring2.mkString(";")}")
+            }
+        }
+      }),
+      Persist(StringCodec), Output("days", StringCodec))
+    val stage2 = GroupGraph.define("anomaly-days")(
+      Input("days", StringCodec, ProcessCallback { (ctx, msg) =>
+        ctx.setValue(msg.asInstanceOf[String])
+      }),
+      Persist(StringCodec))
+    val staging = tempDir("graft_anomaly_split")
+    stageTwoBatches(spark,
+      Sources.messages(Sources.table(spark, dir, "events"), "events",
+        col("event_type"), lit(1L), col("ts"), col("event_id")),
+      staging)
+    val relay = tempDir("graft_anomaly_relay")
+    val tableDir = tempDir("graft_anomaly_table")
+    val days = routed(new StreamExecutor(stage1)
+      .run(spark, messageTopic(spark, staging)),
+      Map("days" -> relay), Some(tableDir))
+    val closedTable = new StreamExecutor(stage2)
+      .run(spark, relayTopic(spark, relay))
+      .filter(_.sink == SinkTable)
+      .map(e => (e.key, StringCodec.decode(e.value)))
+      .toDF("k", "v")
+    val closed = runToTable(spark, closedTable, "update", days)
+      .groupBy(col("k")).agg(max(col("v")).as("v"))
+      .select(split(col("k"), "\\|").as("kk"),
+        split(col("v"), ",").as("p"))
+      .select(
+        timestamp_micros(element_at(col("kk"), 1).cast("long") * dayUs)
+          .as("day"),
+        element_at(col("kk"), 2).as("event_type"),
+        element_at(col("p"), 1).cast("long").as("cnt"),
+        (element_at(col("p"), 2) === "1").as("is_anomaly"))
+    // The still-open last day per type: q41's test over the parsed
+    // ring, in exact DECIMAL(19) like the batch plan.
+    val d19 = (c: org.apache.spark.sql.Column) =>
+      c.cast(org.apache.spark.sql.types.DecimalType(19, 0))
+    val open = spark.read.parquet(tableDir)
+      .select(col("key").as("event_type"),
+        split(col("value").cast("string"), ",", 4).as("p"))
+      .withColumn("m", element_at(col("p"), 3).cast("long"))
+      .groupBy(col("event_type"))
+      .agg(max_by(col("p"), col("m")).as("p"))
+      .select(col("event_type"),
+        element_at(col("p"), 1).cast("long").as("day"),
+        element_at(col("p"), 2).cast("long").as("cnt"),
+        transform(
+          filter(split(element_at(col("p"), 4), ";"), x => x =!= ""),
+          x => split_part(x, lit(":"), lit(2)).cast("long")).as("ring"))
+      .withColumn("n", size(col("ring")).cast("long"))
+      .withColumn("s", aggregate(col("ring"), lit(0L), (a, x) => a + x))
+      .withColumn("q",
+        aggregate(col("ring"), lit(0L), (a, x) => a + x * x))
+      .select(timestamp_micros(col("day") * dayUs).as("day"),
+        col("event_type"), col("cnt"),
+        (col("n") >= 3L &&
+          d19(col("n") * col("cnt") - col("s")) *
+            d19(col("n") * col("cnt") - col("s")) >
+          lit(4) * (d19(col("n")) * d19(col("q")) -
+            d19(col("s")) * d19(col("s")))).as("is_anomaly"))
+    closed.unionByName(open)
+  }
 
   /** st49: CUSUM drift detection LIVE — q64's alarm with the
     * production twist an online monitor forces: the reference level
@@ -3470,87 +3242,82 @@ object StreamingQueries {
     * recurrence IS the sequential CUSUM; GraphStatsSpec proves it
     * equal to the closed form the oracle's windows compute. The
     * still-open last day folds at read time by the same rule. */
-  def streamCusum(spark: SparkSession, dir: String): DataFrame =
-    withStateShards(spark) {
-      import spark.implicits._
-      import graft.operators.BatchExecutor.SinkTable
-      val dayUs = 86400000000L
-      val graph = GroupGraph.define("stream-cusum")(
-        Input("events", StringCodec, ProcessCallback { (ctx, _) =>
-          val d = graft.operators.BatchExecutor
-            .tsMicros(ctx.timestamp) / dayUs
-          ctx.value match {
-            case null => ctx.setValue(s"$d,1,0,0,0,0,0,-1,1")
-            case st: String =>
-              val p = st.split(',')
-              val (day, cnt, ncl, t, s, mx, nf, ff, m) =
-                (p(0).toLong, p(1).toLong, p(2).toLong, p(3).toLong,
-                  p(4).toLong, p(5).toLong, p(6).toLong, p(7).toLong,
-                  p(8).toLong)
-              if (d == day)
-                ctx.setValue(s"$day,${cnt + 1},$ncl,$t,$s,$mx,$nf,$ff,${m + 1}")
+  def streamCusum(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    val dayUs = 86400000000L
+    val graph = GroupGraph.define("stream-cusum")(
+      Input("events", StringCodec, ProcessCallback { (ctx, _) =>
+        val d = graft.operators.BatchExecutor
+          .tsMicros(ctx.timestamp) / dayUs
+        ctx.value match {
+          case null => ctx.setValue(s"$d,1,0,0,0,0,0,-1,1")
+          case st: String =>
+            val p = st.split(',')
+            val (day, cnt, ncl, t, s, mx, nf, ff, m) =
+              (p(0).toLong, p(1).toLong, p(2).toLong, p(3).toLong,
+                p(4).toLong, p(5).toLong, p(6).toLong, p(7).toLong,
+                p(8).toLong)
+            if (d == day)
+              ctx.setValue(s"$day,${cnt + 1},$ncl,$t,$s,$mx,$nf,$ff,${m + 1}")
+            else {
+              require(d > day, s"out-of-order day $d after $day for " +
+                s"type ${ctx.key} — the staged replay must be time-ordered")
+              if (ncl < 7)
+                ctx.setValue(
+                  s"$d,1,${ncl + 1},${t + cnt},$s,$mx,$nf,$ff,${m + 1}")
               else {
-                require(d > day, s"out-of-order day $d after $day for " +
-                  s"type ${ctx.key} — the staged replay must be time-ordered")
-                if (ncl < 7)
-                  ctx.setValue(
-                    s"$d,1,${ncl + 1},${t + cnt},$s,$mx,$nf,$ff,${m + 1}")
-                else {
-                  val s2 = math.max(0L, s + 140L * cnt - 21L * t)
-                  val flag = s2 > 10L * t
-                  val nf2 = nf + (if (flag) 1L else 0L)
-                  val ff2 = if (ff >= 0L) ff else if (flag) day else -1L
-                  ctx.setValue(s"$d,1,${ncl + 1},$t," +
-                    s"$s2,${math.max(mx, s2)},$nf2,$ff2,${m + 1}")
-                }
+                val s2 = math.max(0L, s + 140L * cnt - 21L * t)
+                val flag = s2 > 10L * t
+                val nf2 = nf + (if (flag) 1L else 0L)
+                val ff2 = if (ff >= 0L) ff else if (flag) day else -1L
+                ctx.setValue(s"$d,1,${ncl + 1},$t," +
+                  s"$s2,${math.max(mx, s2)},$nf2,$ff2,${m + 1}")
               }
-          }
-        }),
-        Persist(StringCodec))
-      val staging = tempDir("graft_cusum_split")
-      stageTwoBatches(spark,
-        Sources.messages(Sources.table(spark, dir, "events"), "events",
-          col("event_type"), lit(1L), col("ts"), col("event_id")),
-        staging)
-      val stream = spark.readStream
-        .schema(Sources.eventMessages(spark, dir).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(bindShardsToTopic(spark, staging)).as[Message]
-      val out = new StreamExecutor(graph).run(spark, stream)
-      val table = out.filter(_.sink == SinkTable)
-        .map(e => (e.key, StringCodec.decode(e.value)))
-        .toDF("k", "st")
-      val fin = runToTable(spark, table)
-        .select(col("k").as("event_type"), split(col("st"), ",").as("p"))
-        .withColumn("m", element_at(col("p"), 9).cast("long"))
-        .groupBy(col("event_type"))
-        .agg(max_by(col("p"), col("m")).as("p"))
-        .select(col("event_type"),
-          element_at(col("p"), 1).cast("long").as("day"),
-          element_at(col("p"), 2).cast("long").as("cnt"),
-          element_at(col("p"), 3).cast("long").as("ncl"),
-          element_at(col("p"), 4).cast("long").as("t"),
-          element_at(col("p"), 5).cast("long").as("s"),
-          element_at(col("p"), 6).cast("long").as("mx"),
-          element_at(col("p"), 7).cast("long").as("nf"),
-          element_at(col("p"), 8).cast("long").as("ff"))
-        // Fold the still-open day by the identical close rule; only
-        // types whose series reaches past the 7-day prefix emit.
-        .filter(col("ncl") >= 7)
-        .withColumn("s2",
-          greatest(lit(0L), col("s") + lit(140L) * col("cnt") -
-            lit(21L) * col("t")))
-        .withColumn("flag2", col("s2") > lit(10L) * col("t"))
-      fin.select(col("event_type"),
-        (col("ncl") + 1L - 7L).as("n_monitor_days"),
-        col("t").as("t_train"),
-        greatest(col("mx"), col("s2")).as("max_cusum"),
-        (col("nf") + when(col("flag2"), 1L).otherwise(0L)).as("n_flagged"),
-        timestamp_micros(
-          when(col("ff") >= 0L, col("ff"))
-            .when(col("flag2"), col("day")) * lit(dayUs))
-          .as("first_flag_day"))
-    }
+            }
+        }
+      }),
+      Persist(StringCodec))
+    val staging = tempDir("graft_cusum_split")
+    stageTwoBatches(spark,
+      Sources.messages(Sources.table(spark, dir, "events"), "events",
+        col("event_type"), lit(1L), col("ts"), col("event_id")),
+      staging)
+    val stream = messageTopic(spark, staging)
+    val out = new StreamExecutor(graph).run(spark, stream)
+    val table = out.filter(_.sink == SinkTable)
+      .map(e => (e.key, StringCodec.decode(e.value)))
+      .toDF("k", "st")
+    val fin = runToTable(spark, table, "update")
+      .select(col("k").as("event_type"), split(col("st"), ",").as("p"))
+      .withColumn("m", element_at(col("p"), 9).cast("long"))
+      .groupBy(col("event_type"))
+      .agg(max_by(col("p"), col("m")).as("p"))
+      .select(col("event_type"),
+        element_at(col("p"), 1).cast("long").as("day"),
+        element_at(col("p"), 2).cast("long").as("cnt"),
+        element_at(col("p"), 3).cast("long").as("ncl"),
+        element_at(col("p"), 4).cast("long").as("t"),
+        element_at(col("p"), 5).cast("long").as("s"),
+        element_at(col("p"), 6).cast("long").as("mx"),
+        element_at(col("p"), 7).cast("long").as("nf"),
+        element_at(col("p"), 8).cast("long").as("ff"))
+      // Fold the still-open day by the identical close rule; only
+      // types whose series reaches past the 7-day prefix emit.
+      .filter(col("ncl") >= 7)
+      .withColumn("s2",
+        greatest(lit(0L), col("s") + lit(140L) * col("cnt") -
+          lit(21L) * col("t")))
+      .withColumn("flag2", col("s2") > lit(10L) * col("t"))
+    fin.select(col("event_type"),
+      (col("ncl") + 1L - 7L).as("n_monitor_days"),
+      col("t").as("t_train"),
+      greatest(col("mx"), col("s2")).as("max_cusum"),
+      (col("nf") + when(col("flag2"), 1L).otherwise(0L)).as("n_flagged"),
+      timestamp_micros(
+        when(col("ff") >= 0L, col("ff"))
+          .when(col("flag2"), col("day")) * lit(dayUs))
+        .as("first_flag_day"))
+  }
 
   /** st51: the c28 Bloom sidecar maintained ONLINE during streaming
     * lake ingest — each micro-batch lands as an immutable file batch
@@ -3579,25 +3346,18 @@ object StreamingQueries {
     val lake = tempDir("graft_sbloom_lake")
     val idxDir = tempDir("graft_sbloom_idx")
     val ckpt = tempDir("graft_sbloom_ckpt")
-    val q = spark.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", 1).parquet(staging)
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .foreachBatch {
-        (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            bid: Long) =>
-          val sub = s"$lake/batch=$bid"
-          b.write.mode("overwrite").parquet(sub)
-          // Sidecar lands IDEMPOTENTLY under its own batch=<id> dir,
-          // mirroring the data write: a retried/restarted micro-batch
-          // overwrites its own rows instead of re-appending them
-          // (duplicate (file, word) rows would break bloomCandidates'
-          // all-bits-present count — see Lake.bloomCandidates).
-          Lake.buildBloomIndex(spark, sub, "event_id")
-            .write.mode("overwrite").parquet(s"$idxDir/batch=$bid")
-          ()
-      }.start()
-    try q.processAllAvailable() finally q.stop()
+    withQueries(spark)(batchSink(fileSource(spark, staging, ev.schema),
+        "append", Some(ckpt)) { (b, bid) =>
+      val sub = s"$lake/batch=$bid"
+      b.write.mode("overwrite").parquet(sub)
+      // Sidecar lands IDEMPOTENTLY under its own batch=<id> dir,
+      // mirroring the data write: a retried/restarted micro-batch
+      // overwrites its own rows instead of re-appending them
+      // (duplicate (file, word) rows would break bloomCandidates'
+      // all-bits-present count — see Lake.bloomCandidates).
+      Lake.buildBloomIndex(spark, sub, "event_id")
+        .write.mode("overwrite").parquet(s"$idxDir/batch=$bid")
+    })(drain)
     val idx = spark.read.parquet(idxDir)
     val probes = spark.read.parquet(lake)
       .filter(col("event_id") % 997 === 0).select(col("event_id"))
@@ -3638,20 +3398,13 @@ object StreamingQueries {
     val lake = tempDir("graft_szone_lake")
     val zmDir = tempDir("graft_szone_zm")
     val ckpt = tempDir("graft_szone_ckpt")
-    val q = spark.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", 1).parquet(staging)
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .foreachBatch {
-        (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            bid: Long) =>
-          val sub = s"$lake/batch=$bid"
-          Lake.writeClustered(b.toDF(), col("user_id"), sub, nFiles = 4)
-          Lake.buildZoneMap(spark, sub, "user_id")
-            .write.mode("overwrite").parquet(s"$zmDir/batch=$bid")
-          ()
-      }.start()
-    try q.processAllAvailable() finally q.stop()
+    withQueries(spark)(batchSink(fileSource(spark, staging, ev.schema),
+        "append", Some(ckpt)) { (b, bid) =>
+      val sub = s"$lake/batch=$bid"
+      Lake.writeClustered(b, col("user_id"), sub, nFiles = 4)
+      Lake.buildZoneMap(spark, sub, "user_id")
+        .write.mode("overwrite").parquet(s"$zmDir/batch=$bid")
+    })(drain)
     val mx = ev.agg(max(col("user_id"))).head().getLong(0)
     val (lo, hi) = (mx * 10 / 100, mx * 25 / 100)
     val candFiles = Lake.zoneCandidates(
@@ -3679,58 +3432,53 @@ object StreamingQueries {
     * rides in the state so the memory sink's last upsert per user is
     * identified exactly (counts alone can tie when trailing clicks
     * touch the state after the final purchase). */
-  def streamAttribution(spark: SparkSession, dir: String): DataFrame =
-    withStateShards(spark) {
-      import spark.implicits._
-      import graft.operators.BatchExecutor.SinkTable
-      val graph = GroupGraph.define("stream-attribution")(
-        Input("events", StringCodec, ProcessCallback { (ctx, msg) =>
-          val parts = msg.asInstanceOf[String].split(',')
-          val (typ, tsUs) = (parts(0), parts(1).toLong)
-          val st = ctx.value match {
-            case null => Array(-1L, -1L, 0L, 0L, 0L, 0L)
-            case s: String => s.split(',').map(_.toLong)
-          }
-          typ match {
-            case "click" =>
-              if (st(0) < 0) st(0) = tsUs
-              st(1) = tsUs
-            case "purchase" =>
-              st(2) += 1
-              if (st(1) >= 0) { st(3) += 1; st(4) += tsUs - st(1) }
-            case _ => ()
-          }
-          st(5) += 1
-          ctx.setValue(st.mkString(","))
-        }),
-        Persist(StringCodec))
-      val ev = Sources.table(spark, dir, "events")
-      val staging = tempDir("graft_sattr_split")
-      stageTwoBatches(spark,
-        Sources.messages(ev, "events", col("user_id").cast("string"),
-          concat(col("event_type"), lit(","),
-            unix_micros(col("ts")).cast("string")),
-          col("ts"), col("event_id")),
-        staging)
-      val stream = spark.readStream
-        .schema(Sources.eventMessages(spark, dir).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(bindShardsToTopic(spark, staging)).as[Message]
-      val out = new StreamExecutor(graph).run(spark, stream)
-      val table = out.filter(_.sink == SinkTable)
-        .map(e => (e.key, StringCodec.decode(e.value)))
-        .toDF("key", "st")
-      runToTable(spark, table)
-        .select(col("key"), split(col("st"), ",").as("p"))
-        .withColumn("nmsgs", element_at(col("p"), 6).cast("long"))
-        .groupBy(col("key"))
-        .agg(max_by(col("p"), col("nmsgs")).as("p"))
-        .select(col("key").cast("long").as("user_id"),
-          element_at(col("p"), 3).cast("long").as("n_purchases"),
-          element_at(col("p"), 4).cast("long").as("n_attributed"),
-          element_at(col("p"), 5).cast("long").as("last_touch_lag_us"))
-        .filter(col("n_purchases") > 0)
-    }
+  def streamAttribution(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    val graph = GroupGraph.define("stream-attribution")(
+      Input("events", StringCodec, ProcessCallback { (ctx, msg) =>
+        val parts = msg.asInstanceOf[String].split(',')
+        val (typ, tsUs) = (parts(0), parts(1).toLong)
+        val st = ctx.value match {
+          case null => Array(-1L, -1L, 0L, 0L, 0L, 0L)
+          case s: String => s.split(',').map(_.toLong)
+        }
+        typ match {
+          case "click" =>
+            if (st(0) < 0) st(0) = tsUs
+            st(1) = tsUs
+          case "purchase" =>
+            st(2) += 1
+            if (st(1) >= 0) { st(3) += 1; st(4) += tsUs - st(1) }
+          case _ => ()
+        }
+        st(5) += 1
+        ctx.setValue(st.mkString(","))
+      }),
+      Persist(StringCodec))
+    val ev = Sources.table(spark, dir, "events")
+    val staging = tempDir("graft_sattr_split")
+    stageTwoBatches(spark,
+      Sources.messages(ev, "events", col("user_id").cast("string"),
+        concat(col("event_type"), lit(","),
+          unix_micros(col("ts")).cast("string")),
+        col("ts"), col("event_id")),
+      staging)
+    val stream = messageTopic(spark, staging)
+    val out = new StreamExecutor(graph).run(spark, stream)
+    val table = out.filter(_.sink == SinkTable)
+      .map(e => (e.key, StringCodec.decode(e.value)))
+      .toDF("key", "st")
+    runToTable(spark, table, "update")
+      .select(col("key"), split(col("st"), ",").as("p"))
+      .withColumn("nmsgs", element_at(col("p"), 6).cast("long"))
+      .groupBy(col("key"))
+      .agg(max_by(col("p"), col("nmsgs")).as("p"))
+      .select(col("key").cast("long").as("user_id"),
+        element_at(col("p"), 3).cast("long").as("n_purchases"),
+        element_at(col("p"), 4).cast("long").as("n_attributed"),
+        element_at(col("p"), 5).cast("long").as("last_touch_lag_us"))
+      .filter(col("n_purchases") > 0)
+  }
 
   /** st58: STREAMING MARKOV TRANSITION MATRIX — q80's model
     * maintained online: the keyed state is (msg counter, last event
@@ -3742,62 +3490,57 @@ object StreamingQueries {
     * The leading message counter identifies the last upsert per user
     * exactly (the first event adds no transition, so the transition
     * total alone could not distinguish the first two upserts). */
-  def streamTransitions(spark: SparkSession, dir: String): DataFrame =
-    withStateShards(spark) {
-      import spark.implicits._
-      import graft.operators.BatchExecutor.SinkTable
-      val graph = GroupGraph.define("stream-transitions")(
-        Input("events", StringCodec, ProcessCallback { (ctx, msg) =>
-          val typ = msg.asInstanceOf[String]
-          ctx.value match {
-            case null => ctx.setValue(s"1;$typ")
-            case s: String =>
-              val parts = s.split(";", -1)
-              val n = parts(0).toLong + 1
-              val last = parts(1)
-              val key = s"$last|$typ"
-              val counts = scala.collection.mutable.LinkedHashMap(
-                parts.drop(2).map { e =>
-                  val i = e.lastIndexOf(':')
-                  e.substring(0, i) -> e.substring(i + 1).toLong
-                }.toIndexedSeq: _*)
-              counts(key) = counts.getOrElse(key, 0L) + 1L
-              val body = counts.map { case (k, c) => s"$k:$c" }
-                .mkString(";")
-              ctx.setValue(s"$n;$typ;$body")
-          }
-        }),
-        Persist(StringCodec))
-      val ev = Sources.table(spark, dir, "events")
-      val staging = tempDir("graft_strans_split")
-      stageTwoBatches(spark,
-        Sources.messages(ev, "events", col("user_id").cast("string"),
-          col("event_type"), col("ts"), col("event_id")),
-        staging)
-      val stream = spark.readStream
-        .schema(Sources.eventMessages(spark, dir).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(bindShardsToTopic(spark, staging)).as[Message]
-      val out = new StreamExecutor(graph).run(spark, stream)
-      val table = out.filter(_.sink == SinkTable)
-        .map(e => (e.key, StringCodec.decode(e.value)))
-        .toDF("key", "st")
-      val tr = runToTable(spark, table)
-        .select(col("key"), split(col("st"), ";").as("p"))
-        .withColumn("nmsgs", element_at(col("p"), 1).cast("long"))
-        .groupBy(col("key"))
-        .agg(max_by(col("p"), col("nmsgs")).as("p"))
-        .select(explode(slice(col("p"), 3, 1000000)).as("e"))
-        .filter(col("e") =!= "")
-        .select(split(col("e"), "[|:]").as("kk"))
-        .select(element_at(col("kk"), 1).as("src"),
-          element_at(col("kk"), 2).as("dst"),
-          element_at(col("kk"), 3).cast("long").as("c"))
-        .groupBy(col("src"), col("dst")).agg(sum(col("c")).as("cnt"))
-      tr.withColumn("p", col("cnt").cast("double") /
-        sum(col("cnt")).over(org.apache.spark.sql.expressions.Window
-          .partitionBy(col("src"))).cast("double"))
-    }
+  def streamTransitions(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    val graph = GroupGraph.define("stream-transitions")(
+      Input("events", StringCodec, ProcessCallback { (ctx, msg) =>
+        val typ = msg.asInstanceOf[String]
+        ctx.value match {
+          case null => ctx.setValue(s"1;$typ")
+          case s: String =>
+            val parts = s.split(";", -1)
+            val n = parts(0).toLong + 1
+            val last = parts(1)
+            val key = s"$last|$typ"
+            val counts = scala.collection.mutable.LinkedHashMap(
+              parts.drop(2).map { e =>
+                val i = e.lastIndexOf(':')
+                e.substring(0, i) -> e.substring(i + 1).toLong
+              }.toIndexedSeq: _*)
+            counts(key) = counts.getOrElse(key, 0L) + 1L
+            val body = counts.map { case (k, c) => s"$k:$c" }
+              .mkString(";")
+            ctx.setValue(s"$n;$typ;$body")
+        }
+      }),
+      Persist(StringCodec))
+    val ev = Sources.table(spark, dir, "events")
+    val staging = tempDir("graft_strans_split")
+    stageTwoBatches(spark,
+      Sources.messages(ev, "events", col("user_id").cast("string"),
+        col("event_type"), col("ts"), col("event_id")),
+      staging)
+    val stream = messageTopic(spark, staging)
+    val out = new StreamExecutor(graph).run(spark, stream)
+    val table = out.filter(_.sink == SinkTable)
+      .map(e => (e.key, StringCodec.decode(e.value)))
+      .toDF("key", "st")
+    val tr = runToTable(spark, table, "update")
+      .select(col("key"), split(col("st"), ";").as("p"))
+      .withColumn("nmsgs", element_at(col("p"), 1).cast("long"))
+      .groupBy(col("key"))
+      .agg(max_by(col("p"), col("nmsgs")).as("p"))
+      .select(explode(slice(col("p"), 3, 1000000)).as("e"))
+      .filter(col("e") =!= "")
+      .select(split(col("e"), "[|:]").as("kk"))
+      .select(element_at(col("kk"), 1).as("src"),
+        element_at(col("kk"), 2).as("dst"),
+        element_at(col("kk"), 3).cast("long").as("c"))
+      .groupBy(col("src"), col("dst")).agg(sum(col("c")).as("cnt"))
+    tr.withColumn("p", col("cnt").cast("double") /
+      sum(col("cnt")).over(org.apache.spark.sql.expressions.Window
+        .partitionBy(col("src"))).cast("double"))
+  }
 
   /** st62: STREAMING LATENESS MONITOR — q90's operational companion
     * measured the way a running pipeline actually sees disorder: per
@@ -3809,50 +3552,45 @@ object StreamingQueries {
     * the online fold ≡ the declarative definition. Alongside q90's
     * pair-exact Kendall disorder this is the cheap O(1)-state dial a
     * deployment leaves on permanently. */
-  def streamLateness(spark: SparkSession, dir: String): DataFrame =
-    withStateShards(spark) {
-      import spark.implicits._
-      import graft.operators.BatchExecutor.SinkTable
-      val graph = GroupGraph.define("stream-lateness")(
-        Input("events", StringCodec, ProcessCallback { (ctx, msg) =>
-          val t = msg.asInstanceOf[String].toLong
-          val (n, mx, nl, ml) = ctx.value match {
-            case null => (0L, Long.MinValue, 0L, 0L)
-            case s: String =>
-              val p = s.split(',')
-              (p(0).toLong, p(1).toLong, p(2).toLong, p(3).toLong)
-          }
-          val late = mx != Long.MinValue && t < mx
-          ctx.setValue(Seq(n + 1, math.max(mx, t),
-            if (late) nl + 1 else nl,
-            if (late) math.max(ml, mx - t) else ml).mkString(","))
-        }),
-        Persist(StringCodec))
-      val ev = Sources.table(spark, dir, "events")
-      val staging = tempDir("graft_slate_split")
-      stageTwoBatches(spark,
-        Sources.messages(ev, "events", col("user_id").cast("string"),
-          unix_micros(col("ts")).cast("string"),
-          expr("timestamp_micros(event_id)"), col("event_id")),
-        staging)
-      val stream = spark.readStream
-        .schema(Sources.eventMessages(spark, dir).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(bindShardsToTopic(spark, staging)).as[Message]
-      val out = new StreamExecutor(graph).run(spark, stream)
-      val table = out.filter(_.sink == SinkTable)
-        .map(e => (e.key, StringCodec.decode(e.value)))
-        .toDF("key", "st")
-      runToTable(spark, table)
-        .select(col("key"), split(col("st"), ",").as("p"))
-        .withColumn("n", element_at(col("p"), 1).cast("long"))
-        .groupBy(col("key"))
-        .agg(max_by(col("p"), col("n")).as("p"))
-        .select(col("key").cast("long").as("user_id"),
-          element_at(col("p"), 1).cast("long").as("n_events"),
-          element_at(col("p"), 3).cast("long").as("n_late"),
-          element_at(col("p"), 4).cast("long").as("max_late_us"))
-    }
+  def streamLateness(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    val graph = GroupGraph.define("stream-lateness")(
+      Input("events", StringCodec, ProcessCallback { (ctx, msg) =>
+        val t = msg.asInstanceOf[String].toLong
+        val (n, mx, nl, ml) = ctx.value match {
+          case null => (0L, Long.MinValue, 0L, 0L)
+          case s: String =>
+            val p = s.split(',')
+            (p(0).toLong, p(1).toLong, p(2).toLong, p(3).toLong)
+        }
+        val late = mx != Long.MinValue && t < mx
+        ctx.setValue(Seq(n + 1, math.max(mx, t),
+          if (late) nl + 1 else nl,
+          if (late) math.max(ml, mx - t) else ml).mkString(","))
+      }),
+      Persist(StringCodec))
+    val ev = Sources.table(spark, dir, "events")
+    val staging = tempDir("graft_slate_split")
+    stageTwoBatches(spark,
+      Sources.messages(ev, "events", col("user_id").cast("string"),
+        unix_micros(col("ts")).cast("string"),
+        expr("timestamp_micros(event_id)"), col("event_id")),
+      staging)
+    val stream = messageTopic(spark, staging)
+    val out = new StreamExecutor(graph).run(spark, stream)
+    val table = out.filter(_.sink == SinkTable)
+      .map(e => (e.key, StringCodec.decode(e.value)))
+      .toDF("key", "st")
+    runToTable(spark, table, "update")
+      .select(col("key"), split(col("st"), ",").as("p"))
+      .withColumn("n", element_at(col("p"), 1).cast("long"))
+      .groupBy(col("key"))
+      .agg(max_by(col("p"), col("n")).as("p"))
+      .select(col("key").cast("long").as("user_id"),
+        element_at(col("p"), 1).cast("long").as("n_events"),
+        element_at(col("p"), 3).cast("long").as("n_late"),
+        element_at(col("p"), 4).cast("long").as("max_late_us"))
+  }
 
   /** st61: STREAMING CONTENT SEAL — c40's gate-stage provenance seal
     * maintained at ingest: the per-row hash is folded into per-shard
@@ -3863,51 +3601,46 @@ object StreamingQueries {
     * oracle recomputes the seal from the raw table and the hash
     * match proves the stream never dropped, duplicated or mutated a
     * row (any of the three flips the seal). O(1) state per shard. */
-  def streamContentSeal(spark: SparkSession, dir: String): DataFrame =
-    withStateShards(spark) {
-      import spark.implicits._
-      import graft.operators.BatchExecutor.SinkTable
-      val graph = GroupGraph.define("stream-seal")(
-        Input("docs", StringCodec, ProcessCallback { (ctx, msg) =>
-          val h = msg.asInstanceOf[String].toLong
-          val (n, x) = ctx.value match {
-            case null => (0L, 0L)
-            case s: String =>
-              val p = s.split(','); (p(0).toLong, p(1).toLong)
-          }
-          ctx.setValue(s"${n + 1},${x ^ h}")
-        }),
-        Persist(StringCodec))
-      val d = Sources.table(spark, dir, "documents")
-        .filter(col("n_chars") >= 50)
-      val staging = tempDir("graft_sseal_split")
-      stageTwoBatches(spark,
-        Sources.messages(d, "docs",
-          pmod(col("doc_id"), lit(32L)).cast("string"),
-          graft.functions.Hashes.h60(
-            concat(col("doc_id").cast("string"), lit(":"),
-              md5(col("text")))).cast("string"),
-          expr("timestamp_micros(doc_id)"), col("doc_id")),
-        staging)
-      val stream = spark.readStream
-        .schema(Sources.eventMessages(spark, dir).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(bindShardsToTopic(spark, staging)).as[Message]
-      val out = new StreamExecutor(graph).run(spark, stream)
-      val table = out.filter(_.sink == SinkTable)
-        .map(e => (e.key, StringCodec.decode(e.value)))
-        .toDF("key", "st")
-      runToTable(spark, table)
-        .select(col("key"), split(col("st"), ",").as("p"))
-        .withColumn("n", element_at(col("p"), 1).cast("long"))
-        .withColumn("x", element_at(col("p"), 2).cast("long"))
-        .groupBy(col("key"))
-        .agg(max_by(col("x"), col("n")).as("x"), max(col("n")).as("n"))
-        .agg(sum(col("n")).as("n_rows"),
-          expr("bit_xor(x)").as("content_hash"))
-        .select(lit("1_gate").as("stage"), col("n_rows"),
-          col("content_hash"))
-    }
+  def streamContentSeal(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    val graph = GroupGraph.define("stream-seal")(
+      Input("docs", StringCodec, ProcessCallback { (ctx, msg) =>
+        val h = msg.asInstanceOf[String].toLong
+        val (n, x) = ctx.value match {
+          case null => (0L, 0L)
+          case s: String =>
+            val p = s.split(','); (p(0).toLong, p(1).toLong)
+        }
+        ctx.setValue(s"${n + 1},${x ^ h}")
+      }),
+      Persist(StringCodec))
+    val d = Sources.table(spark, dir, "documents")
+      .filter(col("n_chars") >= 50)
+    val staging = tempDir("graft_sseal_split")
+    stageTwoBatches(spark,
+      Sources.messages(d, "docs",
+        pmod(col("doc_id"), lit(32L)).cast("string"),
+        graft.functions.Hashes.h60(
+          concat(col("doc_id").cast("string"), lit(":"),
+            md5(col("text")))).cast("string"),
+        expr("timestamp_micros(doc_id)"), col("doc_id")),
+      staging)
+    val stream = messageTopic(spark, staging)
+    val out = new StreamExecutor(graph).run(spark, stream)
+    val table = out.filter(_.sink == SinkTable)
+      .map(e => (e.key, StringCodec.decode(e.value)))
+      .toDF("key", "st")
+    runToTable(spark, table, "update")
+      .select(col("key"), split(col("st"), ",").as("p"))
+      .withColumn("n", element_at(col("p"), 1).cast("long"))
+      .withColumn("x", element_at(col("p"), 2).cast("long"))
+      .groupBy(col("key"))
+      .agg(max_by(col("x"), col("n")).as("x"), max(col("n")).as("n"))
+      .agg(sum(col("n")).as("n_rows"),
+        expr("bit_xor(x)").as("content_hash"))
+      .select(lit("1_gate").as("stage"), col("n_rows"),
+        col("content_hash"))
+  }
 
   /** st60: STREAMING REFLECTED BALANCE — q83's Lindley fold run as
     * the per-user state machine it literally is: state = (balance,
@@ -3918,50 +3651,45 @@ object StreamingQueries {
     * sequential fold agree on every user — the strongest kind of
     * parity the suite has for nonlinear recurrences (st32/q39 set
     * the pattern). O(1) state per user. */
-  def streamFlooredBalance(spark: SparkSession, dir: String): DataFrame =
-    withStateShards(spark) {
-      import spark.implicits._
-      import graft.operators.BatchExecutor.SinkTable
-      val graph = GroupGraph.define("stream-floored-balance")(
-        Input("events", StringCodec, ProcessCallback { (ctx, msg) =>
-          val delta = msg.asInstanceOf[String].toLong
-          val (bal, peak, n) = ctx.value match {
-            case null => (0L, 0L, 0L)
-            case s: String =>
-              val p = s.split(',')
-              (p(0).toLong, p(1).toLong, p(2).toLong)
-          }
-          val nb = math.max(0L, bal + delta)
-          ctx.setValue(s"$nb,${math.max(peak, nb)},${n + 1}")
-        }),
-        Persist(StringCodec))
-      val ev = Sources.table(spark, dir, "events")
-      val staging = tempDir("graft_sfbal_split")
-      stageTwoBatches(spark,
-        Sources.messages(ev, "events", col("user_id").cast("string"),
-          when(col("event_type") === "purchase",
-            floor(col("value") * 100.0d).cast("long"))
-            .otherwise(-floor(col("value") * 100.0d).cast("long"))
-            .cast("string"),
-          col("ts"), col("event_id")),
-        staging)
-      val stream = spark.readStream
-        .schema(Sources.eventMessages(spark, dir).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(bindShardsToTopic(spark, staging)).as[Message]
-      val out = new StreamExecutor(graph).run(spark, stream)
-      val table = out.filter(_.sink == SinkTable)
-        .map(e => (e.key, StringCodec.decode(e.value)))
-        .toDF("key", "st")
-      runToTable(spark, table)
-        .select(col("key"), split(col("st"), ",").as("p"))
-        .withColumn("nmsgs", element_at(col("p"), 3).cast("long"))
-        .groupBy(col("key"))
-        .agg(max_by(col("p"), col("nmsgs")).as("p"))
-        .select(col("key").cast("long").as("user_id"),
-          element_at(col("p"), 1).cast("long").as("final_cents"),
-          element_at(col("p"), 2).cast("long").as("peak_cents"))
-    }
+  def streamFlooredBalance(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    val graph = GroupGraph.define("stream-floored-balance")(
+      Input("events", StringCodec, ProcessCallback { (ctx, msg) =>
+        val delta = msg.asInstanceOf[String].toLong
+        val (bal, peak, n) = ctx.value match {
+          case null => (0L, 0L, 0L)
+          case s: String =>
+            val p = s.split(',')
+            (p(0).toLong, p(1).toLong, p(2).toLong)
+        }
+        val nb = math.max(0L, bal + delta)
+        ctx.setValue(s"$nb,${math.max(peak, nb)},${n + 1}")
+      }),
+      Persist(StringCodec))
+    val ev = Sources.table(spark, dir, "events")
+    val staging = tempDir("graft_sfbal_split")
+    stageTwoBatches(spark,
+      Sources.messages(ev, "events", col("user_id").cast("string"),
+        when(col("event_type") === "purchase",
+          floor(col("value") * 100.0d).cast("long"))
+          .otherwise(-floor(col("value") * 100.0d).cast("long"))
+          .cast("string"),
+        col("ts"), col("event_id")),
+      staging)
+    val stream = messageTopic(spark, staging)
+    val out = new StreamExecutor(graph).run(spark, stream)
+    val table = out.filter(_.sink == SinkTable)
+      .map(e => (e.key, StringCodec.decode(e.value)))
+      .toDF("key", "st")
+    runToTable(spark, table, "update")
+      .select(col("key"), split(col("st"), ",").as("p"))
+      .withColumn("nmsgs", element_at(col("p"), 3).cast("long"))
+      .groupBy(col("key"))
+      .agg(max_by(col("p"), col("nmsgs")).as("p"))
+      .select(col("key").cast("long").as("user_id"),
+        element_at(col("p"), 1).cast("long").as("final_cents"),
+        element_at(col("p"), 2).cast("long").as("peak_cents"))
+  }
 
   /** st59: STREAMING MANN–WHITNEY — the q81 rank test maintained
     * online, the real-time experimentation readout: keyed state is
@@ -3983,11 +3711,9 @@ object StreamingQueries {
     * then bounded by the grid size and the test is exact on the
     * quantized metric. */
   def streamMannWhitney(spark: SparkSession, dir: String): DataFrame =
-    withStateShards(spark) {
-      graft.queries.Relational.mannWhitneyCollapsed(
-        streamedArmCounts(spark, dir, "stream-mannwhitney",
-          "graft_smw_split"))
-    }
+    graft.queries.Relational.mannWhitneyCollapsed(
+      streamedArmCounts(spark, dir, "stream-mannwhitney",
+        "graft_smw_split"))
 
   /** st63: STREAMING KOLMOGOROV–SMIRNOV — q91's distribution-shape
     * test maintained online over the SAME keyed state as st59 (the
@@ -3999,10 +3725,8 @@ object StreamingQueries {
     * literal batch statistic code, so the shared q91 oracle hash
     * proves online state ≡ batch ECDFs, D statistic and decision. */
   def streamKs(spark: SparkSession, dir: String): DataFrame =
-    withStateShards(spark) {
-      graft.queries.Relational.ksCollapsed(
-        streamedArmCounts(spark, dir, "stream-ks", "graft_sks_split"))
-    }
+    graft.queries.Relational.ksCollapsed(
+      streamedArmCounts(spark, dir, "stream-ks", "graft_sks_split"))
 
   /** The shared st59/st63 state pipeline: per (event_type, value) key,
     * streaming arm counts (ca, cb) by user parity — the tie-collapsed
@@ -4018,7 +3742,6 @@ object StreamingQueries {
   private def streamedArmCountsIngest(spark: SparkSession, dir: String,
       group: String, stagePrefix: String): DataFrame = {
       import spark.implicits._
-      import graft.operators.BatchExecutor.SinkTable
       val graph = GroupGraph.define(group)(
         Input("events", StringCodec, ProcessCallback { (ctx, msg) =>
           val arm = msg.asInstanceOf[String]
@@ -4040,16 +3763,13 @@ object StreamingQueries {
           pmod(col("user_id"), lit(2)).cast("string"),
           col("ts"), col("event_id")),
         staging)
-      val stream = spark.readStream
-        .schema(Sources.eventMessages(spark, dir).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(bindShardsToTopic(spark, staging)).as[Message]
+      val stream = messageTopic(spark, staging)
       val out = new StreamExecutor(graph).run(spark, stream)
       val table = out.filter(_.sink == SinkTable)
         .map(e => (e.key, StringCodec.decode(e.value)))
         .toDF("key", "st")
       // counts only grow, so the max (ca+cb) upsert is the last one
-      runToTable(spark, table)
+      runToTable(spark, table, "update")
         .select(col("key"), split(col("st"), ",").as("p"))
         .select(col("key"),
           element_at(col("p"), 1).cast("long").as("ca"),
@@ -4074,10 +3794,8 @@ object StreamingQueries {
     * micro-grain statistic. The st63 discipline: keep the sufficient
     * statistic as state, not the decision. */
   def streamChiSquared(spark: SparkSession, dir: String): DataFrame =
-    withStateShards(spark) {
-      graft.queries.Relational.chiSquaredCells(
-        streamedWeekdayCells(spark, dir, "stream-chisq", "graft_schisq"))
-    }
+    graft.queries.Relational.chiSquaredCells(
+      streamedWeekdayCells(spark, dir, "stream-chisq", "graft_schisq"))
 
   /** The shared st64/st72 contingency state pipeline: per (event_type,
     * weekday) key, a streamed occurrence count — the sufficient
@@ -4093,7 +3811,6 @@ object StreamingQueries {
   private def streamedWeekdayCellsIngest(spark: SparkSession, dir: String,
       group: String, stagePrefix: String): DataFrame = {
     import spark.implicits._
-    import graft.operators.BatchExecutor.SinkTable
     val graph = GroupGraph.define(group)(
       Input("events", StringCodec, ProcessCallback { (ctx, _) =>
         val n = ctx.value match {
@@ -4112,15 +3829,12 @@ object StreamingQueries {
             to_date(lit("2024-01-01"))), lit(7)).cast("string")),
         lit("1"), col("ts"), col("event_id")),
       staging)
-    val stream = spark.readStream
-      .schema(Sources.eventMessages(spark, dir).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(bindShardsToTopic(spark, staging)).as[Message]
+    val stream = messageTopic(spark, staging)
     val out = new StreamExecutor(graph).run(spark, stream)
     val tableRows = out.filter(_.sink == SinkTable)
       .map(e => (e.key, StringCodec.decode(e.value)))
       .toDF("key", "st")
-    runToTable(spark, tableRows)
+    runToTable(spark, tableRows, "update")
       .select(col("key"), col("st").cast("long").as("o"))
       // counts only grow, so the max upsert per key is the final one
       .groupBy(col("key")).agg(max(col("o")).as("o"))
@@ -4136,10 +3850,8 @@ object StreamingQueries {
     * oracle hash: the second readout funded by the streamed
     * (type, weekday) count state. */
   def streamCramersV(spark: SparkSession, dir: String): DataFrame =
-    withStateShards(spark) {
-      graft.queries.Relational.cramersVCells(
-        streamedWeekdayCells(spark, dir, "stream-cramer", "graft_scramer"))
-    }
+    graft.queries.Relational.cramersVCells(
+      streamedWeekdayCells(spark, dir, "stream-cramer", "graft_scramer"))
 
   /** st75: STREAMING PAGERANK — q108's integer power iterations folded
     * over an ONLINE edge set: the keyed state is the distinct
@@ -4152,40 +3864,35 @@ object StreamingQueries {
     * expensive part (distinct-edge maintenance) is incremental keyed
     * state; the bounded iterations run on demand over the maintained
     * graph, never over the raw log. */
-  def streamPagerank(spark: SparkSession, dir: String): DataFrame =
-    withStateShards(spark) {
-      import spark.implicits._
-      import graft.operators.BatchExecutor.SinkTable
-      val graph = GroupGraph.define("stream-pagerank")(
-        Input("events", StringCodec, ProcessCallback { (ctx, _) =>
-          val n = ctx.value match {
-            case null => 0L
-            case s: String => s.toLong
-          }
-          ctx.setValue((n + 1L).toString)
-        }),
-        Persist(StringCodec))
-      val ev = Sources.table(spark, dir, "events")
-      val staging = tempDir("graft_spr")
-      stageTwoBatches(spark,
-        Sources.messages(ev, "events",
-          concat(lit("u:"), col("user_id").cast("string"), lit("|"),
-            lit("t:"), col("event_type")),
-          lit("1"), col("ts"), col("event_id")),
-        staging)
-      val stream = spark.readStream
-        .schema(Sources.eventMessages(spark, dir).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(bindShardsToTopic(spark, staging)).as[Message]
-      val out = new StreamExecutor(graph).run(spark, stream)
-      val tableRows = out.filter(_.sink == SinkTable)
-        .map(e => e.key).toDF("key")
-      val edges = runToTable(spark, tableRows)
-        .select(col("key")).distinct()
-        .select(substring_index(col("key"), "|", 1).as("u"),
-          substring_index(col("key"), "|", -1).as("t"))
-      graft.queries.Relational.pagerankBipartite(edges)
-    }
+  def streamPagerank(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    val graph = GroupGraph.define("stream-pagerank")(
+      Input("events", StringCodec, ProcessCallback { (ctx, _) =>
+        val n = ctx.value match {
+          case null => 0L
+          case s: String => s.toLong
+        }
+        ctx.setValue((n + 1L).toString)
+      }),
+      Persist(StringCodec))
+    val ev = Sources.table(spark, dir, "events")
+    val staging = tempDir("graft_spr")
+    stageTwoBatches(spark,
+      Sources.messages(ev, "events",
+        concat(lit("u:"), col("user_id").cast("string"), lit("|"),
+          lit("t:"), col("event_type")),
+        lit("1"), col("ts"), col("event_id")),
+      staging)
+    val stream = messageTopic(spark, staging)
+    val out = new StreamExecutor(graph).run(spark, stream)
+    val tableRows = out.filter(_.sink == SinkTable)
+      .map(e => e.key).toDF("key")
+    val edges = runToTable(spark, tableRows, "update")
+      .select(col("key")).distinct()
+      .select(substring_index(col("key"), "|", 1).as("u"),
+        substring_index(col("key"), "|", -1).as("t"))
+    graft.queries.Relational.pagerankBipartite(edges)
+  }
 
   /** st73: STREAMING PSI — q103's population stability index online:
     * the keyed state counts per (type, half, milli-value) where half
@@ -4196,21 +3903,20 @@ object StreamingQueries {
     * readout folds the literal q103 code
     * ([[graft.queries.Relational.psiCollapsed]]) and shares its
     * oracle hash. */
-  def streamPsi(spark: SparkSession, dir: String): DataFrame =
-    withStateShards(spark) {
-      // r17: the (type, half, milli-value) key st73 used to maintain
-      // privately — the r16 verdict's single most expensive st query,
-      // paying its own two-batch staging + streaming lifecycle — is
-      // exactly the shared valueCounts family's key, so st73 is now a
-      // READOUT over the maintained shared state like st67-st72: the
-      // half bit rides the family key and the other readouts sum it
-      // away. Same cells, same oracle hash (q103's).
-      val halves = streamedValueCountsHalved(spark, dir, "stream-psi",
-        "graft_spsi", 1000.0)
-        .select(col("event_type"), col("half"), col("x").as("vfx"),
-          col("cnt"))
-      graft.queries.Relational.psiCollapsed(halves)
-    }
+  def streamPsi(spark: SparkSession, dir: String): DataFrame = {
+    // r17: the (type, half, milli-value) key st73 used to maintain
+    // privately — the r16 verdict's single most expensive st query,
+    // paying its own two-batch staging + streaming lifecycle — is
+    // exactly the shared valueCounts family's key, so st73 is now a
+    // READOUT over the maintained shared state like st67-st72: the
+    // half bit rides the family key and the other readouts sum it
+    // away. Same cells, same oracle hash (q103's).
+    val halves = streamedValueCountsHalved(spark, dir, "stream-psi",
+      "graft_spsi", 1000.0)
+      .select(col("event_type"), col("half"), col("x").as("vfx"),
+        col("cnt"))
+    graft.queries.Relational.psiCollapsed(halves)
+  }
 
   /** The shared st78/st79 state pipeline: per (event_type, day) key,
     * the streamed observation count and milli-value sum — ONE keyed
@@ -4227,7 +3933,6 @@ object StreamingQueries {
   private def streamedDailyAggregatesIngest(spark: SparkSession, dir: String,
       group: String, stagePrefix: String): DataFrame = {
     import spark.implicits._
-    import graft.operators.BatchExecutor.SinkTable
     val codec = Codecs.twoLongs[DailyAggState](s => (s.x, s.y))(
       DailyAggState.apply)
     val graph = GroupGraph.define(group)(
@@ -4250,17 +3955,14 @@ object StreamingQueries {
         floor(col("value") * 1000.0d).cast("long").cast("string"),
         col("ts"), col("event_id")),
       staging)
-    val stream = spark.readStream
-      .schema(Sources.eventMessages(spark, dir).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(bindShardsToTopic(spark, staging)).as[Message]
+    val stream = messageTopic(spark, staging)
     val out = new StreamExecutor(graph).run(spark, stream)
     val tableRows = out.filter(_.sink == SinkTable)
       .map { e => val s = codec.decode(e.value); (e.key, s.x, s.y) }
       .toDF("key", "x", "y")
     // x strictly grows and (x, y) update atomically: max-x upsert is
     // the final state, y rides max_by
-    runToTable(spark, tableRows)
+    runToTable(spark, tableRows, "update")
       .groupBy(col("key"))
       .agg(max(col("x")).as("x"), max_by(col("y"), col("x")).as("y"))
       .select(substring_index(col("key"), "|", 1).as("event_type"),
@@ -4274,20 +3976,16 @@ object StreamingQueries {
     * sharing its oracle hash: the trend test a deployment actually
     * wants continuous, not nightly. */
   def streamMannKendall(spark: SparkSession, dir: String): DataFrame =
-    withStateShards(spark) {
-      graft.queries.Relational.mannKendallDaily(
-        streamedDailyAggregates(spark, dir, "stream-mk", "graft_smk"))
-    }
+    graft.queries.Relational.mannKendallDaily(
+      streamedDailyAggregates(spark, dir, "stream-mk", "graft_smk"))
 
   /** st79: STREAMING THEIL-SEN — q106's robust slope online over the
     * SAME per-(type, day) state shape as st78, folding
     * [[graft.queries.Relational.theilSenDaily]] and sharing q106's
     * oracle: the second readout funded by one streamed daily state. */
   def streamTheilSen(spark: SparkSession, dir: String): DataFrame =
-    withStateShards(spark) {
-      graft.queries.Relational.theilSenDaily(
-        streamedDailyAggregates(spark, dir, "stream-ts", "graft_sts"))
-    }
+    graft.queries.Relational.theilSenDaily(
+      streamedDailyAggregates(spark, dir, "stream-ts", "graft_sts"))
 
   /** st80: STREAMING KENDALL τ-b — q107's rank-agreement score
     * online: the THIRD readout funded by the shared per-(type, day)
@@ -4295,10 +3993,8 @@ object StreamingQueries {
     * [[graft.queries.Relational.kendallTauDaily]] and sharing q107's
     * oracle. */
   def streamKendallTau(spark: SparkSession, dir: String): DataFrame =
-    withStateShards(spark) {
-      graft.queries.Relational.kendallTauDaily(
-        streamedDailyAggregates(spark, dir, "stream-kt", "graft_skt"))
-    }
+    graft.queries.Relational.kendallTauDaily(
+      streamedDailyAggregates(spark, dir, "stream-kt", "graft_skt"))
 
   /** st81: STREAMING HODGES-LEHMANN — q109's robust location online:
     * the FOURTH readout funded by the shared per-(type, day)
@@ -4306,10 +4002,8 @@ object StreamingQueries {
     * [[graft.queries.Relational.hodgesLehmannDaily]] and sharing
     * q109's oracle. */
   def streamHodgesLehmann(spark: SparkSession, dir: String): DataFrame =
-    withStateShards(spark) {
-      graft.queries.Relational.hodgesLehmannDaily(
-        streamedDailyAggregates(spark, dir, "stream-hl", "graft_shl"))
-    }
+    graft.queries.Relational.hodgesLehmannDaily(
+      streamedDailyAggregates(spark, dir, "stream-hl", "graft_shl"))
 
   /** st77: STREAMING BLOCK-KEEPER REGISTRY — d37's sub-document dedup
     * online: the keyed state holds, per 20-word block, the MINIMUM
@@ -4321,49 +4015,44 @@ object StreamingQueries {
     * paragraph-dedup as an INGEST service: the registry is keyed
     * state sharded by block, new documents are rewritten by lookup,
     * and no batch job ever re-scans the corpus. */
-  def streamBlockKeepers(spark: SparkSession, dir: String): DataFrame =
-    withStateShards(spark) {
-      import spark.implicits._
-      import graft.operators.BatchExecutor.SinkTable
-      val graph = GroupGraph.define("stream-blockkeep")(
-        Input("blocks", StringCodec, ProcessCallback { (ctx, msg) =>
-          val v = msg.asInstanceOf[String].toLong
-          ctx.value match {
-            case null => ctx.setValue(v.toString)
-            case s: String =>
-              if (v < s.toLong) ctx.setValue(v.toString)
-          }
-        }),
-        Persist(StringCodec))
-      val d = Sources.table(spark, dir, "documents")
-      val blocks = graft.ops.Dedup.blocksOf(d, col("text"),
-        col("doc_id"), blockWords = 20).localCheckpoint()
-      val staging = tempDir("graft_sblock")
-      // State is keyed by the 8-byte block FINGERPRINT
-      // ([[graft.ops.Dedup.blockFp]]), not the raw ~120-byte block
-      // string — at 100 TB the registry's keyspace (and every shard
-      // exchange) carries longs; same d28 dictionary-encoding
-      // discipline as the batch d37.
-      stageTwoBatches(spark,
-        Sources.messages(blocks, "blocks",
-          graft.ops.Dedup.blockFp(col("block")),
-          graft.ops.Dedup.packedBlockKey(col("doc_id"), col("bid"))
-            .cast("string"),
-          expr("timestamp_micros(doc_id)"), col("bid")),
-        staging)
-      val stream = spark.readStream
-        .schema(org.apache.spark.sql.Encoders.product[Message].schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(bindShardsToTopic(spark, staging)).as[Message]
-      val out = new StreamExecutor(graph).run(spark, stream)
-      val tableRows = out.filter(_.sink == SinkTable)
-        .map(e => (e.key.toLong, StringCodec.decode(e.value).toLong))
-        .toDF("fp", "k")
-      // the packed keeper only DECREASES per key; last upsert == min
-      val keepers = runToTable(spark, tableRows)
-        .groupBy(col("fp")).agg(min(col("k")).as("keeper"))
-      graft.ops.Dedup.rewriteWithKeepers(blocks, keepers)
-    }
+  def streamBlockKeepers(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    val graph = GroupGraph.define("stream-blockkeep")(
+      Input("blocks", StringCodec, ProcessCallback { (ctx, msg) =>
+        val v = msg.asInstanceOf[String].toLong
+        ctx.value match {
+          case null => ctx.setValue(v.toString)
+          case s: String =>
+            if (v < s.toLong) ctx.setValue(v.toString)
+        }
+      }),
+      Persist(StringCodec))
+    val d = Sources.table(spark, dir, "documents")
+    val blocks = graft.ops.Dedup.blocksOf(d, col("text"),
+      col("doc_id"), blockWords = 20).localCheckpoint()
+    val staging = tempDir("graft_sblock")
+    // State is keyed by the 8-byte block FINGERPRINT
+    // ([[graft.ops.Dedup.blockFp]]), not the raw ~120-byte block
+    // string — at 100 TB the registry's keyspace (and every shard
+    // exchange) carries longs; same d28 dictionary-encoding
+    // discipline as the batch d37.
+    stageTwoBatches(spark,
+      Sources.messages(blocks, "blocks",
+        graft.ops.Dedup.blockFp(col("block")),
+        graft.ops.Dedup.packedBlockKey(col("doc_id"), col("bid"))
+          .cast("string"),
+        expr("timestamp_micros(doc_id)"), col("bid")),
+      staging)
+    val stream = messageTopic(spark, staging)
+    val out = new StreamExecutor(graph).run(spark, stream)
+    val tableRows = out.filter(_.sink == SinkTable)
+      .map(e => (e.key.toLong, StringCodec.decode(e.value).toLong))
+      .toDF("fp", "k")
+    // the packed keeper only DECREASES per key; last upsert == min
+    val keepers = runToTable(spark, tableRows, "update")
+      .groupBy(col("fp")).agg(min(col("k")).as("keeper"))
+    graft.ops.Dedup.rewriteWithKeepers(blocks, keepers)
+  }
 
   /** st76: STREAMING SCORE QUANTILES — t55's cross-source
     * harmonization online: keyed state counts per (source, score);
@@ -4371,49 +4060,44 @@ object StreamingQueries {
     * ([[graft.ops.TextAnalysis.quantileNormalize]]) over the final
     * state — the documents-side sibling of the st66-st70 shared-state
     * family, sharing t55's oracle hash. */
-  def streamScoreQuantiles(spark: SparkSession, dir: String): DataFrame =
-    withStateShards(spark) {
-      import spark.implicits._
-      import graft.operators.BatchExecutor.SinkTable
-      val graph = GroupGraph.define("stream-squant")(
-        Input("docs", StringCodec, ProcessCallback { (ctx, _) =>
-          val n = ctx.value match {
-            case null => 0L
-            case s: String => s.toLong
-          }
-          ctx.setValue((n + 1L).toString)
-        }),
-        Persist(StringCodec))
-      val d = Sources.table(spark, dir, "documents")
-      val nw = size(split(col("text"), " "))
-      val stops = size(array_distinct(filter(split(lower(col("text")), " "),
-        w => w.isInCollection(graft.ops.TextAnalysis.gopherStops))))
-      val score = stops.cast("long") * 1000L +
-        least(lit(1000L), nw.cast("long") * 2L)
-      val staging = tempDir("graft_squant")
-      stageTwoBatches(spark,
-        Sources.messages(d, "docs",
-          concat(col("source"), lit("|"), score.cast("string")),
-          lit("1"), expr("timestamp_micros(doc_id)"), col("doc_id")),
-        staging)
-      val stream = spark.readStream
-        .schema(org.apache.spark.sql.Encoders.product[Message].schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(bindShardsToTopic(spark, staging)).as[Message]
-      val out = new StreamExecutor(graph).run(spark, stream)
-      val tableRows = out.filter(_.sink == SinkTable)
-        .map(e => (e.key, StringCodec.decode(e.value)))
-        .toDF("key", "st")
-      val scored = runToTable(spark, tableRows)
-        .select(col("key"), col("st").cast("long").as("o"))
-        .groupBy(col("key")).agg(max(col("o")).as("cnt"))
-        .select(substring_index(col("key"), "|", 1).as("source"),
-          substring_index(col("key"), "|", -1).cast("long").as("score"),
-          col("cnt"))
-      // quantileNormalize re-collapses; feed it the expanded grain it
-      // expects by treating each (source, score) count as pre-grouped
-      graft.ops.TextAnalysis.quantileNormalizeCollapsed(scored)
-    }
+  def streamScoreQuantiles(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    val graph = GroupGraph.define("stream-squant")(
+      Input("docs", StringCodec, ProcessCallback { (ctx, _) =>
+        val n = ctx.value match {
+          case null => 0L
+          case s: String => s.toLong
+        }
+        ctx.setValue((n + 1L).toString)
+      }),
+      Persist(StringCodec))
+    val d = Sources.table(spark, dir, "documents")
+    val nw = size(split(col("text"), " "))
+    val stops = size(array_distinct(filter(split(lower(col("text")), " "),
+      w => w.isInCollection(graft.ops.TextAnalysis.gopherStops))))
+    val score = stops.cast("long") * 1000L +
+      least(lit(1000L), nw.cast("long") * 2L)
+    val staging = tempDir("graft_squant")
+    stageTwoBatches(spark,
+      Sources.messages(d, "docs",
+        concat(col("source"), lit("|"), score.cast("string")),
+        lit("1"), expr("timestamp_micros(doc_id)"), col("doc_id")),
+      staging)
+    val stream = messageTopic(spark, staging)
+    val out = new StreamExecutor(graph).run(spark, stream)
+    val tableRows = out.filter(_.sink == SinkTable)
+      .map(e => (e.key, StringCodec.decode(e.value)))
+      .toDF("key", "st")
+    val scored = runToTable(spark, tableRows, "update")
+      .select(col("key"), col("st").cast("long").as("o"))
+      .groupBy(col("key")).agg(max(col("o")).as("cnt"))
+      .select(substring_index(col("key"), "|", 1).as("source"),
+        substring_index(col("key"), "|", -1).cast("long").as("score"),
+        col("cnt"))
+    // quantileNormalize re-collapses; feed it the expanded grain it
+    // expects by treating each (source, score) count as pre-grouped
+    graft.ops.TextAnalysis.quantileNormalizeCollapsed(scored)
+  }
 
   /** st74: STREAMING ECE — t53's calibration audit online: the keyed
     * state accumulates per (source, score-decile, label) the
@@ -4423,61 +4107,56 @@ object StreamingQueries {
     * readout folds the literal t53 code
     * ([[graft.ops.TextAnalysis.eceCollapsed]]) and shares its oracle
     * hash. */
-  def streamEce(spark: SparkSession, dir: String): DataFrame =
-    withStateShards(spark) {
-      import spark.implicits._
-      import graft.operators.BatchExecutor.SinkTable
-      val codec = Codecs.twoLongs[EceState](s => (s.n, s.sum))(EceState.apply)
-      val graph = GroupGraph.define("stream-ece")(
-        Input("docs", StringCodec, ProcessCallback { (ctx, msg) =>
-          val s = msg.asInstanceOf[String].toLong
-          ctx.value match {
-            case null => ctx.setValue(EceState(1L, s))
-            case st: EceState => ctx.setValue(EceState(st.n + 1L, st.sum + s))
-          }
-        }),
-        Persist(codec))
-      val d = Sources.table(spark, dir, "documents")
-      val nw = size(split(col("text"), " "))
-      // t53's integer score/bin forms, verbatim
-      val scoreMilli = least(lit(1000L), nw.cast("long") * 2L)
-      val staging = tempDir("graft_sece")
-      stageTwoBatches(spark,
-        Sources.messages(d, "docs",
-          concat(col("source"), lit("|"),
-            least(lit(9L), floor(scoreMilli / lit(100.0d)).cast("long"))
-              .cast("string"), lit("|"),
-            when(graft.ops.TextAnalysis.gopherKeep(col("text"),
-              minStopHits = 1), "1").otherwise("0")),
-          scoreMilli.cast("string"),
-          expr("timestamp_micros(doc_id)"), col("doc_id")),
-        staging)
-      val stream = spark.readStream
-        .schema(org.apache.spark.sql.Encoders.product[Message].schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(bindShardsToTopic(spark, staging)).as[Message]
-      val out = new StreamExecutor(graph).run(spark, stream)
-      val table = out.filter(_.sink == SinkTable)
-        .map { e => val s = codec.decode(e.value); (e.key, s.n, s.sum) }
-        .toDF("key", "n", "sum_milli")
-      // both accumulators are monotone and updated atomically, so the
-      // max-n upsert per key is the final state; sum rides max_by
-      val cells = runToTable(spark, table)
-        .groupBy(col("key"))
-        .agg(max(col("n")).as("n"),
-          max_by(col("sum_milli"), col("n")).as("sum_milli"))
-        .select(split(col("key"), "\\|").as("kk"), col("n"),
-          col("sum_milli"))
-        .select(element_at(col("kk"), 1).as("source"),
-          element_at(col("kk"), 2).cast("long").as("bin"),
-          element_at(col("kk"), 3).cast("long").as("lbl"),
-          col("n"), col("sum_milli"))
-        .select(col("source"), col("bin"),
-          col("n"),
-          when(col("lbl") === 1L, col("n")).otherwise(0L).as("pos"),
-          col("sum_milli"))
-      graft.ops.TextAnalysis.eceCollapsed(cells)
-    }
+  def streamEce(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    val codec = Codecs.twoLongs[EceState](s => (s.n, s.sum))(EceState.apply)
+    val graph = GroupGraph.define("stream-ece")(
+      Input("docs", StringCodec, ProcessCallback { (ctx, msg) =>
+        val s = msg.asInstanceOf[String].toLong
+        ctx.value match {
+          case null => ctx.setValue(EceState(1L, s))
+          case st: EceState => ctx.setValue(EceState(st.n + 1L, st.sum + s))
+        }
+      }),
+      Persist(codec))
+    val d = Sources.table(spark, dir, "documents")
+    val nw = size(split(col("text"), " "))
+    // t53's integer score/bin forms, verbatim
+    val scoreMilli = least(lit(1000L), nw.cast("long") * 2L)
+    val staging = tempDir("graft_sece")
+    stageTwoBatches(spark,
+      Sources.messages(d, "docs",
+        concat(col("source"), lit("|"),
+          least(lit(9L), floor(scoreMilli / lit(100.0d)).cast("long"))
+            .cast("string"), lit("|"),
+          when(graft.ops.TextAnalysis.gopherKeep(col("text"),
+            minStopHits = 1), "1").otherwise("0")),
+        scoreMilli.cast("string"),
+        expr("timestamp_micros(doc_id)"), col("doc_id")),
+      staging)
+    val stream = messageTopic(spark, staging)
+    val out = new StreamExecutor(graph).run(spark, stream)
+    val table = out.filter(_.sink == SinkTable)
+      .map { e => val s = codec.decode(e.value); (e.key, s.n, s.sum) }
+      .toDF("key", "n", "sum_milli")
+    // both accumulators are monotone and updated atomically, so the
+    // max-n upsert per key is the final state; sum rides max_by
+    val cells = runToTable(spark, table, "update")
+      .groupBy(col("key"))
+      .agg(max(col("n")).as("n"),
+        max_by(col("sum_milli"), col("n")).as("sum_milli"))
+      .select(split(col("key"), "\\|").as("kk"), col("n"),
+        col("sum_milli"))
+      .select(element_at(col("kk"), 1).as("source"),
+        element_at(col("kk"), 2).cast("long").as("bin"),
+        element_at(col("kk"), 3).cast("long").as("lbl"),
+        col("n"), col("sum_milli"))
+      .select(col("source"), col("bin"),
+        col("n"),
+        when(col("lbl") === 1L, col("n")).otherwise(0L).as("pos"),
+        col("sum_milli"))
+    graft.ops.TextAnalysis.eceCollapsed(cells)
+  }
 
   /** st71: STREAMING WINSORIZED MEAN — q104's clamped-tail location
     * estimate online: the SIXTH readout funded by the shared
@@ -4485,12 +4164,10 @@ object StreamingQueries {
     * (median/Gini/trimmed-mean/MAD/IQR/winsorized), folding the
     * literal q104 code and sharing its oracle. */
   def streamWinsorizedMean(spark: SparkSession, dir: String): DataFrame =
-    withStateShards(spark) {
-      graft.queries.Relational.winsorizedMeanCollapsed(
-        streamedValueCounts(spark, dir, "stream-winsor", "graft_swinsor",
-          1000.0)
-          .select(col("event_type"), col("x").as("vfx"), col("cnt")))
-    }
+    graft.queries.Relational.winsorizedMeanCollapsed(
+      streamedValueCounts(spark, dir, "stream-winsor", "graft_swinsor",
+        1000.0)
+        .select(col("event_type"), col("x").as("vfx"), col("cnt")))
 
   /** st65: STREAMING BENFORD AUDIT — q97's leading-digit test
     * maintained online: keyed state is one count per (event_type,
@@ -4500,26 +4177,25 @@ object StreamingQueries {
     * hash. The digit comes from the same milli-fixed-point string
     * derivation, computed in the message-key expression so the state
     * key IS the cell. */
-  def streamBenford(spark: SparkSession, dir: String): DataFrame =
-    withStateShards(spark) {
-      // r17: the leading digit is a pure function of the shared
-      // family's milli fixed-point value for x ≥ 1 — and the original
-      // pre-staging filters (value > 0, digit ≥ 1) reduce EXACTLY to
-      // x ≥ 1 (value > 0 with floor(1000·v) = 0 was dropped as digit
-      // 0; x ≥ 1 implies value > 0) — so st65's per-(type, digit)
-      // state was a coarsening of the maintained valueCounts table
-      // and its private staging + streaming lifecycle is gone.
-      val obs = streamedValueCounts(spark, dir, "stream-benford",
-        "graft_sbenford", 1000.0)
-        .filter(col("x") >= 1L)
-        .select(col("event_type"),
-          substring(col("x").cast("string"), 1, 1).cast("long")
-            .as("digit"),
-          col("cnt"))
-        .groupBy(col("event_type"), col("digit"))
-        .agg(sum(col("cnt")).as("o"))
-      graft.queries.Relational.benfordCells(obs)
-    }
+  def streamBenford(spark: SparkSession, dir: String): DataFrame = {
+    // r17: the leading digit is a pure function of the shared
+    // family's milli fixed-point value for x ≥ 1 — and the original
+    // pre-staging filters (value > 0, digit ≥ 1) reduce EXACTLY to
+    // x ≥ 1 (value > 0 with floor(1000·v) = 0 was dropped as digit
+    // 0; x ≥ 1 implies value > 0) — so st65's per-(type, digit)
+    // state was a coarsening of the maintained valueCounts table
+    // and its private staging + streaming lifecycle is gone.
+    val obs = streamedValueCounts(spark, dir, "stream-benford",
+      "graft_sbenford", 1000.0)
+      .filter(col("x") >= 1L)
+      .select(col("event_type"),
+        substring(col("x").cast("string"), 1, 1).cast("long")
+          .as("digit"),
+        col("cnt"))
+      .groupBy(col("event_type"), col("digit"))
+      .agg(sum(col("cnt")).as("o"))
+    graft.queries.Relational.benfordCells(obs)
+  }
 
   /** One-ingest-many-readouts memoization: the final state table of a
     * shared-shape ingest, cached per (session, fixture dir, state
@@ -4593,7 +4269,6 @@ object StreamingQueries {
   private def streamedValueCountsIngest(spark: SparkSession, dir: String,
       group: String, stagePrefix: String, scale: Double): DataFrame = {
     import spark.implicits._
-    import graft.operators.BatchExecutor.SinkTable
     val graph = GroupGraph.define(group)(
       Input("events", StringCodec, ProcessCallback { (ctx, _) =>
         val n = ctx.value match {
@@ -4620,15 +4295,12 @@ object StreamingQueries {
           floor(col("value") * scale).cast("long").cast("string")),
         lit("1"), col("ts"), col("event_id")),
       staging, Some(mid))
-    val stream = spark.readStream
-      .schema(Sources.eventMessages(spark, dir).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(bindShardsToTopic(spark, staging)).as[Message]
+    val stream = messageTopic(spark, staging)
     val out = new StreamExecutor(graph).run(spark, stream)
     val tableRows = out.filter(_.sink == SinkTable)
       .map(e => (e.key, StringCodec.decode(e.value)))
       .toDF("key", "st")
-    runToTable(spark, tableRows)
+    runToTable(spark, tableRows, "update")
       .select(col("key"), col("st").cast("long").as("o"))
       // counts only grow, so the max upsert per key is the final one
       .groupBy(col("key")).agg(max(col("o")).as("cnt"))
@@ -4646,14 +4318,12 @@ object StreamingQueries {
     * .giniCollapsed]]). The per-type cumulative window runs on the
     * collapsed frame — domain-bounded, the q95 argument. */
   def streamGini(spark: SparkSession, dir: String): DataFrame =
-    withStateShards(spark) {
-      graft.queries.Relational.giniCollapsed(
-        streamedValueCounts(spark, dir, "stream-gini", "graft_sgini",
-          1000.0)
-          .select(col("event_type").as("flag"), col("x"), col("cnt")))
-        .select(col("flag").as("event_type"), col("n"),
-          col("gini_num"), col("gini_den"), col("gini"))
-    }
+    graft.queries.Relational.giniCollapsed(
+      streamedValueCounts(spark, dir, "stream-gini", "graft_sgini",
+        1000.0)
+        .select(col("event_type").as("flag"), col("x"), col("cnt")))
+      .select(col("flag").as("event_type"), col("n"),
+        col("gini_num"), col("gini_den"), col("gini"))
 
   /** st68: STREAMING TRIMMED MEAN — q94's robust location estimate
     * per event type over the same state (milli grain, so the fold is
@@ -4661,12 +4331,10 @@ object StreamingQueries {
     * the query shares q94's oracle hash — online counts provably
     * reproduce the batch trim). */
   def streamTrimmedMean(spark: SparkSession, dir: String): DataFrame =
-    withStateShards(spark) {
-      graft.queries.Relational.trimmedMeanCollapsed(
-        streamedValueCounts(spark, dir, "stream-tmean", "graft_stmean",
-          1000.0)
-          .select(col("event_type"), col("x").as("vfx"), col("cnt")))
-    }
+    graft.queries.Relational.trimmedMeanCollapsed(
+      streamedValueCounts(spark, dir, "stream-tmean", "graft_stmean",
+        1000.0)
+        .select(col("event_type"), col("x").as("vfx"), col("cnt")))
 
   /** st66: STREAMING EXACT MEDIAN — the per-type lower median of the
     * centi-fixed value maintained online: keyed state is one count per
@@ -4679,26 +4347,24 @@ object StreamingQueries {
     * no sketch, no approximation, state bounded by the value DOMAIN
     * (the q69 collapse argument), not the stream length. */
   def streamMedian(spark: SparkSession, dir: String): DataFrame =
-    withStateShards(spark) {
-      // NOTE (r17): st66 deliberately keeps its own centi-grain
-      // ingest. The nested-floor identity floor(v·100) =
-      // floor(floor(v·1000)/10) holds for exact reals but NOT for
-      // independently-rounded double products: v·100 and v·1000 are
-      // separate multiplications, and near a boundary they round to
-      // opposite sides of an integer (measured at sf0.001:
-      // v ≈ 35.62 gives v·100 = 3561.999…95 → 3561 while
-      // v·1000 = 35620.000…04 → 35620 → 3562). Deriving centi from
-      // the shared milli state shifted one median bucket and broke
-      // the oracle hash, so the coarse grain must be quantized from
-      // the raw value exactly as the oracle does it.
-      graft.queries.Relational.weightedMedianOver(
-        streamedValueCounts(spark, dir, "stream-median", "graft_smedian",
-          100.0)
-          .select(col("event_type").as("flag"), col("x"),
-            col("cnt").as("wv")))
-        .select(col("flag").as("event_type"), col("total_w"),
-          col("median_centi"), col("median"))
-    }
+    // NOTE (r17): st66 deliberately keeps its own centi-grain
+    // ingest. The nested-floor identity floor(v·100) =
+    // floor(floor(v·1000)/10) holds for exact reals but NOT for
+    // independently-rounded double products: v·100 and v·1000 are
+    // separate multiplications, and near a boundary they round to
+    // opposite sides of an integer (measured at sf0.001:
+    // v ≈ 35.62 gives v·100 = 3561.999…95 → 3561 while
+    // v·1000 = 35620.000…04 → 35620 → 3562). Deriving centi from
+    // the shared milli state shifted one median bucket and broke
+    // the oracle hash, so the coarse grain must be quantized from
+    // the raw value exactly as the oracle does it.
+    graft.queries.Relational.weightedMedianOver(
+      streamedValueCounts(spark, dir, "stream-median", "graft_smedian",
+        100.0)
+        .select(col("event_type").as("flag"), col("x"),
+          col("cnt").as("wv")))
+      .select(col("flag").as("event_type"), col("total_w"),
+        col("median_centi"), col("median"))
 
   /** st69: STREAMING MAD — q101's robust scale estimate online, the
     * FOURTH readout funded by the shared per-(type, milli-value)
@@ -4707,24 +4373,20 @@ object StreamingQueries {
     * ([[graft.queries.Relational.madCollapsed]]) and shares its
     * oracle, proving online counts reproduce both nested medians. */
   def streamMad(spark: SparkSession, dir: String): DataFrame =
-    withStateShards(spark) {
-      graft.queries.Relational.madCollapsed(
-        streamedValueCounts(spark, dir, "stream-mad", "graft_smad",
-          1000.0)
-          .select(col("event_type"), col("x").as("vfx"), col("cnt")))
-    }
+    graft.queries.Relational.madCollapsed(
+      streamedValueCounts(spark, dir, "stream-mad", "graft_smad",
+        1000.0)
+        .select(col("event_type"), col("x").as("vfx"), col("cnt")))
 
   /** st70: STREAMING IQR OUTLIER SCREEN — q102's Tukey-fence counts
     * online: the FIFTH readout funded by the shared per-(type,
     * milli-value) count state (median/Gini/trimmed-mean/MAD/IQR),
     * folding the literal q102 code and sharing its oracle. */
   def streamIqrOutliers(spark: SparkSession, dir: String): DataFrame =
-    withStateShards(spark) {
-      graft.queries.Relational.iqrOutliersCollapsed(
-        streamedValueCounts(spark, dir, "stream-iqr", "graft_siqr",
-          1000.0)
-          .select(col("event_type"), col("x").as("vfx"), col("cnt")))
-    }
+    graft.queries.Relational.iqrOutliersCollapsed(
+      streamedValueCounts(spark, dir, "stream-iqr", "graft_siqr",
+        1000.0)
+        .select(col("event_type"), col("x").as("vfx"), col("cnt")))
 
   /** st56: STREAMING EXACT LEADERBOARD — continuous top-10 users by
     * exact cents spend per event type: the keyed state is the
@@ -4737,46 +4399,41 @@ object StreamingQueries {
     * leaderboard over users IS per-key state, so maintaining it costs
     * nothing extra and the rank is exact. Ties break to the smaller
     * user_id; per-type rank windows partition by type. */
-  def streamLeaderboard(spark: SparkSession, dir: String): DataFrame =
-    withStateShards(spark) {
-      import spark.implicits._
-      import graft.operators.BatchExecutor.SinkTable
-      val graph = GroupGraph.define("stream-leaderboard")(
-        Input("events", StringCodec, ProcessCallback { (ctx, msg) =>
-          val cents = msg.asInstanceOf[String].toLong
-          val cur = ctx.value match { case null => 0L; case n: Long => n }
-          ctx.setValue(cur + cents)
-        }),
-        Persist(Int64Codec))
-      val ev = Sources.table(spark, dir, "events")
-      val staging = tempDir("graft_slead_split")
-      stageTwoBatches(spark,
-        Sources.messages(ev, "events",
-          concat(col("event_type"), lit("|"), col("user_id")),
-          floor(col("value") * 100.0d).cast("long").cast("string"),
-          col("ts"), col("event_id")),
-        staging)
-      val stream = spark.readStream
-        .schema(Sources.eventMessages(spark, dir).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(bindShardsToTopic(spark, staging)).as[Message]
-      val out = new StreamExecutor(graph).run(spark, stream)
-      val table = out.filter(_.sink == SinkTable)
-        .map(e => (e.key, Int64Codec.decode(e.value))).toDF("key", "cents")
-      // update-mode upserts: the accumulator only grows per key, so
-      // the last upsert == max
-      val sums = runToTable(spark, table)
-        .groupBy(col("key")).agg(max(col("cents")).as("cents"))
-        .select(split(col("key"), "\\|").as("kk"), col("cents"))
-        .select(element_at(col("kk"), 1).as("event_type"),
-          element_at(col("kk"), 2).cast("long").as("user_id"),
-          col("cents"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("event_type"))
-        .orderBy(col("cents").desc, col("user_id"))
-      sums.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 10)
-    }
+  def streamLeaderboard(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    val graph = GroupGraph.define("stream-leaderboard")(
+      Input("events", StringCodec, ProcessCallback { (ctx, msg) =>
+        val cents = msg.asInstanceOf[String].toLong
+        val cur = ctx.value match { case null => 0L; case n: Long => n }
+        ctx.setValue(cur + cents)
+      }),
+      Persist(Int64Codec))
+    val ev = Sources.table(spark, dir, "events")
+    val staging = tempDir("graft_slead_split")
+    stageTwoBatches(spark,
+      Sources.messages(ev, "events",
+        concat(col("event_type"), lit("|"), col("user_id")),
+        floor(col("value") * 100.0d).cast("long").cast("string"),
+        col("ts"), col("event_id")),
+      staging)
+    val stream = messageTopic(spark, staging)
+    val out = new StreamExecutor(graph).run(spark, stream)
+    val table = out.filter(_.sink == SinkTable)
+      .map(e => (e.key, Int64Codec.decode(e.value))).toDF("key", "cents")
+    // update-mode upserts: the accumulator only grows per key, so
+    // the last upsert == max
+    val sums = runToTable(spark, table, "update")
+      .groupBy(col("key")).agg(max(col("cents")).as("cents"))
+      .select(split(col("key"), "\\|").as("kk"), col("cents"))
+      .select(element_at(col("kk"), 1).as("event_type"),
+        element_at(col("kk"), 2).cast("long").as("user_id"),
+        col("cents"))
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("event_type"))
+      .orderBy(col("cents").desc, col("user_id"))
+    sums.withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= 10)
+  }
 
   /** st55: STREAMING OOD ADMISSION GATE — s41 turned into the ingest
     * guard it exists for: the model (s33's base-trained frozen
@@ -4791,47 +4448,38 @@ object StreamingQueries {
     * model, so the two-batch replay must equal the batch computation;
     * the oracle replays the Lloyd chain + the same 20·rank ≥ 19·n
     * threshold selection. */
-  def streamOodGate(spark: SparkSession, dir: String): DataFrame =
-    withStateShards(spark) {
-      import graft.ops.Vectors
-      val e = Sources.table(spark, dir, "embeddings")
-      val base = e.filter(col("vec_id") % 10 =!= 7)
-      val arrivals = e.filter(col("vec_id") % 10 === 7)
-      val (cents, _) = Vectors.kmeansFit(base, col("vec_id"),
-        col("embedding"), k = 16, iters = 2)
-      def score(df: org.apache.spark.sql.DataFrame) =
-        Vectors.ivfInvertedLists(df, col("vec_id"), col("embedding"),
-            cents)
-          .join(broadcast(cents), Seq("cid"))
-          .withColumn("d2", Vectors.sqDist(col("iv"), col("civ")))
-          .select(col("vid").as("vec_id"), col("cid").as("cell"),
-            col("d2"))
-      val (ranked, n, _) = graft.ops.Ranks.rankedCumsumTotals(
-        score(base), col("d2"), col("vec_id"), lit(1L))
-      val th = ranked.filter(col("rank") * 20 >= lit(19L * n))
-        .agg(min(col("d2")).as("th")).localCheckpoint()
-      val staging = tempDir("graft_ood_src")
-      val now = System.currentTimeMillis()
-      stageFile(arrivals.filter(col("vec_id") % 20 === 7), staging,
-        "b1.parquet", now - 120000)
-      stageFile(arrivals.filter(col("vec_id") % 20 === 17), staging,
-        "b2.parquet", now - 60000)
-      val resultDir = tempDir("graft_ood_out") + "/scored"
-      val sq = spark.readStream.schema(arrivals.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(bindShardsToTopic(spark, staging))
-        .writeStream.outputMode("append")
-        .foreachBatch {
-          (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-            score(batch.toDF()).write.mode("append").parquet(resultDir)
-            ()
-        }.start()
-      try sq.processAllAvailable() finally sq.stop()
-      spark.read.parquet(resultDir)
-        .crossJoin(broadcast(th))
-        .select(col("vec_id"), col("cell"), col("d2"),
-          (col("d2") > col("th")).as("is_ood"))
-    }
+  def streamOodGate(spark: SparkSession, dir: String): DataFrame = {
+    import graft.ops.Vectors
+    val e = Sources.table(spark, dir, "embeddings")
+    val base = e.filter(col("vec_id") % 10 =!= 7)
+    val arrivals = e.filter(col("vec_id") % 10 === 7)
+    val (cents, _) = Vectors.kmeansFit(base, col("vec_id"),
+      col("embedding"), k = 16, iters = 2)
+    def score(df: org.apache.spark.sql.DataFrame) =
+      Vectors.ivfInvertedLists(df, col("vec_id"), col("embedding"),
+          cents)
+        .join(broadcast(cents), Seq("cid"))
+        .withColumn("d2", Vectors.sqDist(col("iv"), col("civ")))
+        .select(col("vid").as("vec_id"), col("cid").as("cell"),
+          col("d2"))
+    val (ranked, n, _) = graft.ops.Ranks.rankedCumsumTotals(
+      score(base), col("d2"), col("vec_id"), lit(1L))
+    val th = ranked.filter(col("rank") * 20 >= lit(19L * n))
+      .agg(min(col("d2")).as("th")).localCheckpoint()
+    val staging = tempDir("graft_ood_src")
+    val now = System.currentTimeMillis()
+    stageFile(arrivals.filter(col("vec_id") % 20 === 7), staging,
+      "b1.parquet", now - 120000)
+    stageFile(arrivals.filter(col("vec_id") % 20 === 17), staging,
+      "b2.parquet", now - 60000)
+    val resultDir = tempDir("graft_ood_out") + "/scored"
+    withQueries(spark)(parquetSink(topic(spark, staging, arrivals.schema),
+      resultDir, "append", None)(score))(drain)
+    spark.read.parquet(resultDir)
+      .crossJoin(broadcast(th))
+      .select(col("vec_id"), col("cell"), col("d2"),
+        (col("d2") > col("th")).as("is_ood"))
+  }
 
   /** st54: STREAMING PER-GROUP TREND — q74's per-type daily-volume
     * OLS slope maintained from the stream: the keyed state is the
@@ -4843,49 +4491,44 @@ object StreamingQueries {
     * aggregate; the hash match against q74's oracle proves it. The
     * monitor shape this serves: slope-per-source updated continuously
     * without ever re-scanning history. */
-  def streamGroupTrend(spark: SparkSession, dir: String): DataFrame =
-    withStateShards(spark) {
-      import spark.implicits._
-      import graft.operators.BatchExecutor.SinkTable
-      val graph = GroupGraph.define("stream-trend")(
-        Input("events", StringCodec, ProcessCallback { (ctx, _) =>
-          val cur = ctx.value match { case null => 0L; case n: Long => n }
-          ctx.setValue(cur + 1L)
-        }),
-        Persist(Int64Codec))
-      val ev = Sources.table(spark, dir, "events")
-      val staging = tempDir("graft_strend_split")
-      stageTwoBatches(spark,
-        Sources.messages(ev, "events",
-          concat(col("event_type"), lit("|"),
-            datediff(date_trunc("day", col("ts")),
-              lit("2024-01-01").cast("date")).cast("string")),
-          col("event_type"), col("ts"), col("event_id")),
-        staging)
-      val stream = spark.readStream
-        .schema(Sources.eventMessages(spark, dir).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(bindShardsToTopic(spark, staging)).as[Message]
-      val out = new StreamExecutor(graph).run(spark, stream)
-      val table = out.filter(_.sink == SinkTable)
-        .map(e => (e.key, Int64Codec.decode(e.value))).toDF("key", "cnt")
-      val daily = runToTable(spark, table)
-        .groupBy(col("key")).agg(max(col("cnt")).as("y"))
-        .select(split(col("key"), "\\|").as("kk"), col("y"))
-        .select(element_at(col("kk"), 1).as("event_type"),
-          element_at(col("kk"), 2).cast("long").as("x"), col("y"))
-      daily.groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n_days"),
-          sum(col("x")).as("sx"), sum(col("y")).as("sy"),
-          sum(col("x") * col("y")).as("sxy"),
-          sum(col("x") * col("x")).as("sxx"))
-        .select(col("event_type"), col("n_days"),
-          (col("n_days") * col("sxy") - col("sx") * col("sy")).as("num"),
-          (col("n_days") * col("sxx") - col("sx") * col("sx")).as("den"))
-        .withColumn("slope_per_day",
-          when(col("den") =!= 0L,
-            col("num").cast("double") / col("den").cast("double")))
-    }
+  def streamGroupTrend(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    val graph = GroupGraph.define("stream-trend")(
+      Input("events", StringCodec, ProcessCallback { (ctx, _) =>
+        val cur = ctx.value match { case null => 0L; case n: Long => n }
+        ctx.setValue(cur + 1L)
+      }),
+      Persist(Int64Codec))
+    val ev = Sources.table(spark, dir, "events")
+    val staging = tempDir("graft_strend_split")
+    stageTwoBatches(spark,
+      Sources.messages(ev, "events",
+        concat(col("event_type"), lit("|"),
+          datediff(date_trunc("day", col("ts")),
+            lit("2024-01-01").cast("date")).cast("string")),
+        col("event_type"), col("ts"), col("event_id")),
+      staging)
+    val stream = messageTopic(spark, staging)
+    val out = new StreamExecutor(graph).run(spark, stream)
+    val table = out.filter(_.sink == SinkTable)
+      .map(e => (e.key, Int64Codec.decode(e.value))).toDF("key", "cnt")
+    val daily = runToTable(spark, table, "update")
+      .groupBy(col("key")).agg(max(col("cnt")).as("y"))
+      .select(split(col("key"), "\\|").as("kk"), col("y"))
+      .select(element_at(col("kk"), 1).as("event_type"),
+        element_at(col("kk"), 2).cast("long").as("x"), col("y"))
+    daily.groupBy(col("event_type"))
+      .agg(count(lit(1)).as("n_days"),
+        sum(col("x")).as("sx"), sum(col("y")).as("sy"),
+        sum(col("x") * col("y")).as("sxy"),
+        sum(col("x") * col("x")).as("sxx"))
+      .select(col("event_type"), col("n_days"),
+        (col("n_days") * col("sxy") - col("sx") * col("sy")).as("num"),
+        (col("n_days") * col("sxx") - col("sx") * col("sx")).as("den"))
+      .withColumn("slope_per_day",
+        when(col("den") =!= 0L,
+          col("num").cast("double") / col("den").cast("double")))
+  }
 
   /** st52: STREAMING INCREMENTAL COMMITS + NET CHANGE DATA FEED — the
     * c19/c29 lifecycle driven by a stream: the change set arrives as
@@ -4928,19 +4571,10 @@ object StreamingQueries {
     stageFile(changes.filter(col("user_id") % 2 === 1), staging,
       "b2.parquet", now - 60000)
     val ckpt = tempDir("graft_scdc_ckpt")
-    val q = spark.readStream
-      .schema(changes.schema)
-      .option("maxFilesPerTrigger", 1).parquet(staging)
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .foreachBatch {
-        (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            _: Long) =>
-          if (!b.isEmpty)
-            Lake.mergeVersioned(spark, lakeDir, "user_id", b, 8)
-          ()
-      }.start()
-    try q.processAllAvailable() finally q.stop()
+    withQueries(spark)(batchSink(fileSource(spark, staging, changes.schema),
+        "append", Some(ckpt)) { (b, _) =>
+      if (!b.isEmpty) Lake.mergeVersioned(spark, lakeDir, "user_id", b, 8)
+    })(drain)
     Lake.versionDiff(spark, lakeDir, "user_id", 1,
         Lake.latestVersion(lakeDir))
       .select(col("user_id"), col("change"),
@@ -4961,103 +4595,85 @@ object StreamingQueries {
     * first-arrival-locking pattern. The tiny folded table then takes
     * the same cross-multiplied DECIMAL(38,0) significance test as
     * the batch plan. */
-  def streamAbTest(spark: SparkSession, dir: String): DataFrame =
-    withStateShards(spark) {
-      import spark.implicits._
-      import graft.operators.BatchExecutor.SinkTable
-      val stage1 = GroupGraph.define("stream-ab")(
-        Inputs(Seq("ev_tu", "ev_u"), StringCodec, ProcessCallback {
-          (ctx, _) =>
-            if (ctx.value == null) {
-              ctx.setValue("1")
-              if (ctx.topic == "ev_tu") {
-                val i = ctx.key.lastIndexOf('|')
-                val (t, u) = (ctx.key.substring(0, i),
-                  ctx.key.substring(i + 1).toLong)
-                ctx.emit("conv", s"$t|${u % 2}", "1")
-              } else ctx.emit("expo", (ctx.key.toLong % 2).toString, "1")
-            }
-        }),
-        Persist(StringCodec), Output("conv", StringCodec),
-        Output("expo", StringCodec))
-      val stage2 = GroupGraph.define("ab-counts")(
-        Inputs(Seq("conv", "expo"), StringCodec, ProcessCallback {
-          (ctx, _) =>
-            val n = ctx.value match {
-              case null => 0L
-              case s: String => s.toLong
-            }
-            ctx.setValue((n + 1L).toString)
-        }),
-        Persist(StringCodec))
-      val ev = Sources.table(spark, dir, "events")
-      val stagingTU = tempDir("graft_ab_tu")
-      val stagingU = tempDir("graft_ab_u")
-      stageTwoBatches(spark, Sources.messages(ev, "ev_tu",
-        concat(col("event_type"), lit("|"), col("user_id")),
-        lit(1L), col("ts"), col("event_id")), stagingTU)
-      stageTwoBatches(spark, Sources.messages(ev, "ev_u",
-        col("user_id"), lit(1L), col("ts"), col("event_id")), stagingU)
-      val msgSchema = org.apache.spark.sql.Encoders.product[Message].schema
-      val s1 = spark.readStream.schema(msgSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(bindShardsToTopic(spark, stagingTU)).as[Message]
-      val s2 = spark.readStream.schema(msgSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stagingU).as[Message]
-      val relayC = tempDir("graft_ab_conv")
-      val relayE = tempDir("graft_ab_expo")
-      val q1 = StreamSinks.routeOutputs(
-        new StreamExecutor(stage1).run(spark, s1.unionByName(s2)),
-        Map("conv" -> relayC, "expo" -> relayE))
-      val c1 = spark.readStream.schema(msgSchema).parquet(relayC)
-        .as[Message]
-      val c2 = spark.readStream.schema(msgSchema).parquet(relayE)
-        .as[Message]
-      val countsTable = new StreamExecutor(stage2)
-        .run(spark, c1.unionByName(c2))
-        .filter(_.sink == SinkTable)
-        .map(e => (e.key, StringCodec.decode(e.value)))
-        .toDF("k", "v")
-      val countsName = s"stream_result_${nameSeq.incrementAndGet()}"
-      val qCounts = countsTable.writeStream.format("memory")
-        .queryName(countsName).outputMode("update").start()
-      try {
-        q1.processAllAvailable()
-        qCounts.processAllAvailable()
-      } finally { q1.stop(); qCounts.stop() }
-      val counts = spark.table(countsName)
-        .groupBy(col("k")).agg(max(col("v").cast("long")).as("n"))
-      val conv = counts.filter(col("k").contains("|"))
-        .select(split_part(col("k"), lit("|"), lit(1)).as("event_type"),
-          split_part(col("k"), lit("|"), lit(2)).cast("int").as("arm"),
-          col("n"))
-        .groupBy(col("event_type"))
-        .agg(coalesce(sum(when(col("arm") === 0, col("n"))), lit(0L))
-          .as("ca"),
-          coalesce(sum(when(col("arm") === 1, col("n"))), lit(0L))
-            .as("cb"))
-      val expo = counts.filter(!col("k").contains("|"))
-        .agg(coalesce(sum(when(col("k") === "0", col("n"))), lit(0L))
-          .as("na"),
-          coalesce(sum(when(col("k") === "1", col("n"))), lit(0L))
-            .as("nb"))
-      val d38 = (c: org.apache.spark.sql.Column) =>
-        c.cast(org.apache.spark.sql.types.DecimalType(38, 0))
-      conv.crossJoin(broadcast(expo))
-        .withColumn("nn", col("na") + col("nb"))
-        .withColumn("cc", col("ca") + col("cb"))
-        .withColumn("significant",
+  def streamAbTest(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    val stage1 = GroupGraph.define("stream-ab")(
+      Inputs(Seq("ev_tu", "ev_u"), StringCodec, ProcessCallback {
+        (ctx, _) =>
+          if (ctx.value == null) {
+            ctx.setValue("1")
+            if (ctx.topic == "ev_tu") {
+              val i = ctx.key.lastIndexOf('|')
+              val (t, u) = (ctx.key.substring(0, i),
+                ctx.key.substring(i + 1).toLong)
+              ctx.emit("conv", s"$t|${u % 2}", "1")
+            } else ctx.emit("expo", (ctx.key.toLong % 2).toString, "1")
+          }
+      }),
+      Persist(StringCodec), Output("conv", StringCodec),
+      Output("expo", StringCodec))
+    val stage2 = GroupGraph.define("ab-counts")(
+      Inputs(Seq("conv", "expo"), StringCodec, ProcessCallback {
+        (ctx, _) =>
+          val n = ctx.value match {
+            case null => 0L
+            case s: String => s.toLong
+          }
+          ctx.setValue((n + 1L).toString)
+      }),
+      Persist(StringCodec))
+    val ev = Sources.table(spark, dir, "events")
+    val stagingTU = tempDir("graft_ab_tu")
+    val stagingU = tempDir("graft_ab_u")
+    stageTwoBatches(spark, Sources.messages(ev, "ev_tu",
+      concat(col("event_type"), lit("|"), col("user_id")),
+      lit(1L), col("ts"), col("event_id")), stagingTU)
+    stageTwoBatches(spark, Sources.messages(ev, "ev_u",
+      col("user_id"), lit(1L), col("ts"), col("event_id")), stagingU)
+    val relayC = tempDir("graft_ab_conv")
+    val relayE = tempDir("graft_ab_expo")
+    val firsts = routed(new StreamExecutor(stage1).run(spark,
+        messageTopic(spark, stagingTU)
+          .unionByName(messageTopic(spark, stagingU))),
+      Map("conv" -> relayC, "expo" -> relayE), None)
+    val countsTable = new StreamExecutor(stage2)
+      .run(spark, relayTopic(spark, relayC)
+        .unionByName(relayTopic(spark, relayE)))
+      .filter(_.sink == SinkTable)
+      .map(e => (e.key, StringCodec.decode(e.value)))
+      .toDF("k", "v")
+    val counts = runToTable(spark, countsTable, "update", firsts)
+      .groupBy(col("k")).agg(max(col("v").cast("long")).as("n"))
+    val conv = counts.filter(col("k").contains("|"))
+      .select(split_part(col("k"), lit("|"), lit(1)).as("event_type"),
+        split_part(col("k"), lit("|"), lit(2)).cast("int").as("arm"),
+        col("n"))
+      .groupBy(col("event_type"))
+      .agg(coalesce(sum(when(col("arm") === 0, col("n"))), lit(0L))
+        .as("ca"),
+        coalesce(sum(when(col("arm") === 1, col("n"))), lit(0L))
+          .as("cb"))
+    val expo = counts.filter(!col("k").contains("|"))
+      .agg(coalesce(sum(when(col("k") === "0", col("n"))), lit(0L))
+        .as("na"),
+        coalesce(sum(when(col("k") === "1", col("n"))), lit(0L))
+          .as("nb"))
+    val d38 = (c: org.apache.spark.sql.Column) =>
+      c.cast(org.apache.spark.sql.types.DecimalType(38, 0))
+    conv.crossJoin(broadcast(expo))
+      .withColumn("nn", col("na") + col("nb"))
+      .withColumn("cc", col("ca") + col("cb"))
+      .withColumn("significant",
+        d38(col("ca") * col("nb") - col("cb") * col("na")) *
           d38(col("ca") * col("nb") - col("cb") * col("na")) *
-            d38(col("ca") * col("nb") - col("cb") * col("na")) *
-            d38(col("nn")) >
-          lit(4) * d38(col("cc")) * d38(col("nn") - col("cc")) *
-            d38(col("na")) * d38(col("nb")))
-        .select(col("event_type"), col("na"), col("nb"), col("ca"),
-          col("cb"),
-          expr("CASE WHEN ca * nb = 0 THEN NULL ELSE " +
-            "(cb * na - ca * nb) * 1000000L div (ca * nb) END")
-            .as("lift_ppm"),
-          col("significant"))
-    }
+          d38(col("nn")) >
+        lit(4) * d38(col("cc")) * d38(col("nn") - col("cc")) *
+          d38(col("na")) * d38(col("nb")))
+      .select(col("event_type"), col("na"), col("nb"), col("ca"),
+        col("cb"),
+        expr("CASE WHEN ca * nb = 0 THEN NULL ELSE " +
+          "(cb * na - ca * nb) * 1000000L div (ca * nb) END")
+          .as("lift_ppm"),
+        col("significant"))
+  }
 }

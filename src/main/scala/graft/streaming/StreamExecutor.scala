@@ -116,7 +116,8 @@ class StreamExecutor(
     * instead of appending feedback files forever.
     *
     * Blocks until the feedback drains (no pending files), then leaves
-    * every non-loop [[Emitted]] row in `resultDir` as parquet. */
+    * every non-loop [[Emitted]] row in `resultDir` as parquet and
+    * deletes its checkpoint. */
   def runWithLoopback(
       spark: SparkSession,
       stagingDir: String,
@@ -170,7 +171,13 @@ class StreamExecutor(
         ()
       }
       .start()
-    try q.processAllAvailable() finally q.stop()
+    // The query is done for good once this returns (it is not handed
+    // out), so its checkpoint goes with it.
+    try q.processAllAvailable()
+    finally {
+      try q.stop()
+      finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
+    }
   }
 
   private def compile(

@@ -17,17 +17,17 @@ object StreamSinks {
   /** Start the query, appending each output topic's messages to its own
     * parquet directory and table-changelog rows to `tableDir` (pass a
     * Kafka-writing function instead for a broker deployment — the
-    * routing is the same). Loop rows are NOT handled here; use
+    * routing is the same). The caller owns `checkpointDir`: it outlives
+    * the query, so whoever can tell the query is done deletes it.
+    * Loop rows are NOT handled here; use
     * [[StreamExecutor.runWithLoopback]] for Loop graphs. */
   def routeOutputs(
       out: Dataset[Emitted],
       dirByTopic: Map[String, String],
-      tableDir: Option[String] = None,
-      checkpointDir: Option[String] = None): StreamingQuery = {
-    val ckpt = checkpointDir.getOrElse(
-      java.nio.file.Files.createTempDirectory("graft_sinks_ckpt").toString)
+      checkpointDir: String,
+      tableDir: Option[String] = None): StreamingQuery = {
     out.writeStream.outputMode("update")
-      .option("checkpointLocation", ckpt)
+      .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[Emitted], _: Long) =>
         batch.persist()
         try {

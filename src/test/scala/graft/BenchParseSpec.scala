@@ -214,8 +214,25 @@ class BenchParseSpec extends AnyFunSuite {
       assert(failed == Seq("x_failed"))
     } finally {
       System.clearProperty("graft.bench.out.dir")
-      java.nio.file.Files.list(dir).forEach(p =>
-        java.nio.file.Files.deleteIfExists(p))
+      scala.util.Using.resource(java.nio.file.Files.list(dir))(
+        _.forEach(p => java.nio.file.Files.deleteIfExists(p)))
+      java.nio.file.Files.deleteIfExists(dir)
+    }
+  }
+
+  test("the orchestrator's start drops a stale BENCH_SUMMARY.json") {
+    // A run that crashes before emit must not leave the previous run's
+    // summary in place to be read as its own.
+    val dir = java.nio.file.Files.createTempDirectory("benchspec")
+    val sum = dir.resolve("BENCH_SUMMARY.json")
+    java.nio.file.Files.writeString(sum, "{\"metric\":\"total\"}\n")
+    System.setProperty("graft.bench.out.dir", dir.toString)
+    try {
+      assert(Bench.dropStaleSummary())
+      assert(!java.nio.file.Files.exists(sum))
+      assert(!Bench.dropStaleSummary()) // nothing left to drop
+    } finally {
+      System.clearProperty("graft.bench.out.dir")
       java.nio.file.Files.deleteIfExists(dir)
     }
   }

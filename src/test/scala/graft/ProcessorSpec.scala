@@ -29,4 +29,29 @@ class ProcessorSpec extends AnyFunSuite with SparkFixture {
     val visited = p.visitAll("reset", res.table)
     assert(p.view(visited.table).get("a").map(Int64Codec.decode) == Some(0L))
   }
+
+  test("runWithLoopback deletes its checkpoint once it returns") {
+    import spark.implicits._
+    val g = GroupGraph.define("loopckpt")(
+      Input("in", StringCodec, ProcessCallback { (ctx, m) =>
+        ctx.loopback(ctx.key, m)
+      }),
+      Loop(StringCodec, ProcessCallback { (ctx, m) => ctx.setValue(m) }),
+      Persist(StringCodec))
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def ckpts = tmp.listFiles().map(_.getName)
+      .filter(_.startsWith("graft_loop_ckpt")).toSet
+    val staging = java.nio.file.Files.createTempDirectory("graft_lc_in")
+    val results = java.nio.file.Files.createTempDirectory("graft_lc_out")
+    spark.createDataset(Seq(Message("a", "v".getBytes("UTF-8"), "in", 0, 0L,
+        new Timestamp(1000L), Map.empty[String, Array[Byte]])))
+      .write.mode("overwrite").parquet(staging.toString)
+    val before = ckpts
+    try {
+      Processor(spark, g).runWithLoopback(staging.toString, results.toString)
+      assert(spark.read.parquet(results.toString).count() > 0)
+      assert((ckpts -- before).isEmpty, "a loop checkpoint outlived the run")
+    } finally Seq(staging, results).foreach(d =>
+      org.apache.commons.io.FileUtils.deleteQuietly(d.toFile))
+  }
 }

@@ -29,7 +29,9 @@ class StreamSinksSpec extends AnyFunSuite with SparkFixture {
     val ms = MemoryStream[Message]
     val out = new StreamExecutor(g).run(spark, ms.toDS())
     val q = StreamSinks.routeOutputs(out,
-      Map("evens" -> dirE, "odds" -> dirO), tableDir = Some(dirT))
+      Map("evens" -> dirE, "odds" -> dirO),
+      java.nio.file.Files.createTempDirectory("graft_fo_ckpt").toString,
+      tableDir = Some(dirT))
     try {
       ms.addData(
         Message("a", "even1".getBytes("UTF-8"), "in", 0, 1, new Timestamp(1000), Map.empty),
@@ -70,7 +72,8 @@ class StreamSinksSpec extends AnyFunSuite with SparkFixture {
     val ms = MemoryStream[Message]
     val q1 = StreamSinks.routeOutputs(
       new StreamExecutor(g1).run(spark, ms.toDS()),
-      Map("relay" -> relayDir))
+      Map("relay" -> relayDir),
+      java.nio.file.Files.createTempDirectory("graft_relay_ckpt").toString)
     val stream2 = spark.readStream
       .schema(org.apache.spark.sql.Encoders.product[Message].schema)
       .parquet(relayDir).as[Message]
