@@ -25,6 +25,11 @@ import scala.jdk.CollectionConverters._
   * single-line JSON contract as always. If forking fails (no classpath,
   * exec error) it falls back to the legacy single-JVM run rather than
   * report nothing.
+  *
+  * Each query is timed exactly once and the headline is the plain sum
+  * of those readings. A wall-clock total on a shared host drifts, so it
+  * is a smoke figure, not evidence of a speed-up: performance claims
+  * for the goka core come from perfbench's gated multi-seed workloads.
   */
 object Bench {
 
@@ -32,189 +37,21 @@ object Bench {
   private def groupOf(name: String): String = name.takeWhile(!_.isDigit)
 
   /** Per-run diagnostics riding BENCH_FULL.json only (never the short
-    * contract line): in-child health barometers bracketing the drifty
-    * groups, per-query GC time and post-cleanup storage residue — the
-    * r14 verdict's adjudication rig for the d-child window (d28 read
-    * 2.45× its record in the driver bench while the same plan hit the
-    * record isolated; without an in-window barometer that reading
-    * cannot be attributed to host drift vs plan regression). */
+    * contract line): per-query GC time and post-cleanup storage
+    * residue, and the streaming warmups' outcomes. */
   private[graft] final class Diag {
-    val baro = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     val gcMs = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     val storageMb = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    // Best-of-2 retry evidence: "<name>_first" = the drifted reading
-    // that triggered the retry, "<name>_retry" = the second reading
-    // (-1.0 if the retry itself failed); the merged value is the min.
-    val retries = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     // Warmup outcomes: duration in seconds, -1.0 = the warmup threw.
     // r15 swallowed these in try/catch, so an un-warmed st child (the
     // st03 = 18.49 s suspect) left no evidence either way.
     val warmups = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    // Over-record readings (> RetryFactor x record) that finished the
-    // child with NO retry/late evidence — machine-visible budget
-    // exhaustion (r16 verdict: 7 st readings rode a drift wave
-    // unadjudicated and only a judge's diff against records found
-    // them). With the late pass now uncapped this is empty by
-    // construction unless a late run itself failed or a future edit
-    // re-caps the pass — either way the condition is in the artifact,
-    // not in prose.
-    val unadjudicated = scala.collection.mutable.Buffer.empty[String]
-  }
-
-  /** The two BASELINE.md health barometers: q69 is parallelism-
-    * insensitive compute, d02 is shuffle-heavy — together they
-    * separate "host/JVM degraded" from "this plan regressed". */
-  private val BarometerQueries =
-    Seq("q69_grouped_quantiles", "d02_minhash_lsh")
-
-  /** Hand-calibrated fallback upper bands for the PRE barometer
-    * readings (BASELINE.md round-15 prose; r16 recalibrated d02 to
-    * its cold figure): used when tools/baro_history.json is absent,
-    * unreadable, or too thin to derive bands from. */
-  private val FallbackBand = Map(
-    "q69_grouped_quantiles" -> 2.3, "d02_minhash_lsh" -> 2.6)
-
-  /** Derive the barometer bands from a baro_history.json text: per
-    * barometer, 1.05 × the MAX healthy-run PRE reading (all children;
-    * a run is healthy iff its verdict string STARTS with "healthy" —
-    * drifted runs' prose routinely says things like "first half
-    * healthy", so substring matching over-matches). The 5% margin
-    * covers rounding; max-of-healthy is the empirical cold envelope,
-    * which is what an UPPER band is. Guards: at least
-    * [[MinBandSamples]] healthy readings per barometer (else the
-    * hand fallback), and the derived value is clamped to
-    * [0.5×, 2×] the fallback so a corrupted or regime-shifted
-    * history can never silently set an absurd band — outside that
-    * range, recalibration is a human decision again. Current
-    * history (runs 47/52/54): q69 max 2.21 → band 2.32, d02 max
-    * 2.57 → band 2.70 — within 0.1 s of the hand constants they
-    * replace (r17 verdict item 3: the constants needed a hand
-    * recalibration once already; the history file is the machine
-    * record, so compute from it). */
-  private[graft] def bandsFromHistory(text: String,
-      fallback: Map[String, Double]): Map[String, Double] = {
-    val starts = """"run\d+"\s*:""".r.findAllMatchIn(text)
-      .map(_.start).toVector
-    val segs = (starts :+ text.length).sliding(2).collect {
-      case Seq(a, b) => text.substring(a, b) }.toVector
-    val verdictRe = """"verdict"\s*:\s*"([^"]*)"""".r
-    val healthy = segs.filter(s => verdictRe.findFirstMatchIn(s)
-      .exists(_.group(1).toLowerCase.startsWith("healthy")))
-    fallback.map { case (full, fb) =>
-      val short = full.split("_")(0) // "q69_..." -> "q69"
-      val re = ("\"pre_" + short + "\"\\s*:\\s*([0-9][0-9.]*)").r
-      val vals = healthy.flatMap(s =>
-        re.findAllMatchIn(s).map(_.group(1).toDouble))
-      val band =
-        if (vals.size >= MinBandSamples)
-          math.min(math.max(1.05 * vals.max, 0.5 * fb), 2.0 * fb)
-        else fb
-      full -> math.rint(band * 100) / 100
-    }
-  }
-  private[graft] val MinBandSamples = 8
-
-  private val HistoryPath = sys.env.getOrElse(
-    "SPARK_GRAFT_BARO_HISTORY", "tools/baro_history.json")
-
-  /** The operative bands: history-derived when possible (values land
-    * in BENCH_FULL's "baro_bands" so every run names the bands it was
-    * judged against), hand fallback otherwise. */
-  private[graft] lazy val BaroUpperBand: Map[String, Double] =
-    (try {
-      val p = java.nio.file.Paths.get(HistoryPath)
-      if (java.nio.file.Files.isReadable(p))
-        bandsFromHistory(
-          new String(java.nio.file.Files.readAllBytes(p), "UTF-8"),
-          FallbackBand)
-      else FallbackBand
-    } catch { case _: Throwable => FallbackBand })
-
-  /** Per-query healthy-window records (seconds) driving the best-of-2
-    * auto-retry: any timed reading > [[RetryFactor]]× its record
-    * immediately re-runs once in the same child, both readings kept
-    * in diag. Loaded from tools/bench_records.json (regenerated per
-    * round as the element-wise min of healthy runs); the embedded
-    * fallback pins the heavy tail so the rig still adjudicates d28-
-    * class stalls if the file is ever absent. */
-  private val RecordsPath = sys.env.getOrElse(
-    "SPARK_GRAFT_RECORDS", "tools/bench_records.json")
-  private val FallbackRecords = Map(
-    "d28_prefix_join" -> 12.33, "d29_containment_join" -> 6.50,
-    "q63_triangles" -> 9.27, "q69_grouped_quantiles" -> 1.65,
-    "d02_minhash_lsh" -> 1.93, "st01_stream_count" -> 2.70,
-    "st03_stream_loopback" -> 8.15, "st09_stream_visitor" -> 6.60,
-    "st12_stream_curate" -> 6.60, "m16_phash_clusters" -> 6.37)
-  private[graft] lazy val records: Map[String, Double] =
-    (try {
-      val p = java.nio.file.Paths.get(RecordsPath)
-      if (java.nio.file.Files.isReadable(p))
-        parseFlatObj("{\"records\":" +
-          new String(java.nio.file.Files.readAllBytes(p), "UTF-8") + "}",
-          "records")
-      else Map.empty[String, Double]
-    } catch { case _: Throwable => Map.empty[String, Double] }) match {
-      case m if m.nonEmpty => m
-      case _               => FallbackRecords
-    }
-  private val RetryFactor = 1.5
-  /** Readings under this floor never retry: at ~1-2 s, 1.5× is
-    * scheduler noise, not a stall worth a re-run. */
-  private val RetryMinSec = 2.0
-  /** Per-child immediate-retry budget — bounds added wall-clock if a
-    * whole window drifts. Proportional to the child's query count
-    * (floor 12): the flat 12 of r16 saturated on the 81-query st
-    * child's drift wave and left 7 over-record readings with no
-    * immediate evidence (r16 verdict item 1). The late pass below is
-    * UNCAPPED, so immediate-budget exhaustion only delays
-    * adjudication to child end, never forfeits it. */
-  private[graft] def retryBudgetFor(queryCount: Int): Int =
-    math.max(12, (queryCount + 3) / 4)
-
-  /** The over-record suspect set: names whose merged reading exceeds
-    * [[RetryFactor]]× their record AND the retry floor, minus the
-    * excluded set (failed queries, cold-measured barometer members).
-    * Drives both the uncapped late pass and the `unadjudicated`
-    * enumeration; factored out so the budget-exhaustion semantics are
-    * spec-pinned without a Spark session (r16 verdict item 8). */
-  private[graft] def overRecord(names: Seq[String],
-      merged: String => Double, excluded: String => Boolean,
-      recs: Map[String, Double]): Seq[String] =
-    names.filter { n =>
-      !excluded(n) && recs.get(n).exists(r =>
-        merged(n) > RetryFactor * r && merged(n) > RetryMinSec)
-    }
-
-  /** Aggregate drift mass BELOW the retry floor: readings ≤
-    * [[RetryMinSec]] that still exceed [[RetryFactor]]× their record
-    * are individually scheduler noise (why the floor exists) but
-    * collectively real — on the r17 driver window 114 such readings
-    * carried ~56 s of excess, 26% of the run's total drift, invisible
-    * to both the retry rig and `unadjudicated` by construction.
-    * Returns (count, Σ(reading − record) seconds); no retries — the
-    * point is to make the mass machine-visible in the summary, not to
-    * chase 1-second queries (r17 verdict item 2). */
-  private[graft] def subfloorExcess(results: Seq[(String, Double)],
-      recs: Map[String, Double]): (Int, Double) = {
-    val xs = results.flatMap { case (n, v) =>
-      recs.get(n).collect {
-        case r if v > RetryFactor * r && v <= RetryMinSec => v - r } }
-    (xs.size, xs.sum)
   }
 
   def main(args: Array[String]): Unit =
-    sys.env.get("SPARK_GRAFT_ONLY") match {
-      // Matched-calibration probe: run an explicit comma-separated
-      // query list (e.g. q69 + the suspects) in ONE JVM under the
-      // bench-child session config — the rig BASELINE.md's
-      // methodology prescribes for adjudicating a drifted reading,
-      // aligned with how the driver's bench times queries.
-      case Some(list) => runNames(list.split(",").map(_.trim)
-        .filter(_.nonEmpty).toSeq)
-      case None => sys.env.get("SPARK_GRAFT_GROUP") match {
-        case Some(g) => runChild(g)
-        case None    => orchestrate()
-      }
+    sys.env.get("SPARK_GRAFT_GROUP") match {
+      case Some(g) => runChild(g)
+      case None    => orchestrate()
     }
 
   // ---------------------------------------------------------------- //
@@ -231,11 +68,11 @@ object Bench {
     val groups = names.map(groupOf).distinct.sortBy(g => (g == "st", g))
     val merged = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     val failed = scala.collection.mutable.Buffer.empty[String]
-    val diag = new Diag // group-prefixed merge of every child's diag
+    val diag = new Diag // merge of every child's diag
 
     val forkable = new java.io.File("target/scala-2.13/classes").isDirectory ||
       System.getProperty("java.class.path", "").contains("classes")
-    if (!forkable) { runInProcess(names, merged, failed) }
+    if (!forkable) { runInProcess(names, merged, failed, diag) }
     else {
       var fellBack = false
       groups.foreach { g =>
@@ -248,20 +85,12 @@ object Bench {
                 if (!qs.contains(n) && !pFailed.contains(n)) failed += n
               }
               failed ++= pFailed
-              pDiag.baro.foreach { case (k, v) => diag.baro(s"${g}_$k") = v }
-              // Child-ambient keys (pre_/post_ barometer runs, warmups)
-              // recur in every child → group-prefix them; query-named
-              // keys are unique to one child by construction.
-              def amb(k: String): String =
-                if (k.startsWith("pre_") || k.startsWith("post_"))
-                  s"${g}_$k" else k
-              pDiag.gcMs.foreach { case (k, v) => diag.gcMs(amb(k)) = v }
-              pDiag.storageMb.foreach { case (k, v) =>
-                diag.storageMb(amb(k)) = v }
+              // gc_ms/storage_mb are keyed by query name, unique to one
+              // child; warmups recur in every streaming child.
+              diag.gcMs ++= pDiag.gcMs
+              diag.storageMb ++= pDiag.storageMb
               pDiag.warmups.foreach { case (k, v) =>
                 diag.warmups(s"${g}_$k") = v }
-              diag.retries ++= pDiag.retries
-              diag.unadjudicated ++= pDiag.unadjudicated
             case None =>
               // First fork failure → legacy whole-run fallback for the
               // remaining (unmeasured) queries, so the driver always
@@ -269,7 +98,7 @@ object Bench {
               System.err.println(s"[bench] fork failed for group $g; " +
                 "falling back to in-process for remaining groups")
               val remaining = names.filterNot(merged.contains)
-              runInProcess(remaining, merged, failed)
+              runInProcess(remaining, merged, failed, diag)
               fellBack = true
           }
         }
@@ -278,9 +107,9 @@ object Bench {
     emit(merged.toSeq, failed.distinct.toSeq, diag)
   }
 
-  /** Fork one child JVM for `group`; returns (perQuerySeconds, failed)
-    * parsed from the child's partial file, or None on exec/parse error.
-    */
+  /** Fork one child JVM for `group`; returns (perQuerySeconds, failed,
+    * diag) parsed from the child's partial file, or None on exec/parse
+    * error. */
   private def forkGroup(group: String): Option[(Map[String, Double], Seq[String], Diag)] =
     try {
       val javaBin = new java.io.File(
@@ -320,12 +149,13 @@ object Bench {
     }
 
   /** Parse {"queries":{"n":1.23,...},"failed":["n",...],...} without a
-    * JSON lib (none on the runtime classpath by design).
-    */
+    * JSON lib (none on the runtime classpath by design). Keys a partial
+    * lacks (older partials) parse to empty maps; keys it carries beyond
+    * these are ignored. */
   private[graft] def parsePartial(text: String): (Map[String, Double], Seq[String], Diag) = {
     val qs = parseFlatObj(text, "queries")
-    def names(key: String): Seq[String] = {
-      val at = text.indexOf("\"" + key + "\"")
+    val failed = {
+      val at = text.indexOf("\"failed\"")
       if (at < 0) Seq.empty
       else {
         val s = text.indexOf("[", at)
@@ -335,13 +165,10 @@ object Bench {
       }
     }
     val diag = new Diag
-    diag.baro ++= parseFlatObj(text, "barometers")
     diag.gcMs ++= parseFlatObj(text, "gc_ms")
     diag.storageMb ++= parseFlatObj(text, "storage_mb")
-    diag.retries ++= parseFlatObj(text, "retries")
     diag.warmups ++= parseFlatObj(text, "warmups")
-    diag.unadjudicated ++= names("unadjudicated")
-    (qs, names("failed"), diag)
+    (qs, failed, diag)
   }
 
   /** The flat {"name":num,...} object following `"key":` in `text`,
@@ -353,9 +180,7 @@ object Bench {
       val body = text.substring(text.indexOf("{", at),
         text.indexOf("}", at) + 1)
       // \s* after the colon: hand-written partials never carry one,
-      // but records files produced by json.dump do — run 49's retry
-      // rig silently fell back to the 10 embedded heavy-tail records
-      // because `"key": 1.23` didn't match the spaceless pattern.
+      // but json.dump output (`"key": 1.23`) does.
       """"([a-z0-9_]+)":\s*(-?[0-9.]+)""".r.findAllMatchIn(body)
         .map(m => m.group(1) -> m.group(2).toDouble).toMap
     }
@@ -365,41 +190,17 @@ object Bench {
   //  Child: run one group in-process, write the partial, exit.        //
   // ---------------------------------------------------------------- //
 
-  private def runNames(names: Seq[String]): Unit = {
-    val unknown = names.filterNot(SparkEntry.queries.contains)
-    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
-    val merged = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    val failed = scala.collection.mutable.Buffer.empty[String]
-    runInProcess(names, merged, failed)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    println(merged.map { case (k, v) => s""""$k":${f2(v)}""" }
-      .mkString("{", ",", "}") + s""" cpus:$cpus""" +
-      (if (failed.nonEmpty) s""" failed:${failed.mkString(",")}""" else ""))
-  }
-
   private def runChild(group: String): Unit = {
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => groupOf(n) == group)
     val merged = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     val failed = scala.collection.mutable.Buffer.empty[String]
     val diag = new Diag
-    // r16: every child brackets itself — the r15 driver window's two
-    // unadjudicable readings (d28 37.2 s, st03 18.49 s) both sat in
-    // coverage gaps (mid-window stall in d; NO barometers in st, 36%
-    // of the bench).
-    runInProcess(names, merged, failed, diag, withBarometers = true)
-    val qs = merged.map { case (k, v) => "\"" + k + "\":" + f2(v) }
-      .mkString("{", ",", "}")
+    runInProcess(names, merged, failed, diag)
     val fj = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    def obj(m: scala.collection.Map[String, Double]): String =
-      m.map { case (k, v) => "\"" + k + "\":" + f2(v) }
-        .mkString("{", ",", "}")
-    val uj = diag.unadjudicated.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val partial = s"""{"queries":$qs,"failed":$fj,""" +
-      s""""barometers":${obj(diag.baro)},"gc_ms":${obj(diag.gcMs)},""" +
-      s""""storage_mb":${obj(diag.storageMb)},""" +
-      s""""retries":${obj(diag.retries)},"warmups":${obj(diag.warmups)},""" +
-      s""""unadjudicated":$uj}"""
+    val partial = s"""{"queries":${obj(merged)},"failed":$fj,""" +
+      s""""gc_ms":${obj(diag.gcMs)},"storage_mb":${obj(diag.storageMb)},""" +
+      s""""warmups":${obj(diag.warmups)}}"""
     sys.env.get("SPARK_GRAFT_OUT") match {
       case Some(p) => java.nio.file.Files.writeString(
         java.nio.file.Paths.get(p), partial)
@@ -420,16 +221,13 @@ object Bench {
       names: Seq[String],
       merged: scala.collection.mutable.LinkedHashMap[String, Double],
       failed: scala.collection.mutable.Buffer[String],
-      diag: Diag = new Diag,
-      withBarometers: Boolean = false): Unit = {
+      diag: Diag): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // Default 32 = the driver's contract (BENCH_r*.json "cpus": 32).
-    // The old default of 4 silently put MANUAL probe runs on
-    // local[4]/4 shuffle partitions: small queries got faster (less
-    // task overhead), shuffle-heavy ones (d28, q63) read ~1.8× their
-    // 32-core records, and a whole afternoon of "regression" chasing
-    // was really a rig mismatch. The cpus value is echoed in the
-    // probe output line so a mis-set rig is self-evident.
+    // The old default of 4 silently put manual runs on local[4]/4
+    // shuffle partitions: small queries got faster (less task
+    // overhead), shuffle-heavy ones (d28, q63) read ~1.8× their
+    // 32-core figures.
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // Shared driver-session contract (incl. the strict plan guard —
     // a benchmark run must never time a plan the guard would reject),
@@ -440,9 +238,8 @@ object Bench {
     val builder = GraftSessions.builder(cpus)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows", "false")
-    // Ad-hoc conf overrides for matched-calibration experiments, same
-    // contract as Verify/StProfile. NEVER set by the driver — the
-    // probe output notes it on stderr so a forgotten env var cannot
+    // Ad-hoc conf overrides, same contract as Verify/StProfile. NEVER
+    // set by the driver — noted on stderr so a forgotten env var cannot
     // silently flatter a number.
     sys.env.get("GRAFT_SPARK_EXTRA").foreach { s =>
       System.err.println(s"[bench] GRAFT_SPARK_EXTRA active: $s") }
@@ -462,10 +259,8 @@ object Bench {
     // steady-state time. One untimed st01 run charges them to warmup,
     // exactly like the table count()s above charge the batch side's.
     if (names.exists(_.startsWith("st"))) {
-      // Warmup outcomes are EVIDENCE now, not best-effort: duration →
-      // diag ("warmups"), -1.0 on failure. r15 swallowed both in
-      // try/catch, so when st03 read 18.49 s ≈ its un-warmed first-run
-      // cost, nothing could say whether the warmup had even run.
+      // Warmup outcomes are evidence, not best-effort: duration →
+      // diag ("warmups"), -1.0 on failure.
       def warm(key: String)(body: => Unit): Unit = {
         val t0 = System.nanoTime()
         try { body; diag.warmups(key) = (System.nanoTime() - t0) / 1e9 }
@@ -494,163 +289,53 @@ object Bench {
     // round-14 finding that inflated d29/d32 2-3x in-bench while
     // the same plans ran at record speed isolated. The cleanup cost
     // lands between measurements, which no query is charged for.
-    // diagKey separates a barometer/retry run's gc+storage from the
-    // timed run's (the r15 bug: the post-barometer overwrote d02/q69's
-    // own diagnostics). Returns -1.0 on failure when the caller is a
-    // diag-only run (recordFailure=false) — a crashed barometer must
-    // not read as an implausibly-fast "healthy" bracket.
-    def timeOne(name: String, recordFailure: Boolean,
-        diagKey: String = null): Double = {
-      val key = if (diagKey == null) name else diagKey
+    // A broken query must NOT masquerade as a fast timing: failures
+    // are recorded by name in a separate "failed" key.
+    def timeOne(name: String): Double = {
       val fn = SparkEntry.queries(name)
       // Label every job with the query that submitted it (guide §1.5)
       // so event-log captures and the UI attribute jobs to queries —
       // metadata only, no timing effect.
-      spark.sparkContext.setJobDescription(key)
+      spark.sparkContext.setJobDescription(name)
       val gc0 = gcTimeMs()
       val t0 = System.nanoTime()
-      var ok = true
       try { fn(spark, sfDir).count() }
       catch { case e: Throwable =>
-        ok = false
-        if (recordFailure) failed += name
+        failed += name
         System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
       }
       val dt = (System.nanoTime() - t0) / 1e9
       spark.sparkContext.setJobDescription(null)
-      diag.gcMs(key) = (gcTimeMs() - gc0).toDouble
+      diag.gcMs(name) = (gcTimeMs() - gc0).toDouble
       spark.sharedState.cacheManager.clearCache()
       spark.sparkContext.getPersistentRDDs.values.foreach(
         _.unpersist(blocking = true))
       // Unload state-store providers of STOPPED queries: they linger
       // until the maintenance thread gets around to them, and a pile
       // of live RocksDB instances measurably taxes the next streaming
-      // query (st03 read 13.6 s after st01+st02 each ran twice via
-      // retry, vs 6.8 s after single runs — deterministic, the r16
-      // retry rig's own residue). Unloading is the executor-loss path:
-      // a provider reloads from its checkpoint if ever needed again;
-      // every timed query here starts a fresh checkpoint anyway.
+      // query (st03 read 13.6 s after st01+st02 each ran twice, vs
+      // 6.8 s after single runs — deterministic). Unloading is the
+      // executor-loss path: a provider reloads from its checkpoint if
+      // ever needed again; every timed query here starts a fresh
+      // checkpoint anyway.
       org.apache.spark.sql.execution.streaming.state
         .GraftStateStoreAccess.unloadAll()
       System.gc()
       // Storage residue AFTER cleanup: nonzero means some query leaked
-      // pinned blocks past its own window — the drift suspect.
-      diag.storageMb(key) =
+      // pinned blocks past its own window.
+      diag.storageMb(name) =
         spark.sparkContext.getRDDStorageInfo.map(_.memSize).sum / 1e6
-      if (!ok && !recordFailure) -1.0 else dt
+      dt
     }
-    // Best-of-2 auto-retry: a reading > RetryFactor× its healthy
-    // record re-runs ONCE immediately in the same child; both readings
-    // land in diag so BENCH_FULL self-adjudicates — a fast retry
-    // exonerates the plan (window stall), a slow retry convicts it.
-    // This is the manual SPARK_GRAFT_ONLY probe made automatic, per
-    // the r15 verdict (d28's 3.0× reading in a bracket-healthy window
-    // was unattributable because barometers bracket but don't
-    // interleave).
-    var retriesUsed = 0
-    val retryBudget = retryBudgetFor(names.size)
-    def maybeRetry(name: String, t: Double): Double =
-      records.get(name) match {
-        case Some(r) if t > RetryFactor * r && t > RetryMinSec &&
-            retriesUsed < retryBudget && !failed.contains(name) =>
-          retriesUsed += 1
-          System.err.println(f"[bench] $name read $t%.2f s > " +
-            f"${RetryFactor}x record $r%.2f s - best-of-2 retry")
-          val t2 = timeOne(name, recordFailure = false,
-            diagKey = s"retry_$name")
-          diag.retries(s"${name}_first") = t
-          diag.retries(s"${name}_retry") = t2
-          if (t2 >= 0) math.min(t, t2) else t
-        case _ => t
-      }
-    // A broken query must NOT masquerade as a fast timing: failures are
-    // recorded by name in a separate "failed" key. Barometer timings
-    // bracket the group inside the SAME session, so a drifted group
-    // reading can be attributed: pre≈post≈record → plan/ordering issue
-    // inside the window; post >> pre → the child itself degraded.
-    // When a barometer IS a member of the group being timed (d02 in d,
-    // q69 in q), its pre run is the official timed run too — timing it
-    // once and reusing the reading keeps the contract numbers
-    // comparable to pre-r15 records instead of handing those two
-    // queries an identical-plan warm run (r15 ADVICE).
-    val preMeasured = scala.collection.mutable.Map.empty[String, Double]
-    if (withBarometers) BarometerQueries.foreach { b =>
-      val member = names.contains(b)
-      val t = timeOne(b, recordFailure = member,
-        diagKey = if (member) null else s"pre_$b")
-      diag.baro(s"pre_$b") = t
-      if (member) preMeasured(b) = t
-    }
-    names.foreach { name =>
-      // A preMeasured barometer member's pre run IS its official
-      // number, and it stays COLD-comparable: no best-of-2 retry
-      // (r16 ADVICE — d02's cold pre deterministically tops 1.5x its
-      // warm record, so retrying handed it an identical-plan warm run
-      // every time and silently burned budget) and no late pass
-      // below. Its window health is judged by BaroUpperBand, which is
-      // calibrated cold, not by the warm-record retry rig.
-      merged(name) = preMeasured.getOrElse(name,
-        maybeRetry(name, timeOne(name, recordFailure = true)))
-    }
-    // Late exoneration pass (run 49's lesson): host drift arrives in
-    // WAVES inside one child, so an immediate retry often lands in the
-    // same wave and reads slow twice — wrongly convicting the plan. At
-    // child end (post-wave, usually minutes later), the readings
-    // still above threshold each get ONE more run; a healthy child has
-    // no suspects and pays nothing. All three readings stay in diag
-    // ("<name>_first"/"_retry"/"_late"); the merged value is the best,
-    // which is the standard noisy-host best-of-N discipline with the
-    // evidence recorded rather than discarded. UNCAPPED over ALL
-    // leftover suspects, worst excess first (r16 verdict item 1: the
-    // 8-slot cap left 7 over-record st readings with no in-file
-    // evidence when a full wave saturated both it and the immediate
-    // budget — the pass is untimed, so its cost is bounded by the
-    // wave itself and a cap buys nothing but blind spots).
-    def suspects: Seq[String] = overRecord(names, merged,
-      n => failed.contains(n) || preMeasured.contains(n), records)
-    suspects.sortBy(n => -(merged(n) / records(n))).foreach { n =>
-      val t2 = timeOne(n, recordFailure = false, diagKey = s"late_$n")
-      diag.retries(s"${n}_late") = t2
-      if (t2 >= 0 && t2 < merged(n)) merged(n) = t2
-    }
-    // Anything STILL over record with no SUCCESSFUL re-run is a
-    // coverage hole the artifact must name itself (r16 verdict item
-    // 8); see Diag.unadjudicated. A crashed re-run's -1.0 sentinel is
-    // ABSENCE of evidence, not evidence: the late pass writes
-    // "<n>_late" unconditionally, so a mere key-presence check could
-    // never flag a suspect whose only "evidence" is a crashed late
-    // run (r17 ADVICE).
-    diag.unadjudicated ++= suspects.filter { n =>
-      !diag.retries.get(s"${n}_retry").exists(_ >= 0) &&
-        !diag.retries.get(s"${n}_late").exists(_ >= 0)
-    }
-    // A preMeasured barometer member's cold pre is by design excluded
-    // from the warm retry rig — right in a healthy window, but when
-    // the pre itself VIOLATED its band the reading is drift-dominated,
-    // not cold-dominated, and it previously rode into the official
-    // total with no adjudication path (r17 verdict item 4: d02's
-    // violated 5.99 s cold pre vs its 0.61 s record, +5.4 s
-    // unexoneratable). On violation only, re-run once at child end
-    // and keep the min: cold-comparability on that window was already
-    // lost to the drift, and both readings stay in the evidence keys.
-    if (withBarometers) preMeasured.foreach { case (b, t) =>
-      if (!failed.contains(b) &&
-          (t < 0 || BaroUpperBand.get(b).exists(t > _))) {
-        val t2 = timeOne(b, recordFailure = false, diagKey = s"late_$b")
-        diag.retries(s"${b}_first") = t
-        diag.retries(s"${b}_late") = t2
-        if (t2 >= 0 && t2 < merged(b)) merged(b) = t2
-      }
-    }
-    if (withBarometers) BarometerQueries.foreach { b =>
-      diag.baro(s"post_$b") =
-        timeOne(b, recordFailure = false, diagKey = s"post_$b")
-    }
+    names.foreach { name => merged(name) = timeOne(name) }
     spark.stop()
   }
 
   private def f2(v: Double): String =
     "%.2f".formatLocal(java.util.Locale.ROOT, v)
+
+  private def obj(m: Iterable[(String, Double)]): String =
+    m.map { case (k, v) => "\"" + k + "\":" + f2(v) }.mkString("{", ",", "}")
 
   /** JSON string escape for interpolated paths — a working directory
     * containing a quote or backslash must not break the stdout
@@ -660,54 +345,21 @@ object Bench {
 
   /** Final single-line contract (headline fields LAST — the launching
     * harness tail-captures only 2000 chars); full copy to
-    * BENCH_FULL.json as the durable artifact.
+    * BENCH_FULL.json in `outDir` as the durable artifact.
     */
   private[graft] def emit(results: Seq[(String, Double)],
-      failed: Seq[String], diag: Diag = new Diag): Unit = {
+      failed: Seq[String], diag: Diag = new Diag,
+      outDir: String = "."): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + f2(v) }
-      .mkString("{", ",", "}")
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
-    def obj(m: scala.collection.Map[String, Double]): String =
-      m.map { case (k, v) => "\"" + k + "\":" + f2(v) }
-        .mkString("{", ",", "}")
+    val total = results.map(_._2).sum
     // The durable lossless artifact; the stdout line is a convenience
     // that log interleaving may truncate, so the "full" pointer rides
     // in the headline tail (the last-2000-chars window) and names
     // where every per-query entry always lives.
-    val fullPath = outPath("BENCH_FULL.json")
-    // Band check: a PRE barometer above its BASELINE.md healthy upper
-    // band dates that child's window as drifted; the count (and names,
-    // in the full artifact) make a degraded run self-describing
-    // instead of requiring prose adjudication after the fact. A
-    // CRASHED pre barometer (-1.0 sentinel) also counts: the window's
-    // health is then UNKNOWN, which must never read as healthy (r16
-    // ADVICE — the old v >= 0 guard made the one maximally-uncertain
-    // case the one the summary line was silent about).
-    val viol = diag.baro.collect {
-      case (k, v) if k.contains("pre_") && (v < 0 ||
-          BaroUpperBand.exists { case (b, band) =>
-            k.endsWith(s"pre_$b") && v > band }) => k
-    }.toSeq
-    val violJson = viol.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val unadjJson = diag.unadjudicated.map("\"" + _ + "\"")
-      .mkString("[", ",", "]")
-    // The bands this run was judged against (history-derived or
-    // fallback) ride in the artifact: a violation is only as
-    // meaningful as the band that defined it (r17 verdict item 3).
-    val bandsJson = obj(BaroUpperBand)
-    // Sub-floor drift mass (r17 verdict item 2): count + excess
-    // seconds of readings too small to retry but still over 1.5×
-    // record — the drift the retry rig is blind to by construction.
-    val (sfN, sfExcess) = subfloorExcess(results, records)
-    // Count queries, not evidence keys: first+retry+late is 3 keys for
-    // one retried query, a late-only suspect is 1 (r16 ADVICE — the
-    // old size/2 misreported both).
-    val retriedCount = diag.retries.keys
-      .map(_.replaceAll("_(first|retry|late)$", "")).toSet.size
+    val fullPath = outPath(outDir, "BENCH_FULL.json")
     val line =
-      s"""{"queries":$qs,"barometers":${obj(diag.baro)},"baro_bands":$bandsJson,"gc_ms":${obj(diag.gcMs)},"storage_mb":${obj(diag.storageMb)},"retries":${obj(diag.retries)},"warmups":${obj(diag.warmups)},"baro_viol":$violJson,"unadjudicated":$unadjJson,"subfloor_n":$sfN,"subfloor_excess_s":${f2(sfExcess)},"sf":"${esc(sfDir)}","failed":$failedJson,"full":"${esc(fullPath)}","metric":"total","unit":"sec","value":${f2(total)}}"""
+      s"""{"queries":${obj(results)},"gc_ms":${obj(diag.gcMs)},"storage_mb":${obj(diag.storageMb)},"warmups":${obj(diag.warmups)},"sf":"${esc(sfDir)}","failed":$failedJson,"full":"${esc(fullPath)}","metric":"total","unit":"sec","value":${f2(total)}}"""
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get(fullPath), line + "\n")
     catch { case _: Throwable => () }
@@ -719,7 +371,7 @@ object Bench {
     // summary that always fits and always parses; every per-query
     // entry lives in BENCH_FULL.json, named by "full".
     val shortLine =
-      s"""{"metric":"total","unit":"sec","value":${f2(total)},"n":${results.size},"failed":$failedJson,"baro_viol":${viol.size},"retried":$retriedCount,"unadjudicated":${diag.unadjudicated.size},"subfloor_n":$sfN,"subfloor_excess_s":${f2(sfExcess)},"sf":"${esc(sfDir)}","full":"${esc(fullPath)}"}"""
+      s"""{"metric":"total","unit":"sec","value":${f2(total)},"n":${results.size},"failed":$failedJson,"sf":"${esc(sfDir)}","full":"${esc(fullPath)}"}"""
     println(shortLine)
     // Under `sbt runMain` (run / fork := true) both printlns used to
     // surface through sbt's LoggedOutput pump as `[info] {...}` — NOT
@@ -732,25 +384,22 @@ object Bench {
     // belt to that suspender: the exact summary line at a fixed path
     // next to BENCH_FULL.json, immune to stdout capture entirely.
     try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(summaryPath), shortLine + "\n")
+      java.nio.file.Paths.get(summaryPath(outDir)), shortLine + "\n")
     catch { case _: Throwable => () }
   }
 
   /** Fixed sibling path of BENCH_FULL.json holding the exact short
     * summary line (driver-parse fallback when stdout is decorated). */
-  private[graft] def summaryPath: String = outPath("BENCH_SUMMARY.json")
+  private[graft] def summaryPath(outDir: String = "."): String =
+    outPath(outDir, "BENCH_SUMMARY.json")
 
   /** Run at orchestrator start: a run that crashes before [[emit]] must
     * leave no summary, not the previous run's, for a launcher to read
     * as this run's. */
-  private[graft] def dropStaleSummary(): Boolean =
-    java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(summaryPath))
+  private[graft] def dropStaleSummary(outDir: String = "."): Boolean =
+    java.nio.file.Files.deleteIfExists(
+      java.nio.file.Paths.get(summaryPath(outDir)))
 
-  /** Artifact directory — cwd for the real bench; the
-    * `graft.bench.out.dir` property lets the spec exercise [[emit]]
-    * end-to-end without clobbering the repo-root artifacts. */
-  private def outPath(name: String): String =
-    java.nio.file.Paths.get(
-        sys.props.getOrElse("graft.bench.out.dir", "."), name)
-      .toAbsolutePath.normalize.toString
+  private def outPath(outDir: String, name: String): String =
+    java.nio.file.Paths.get(outDir, name).toAbsolutePath.normalize.toString
 }

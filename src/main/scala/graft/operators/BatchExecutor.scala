@@ -147,10 +147,7 @@ class BatchExecutor(
     }
 
     val outputs = graph.outputs.keys.map { t =>
-      t -> emittedAcc.filter(_.sink == t).map(e =>
-        Message(e.key, e.value, t, e.partition, e.offset,
-          microsTimestamp(e.tsMicros),
-          if (e.headers == null) Map.empty[String, Array[Byte]] else e.headers))
+      t -> emittedAcc.filter(_.sink == t).map(_.toMessage(t))
     }.toMap
     BatchResult(state, changelogAcc, outputs)
   }
@@ -181,10 +178,7 @@ class BatchExecutor(
     val tableOut = emitted.filter(_.sink == SinkTable)
       .map(e => TableRow(e.key, e.value))
     val outputs = graph.outputs.keys.map { t =>
-      t -> emitted.filter(_.sink == t).map(e =>
-        Message(e.key, e.value, t, e.partition, e.offset,
-          microsTimestamp(e.tsMicros),
-          if (e.headers == null) Map.empty[String, Array[Byte]] else e.headers))
+      t -> emitted.filter(_.sink == t).map(_.toMessage(t))
     }.toMap
     BatchResult(tableOut.filter(_.value != null), tableOut, outputs)
   }
@@ -228,8 +222,15 @@ object BatchExecutor {
     * [[replicateLookup]]). */
   final val DefaultMaxLookupRows: Long = 10_000_000L
 
-  /** Driver-side full replica of one Lookup table, with a loud size
-    * guard. A Lookup IS a complete local copy by contract — the
+  /** Driver-side full replica of one Lookup table (live rows only),
+    * collected by [[collectReplica]]. */
+  def replicateLookup(name: String, ds: Dataset[TableRow],
+      maxRows: Long = DefaultMaxLookupRows): Map[String, Array[Byte]] =
+    collectReplica(name, ds.filter(_.value != null), maxRows)
+      .map(r => r.key -> r.value).toMap
+
+  /** Collect the rows of Lookup table `name` to the driver, with a loud
+    * size guard. A Lookup IS a complete local copy by contract — the
     * reference materializes the whole view on every processor instance
     * (`/root/reference/view.go:42-52`) — so there is no shuffle
     * fallback: a table above the cap means the topology is
@@ -238,17 +239,17 @@ object BatchExecutor {
     * table's name, not silently OOMing the driver. `limit(max+1)`
     * makes the check one Spark action AND bounds driver memory by the
     * declared cap even on a huge table. */
-  def replicateLookup(name: String, ds: Dataset[TableRow],
-      maxRows: Long = DefaultMaxLookupRows): Map[String, Array[Byte]] = {
+  def collectReplica[T](name: String, ds: Dataset[T],
+      maxRows: Long = DefaultMaxLookupRows): Array[T] = {
     val cap = math.min(maxRows, Int.MaxValue - 1L).toInt
-    val rows = ds.filter(_.value != null).limit(cap + 1).collect()
+    val rows = ds.limit(cap + 1).collect()
     if (rows.length > cap) throw new IllegalArgumentException(
       s"Lookup table '$name' exceeds maxLookupRows=$maxRows. A Lookup is " +
         "fully replicated to every task (reference view.go:42-52) and " +
         "cannot fall back to a shuffle — declare corpus-sized tables as " +
         "a co-partitioned Join, or raise maxLookupRows if the replica " +
         "genuinely fits.")
-    rows.map(r => r.key -> r.value).toMap
+    rows
   }
 
   def tsMicros(ts: java.sql.Timestamp): Long =
@@ -271,7 +272,12 @@ object BatchExecutor {
   /** Internal emitted row; sink is SinkTable, SinkLoop or an output topic. */
   final case class Emitted(sink: String, key: String, value: Array[Byte],
       partition: Int, offset: Long, tsMicros: Long, seq: Int,
-      headers: Map[String, Array[Byte]])
+      headers: Map[String, Array[Byte]]) {
+    /** This emission as a message on `topic`; null headers become empty. */
+    def toMessage(topic: String): Message =
+      Message(key, value, topic, partition, offset, microsTimestamp(tsMicros),
+        if (headers == null) Map.empty[String, Array[Byte]] else headers)
+  }
 
   /** Streams key-clustered, ordered rows; runs callbacks; flushes one
     * state row per key on key change. Pull-based so emissions flow out

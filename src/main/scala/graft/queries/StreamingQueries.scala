@@ -8,7 +8,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{DecimalType, StructType}
 import graft.core._
 import graft.core.Codecs._
-import graft.operators.BatchExecutor.{Emitted, SinkTable}
+import graft.operators.BatchExecutor.{Emitted, SinkTable, collectReplica}
 import graft.sources.Sources
 import graft.streaming.{FileLookups, LookupFile, StreamExecutor,
   StreamSinks, StreamVisitor}
@@ -181,26 +181,6 @@ object StreamingQueries {
           java.nio.file.Paths.get(to, f.getName))
       }
 
-  /** Driver-collected key set for a replicated Lookup snapshot, with
-    * the same loud size guard as
-    * [[graft.operators.BatchExecutor.replicateLookup]]: full
-    * replication is the Lookup contract (reference view.go:42-52), so
-    * an oversize table is a topology error, not a fallback case.
-    * `limit(cap+1)` bounds driver memory by the cap even when the
-    * underlying table is corpus-sized. */
-  private def lookupReplicaKeys(name: String, keys: Dataset[String],
-      maxRows: Long =
-        graft.operators.BatchExecutor.DefaultMaxLookupRows): Array[String] = {
-    val cap = math.min(maxRows, Int.MaxValue - 1L).toInt
-    val arr = keys.limit(cap + 1).collect()
-    if (arr.length > cap) throw new IllegalArgumentException(
-      s"Lookup table '$name' exceeds maxLookupRows=$maxRows. A Lookup is " +
-        "fully replicated to every task and cannot fall back to a " +
-        "shuffle — feed it through a keyed Join stage instead, or raise " +
-        "maxLookupRows if the replica genuinely fits.")
-    arr
-  }
-
   // ---------------------------------------------------------------- //
   //  The replay runner: one topic source, one sink per shape, one     //
   //  start/drain/stop path for every st query.                        //
@@ -341,12 +321,19 @@ object StreamingQueries {
     queries.foreach(_.processAllAvailable())
 
   /** Drain `upstream` and then `df` into a memory table ([[memorySink]])
-    * and read the table back; it outlives its stopped query. */
+    * and return it. The returned DataFrame is resolved before the
+    * table's view is dropped, so it holds the sink's rows itself and
+    * they go when it does; the view would hold every upsert row for the
+    * session's life. Not a checkpoint: [[sharedIngest]] keeps some of
+    * these results across queries, and a harness may unpersist every
+    * block between queries. */
   private def runToTable(spark: SparkSession, df: DataFrame, mode: String,
       upstream: Start*): DataFrame = {
     val name = s"stream_result_${nameSeq.incrementAndGet()}"
-    withQueries(spark)(upstream :+ memorySink(df, name, mode): _*)(drain)
-    spark.table(name)
+    try {
+      withQueries(spark)(upstream :+ memorySink(df, name, mode): _*)(drain)
+      spark.table(name)
+    } finally spark.catalog.dropTempView(name)
   }
 
   /** Write one dataset as a single parquet file `staging/<name>` with a
@@ -616,7 +603,7 @@ object StreamingQueries {
     // The replicated eval-set view: distinct src0 shingles → full
     // replica, the lookup-table contract (bounded by the eval suite's
     // size, not the corpus's).
-    val benchSet = lookupReplicaKeys("bench",
+    val benchSet = collectReplica("bench",
       docs.filter(col("source") === "src0")
         .select(explode(
           graft.ops.Dedup.nativeShingles(docs, col("text"), 3)).as("s"))
@@ -713,7 +700,7 @@ object StreamingQueries {
       Persist(decontamCodec))
 
     val docs = Sources.table(spark, dir, "documents")
-    val benchSet = lookupReplicaKeys("bench",
+    val benchSet = collectReplica("bench",
       docs.filter(col("source") === "src0")
         .select(explode(
           graft.ops.Dedup.nativeShingles(docs, col("text"), 3)).as("s"))

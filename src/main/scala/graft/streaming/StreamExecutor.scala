@@ -4,7 +4,7 @@ import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessorWithInitialState, TTLConfig, TimeMode, TimerValues, ValueState}
 import graft.core._
-import graft.operators.BatchExecutor.{microsTimestamp, tsMicros, Emitted, FoldIterator, KindJoin, KindMessage, KindState, SinkLoop, SinkTable, Tagged}
+import graft.operators.BatchExecutor.{tsMicros, Emitted, FoldIterator, KindJoin, KindMessage, KindState, SinkLoop, SinkTable, Tagged}
 import graft.operators.NilHandling
 
 /** Structured Streaming executor of a [[GroupGraph]].
@@ -158,10 +158,7 @@ class StreamExecutor(
             // file count); with no maxFilesPerTrigger on the source the
             // whole round still lands in ONE trailing micro-batch,
             // mirroring one produce cycle to the loop topic.
-            loops.map(e => Message(e.key, e.value, g.loopTopic, e.partition,
-              e.offset, microsTimestamp(e.tsMicros),
-              if (e.headers == null) Map.empty[String, Array[Byte]]
-              else e.headers))
+            loops.map(_.toMessage(g.loopTopic))
               .coalesce(8).write.mode("append").parquet(stagingDir)
           }
           val rest = batch.filter(_.sink != SinkLoop)

@@ -2,8 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.StreamingQuery
-import graft.core.Message
-import graft.operators.BatchExecutor.{microsTimestamp, Emitted, SinkLoop, SinkTable}
+import graft.operators.BatchExecutor.{Emitted, SinkLoop, SinkTable}
 
 /** Output fan-out for the streaming executor: one stateful query emits
   * rows for N declared Output topics plus the table changelog
@@ -36,11 +35,7 @@ object StreamSinks {
             if (!msgs.isEmpty) {
               val spark = batch.sparkSession
               import spark.implicits._
-              msgs.map(e => Message(e.key, e.value, topic, e.partition,
-                e.offset, microsTimestamp(e.tsMicros),
-                if (e.headers == null) Map.empty[String, Array[Byte]]
-                else e.headers))
-                .write.mode("append").parquet(dir)
+              msgs.map(_.toMessage(topic)).write.mode("append").parquet(dir)
             }
           }
           tableDir.foreach { dir =>

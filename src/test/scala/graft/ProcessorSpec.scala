@@ -6,7 +6,7 @@ import graft.core._
 import graft.core.Codecs._
 
 /** The goka-shaped top-level lifecycle: define group → run → view. */
-class ProcessorSpec extends AnyFunSuite with SparkFixture {
+class ProcessorSpec extends AnyFunSuite with SparkFixture with TempDirs {
 
   test("define -> runBatch -> view -> visitAll, goka-style") {
     import spark.implicits._
@@ -41,17 +41,14 @@ class ProcessorSpec extends AnyFunSuite with SparkFixture {
     val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
     def ckpts = tmp.listFiles().map(_.getName)
       .filter(_.startsWith("graft_loop_ckpt")).toSet
-    val staging = java.nio.file.Files.createTempDirectory("graft_lc_in")
-    val results = java.nio.file.Files.createTempDirectory("graft_lc_out")
+    val staging = tempDir("graft_lc_in")
+    val results = tempDir("graft_lc_out")
     spark.createDataset(Seq(Message("a", "v".getBytes("UTF-8"), "in", 0, 0L,
         new Timestamp(1000L), Map.empty[String, Array[Byte]])))
       .write.mode("overwrite").parquet(staging.toString)
     val before = ckpts
-    try {
-      Processor(spark, g).runWithLoopback(staging.toString, results.toString)
-      assert(spark.read.parquet(results.toString).count() > 0)
-      assert((ckpts -- before).isEmpty, "a loop checkpoint outlived the run")
-    } finally Seq(staging, results).foreach(d =>
-      org.apache.commons.io.FileUtils.deleteQuietly(d.toFile))
+    Processor(spark, g).runWithLoopback(staging.toString, results.toString)
+    assert(spark.read.parquet(results.toString).count() > 0)
+    assert((ckpts -- before).isEmpty, "a loop checkpoint outlived the run")
   }
 }

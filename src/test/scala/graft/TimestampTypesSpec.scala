@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -21,7 +20,7 @@ import graft.sources.Sources
   * codec boundary (`/root/reference/codec/codec.go:4-7`), never
   * per-processor.
   */
-class TimestampTypesSpec extends AnyFunSuite with SparkFixture {
+class TimestampTypesSpec extends AnyFunSuite with SparkFixture with TempDirs {
 
   // 6 events: 3 on day 1, 2 on day 2, 1 on day 3 (epoch micros, UTC).
   private val day = 86400000000L
@@ -36,7 +35,7 @@ class TimestampTypesSpec extends AnyFunSuite with SparkFixture {
   /** Write the fixture with `ts` in the given physical shape and return
     * the directory usable as a `Sources.table` sfDir. */
   private def writeFixture(encoding: String): String = {
-    val dir = Files.createTempDirectory(s"graft_tstypes_$encoding").toString
+    val dir = tempDir(s"graft_tstypes_$encoding").toString
     import spark.implicits._
     val base = rows.toDF("event_id", "ts_us", "user_id", "event_type")
     val df = encoding match {
@@ -70,7 +69,7 @@ class TimestampTypesSpec extends AnyFunSuite with SparkFixture {
     // Stage the NORMALIZED frame, then stream it — the production shape
     // (st02/st06): the file stream source never sees a raw physical ts.
     val ev = Sources.table(spark, dir, "events")
-    val staged = Files.createTempDirectory("graft_tstypes_staged").toString
+    val staged = tempDir("graft_tstypes_staged").toString
     ev.repartition(1).write.mode("overwrite").parquet(staged)
     val q = spark.readStream.schema(ev.schema)
       .parquet(staged)
@@ -100,7 +99,7 @@ class TimestampTypesSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("an unsupported ts physical type fails loudly, not silently") {
-    val dir = Files.createTempDirectory("graft_tstypes_bad").toString
+    val dir = tempDir("graft_tstypes_bad").toString
     import spark.implicits._
     rows.toDF("event_id", "ts_us", "user_id", "event_type")
       .withColumn("ts", (col("ts_us") / 1000000L).cast("double"))

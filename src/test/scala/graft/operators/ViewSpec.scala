@@ -1,10 +1,10 @@
 package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.SparkFixture
+import graft.{SparkFixture, TempDirs}
 import graft.core.TableRow
 
-class ViewSpec extends AnyFunSuite with SparkFixture {
+class ViewSpec extends AnyFunSuite with SparkFixture with TempDirs {
 
   private def view = {
     import spark.implicits._
@@ -70,7 +70,7 @@ class ViewSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("bucketed persistence prunes point reads to one bucket") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_vbuck").toString
+    val dir = tempDir("graft_vbuck").toString
     val bucketed = view.persistBucketed("viewspec_bucketed", 8, dir)
     val plan = bucketed.pointReadPlan("banana")
     assert(plan.contains("SelectedBucketsCount: 1 out of 8"), plan)

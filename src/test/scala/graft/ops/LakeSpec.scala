@@ -4,13 +4,13 @@ import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.SparkFixture
+import graft.{SparkFixture, TempDirs}
 
 /** Targeted key-erasure over a shard-partitioned lake: the audit
   * numbers, the zero-residual guarantee, and — the point of the
   * layout — that shards NOT containing an erased key keep their
   * original files physically untouched. */
-class LakeSpec extends AnyFunSuite with SparkFixture {
+class LakeSpec extends AnyFunSuite with SparkFixture with TempDirs {
 
   private def snapshot(dir: Path): Map[String, (Long, Long)] =
     Files.walk(dir).iterator().asScala
@@ -22,7 +22,7 @@ class LakeSpec extends AnyFunSuite with SparkFixture {
 
   test("eraseKeys rewrites only affected shards; audit is exact") {
     import spark.implicits._
-    val out = Files.createTempDirectory("graft_lake_spec")
+    val out = tempDir("graft_lake_spec")
     val path = out.resolve("t").toString
     // keys 0..9 into 4 shards; two rows for key 3 so rowsErased = 2.
     val df = ((0L to 9L).map(k => (k, s"v$k")) :+ ((3L, "v3b")))
@@ -53,7 +53,7 @@ class LakeSpec extends AnyFunSuite with SparkFixture {
   test("compaction changes file count, never rows or content digest") {
     import spark.implicits._
     import graft.functions.Hashes.h60
-    val out = Files.createTempDirectory("graft_compact_spec")
+    val out = tempDir("graft_compact_spec")
     val df = (0L to 99L).map(i => (i, s"doc $i")).toDF("doc_id", "text")
     df.repartition(8).write.parquet(s"$out/raw")
     def files(p: String) = Files.list(java.nio.file.Paths.get(p))
@@ -71,7 +71,7 @@ class LakeSpec extends AnyFunSuite with SparkFixture {
   test("clustered write yields disjoint per-file key ranges — the " +
       "property that makes row-group skipping surgical") {
     import spark.implicits._
-    val out = Files.createTempDirectory("graft_clustered_spec")
+    val out = tempDir("graft_clustered_spec")
     val path = out.resolve("t").toString
     // deliberately shuffled input: clustering must impose the order
     val df = scala.util.Random.shuffle((0L to 999L).toList)
@@ -98,7 +98,7 @@ class LakeSpec extends AnyFunSuite with SparkFixture {
   test("zone map prunes a clustered layout losslessly: candidates " +
       "cover every matching row and skip non-overlapping files") {
     import spark.implicits._
-    val out = Files.createTempDirectory("graft_zonemap_spec")
+    val out = tempDir("graft_zonemap_spec")
     val path = out.resolve("t").toString
     val df = scala.util.Random.shuffle((0L to 999L).toList)
       .toDF("user_id").withColumn("payload", col("user_id") * 3)
@@ -175,7 +175,7 @@ class LakeSpec extends AnyFunSuite with SparkFixture {
     val rows = scala.util.Random.shuffle(
       (for (u <- 0L until 64L; d <- 0L until 64L) yield (u, d)).toList)
     val df = rows.toDF("u", "d")
-    val out = Files.createTempDirectory("graft_zorder_spec")
+    val out = tempDir("graft_zorder_spec")
     val zPath = out.resolve("z").toString
     val cPath = out.resolve("c").toString
     Lake.writeZOrdered(df, col("u"), col("d"), zPath, nFiles = 16)
@@ -213,7 +213,7 @@ class LakeSpec extends AnyFunSuite with SparkFixture {
       val rows = (1 to n).map(i => (rnd.nextInt(60).toLong - 20L, i.toLong))
       val eraseKeys = (1 to 8).map(_ => rnd.nextInt(70).toLong - 25L)
         .distinct
-      val out = Files.createTempDirectory(s"graft_lake_rand$round")
+      val out = tempDir(s"graft_lake_rand$round")
       val path = out.resolve("t").toString
       Lake.writeSharded(rows.toDF("k", "v"), col("k"), path, nShards)
       val audit = Lake.eraseKeys(spark, path, "k",
@@ -233,7 +233,7 @@ class LakeSpec extends AnyFunSuite with SparkFixture {
 
   test("erasing a key present in no shard rewrites its hash shard only") {
     import spark.implicits._
-    val out = Files.createTempDirectory("graft_lake_spec2")
+    val out = tempDir("graft_lake_spec2")
     val path = out.resolve("t").toString
     Lake.writeSharded((0L to 3L).map(k => (k, k * 10))
       .toDF("user_id", "x"), col("user_id"), path, nShards = 2)
@@ -245,7 +245,7 @@ class LakeSpec extends AnyFunSuite with SparkFixture {
   test("versioned merge: copy-on-write commit — v1 files untouched, " +
       "cold shards inherited by reference, time travel exact") {
     import spark.implicits._
-    val out = Files.createTempDirectory("graft_lake_ver")
+    val out = tempDir("graft_lake_ver")
     val path = out.resolve("t").toString
     // keys 0..7 across 4 shards (key % 4).
     val v1rows = (0L to 7L).map(k => (k, k * 100))
@@ -284,7 +284,7 @@ class LakeSpec extends AnyFunSuite with SparkFixture {
   test("versionDiff: classifies insert/update/delete, suppresses " +
       "identical survivors, and opens ONLY manifest-differing shards") {
     import spark.implicits._
-    val out = Files.createTempDirectory("graft_lake_diff")
+    val out = tempDir("graft_lake_diff")
     val path = out.resolve("t").toString
     // same lake as the merge test: v2 touches shards 1 and 2 only
     Lake.writeVersioned((0L to 7L).map(k => (k, k * 100)).toDF("k", "v"),
@@ -310,7 +310,7 @@ class LakeSpec extends AnyFunSuite with SparkFixture {
   test("versionDiff across a multi-commit chain: per-shard manifest " +
       "entries from DIFFERENT versions compose into one correct diff") {
     import spark.implicits._
-    val out = Files.createTempDirectory("graft_lake_diff_chain")
+    val out = tempDir("graft_lake_diff_chain")
     val path = out.resolve("t").toString
     Lake.writeVersioned((0L to 7L).map(k => (k, k * 100)).toDF("k", "v"),
       "k", path, 4)
@@ -332,7 +332,7 @@ class LakeSpec extends AnyFunSuite with SparkFixture {
   test("versioned merge: deleting a shard's every row marks it empty " +
       "and a further merge can repopulate it") {
     import spark.implicits._
-    val out = Files.createTempDirectory("graft_lake_ver2")
+    val out = tempDir("graft_lake_ver2")
     val path = out.resolve("t").toString
     Lake.writeVersioned(Seq((0L, 1L), (1L, 2L)).toDF("k", "v"), "k",
       path, 2)
@@ -353,7 +353,7 @@ class LakeSpec extends AnyFunSuite with SparkFixture {
     import spark.implicits._
     val rnd = new scala.util.Random(29)
     for (round <- 1 to 3) {
-      val out = Files.createTempDirectory(s"graft_lake_rand$round")
+      val out = tempDir(s"graft_lake_rand$round")
       val path = out.resolve("t").toString
       val nShards = 1 + rnd.nextInt(6)
       var state = (0L until (5 + rnd.nextInt(40)))
@@ -397,7 +397,7 @@ class LakeSpec extends AnyFunSuite with SparkFixture {
   test("vacuum: expired versions' superseded shard copies deleted, " +
       "inherited dirs survive, surviving snapshot byte-identical") {
     import spark.implicits._
-    val out = Files.createTempDirectory("graft_lake_vac")
+    val out = tempDir("graft_lake_vac")
     val path = out.resolve("t").toString
     Lake.writeVersioned((0L to 7L).map(k => (k, k * 100))
       .toDF("k", "v"), "k", path, 4)
@@ -433,7 +433,7 @@ class LakeSpec extends AnyFunSuite with SparkFixture {
   test("bloom sidecar: no false negatives, and most files skipped " +
     "for point probes on the non-clustering key") {
     import spark.implicits._
-    val out = Files.createTempDirectory("graft_bloom_spec")
+    val out = tempDir("graft_bloom_spec")
     val path = out.resolve("t").toString
     // cluster by gid — event_id point lookups get NO min/max help.
     val df = (0L until 2000L).map(k => (k, k % 37, s"p$k"))
@@ -477,7 +477,7 @@ class LakeSpec extends AnyFunSuite with SparkFixture {
       "nShards is refused loudly instead of silently moving keys " +
       "across shards") {
     import spark.implicits._
-    val out = Files.createTempDirectory("graft_lake_nshards")
+    val out = tempDir("graft_lake_nshards")
     val path = out.resolve("t").toString
     Lake.writeVersioned((0L to 7L).map(k => (k, k)).toDF("k", "v"),
       "k", path, 4)

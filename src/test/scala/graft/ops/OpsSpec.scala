@@ -2,9 +2,9 @@ package graft.ops
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.SparkFixture
+import graft.{SparkFixture, TempDirs}
 
-class OpsSpec extends AnyFunSuite with SparkFixture {
+class OpsSpec extends AnyFunSuite with SparkFixture with TempDirs {
 
   private def docs = {
     import spark.implicits._
@@ -1113,8 +1113,7 @@ class OpsSpec extends AnyFunSuite with SparkFixture {
       "bipartite recompute (d23)") {
     val base = docs.filter(col("doc_id").isin(1L, 4L))
     val arrivals = docs.filter(col("doc_id").isin(2L, 3L))
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_d23_spec").toString
+    val dir = tempDir("graft_d23_spec").toString
     Dedup.lshBandIndex(base, col("text"), col("doc_id"))
       .write.parquet(s"$dir/bands")
     val probed = Dedup.probeNearDupIndex(arrivals, base, col("text"),
@@ -1135,8 +1134,7 @@ class OpsSpec extends AnyFunSuite with SparkFixture {
       "payload, good lines round-trip exactly (c09)") {
     import spark.implicits._
     import org.apache.spark.sql.types._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_c09_spec").toString
+    val dir = tempDir("graft_c09_spec").toString
     Seq(
       """{"doc_id": 1, "text": "hello \"quoted\" world"}""",
       """{"doc_id": 2, "text": "truncated""",
@@ -1161,8 +1159,7 @@ class OpsSpec extends AnyFunSuite with SparkFixture {
   test("schema merge: the evolved column unions in, pre-migration rows " +
       "null-fill, coverage report separates the drops (c08)") {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_c08_spec").toString
+    val dir = tempDir("graft_c08_spec").toString
     Seq((1L, "a")).toDF("id", "t").withColumn("ver", lit(1L))
       .write.parquet(s"$dir/d1")
     Seq((2L, "b", "en")).toDF("id", "t", "lang")
@@ -1188,8 +1185,7 @@ class OpsSpec extends AnyFunSuite with SparkFixture {
     val base = all.filter(col("doc_id") === 4L)
     val b1 = all.filter(col("doc_id") === 10L)
     val b2 = all.filter(col("doc_id") === 20L)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_st31_spec").toString
+    val dir = tempDir("graft_st31_spec").toString
     Dedup.lshBandIndex(base, col("text"), col("doc_id"))
       .write.parquet(s"$dir/bands")
     def probe(b: org.apache.spark.sql.DataFrame) =

@@ -1,9 +1,8 @@
 package graft.ops
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.SparkFixture
+import graft.{SparkFixture, TempDirs}
 
 /** The IVF serving split behind s25/st24: [[Vectors.ivfInvertedLists]]
   * (train side) + [[Vectors.ivfServeTopK]] (serve side) must compose to
@@ -12,7 +11,7 @@ import graft.SparkFixture
   * independent slices must union to serving it whole — the property
   * that makes per-micro-batch streaming serving (st24) equal its batch
   * oracle with no cross-batch state. */
-class VectorServeSpec extends AnyFunSuite with SparkFixture {
+class VectorServeSpec extends AnyFunSuite with SparkFixture with TempDirs {
 
   private def vecs = {
     import spark.implicits._
@@ -40,7 +39,7 @@ class VectorServeSpec extends AnyFunSuite with SparkFixture {
 
   test("serving from parquet artifacts: no training stage, equi-join candidates") {
     val c = cents
-    val dir = Files.createTempDirectory("graft_serve_spec").toString
+    val dir = tempDir("graft_serve_spec").toString
     c.write.parquet(s"$dir/centroids")
     Vectors.ivfInvertedLists(vecs, col("vec_id"), col("embedding"), c)
       .write.parquet(s"$dir/lists")
@@ -91,7 +90,7 @@ class VectorServeSpec extends AnyFunSuite with SparkFixture {
 
   test("graph ANN: full-connectivity graph + wide beam reduces to exact " +
       "top-k, served from the stored artifact (s27)") {
-    val dir = Files.createTempDirectory("graft_graph_spec").toString
+    val dir = tempDir("graft_graph_spec").toString
     Vectors.knnGraphEdges(vecs, col("vec_id"), col("embedding"),
         degree = 29)
       .write.parquet(s"$dir/graph")

@@ -5,13 +5,13 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener}
 import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
-import graft.SparkFixture
+import graft.{SparkFixture, TempDirs}
 
 /** The st queries' one lifecycle ([[StreamingQueries.withQueries]]):
   * every query that started is stopped on every path, errors are never
   * swallowed, and each stateful query starts with its staged topic's
   * shard count while the session keeps its own. */
-class ReplayRunnerSpec extends AnyFunSuite with SparkFixture {
+class ReplayRunnerSpec extends AnyFunSuite with SparkFixture with TempDirs {
   import StreamingQueries.{drain, memorySink, parquetSink, withQueries}
 
   private val Shards = "spark.sql.shuffle.partitions"
@@ -62,19 +62,16 @@ class ReplayRunnerSpec extends AnyFunSuite with SparkFixture {
     import spark.implicits._
     val ms = MemoryStream[Int]
     ms.addData(1, 2, 3)
-    val relay = java.nio.file.Files.createTempDirectory("runner_relay").toString
+    val relay = tempDir("runner_relay").toString
     val shardsBefore = spark.conf.get(Shards)
-    try {
-      withQueries(spark)(
-        parquetSink(ms.toDF(), relay, "append", None)(identity),
-        memorySink(spark.readStream.schema(StructType.fromDDL("value INT"))
-          .parquet(relay), "runner_spec_chain", "append"))(drain)
-      assert(spark.table("runner_spec_chain").as[Int].collect().sorted
-        .toSeq == Seq(1, 2, 3))
-      assert(spark.streams.active.isEmpty)
-      assert(spark.conf.get(Shards) == shardsBefore)
-    } finally
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(relay))
+    withQueries(spark)(
+      parquetSink(ms.toDF(), relay, "append", None)(identity),
+      memorySink(spark.readStream.schema(StructType.fromDDL("value INT"))
+        .parquet(relay), "runner_spec_chain", "append"))(drain)
+    assert(spark.table("runner_spec_chain").as[Int].collect().sorted
+      .toSeq == Seq(1, 2, 3))
+    assert(spark.streams.active.isEmpty)
+    assert(spark.conf.get(Shards) == shardsBefore)
   }
 
   test("st01 and st07 start each stateful query with the topic's shards") {
@@ -94,6 +91,18 @@ class ReplayRunnerSpec extends AnyFunSuite with SparkFixture {
         assert(seen.values.forall(_ == Set(topicShards)), s"$name: $seen")
         assert(spark.conf.get(Shards) == shardsBefore, name)
     }
+  }
+
+  test("a memory-table result still reads rows and leaves no view behind") {
+    def resultViews = spark.catalog.listTables().collect()
+      .map(_.name).filter(_.startsWith("stream_result_")).toSet
+    val result = StreamingQueries.streamCount(spark, "/root/testdata/sf0.001")
+    assert(resultViews.isEmpty)
+    // Bench unpersists every block between queries, and shared ingests
+    // reuse a result across queries: it must not live in blocks.
+    spark.sparkContext.getPersistentRDDs.values.foreach(
+      _.unpersist(blocking = true))
+    assert(result.count() > 0)
   }
 
   /** numShufflePartitions of every stateful progress event `body`'s

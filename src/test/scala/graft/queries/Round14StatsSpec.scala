@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.SparkFixture
+import graft.{SparkFixture, TempDirs}
 
 /** Seeded randomized from-definition checks for the round-14 additions
   * (q95 Gini, q96/st64 chi-squared, q97 Benford, t50 novelty, d34
@@ -11,7 +11,7 @@ import graft.SparkFixture
   * against brute-force single-threaded references on inputs the
   * implementations' author did not pick — heavy ties included, the
   * case the collapse machinery exists for. */
-class Round14StatsSpec extends AnyFunSuite with SparkFixture {
+class Round14StatsSpec extends AnyFunSuite with SparkFixture with TempDirs {
 
   private val rnd = new scala.util.Random(20260814L)
 
@@ -158,8 +158,7 @@ class Round14StatsSpec extends AnyFunSuite with SparkFixture {
         ("F" + rnd.nextInt(2), (rnd.nextInt(30) + 1).toLong,
           (rnd.nextInt(5) + 1).toLong)
       }
-      val dir = java.nio.file.Files
-        .createTempDirectory(s"graft_wm_$round").toString
+      val dir = tempDir(s"graft_wm_$round").toString
       rows.toDF("l_returnflag", "xc", "w")
         .select(col("l_returnflag"),
           (col("xc").cast("double") / 100.0d).as("l_extendedprice"),
@@ -237,8 +236,7 @@ class Round14StatsSpec extends AnyFunSuite with SparkFixture {
       "count on a legacy (pre-header) manifest, and mergeVersioned " +
       "accepts the inferred count") {
     import spark.implicits._
-    val out = java.nio.file.Files
-      .createTempDirectory("graft_legacy_spec").toString
+    val out = tempDir("graft_legacy_spec").toString
     val base = (0L until 40L).map(k => (k, k * 10L))
       .toDF("user_id", "v")
     graft.ops.Lake.writeVersioned(base, "user_id", out, nShards = 8)

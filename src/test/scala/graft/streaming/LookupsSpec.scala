@@ -1,14 +1,15 @@
 package graft.streaming
 
 import org.scalatest.funsuite.AnyFunSuite
+import graft.TempDirs
 
 /** The compacted lookup-snapshot file behind [[FileLookups]] — write /
   * read round-trip, tombstone handling, atomic republish, and the
   * per-batch cache behavior the CatchupForever semantics rely on. */
-class LookupsSpec extends AnyFunSuite {
+class LookupsSpec extends AnyFunSuite with TempDirs {
 
   private def tmpFile(): String =
-    java.nio.file.Files.createTempDirectory("graft_lkp").toString + "/t.lkp"
+    tempDir("graft_lkp").toString + "/t.lkp"
 
   test("write/read round-trip; null values are tombstones dropped on read") {
     val f = tmpFile()

@@ -3,12 +3,12 @@ package graft.streaming
 import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
-import graft.SparkFixture
+import graft.{SparkFixture, TempDirs}
 import graft.core._
 import graft.core.Codecs._
 import graft.operators.BatchExecutor.SinkTable
 
-class StreamExecutorSpec extends AnyFunSuite with SparkFixture {
+class StreamExecutorSpec extends AnyFunSuite with SparkFixture with TempDirs {
 
   private def counterGraph = GroupGraph.define("scount")(
     Input("in", StringCodec, ProcessCallback { (ctx, _) =>
@@ -153,8 +153,8 @@ class StreamExecutorSpec extends AnyFunSuite with SparkFixture {
       }),
       Join("seg", StringCodec),
       Persist(StringCodec))
-    val staging = java.nio.file.Files.createTempDirectory("graft_lj").toString
-    val results = java.nio.file.Files.createTempDirectory("graft_lj_out").toString
+    val staging = tempDir("graft_lj").toString
+    val results = tempDir("graft_lj_out").toString
     spark.createDataset(Seq(
       msg("a", "x", 1), msg("b", "y", 2)))
       .write.mode("overwrite").parquet(staging)
@@ -177,8 +177,7 @@ class StreamExecutorSpec extends AnyFunSuite with SparkFixture {
     import spark.implicits._
     import org.apache.spark.sql.Encoders
     import org.apache.spark.sql.streaming.Trigger
-    val staging = java.nio.file.Files
-      .createTempDirectory("graft_ttl_src").toString
+    val staging = tempDir("graft_ttl_src").toString
     def feed(ms: Message*): Unit =
       spark.createDataset(ms).coalesce(1)
         .write.mode("append").parquet(staging)

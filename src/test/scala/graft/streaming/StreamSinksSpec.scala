@@ -3,12 +3,12 @@ package graft.streaming
 import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
-import graft.SparkFixture
+import graft.{SparkFixture, TempDirs}
 import graft.core._
 import graft.core.Codecs._
 import graft.operators.BatchExecutor.SinkTable
 
-class StreamSinksSpec extends AnyFunSuite with SparkFixture {
+class StreamSinksSpec extends AnyFunSuite with SparkFixture with TempDirs {
 
   test("one stateful query fans out to per-topic sinks + table dir") {
     import spark.implicits._
@@ -23,14 +23,14 @@ class StreamSinksSpec extends AnyFunSuite with SparkFixture {
       Output("evens", StringCodec),
       Output("odds", StringCodec),
       Persist(Int64Codec))
-    val dirE = java.nio.file.Files.createTempDirectory("graft_fo_e").toString
-    val dirO = java.nio.file.Files.createTempDirectory("graft_fo_o").toString
-    val dirT = java.nio.file.Files.createTempDirectory("graft_fo_t").toString
+    val dirE = tempDir("graft_fo_e").toString
+    val dirO = tempDir("graft_fo_o").toString
+    val dirT = tempDir("graft_fo_t").toString
     val ms = MemoryStream[Message]
     val out = new StreamExecutor(g).run(spark, ms.toDS())
     val q = StreamSinks.routeOutputs(out,
       Map("evens" -> dirE, "odds" -> dirO),
-      java.nio.file.Files.createTempDirectory("graft_fo_ckpt").toString,
+      tempDir("graft_fo_ckpt").toString,
       tableDir = Some(dirT))
     try {
       ms.addData(
@@ -68,12 +68,12 @@ class StreamSinksSpec extends AnyFunSuite with SparkFixture {
         c.setValue(n + 1L)
       }),
       Persist(Int64Codec))
-    val relayDir = java.nio.file.Files.createTempDirectory("graft_relay").toString
+    val relayDir = tempDir("graft_relay").toString
     val ms = MemoryStream[Message]
     val q1 = StreamSinks.routeOutputs(
       new StreamExecutor(g1).run(spark, ms.toDS()),
       Map("relay" -> relayDir),
-      java.nio.file.Files.createTempDirectory("graft_relay_ckpt").toString)
+      tempDir("graft_relay_ckpt").toString)
     val stream2 = spark.readStream
       .schema(org.apache.spark.sql.Encoders.product[Message].schema)
       .parquet(relayDir).as[Message]

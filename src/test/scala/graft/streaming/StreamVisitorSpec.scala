@@ -3,7 +3,7 @@ package graft.streaming
 import java.sql.Timestamp
 import org.apache.spark.sql.Encoders
 import org.scalatest.funsuite.AnyFunSuite
-import graft.SparkFixture
+import graft.{SparkFixture, TempDirs}
 import graft.core._
 import graft.core.Codecs._
 import graft.operators.BatchExecutor.SinkTable
@@ -13,7 +13,7 @@ import graft.operators.BatchExecutor.SinkTable
   * serial. Here: keys come from the query's own state store (statestore
   * data source on the live checkpoint), visit messages ride the same
   * source, and data arriving after the visit builds on visited state. */
-class StreamVisitorSpec extends AnyFunSuite with SparkFixture {
+class StreamVisitorSpec extends AnyFunSuite with SparkFixture with TempDirs {
 
   test("visitAll doubles counts mid-stream; later batches build on visited state") {
     import spark.implicits._
@@ -34,10 +34,8 @@ class StreamVisitorSpec extends AnyFunSuite with SparkFixture {
       Message(key, "x".getBytes("UTF-8"), "in", 0, offset,
         new Timestamp(offset * 1000), Map.empty)
 
-    val staging = java.nio.file.Files
-      .createTempDirectory("graft_vlive_src").toString
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_vlive_ckpt").toString
+    val staging = tempDir("graft_vlive_src").toString
+    val ckpt = tempDir("graft_vlive_ckpt").toString
     spark.createDataset(Seq(msg("a", 1), msg("a", 2), msg("b", 3)))
       .coalesce(1).write.mode("append").parquet(staging)
 
@@ -86,10 +84,8 @@ class StreamVisitorSpec extends AnyFunSuite with SparkFixture {
       Message(key, "x".getBytes("UTF-8"), "in", 0, offset,
         new Timestamp(offset * 1000), Map.empty)
 
-    val staging = java.nio.file.Files
-      .createTempDirectory("graft_vweb_src").toString
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_vweb_ckpt").toString
+    val staging = tempDir("graft_vweb_src").toString
+    val ckpt = tempDir("graft_vweb_ckpt").toString
     spark.createDataset(Seq(msg("a", 1), msg("a", 2), msg("b", 3)))
       .coalesce(1).write.mode("append").parquet(staging)
 
