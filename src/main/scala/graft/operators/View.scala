@@ -75,14 +75,18 @@ class View(val rows: Dataset[TableRow]) extends Serializable {
   def seek(key: String): Dataset[TableRow] =
     live.filter(col("key") >= key).orderBy(col("key"))
 
-  /** Persist this view's table bucketed + sorted by key and reopen it
-    * with bucket pruning: a point read then scans 1 bucket out of
-    * `numBuckets` instead of the whole table (Explain shows
-    * `SelectedBucketsCount: 1 out of N`) — the engine's analogue of the
+  /** Persist this view's table bucketed + sorted by key and reopen it:
+    * a point read then reads the files of 1 bucket out of `numBuckets`
+    * instead of the whole table — the engine's analogue of the
     * reference's FNV-hash key→partition routing on reads
     * (`view.go:297-315`): same contract (key-hash addressed storage),
-    * Catalyst-owned mechanics. Range/prefix scans additionally benefit
-    * from the per-bucket sort (min/max row-group skipping). */
+    * Catalyst-owned mechanics. A filter-only plan has no exchange for
+    * the bucketing to save, so Spark's DisableUnnecessaryBucketedScan
+    * plans it as a plain file scan; that scan still drops every file
+    * whose bucket id is outside the key-equality filter's bucket set
+    * (with `spark.sql.sources.bucketing.enabled`, the default), so no
+    * session conf is touched per read. Range/prefix scans additionally
+    * benefit from the per-bucket sort (min/max row-group skipping). */
   def persistBucketed(tableName: String, numBuckets: Int,
       path: String): View.BucketedView = {
     val spark = rows.sparkSession
@@ -92,7 +96,7 @@ class View(val rows: Dataset[TableRow]) extends Serializable {
       .option("path", path)
       .mode(org.apache.spark.sql.SaveMode.Overwrite)
       .saveAsTable(tableName)
-    new View.BucketedView(spark.table(tableName).as[TableRow])
+    new View(spark.table(tableName).as[TableRow])
   }
 
   /** Decode values through a codec into a two-column DataFrame. */
@@ -107,38 +111,10 @@ class View(val rows: Dataset[TableRow]) extends Serializable {
 
 object View {
 
-  /** View over a key-bucketed table. Filter-only plans have no exchange
-    * to elide, so the planner's DisableUnnecessaryBucketedScan rule
-    * would silently turn the bucketed scan — and with it bucket
-    * PRUNING — off for point reads; this view scopes
-    * `autoBucketedScan.enabled=false` around its own point-read actions
-    * only, leaving the session conf (and every other query) untouched. */
-  final class BucketedView(rows: Dataset[TableRow]) extends View(rows) {
-    // Synchronized on the session: concurrent point reads (e.g. several
-    // WebServer requests) would otherwise race the get/set/restore
-    // window. Queries on OTHER threads of the same session can still
-    // observe the flipped conf for the duration of one point read — at
-    // worst they lose the auto-bucketed-scan ELISION (a planner
-    // optimization), never correctness; serving deployments wanting full
-    // isolation should give the view its own SparkSession via
-    // `newSession()`.
-    private def withBucketedScan[T](f: => T): T =
-      rows.sparkSession.synchronized {
-        val conf = rows.sparkSession.conf
-        val k = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-        val prev = conf.get(k)
-        conf.set(k, "false")
-        try f finally conf.set(k, prev)
-      }
-    override def get(key: String): Option[Array[Byte]] =
-      withBucketedScan(super.get(key))
-    override def has(key: String): Boolean =
-      withBucketedScan(super.has(key))
-    /** Executed point-read plan, as served (tests assert 1-of-N here). */
-    def pointReadPlan(key: String): String = withBucketedScan(
-      rows.filter(col("key") === key)
-        .queryExecution.executedPlan.toString)
-  }
+  /** A view returned by [[View.persistBucketed]]: an ordinary View over
+    * the key-bucketed table, whose point reads Spark prunes to one
+    * bucket's files. */
+  type BucketedView = View
 
   /** Compact a message changelog to the live table: last write per key
     * wins by (timestamp, offset), null values are tombstones that drop

@@ -3,7 +3,8 @@ package graft.plans
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import graft.functions.{IDot, ISqDist, KmvSketchAgg, MinHashSig, PHash48, RollingHash, ShingleArray, SimHash60, SortedIntersectCount}
 
 /** Engine SQL surface: registers graft's native expressions so plain
@@ -15,99 +16,56 @@ import graft.functions.{IDot, ISqDist, KmvSketchAgg, MinHashSig, PHash48, Rollin
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(GraftExtensions.rollingHashDescriptor)
-    ext.injectFunction(GraftExtensions.shinglesDescriptor)
-    ext.injectFunction(GraftExtensions.simhashDescriptor)
-    ext.injectFunction(GraftExtensions.minhashDescriptor)
-    ext.injectFunction(GraftExtensions.idotDescriptor)
-    ext.injectFunction(GraftExtensions.isqdistDescriptor)
-    ext.injectFunction(GraftExtensions.phashDescriptor)
-    ext.injectFunction(GraftExtensions.kmvDescriptor)
-    ext.injectFunction(GraftExtensions.icountDescriptor)
+    GraftExtensions.functions.foreach(ext.injectFunction)
     ext.injectOptimizerRule(PlanGuardRule)
   }
 }
 
 object GraftExtensions {
-  private val rollingHashDescriptor = (
-    FunctionIdentifier("graft_rolling_hash"),
-    new ExpressionInfo(classOf[RollingHash].getName, "graft_rolling_hash"),
-    (exprs: Seq[Expression]) =>
-      if (exprs.length == 2)
-        RollingHash(exprs.head,
-          exprs(1).eval().asInstanceOf[Number].longValue())
-      else new RollingHash(exprs.head))
+  private def fn(name: String, cls: Class[_])(
+      build: Seq[Expression] => Expression) =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build)
 
-  private val shinglesDescriptor = (
-    FunctionIdentifier("graft_shingles"),
-    new ExpressionInfo(classOf[ShingleArray].getName, "graft_shingles"),
-    (exprs: Seq[Expression]) =>
-      ShingleArray(exprs.head,
-        exprs(1).eval().asInstanceOf[Number].intValue(),
-        if (exprs.length >= 3) exprs(2).eval().asInstanceOf[Boolean]
-        else true))
+  private def long(e: Expression): Long =
+    e.eval().asInstanceOf[Number].longValue()
+  private def int(e: Expression): Int =
+    e.eval().asInstanceOf[Number].intValue()
 
-  private val simhashDescriptor = (
-    FunctionIdentifier("graft_simhash"),
-    new ExpressionInfo(classOf[SimHash60].getName, "graft_simhash"),
-    (exprs: Seq[Expression]) => SimHash60(exprs.head))
-
-  private val minhashDescriptor = (
-    FunctionIdentifier("graft_minhash"),
-    new ExpressionInfo(classOf[MinHashSig].getName, "graft_minhash"),
-    (exprs: Seq[Expression]) =>
-      MinHashSig(exprs.head,
-        exprs(1).eval().asInstanceOf[Number].intValue(),
-        exprs(2).eval().asInstanceOf[Number].intValue()))
-
-  private val idotDescriptor = (
-    FunctionIdentifier("graft_idot"),
-    new ExpressionInfo(classOf[IDot].getName, "graft_idot"),
-    (exprs: Seq[Expression]) => IDot(exprs.head, exprs(1)))
-
-  private val isqdistDescriptor = (
-    FunctionIdentifier("graft_isqdist"),
-    new ExpressionInfo(classOf[ISqDist].getName, "graft_isqdist"),
-    (exprs: Seq[Expression]) => ISqDist(exprs.head, exprs(1)))
-
-  private val phashDescriptor = (
-    FunctionIdentifier("graft_phash"),
-    new ExpressionInfo(classOf[PHash48].getName, "graft_phash"),
-    (exprs: Seq[Expression]) => PHash48(exprs.head))
-
-  private val kmvDescriptor = (
-    FunctionIdentifier("graft_kmv"),
-    new ExpressionInfo(classOf[KmvSketchAgg].getName, "graft_kmv"),
-    (exprs: Seq[Expression]) =>
-      KmvSketchAgg(exprs.head,
-        exprs(1).eval().asInstanceOf[Number].intValue()))
-
-  private val icountDescriptor = (
-    FunctionIdentifier("graft_icount"),
-    new ExpressionInfo(classOf[SortedIntersectCount].getName,
-      "graft_icount"),
-    (exprs: Seq[Expression]) =>
-      SortedIntersectCount(exprs.head, exprs(1)))
+  /** Every graft SQL function, once: both [[GraftExtensions.apply]] and
+    * [[register]] iterate this table. `graft_bloom_agg` and
+    * `graft_might_contain` expose Spark's own runtime-filter Bloom
+    * expressions, which Spark registers under no public SQL name. */
+  private val functions = Seq(
+    fn("graft_rolling_hash", classOf[RollingHash]) { e =>
+      if (e.length == 2) RollingHash(e.head, long(e(1)))
+      else new RollingHash(e.head)
+    },
+    fn("graft_shingles", classOf[ShingleArray]) { e =>
+      ShingleArray(e.head, int(e(1)),
+        if (e.length >= 3) e(2).eval().asInstanceOf[Boolean] else true)
+    },
+    fn("graft_simhash", classOf[SimHash60])(e => SimHash60(e.head)),
+    fn("graft_minhash", classOf[MinHashSig])(e =>
+      MinHashSig(e.head, int(e(1)), int(e(2)))),
+    fn("graft_idot", classOf[IDot])(e => IDot(e.head, e(1))),
+    fn("graft_isqdist", classOf[ISqDist])(e => ISqDist(e.head, e(1))),
+    fn("graft_phash", classOf[PHash48])(e => PHash48(e.head)),
+    fn("graft_kmv", classOf[KmvSketchAgg])(e =>
+      KmvSketchAgg(e.head, int(e(1)))),
+    fn("graft_icount", classOf[SortedIntersectCount])(e =>
+      SortedIntersectCount(e.head, e(1))),
+    // (value, estimatedNumItems, numBits): sizes are clamped by
+    // spark.sql.optimizer.runtime.bloomFilter.maxNumItems / maxNumBits.
+    fn("graft_bloom_agg", classOf[BloomFilterAggregate])(e =>
+      new BloomFilterAggregate(e.head, e(1), e(2))),
+    // (bloom, value): the bloom may be a scalar subquery.
+    fn("graft_might_contain", classOf[BloomFilterMightContain])(e =>
+      BloomFilterMightContain(e.head, e(1))))
 
   /** Imperative registration on an existing session. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_rolling_hash", rollingHashDescriptor._3, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_shingles", shinglesDescriptor._3, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_simhash", simhashDescriptor._3, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_minhash", minhashDescriptor._3, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_idot", idotDescriptor._3, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_isqdist", isqdistDescriptor._3, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_phash", phashDescriptor._3, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_kmv", kmvDescriptor._3, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_icount", icountDescriptor._3, "built-in")
+  def register(spark: SparkSession): Unit = functions.foreach {
+    case (id, _, build) =>
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+        id.funcName, build, "built-in")
   }
 }

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.ScratchDirs
 import graft.ops._
 import graft.sources.Sources.table
 
@@ -93,8 +94,7 @@ object PipelineQueries {
       .select(col("o_orderkey"), col("o_custkey"))
     val cust = table(spark, dir, "customer")
       .select(col("c_custkey"), col("c_nationkey"))
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_snap").toString
+    val root = ScratchDirs.create("graft_snap")
     val (oDir, cDir) = (s"$root/orders", s"$root/customer")
     val m3 = pmod(col("o_orderkey"), lit(3L))
     val cm = pmod(col("o_custkey"), lit(10L))
@@ -679,8 +679,7 @@ object PipelineQueries {
     val e = embs(spark, dir)
     val (cents, _) = Vectors.kmeansFit(e, col("vec_id"), col("embedding"),
       k = 16, iters = 2)
-    val idxDir = java.nio.file.Files
-      .createTempDirectory("graft_ivf_index").toString
+    val idxDir = ScratchDirs.create("graft_ivf_index")
     cents.write.mode("overwrite").parquet(idxDir)
     val stored = spark.read.parquet(idxDir)
     Vectors.annIvfTopKWith(e, e.filter(col("vec_id") < 10),
@@ -711,8 +710,7 @@ object PipelineQueries {
     val arrivals = e.filter(col("vec_id") % 10 === 7)
     val (cents, _) = Vectors.kmeansFit(base, col("vec_id"),
       col("embedding"), k = 16, iters = 2)
-    val idxDir = java.nio.file.Files
-      .createTempDirectory("graft_ivf_add").toString
+    val idxDir = ScratchDirs.create("graft_ivf_add")
     cents.write.mode("overwrite").parquet(s"$idxDir/centroids")
     Vectors.ivfInvertedLists(base, col("vec_id"), col("embedding"), cents)
       .write.mode("overwrite").parquet(s"$idxDir/lists")
@@ -733,8 +731,7 @@ object PipelineQueries {
     * serving, the HNSW economics next to IVF's cell-sized probes. */
   def graphAnn(spark: SparkSession, dir: String): DataFrame = {
     val e = embs(spark, dir)
-    val idxDir = java.nio.file.Files
-      .createTempDirectory("graft_graph_ann").toString
+    val idxDir = ScratchDirs.create("graft_graph_ann")
     Vectors.knnGraphEdgesBlocked(e, col("vec_id"), col("embedding"),
         degree = 8)
       .write.mode("overwrite").parquet(s"$idxDir/graph")
@@ -865,8 +862,7 @@ object PipelineQueries {
         when(col("doc_id") % 3 === 0, concat(col("text"), lit(" v2")))
           .otherwise(col("text")).as("text"))
     // Previous run: features on the OLD snapshot, stored as the artifact.
-    val artDir = java.nio.file.Files
-      .createTempDirectory("graft_curate_artifact").toString
+    val artDir = ScratchDirs.create("graft_curate_artifact")
     features(oldTrain).write.mode("overwrite").parquet(artDir)
     val stored = spark.read.parquet(artDir)
     // Refresh: one cheap md5 pass detects change; (doc_id, fp) matches
@@ -1370,8 +1366,7 @@ object PipelineQueries {
     * 7 queries in round 10. */
   def schemaMergeReport(spark: SparkSession, dir: String): DataFrame = {
     val d = docs(spark, dir)
-    val out = java.nio.file.Files
-      .createTempDirectory("graft_schema_merge").toString
+    val out = ScratchDirs.create("graft_schema_merge")
     d.filter(col("doc_id") % 5 =!= 0)
       .select(lit(1L).as("ver"), col("doc_id"), col("text"))
       .write.mode("overwrite").parquet(s"$out/drop1")
@@ -1403,8 +1398,7 @@ object PipelineQueries {
   def corruptIngest(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types._
     val d = docs(spark, dir)
-    val out = java.nio.file.Files
-      .createTempDirectory("graft_corrupt_ingest").toString
+    val out = ScratchDirs.create("graft_corrupt_ingest")
     d.select(
         when(col("doc_id") % 13 === 0,
           concat(lit("{\"doc_id\": "), col("doc_id"),
@@ -1462,8 +1456,7 @@ object PipelineQueries {
   def compactLake(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.Hashes.h60
     val d = docs(spark, dir)
-    val out = java.nio.file.Files
-      .createTempDirectory("graft_compact").toString
+    val out = ScratchDirs.create("graft_compact")
     d.repartition(64).write.mode("overwrite").parquet(s"$out/raw")
     val raw = spark.read.parquet(s"$out/raw")
     raw.coalesce(2).write.mode("overwrite").parquet(s"$out/compact")
@@ -1495,8 +1488,7 @@ object PipelineQueries {
     import graft.functions.Hashes.h60
     val drop = docs(spark, dir).filter(col("doc_id") % 4 === 1)
       .select(col("doc_id"), col("text"))
-    val out = java.nio.file.Files
-      .createTempDirectory("graft_idem").toString
+    val out = ScratchDirs.create("graft_idem")
     val tableDir = s"$out/table"
     val ledgerDir = s"$out/ledger"
     val dropCount = drop.count()
@@ -1533,8 +1525,7 @@ object PipelineQueries {
     * The oracle proves clustering never changes answers. */
   def clusteredLake(spark: SparkSession, dir: String): DataFrame = {
     val ev = table(spark, dir, "events")
-    val out = java.nio.file.Files
-      .createTempDirectory("graft_clustered").toString
+    val out = ScratchDirs.create("graft_clustered")
     Lake.writeClustered(ev, col("user_id"), s"$out/events", nFiles = 8)
     spark.read.parquet(s"$out/events")
       .filter(col("user_id") === 7)
@@ -1557,8 +1548,7 @@ object PipelineQueries {
     * locations always candidates; most files skipped). */
   def bloomIndexedLake(spark: SparkSession, dir: String): DataFrame = {
     val ev = table(spark, dir, "events")
-    val out = java.nio.file.Files
-      .createTempDirectory("graft_bloomlake").toString
+    val out = ScratchDirs.create("graft_bloomlake")
     Lake.writeClustered(ev, col("user_id"), s"$out/events", nFiles = 8)
     val idx = Lake.buildBloomIndex(spark, s"$out/events", "event_id")
       .localCheckpoint()
@@ -1587,8 +1577,7 @@ object PipelineQueries {
     * (candidates < total files on the clustered layout). */
   def zoneMapLake(spark: SparkSession, dir: String): DataFrame = {
     val ev = table(spark, dir, "events")
-    val out = java.nio.file.Files
-      .createTempDirectory("graft_zonelake").toString
+    val out = ScratchDirs.create("graft_zonelake")
     Lake.writeClustered(ev, col("user_id"), s"$out/events", nFiles = 8)
     // data-derived range (10%..25% of the key domain) so the predicate
     // is meaningful at every SF — one tiny agg, mirrored by the oracle
@@ -1620,8 +1609,7 @@ object PipelineQueries {
     * lossless. */
   def compositePrune(spark: SparkSession, dir: String): DataFrame = {
     val ev = table(spark, dir, "events")
-    val out = java.nio.file.Files
-      .createTempDirectory("graft_composite").toString
+    val out = ScratchDirs.create("graft_composite")
     Lake.writeClustered(ev, col("user_id"), s"$out/events", nFiles = 8)
     val mx = ev.agg(max(col("user_id"))).head().getLong(0)
     val (lo, hi) = (mx * 10 / 100, mx * 25 / 100)
@@ -1714,8 +1702,7 @@ object PipelineQueries {
       col("event_id"), col("user_id"), col("event_type"),
       unix_micros(col("ts")).as("ts_us"),
       floor(col("value") * 100.0d).cast("long").as("cents"))
-    val out = java.nio.file.Files
-      .createTempDirectory("graft_csv").toString
+    val out = ScratchDirs.create("graft_csv")
     ev.write.option("header", "true").mode("overwrite")
       .csv(s"$out/drop")
     java.nio.file.Files.write(
@@ -1758,8 +1745,7 @@ object PipelineQueries {
       col("event_id"), col("user_id"), col("event_type"),
       unix_micros(col("ts")).as("ts_us"),
       floor(col("value") * 100.0d).cast("long").as("cents"))
-    val out = java.nio.file.Files
-      .createTempDirectory("graft_orc").toString
+    val out = ScratchDirs.create("graft_orc")
     ev.write.mode("overwrite").orc(s"$out/events_orc")
     def seal(df: org.apache.spark.sql.DataFrame, pfx: String) =
       df.select(h60(concat_ws("|", col("event_id"), col("user_id"),
@@ -1792,8 +1778,7 @@ object PipelineQueries {
       col("event_id"), col("user_id"), col("event_type"),
       unix_micros(col("ts")).as("ts_us"),
       floor(col("value") * 100.0d).cast("long").as("cents"))
-    val out = java.nio.file.Files
-      .createTempDirectory("graft_migrate").toString
+    val out = ScratchDirs.create("graft_migrate")
     Lake.writeSharded(ev, col("user_id"), s"$out/by_user", nShards = 8)
     val old = spark.read.parquet(s"$out/by_user").drop("shard")
     Lake.writeClustered(old, col("ts_us"), s"$out/by_time", nFiles = 8)
@@ -1822,8 +1807,7 @@ object PipelineQueries {
   def lakeBranchMerge(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.Hashes.h60
     val d = docs(spark, dir).select(col("doc_id"), col("text"))
-    val out = java.nio.file.Files
-      .createTempDirectory("graft_branch").toString
+    val out = ScratchDirs.create("graft_branch")
     Lake.writeVersioned(d, "doc_id", s"$out/base", nShards = 8)
     val base = Lake.readVersioned(spark, s"$out/base")
     Lake.writeVersioned(base, "doc_id", s"$out/brA", nShards = 8)
@@ -1877,8 +1861,7 @@ object PipelineQueries {
   def zorderLake(spark: SparkSession, dir: String): DataFrame = {
     val ev = table(spark, dir, "events")
       .withColumn("event_date", to_date(col("ts")))
-    val out = java.nio.file.Files
-      .createTempDirectory("graft_zorder").toString
+    val out = ScratchDirs.create("graft_zorder")
     Lake.writeZOrdered(ev, col("user_id"),
       expr("unix_micros(ts) div 86400000000"), s"$out/events",
       nFiles = 16)
@@ -1907,8 +1890,7 @@ object PipelineQueries {
     * oracle pins both the surviving CONTENT and the sweep's SHAPE. */
   def retentionSweep(spark: SparkSession, dir: String): DataFrame = {
     val ev = table(spark, dir, "events")
-    val out = java.nio.file.Files
-      .createTempDirectory("graft_retention").toString
+    val out = ScratchDirs.create("graft_retention")
     val lake = s"$out/events"
     ev.withColumn("event_date", to_date(col("ts")))
       .write.mode("overwrite").partitionBy("event_date").parquet(lake)
@@ -1943,8 +1925,7 @@ object PipelineQueries {
     * ingest is the first thing a production events lake does. */
   def partitionedLake(spark: SparkSession, dir: String): DataFrame = {
     val ev = table(spark, dir, "events")
-    val out = java.nio.file.Files
-      .createTempDirectory("graft_lake").toString
+    val out = ScratchDirs.create("graft_lake")
     ev.withColumn("event_date", to_date(col("ts")))
       .write.mode("overwrite").partitionBy("event_date")
       .parquet(s"$out/events")
@@ -1974,8 +1955,7 @@ object PipelineQueries {
   def forgetUser(spark: SparkSession, dir: String): DataFrame = {
     val nShards = 8
     val ev = table(spark, dir, "events")
-    val out = java.nio.file.Files
-      .createTempDirectory("graft_forget").toString
+    val out = ScratchDirs.create("graft_forget")
     val lakeDir = s"$out/events"
     val profDir = s"$out/profile"
     Lake.writeSharded(ev, col("user_id"), lakeDir, nShards)
@@ -2188,8 +2168,7 @@ object PipelineQueries {
     def profiles(d: DataFrame) = d.groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_events"),
         sum(col("value").cast("decimal(12,2)")).as("val_sum"))
-    val lakeDir = java.nio.file.Files
-      .createTempDirectory("graft_versioned").toString + "/profiles"
+    val lakeDir = ScratchDirs.create("graft_versioned") + "/profiles"
     Lake.writeVersioned(profiles(ev.filter(col("ts") < cutoff)),
       "user_id", lakeDir, nShards)
     val postUsers = ev.filter(col("ts") >= cutoff)
@@ -2275,8 +2254,7 @@ object PipelineQueries {
     val e = embs(spark, dir)
     val (cents, _) = Vectors.kmeansFit(e, col("vec_id"), col("embedding"),
       k = 16, iters = 2)
-    val idxDir = java.nio.file.Files
-      .createTempDirectory("graft_ivf_del").toString
+    val idxDir = ScratchDirs.create("graft_ivf_del")
     cents.write.mode("overwrite").parquet(s"$idxDir/centroids")
     Vectors.ivfInvertedLists(e, col("vec_id"), col("embedding"), cents)
       .write.mode("overwrite").parquet(s"$idxDir/lists")
@@ -2386,8 +2364,7 @@ object PipelineQueries {
     val d = docs(spark, dir)
     val base = d.filter(col("doc_id") % 10 =!= 7)
     val arrivals = d.filter(col("doc_id") % 10 === 7)
-    val idxDir = java.nio.file.Files
-      .createTempDirectory("graft_lsh_index").toString
+    val idxDir = ScratchDirs.create("graft_lsh_index")
     Dedup.lshBandIndex(base, col("text"), col("doc_id"))
       .write.mode("overwrite").parquet(s"$idxDir/bands")
     Dedup.probeNearDupIndex(arrivals, base, col("text"), col("doc_id"),
@@ -2596,8 +2573,7 @@ object PipelineQueries {
   def legacyManifestMerge(spark: SparkSession, dir: String): DataFrame = {
     val nShards = 8
     val ev = table(spark, dir, "events")
-    val out = java.nio.file.Files
-      .createTempDirectory("graft_legacy").toString
+    val out = ScratchDirs.create("graft_legacy")
     val lakeDir = s"$out/events"
     val profiles = ev.groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_events"),
@@ -2836,8 +2812,7 @@ object PipelineQueries {
       col("event_id"), col("user_id"), col("event_type"),
       unix_micros(col("ts")).as("ts_us"),
       floor(col("value") * 100.0d).cast("long").as("cents"))
-    val out = java.nio.file.Files
-      .createTempDirectory("graft_jsonl").toString
+    val out = ScratchDirs.create("graft_jsonl")
     ev.write.mode("overwrite").json(s"$out/events_jsonl")
     val back = spark.read.schema(ev.schema).json(s"$out/events_jsonl")
     def seal(df: org.apache.spark.sql.DataFrame, pfx: String) =

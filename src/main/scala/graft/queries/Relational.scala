@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.util.sketch.BloomFilter
 import graft.operators.AsOfJoin
 import graft.sources.Sources.table
 
@@ -1617,6 +1618,17 @@ object Relational {
       .select(col("x.pk").as("a"), col("y.pk").as("b"))
       .distinct()
       .localCheckpoint()
+    val (deg, tri) = triangles(edges)
+    val nNodes = deg.agg(count(lit(1)).as("n_nodes"))
+    val nEdges = edges.agg(count(lit(1)).as("n_edges"))
+    nNodes.crossJoin(nEdges)
+      .crossJoin(tri.agg(count(lit(1)).as("n_triangles")))
+  }
+
+  /** q63's counting core over a distinct undirected edge list `(a, b)`:
+    * orientation → wedges → Bloom pre-filter → exact close. Returns the
+    * node degrees `(node, deg)` and one `(v, w)` row per triangle. */
+  private[graft] def triangles(edges: DataFrame): (DataFrame, DataFrame) = {
     val deg = edges.select(col("a").as("node"))
       .unionAll(edges.select(col("b").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("deg"))
@@ -1634,8 +1646,8 @@ object Relational {
         .withColumnRenamed("deg", "db"), Seq("b"))
     val aFirst = col("da") < col("db") ||
       (col("da") === col("db") && col("a") < col("b"))
-    // Pinned for the same reason: three consumers (two wedge-join
-    // sides, the closing semi-join) — m oriented rows of three longs.
+    // Pinned: four consumers (two wedge-join sides, the Bloom build,
+    // the closing semi-join) — m oriented rows of three longs.
     val directed = withDeg.select(
       when(aFirst, col("a")).otherwise(col("b")).as("src"),
       when(aFirst, col("b")).otherwise(col("a")).as("dst"),
@@ -1649,27 +1661,21 @@ object Relational {
       .select(col("p.dst").as("v"), col("q.dst").as("w"))
     // Bloom pre-filter on the wedge stream (guide §3.2, r18 verdict
     // item 5): most wedges do NOT close — at sf0.1 the wedge exchange
-    // carried ~22M rows / 354 MB into the semi join. A driver-built
-    // Bloom filter over xxhash64(src, dst) of the pinned edge list,
-    // probed map-side via the codegen graft_might_contain BEFORE the
-    // exchange, drops definite non-edges so only closing wedges (plus
-    // the fpp share of false positives and the rare xxhash64-collision
-    // FP) are shuffled. The exact semi join below is UNCHANGED and
-    // removes every false positive — a Bloom filter has no false
-    // negatives, so rows out are bit-identical. Cost: one extra pass
-    // over the pinned |E|-row edge list (count + filter build,
-    // ~9.6 bits/edge at fpp 1%); at very large |E| the filter's
-    // broadcast footprint grows linearly — size it from the measured
-    // edge count as here, and shard it per key range (guide §8) long
-    // before it threatens executor memory.
-    val bloom = directed
-      .select(xxhash64(col("src"), col("dst")).as("k"))
-      .stat.bloomFilter("k", math.max(1L, directed.count()), 0.01)
-    val bloomBc = spark.sparkContext.broadcast(bloom)
-    val wedgesF = wedges.filter(org.apache.spark.sql.GraftColumnBridge
-      .column(graft.functions.BloomMightContain(
-        org.apache.spark.sql.GraftColumnBridge.expression(
-          xxhash64(col("v"), col("w"))), bloomBc)))
+    // carried ~22M rows / 354 MB into the semi join. Spark's own
+    // runtime-filter expressions do it in-plan: a scalar subquery
+    // aggregates xxhash64(src, dst) of the pinned edge list into a
+    // Bloom filter sized for 1% fpp (clamped by Spark's
+    // runtime.bloomFilter.maxNumItems / maxNumBits), and might_contain
+    // probes each wedge map-side BEFORE the exchange, so only closing
+    // wedges (plus false positives) are shuffled. The exact semi join
+    // below is UNCHANGED and removes every false positive — a Bloom
+    // filter has no false negatives, so rows out are bit-identical.
+    val n = math.max(1L, directed.count())
+    val bloom = directed.select(call_function("graft_bloom_agg",
+        xxhash64(col("src"), col("dst")), lit(n),
+        lit(BloomFilter.optimalNumOfBits(n, 0.01)))).scalar()
+    val wedgesF = wedges.filter(call_function("graft_might_contain",
+      bloom, xxhash64(col("v"), col("w"))))
     // Close wedges with a SHUFFLED-HASH semi join, not sort-merge: the
     // streamed side is the wedge explosion (~22M rows / 354 MB shuffle
     // at sf0.1 — Σ C(outdeg, 2), always ≫ |E|), and sort-merge SORTS
@@ -1687,10 +1693,7 @@ object Relational {
     // the hint. AQE skew-split still applies to shuffled-hash joins.
     val tri = wedgesF.join(directed.hint("shuffle_hash"),
         col("v") === col("src") && col("w") === col("dst"), "left_semi")
-    val nNodes = deg.agg(count(lit(1)).as("n_nodes"))
-    val nEdges = edges.agg(count(lit(1)).as("n_edges"))
-    nNodes.crossJoin(nEdges)
-      .crossJoin(tri.agg(count(lit(1)).as("n_triangles")))
+    (deg, tri)
   }
 
   /** q64: CUSUM change-point detection on the daily event-volume

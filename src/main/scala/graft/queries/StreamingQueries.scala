@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{DecimalType, StructType}
+import graft.ScratchDirs.{create => tempDir}
 import graft.core._
 import graft.core.Codecs._
 import graft.operators.BatchExecutor.{Emitted, SinkTable, collectReplica}
@@ -136,29 +137,6 @@ final case class FunnelState(t1: Long, t2: Long, t3: Long)
 object StreamingQueries {
 
   private val nameSeq = new AtomicInteger(0)
-
-  /** Staging/checkpoint dirs created by the st* queries, deleted on JVM
-    * exit by one shared shutdown hook — repeated invocations (sbt test,
-    * Verify, Bench in one JVM) must not accumulate disk. */
-  private val tempDirs = new java.util.concurrent.ConcurrentLinkedQueue[String]
-  locally {
-    sys.addShutdownHook {
-      tempDirs.forEach { d =>
-        def rm(f: java.io.File): Unit = {
-          val children = f.listFiles()
-          if (children != null) children.foreach(rm)
-          f.delete(); ()
-        }
-        rm(new java.io.File(d))
-      }
-    }
-    ()
-  }
-  private def tempDir(prefix: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(prefix).toString
-    tempDirs.add(d)
-    d
-  }
 
   /** Events staged once per (JVM, fixture dir) as 2 parquet files —
     * st01/st03 replay identical content; re-staging per query would just

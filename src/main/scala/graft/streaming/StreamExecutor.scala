@@ -28,7 +28,7 @@ import graft.operators.NilHandling
   * table's changelog is simply part of the consumed stream: any
   * [[Message]] whose topic is declared as a Join edge is treated as a
   * table upsert (null value = tombstone), and the latest value per
-  * (key, table) is carried in the keyed state ([[StreamExecutor.KeyState]])
+  * (key, table) is carried in the keyed state ([[StreamExecutor.JoinsState]])
   * alongside the user row — a second keyed state fed by the changelog,
   * never a lifetime-static snapshot. Within a micro-batch, rows of a key
   * are applied in (ts, kind, topic, offset) order with table upserts
@@ -71,8 +71,6 @@ class StreamExecutor(
     nilHandling: NilHandling = NilHandling.Ignore,
     stateTtl: Option[java.time.Duration] = None,
     maxLoopRounds: Int = 50) extends Serializable {
-
-  import StreamExecutor.KeyState
 
   def run(
       spark: SparkSession,
@@ -195,7 +193,7 @@ class StreamExecutor(
       .filter(_.value != null)
       .groupByKey(_.key).reduceGroups((_, b) => b).map(_._2) // dedupe keys
       .groupByKey(_.key)
-      .mapValues(r => KeyState(r.value, Map.empty[String, Array[Byte]]))
+      .mapValues(_.value)
 
     val proc = new StreamExecutor.GraftStatefulProcessor(
       graph, nilHandling, bcJoinSnaps, lookups, stateTtl)
@@ -209,16 +207,6 @@ class StreamExecutor(
 }
 
 object StreamExecutor {
-  /** Keyed streaming state as seeded at query start: the group-table row
-    * plus the latest join-table value per joined topic — the engine's
-    * equivalent of the reference's per-partition group storage + join
-    * partition tables (`partition_processor.go:210-247`). Null entries
-    * are tombstones. Inside the operator the two halves live in SEPARATE
-    * state variables ([[StateVarName]] / [[JoinStateVarName]]) so state
-    * TTL can expire the group value without touching join catchup. */
-  final case class KeyState(value: Array[Byte],
-      joins: Map[String, Array[Byte]])
-
   /** Catchup join-table values per joined topic, as their own state
     * variable: the reference's join tables never expire
     * (`partition_table.go:119-126`), so this state is exempt from
@@ -245,7 +233,7 @@ object StreamExecutor {
       bcJoinSnaps: Broadcast[Map[String, Map[String, Array[Byte]]]],
       lookups: LookupProvider,
       ttl: Option[java.time.Duration])
-      extends StatefulProcessorWithInitialState[String, Message, Emitted, KeyState] {
+      extends StatefulProcessorWithInitialState[String, Message, Emitted, Array[Byte]] {
 
     private val joinTopics = g.joins.keySet
 
@@ -267,12 +255,10 @@ object StreamExecutor {
           JoinStateVarName, Encoders.product[JoinsState], TTLConfig.NONE)
     }
 
+    /** Seeds the group-table value; join catchup starts empty. */
     override def handleInitialState(
-        key: String, s: KeyState, timerValues: TimerValues): Unit = {
-      if (s.value != null) valueState.update(s.value)
-      if (s.joins.nonEmpty && joinState != null)
-        joinState.update(JoinsState(s.joins))
-    }
+        key: String, value: Array[Byte], timerValues: TimerValues): Unit =
+      valueState.update(value)
 
     override def handleInputRows(
         key: String,
@@ -281,9 +267,11 @@ object StreamExecutor {
       val snaps = bcJoinSnaps.value
       val qi = getHandle.getQueryInfo
       val lookupSnap = lookups.resolve(qi.getRunId, qi.getBatchId)
-      val prevValue = if (valueState.exists()) valueState.get() else null
+      // get() is null when the variable is absent (or TTL-expired).
+      val prevValue = valueState.get()
+      val prevJoinsState = if (joinState != null) joinState.get() else null
       val prevJoins: Map[String, Array[Byte]] =
-        if (joinState != null && joinState.exists()) joinState.get().joins
+        if (prevJoinsState != null) prevJoinsState.joins
         else Map.empty[String, Array[Byte]]
       // Join values visible at batch start: static snapshot overlaid
       // by the persisted catchup state (which may hold tombstones).
@@ -324,10 +312,10 @@ object StreamExecutor {
         case (t, v) => v != null ||
           snaps.get(t).exists(_.contains(key))
       }
-      if (newValue == null) { if (valueState.exists()) valueState.clear() }
+      if (newValue == null) { if (prevValue != null) valueState.clear() }
       else valueState.update(newValue)
       if (joinState != null) {
-        if (newJoins.isEmpty) { if (joinState.exists()) joinState.clear() }
+        if (newJoins.isEmpty) { if (prevJoinsState != null) joinState.clear() }
         else joinState.update(JoinsState(newJoins))
       }
       out.iterator

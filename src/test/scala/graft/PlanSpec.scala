@@ -910,6 +910,17 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
       s"wedge join must be an equi-join on the pivot node\n$p")
   }
 
+  test("q63: the wedge Bloom pre-filter is in-plan — might_contain over " +
+    "a scalar subquery, no broadcast of the edge set") {
+    val p = plan("q63_triangles")
+    assert("might_contain\\(Subquery subquery#\\d+".r.findFirstIn(p).isDefined,
+      s"wedges must be probed by might_contain over a scalar subquery\n$p")
+    assert(p.contains("bloom_filter_agg(xxhash64(src"),
+      s"the subquery must aggregate the oriented edge list\n$p")
+    assert(!p.contains("BroadcastHashJoin") && p.contains("ShuffledHashJoin"),
+      s"the wedge close must shuffle-hash the edge set, not broadcast it\n$p")
+  }
+
   test("q65: Benford audit is one pruned scan + one 9-group aggregate") {
     val p = plan("q65_benford")
     assert(p.contains("ReadSchema: struct<value:double>"),

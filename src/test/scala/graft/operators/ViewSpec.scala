@@ -1,5 +1,9 @@
 package graft.operators
 
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.datasources.{BucketingUtils, FilePartition}
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.{SparkFixture, TempDirs}
 import graft.core.TableRow
@@ -69,16 +73,43 @@ class ViewSpec extends AnyFunSuite with SparkFixture with TempDirs {
     assert(t == Map("a" -> "v2", "c" -> "alive"))
   }
 
+  /** A View whose point-read plan — the same `live` rows `get` and `has`
+    * filter — the spec can inspect. */
+  private class PlanProbe(rows: Dataset[TableRow]) extends View(rows) {
+    def pointRead(key: String): Dataset[TableRow] =
+      live.filter(col("key") === key).limit(1)
+  }
+
+  /** Names of the files the point read's scan reads. */
+  private def filesRead(v: PlanProbe, key: String): Seq[String] = {
+    val plan = v.pointRead(key).queryExecution.executedPlan
+    val scan = plan.collectFirst { case s: FileSourceScanExec => s }
+      .getOrElse(fail(s"no file scan in the point-read plan\n$plan"))
+    scan.inputRDD.partitions.toSeq.flatMap {
+      case p: FilePartition => p.files.map(_.toPath.getName).toSeq
+    }
+  }
+
   test("bucketed persistence prunes point reads to one bucket") {
-    val dir = tempDir("graft_vbuck").toString
-    val bucketed = view.persistBucketed("viewspec_bucketed", 8, dir)
-    val plan = bucketed.pointReadPlan("banana")
-    assert(plan.contains("SelectedBucketsCount: 1 out of 8"), plan)
+    val dir = tempDir("graft_vbuck")
+    val bucketed = view.persistBucketed("viewspec_bucketed", 8, dir.toString)
     assert(bucketed.get("banana").map(new String(_)) == Some("2"))
     assert(bucketed.iterator.collect().map(_.key).toSeq ==
       Seq("apple", "apricot", "banana", "cherry"))
-    // the conf scoping leaves the session untouched
-    assert(spark.conf.get(
-      "spark.sql.sources.bucketing.autoBucketedScan.enabled") == "true")
+    // Bucketed writes hash with Murmur3 (the `hash` function) mod N.
+    val bucket = spark.range(1).select(pmod(hash(lit("banana")), lit(8)))
+      .head().getInt(0)
+    val onDisk = dir.toFile.listFiles().map(_.getName)
+      .flatMap(BucketingUtils.getBucketId).toSet
+    assert(onDisk.contains(bucket) && onDisk.size > 1, onDisk)
+    val probe = new PlanProbe(bucketed.rows)
+    for (evicted <- Seq(None, Some("apple"))) {
+      evicted.foreach(probe.evict)
+      val files = filesRead(probe, "banana")
+      assert(files.nonEmpty &&
+        files.forall(BucketingUtils.getBucketId(_).contains(bucket)),
+        s"evicted=$evicted: point read must scan only bucket $bucket: $files")
+      assert(probe.get("banana").map(new String(_)) == Some("2"))
+    }
   }
 }

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkFixture
 
@@ -9,36 +8,11 @@ import graft.SparkFixture
   * brute-force reference sharing no code with the implementation. */
 class GraphStatsSpec extends AnyFunSuite with SparkFixture {
 
-  /** The production orientation+wedge pipeline, extracted over an
-    * arbitrary edge list for the spec (the q63 query builds edges from
-    * lineitem then applies exactly this shape). */
+  /** q63's production counting core (orientation, wedges, Bloom
+    * pre-filter, exact close) over an arbitrary edge list. */
   private def sparkTriangles(edges: Seq[(Long, Long)]): Long = {
     import spark.implicits._
-    val e = edges.toDF("a", "b").distinct()
-    val deg = e.select(col("a").as("node"))
-      .unionAll(e.select(col("b").as("node")))
-      .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-    val withDeg = e
-      .join(deg.withColumnRenamed("node", "a")
-        .withColumnRenamed("deg", "da"), Seq("a"))
-      .join(deg.withColumnRenamed("node", "b")
-        .withColumnRenamed("deg", "db"), Seq("b"))
-    val directed = withDeg.select(
-      when(struct(col("da"), col("a")) < struct(col("db"), col("b")),
-        struct(col("a").as("src"), col("b").as("dst"),
-          col("da").as("dsrc"), col("db").as("ddst")))
-        .otherwise(struct(col("b").as("src"), col("a").as("dst"),
-          col("db").as("dsrc"), col("da").as("ddst"))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"),
-        col("e.dsrc").as("dsrc"), col("e.ddst").as("ddst"))
-    val wedges = directed.as("p").join(directed.as("q"),
-        col("p.src") === col("q.src") &&
-          struct(col("p.ddst"), col("p.dst")) <
-            struct(col("q.ddst"), col("q.dst")))
-      .select(col("p.dst").as("v"), col("q.dst").as("w"))
-    wedges.join(directed,
-      col("v") === col("src") && col("w") === col("dst"), "left_semi")
-      .count()
+    Relational.triangles(edges.toDF("a", "b").distinct())._2.count()
   }
 
   test("degree-ordered triangle count == brute triple-loop on random graphs") {
