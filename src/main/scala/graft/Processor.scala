@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Dataset, SparkSession}
 import graft.core.{GroupGraph, Message, TableRow}
 import graft.operators.{BatchExecutor, BatchResult, NilHandling, View}
 import graft.operators.BatchExecutor.Emitted
-import graft.streaming.StreamExecutor
+import graft.streaming.{LookupProvider, StaticLookups, StreamExecutor}
 
 /** Top-level facade mirroring the reference's processor lifecycle
   * (`/root/reference/processor.go:75-141` `NewProcessor(brokers, graph)`,
@@ -21,8 +21,8 @@ import graft.streaming.StreamExecutor
   * Bounded replay ([[runBatch]]) is the deterministic, oracle-checkable
   * path; [[runStream]] compiles the same graph onto Structured
   * Streaming (same [[graft.operators.BatchExecutor.FoldIterator]]
-  * semantics, proven equivalent by the st* queries); [[runWithLoopback]]
-  * drives a Loop graph through a real feedback topic.
+  * semantics; join tables arrive as changelog rows on the stream);
+  * [[runWithLoopback]] drives a Loop graph through a real feedback topic.
   */
 final case class Processor(
     spark: SparkSession,
@@ -44,23 +44,14 @@ final case class Processor(
     batch.run(spark, inputs, joinTables, lookupTables, initialState)
 
   /** Unbounded run over a message stream (inputs + join-table
-    * changelogs interleaved, like the reference's consumer group). */
+    * changelogs interleaved, like the reference's consumer group);
+    * `lookups` resolves the Lookup tables — [[graft.streaming.FileLookups]]
+    * for the reference's CatchupForever views. */
   def runStream(
       messages: Dataset[Message],
-      joinSnapshots: Map[String, Map[String, Array[Byte]]] = Map.empty,
-      lookupSnapshots: Map[String, Map[String, Array[Byte]]] = Map.empty,
+      lookups: LookupProvider = StaticLookups(Map.empty),
       initialState: Option[Dataset[TableRow]] = None): Dataset[Emitted] =
-    stream.run(spark, messages, joinSnapshots, lookupSnapshots, initialState)
-
-  /** [[runStream]] with continuously-refreshing lookup tables — the
-    * reference's CatchupForever views; see
-    * [[graft.streaming.FileLookups]]. */
-  def runStreamWith(
-      messages: Dataset[Message],
-      joinSnapshots: Map[String, Map[String, Array[Byte]]],
-      lookups: graft.streaming.LookupProvider,
-      initialState: Option[Dataset[TableRow]] = None): Dataset[Emitted] =
-    stream.runWith(spark, messages, joinSnapshots, lookups, initialState)
+    stream.run(spark, messages, lookups, initialState)
 
   /** Unbounded run of a Loop graph through a staged feedback topic. */
   def runWithLoopback(stagingDir: String, resultDir: String): Unit =

@@ -148,6 +148,15 @@ final case class GroupGraph(group: String, edges: Seq[Edge]) {
   val visitors: Map[String, ProcessCallback] =
     edges.collect { case VisitorEdge(n, cb) => n -> cb }.toMap
 
+  /** Topic of visitor `name`'s visit messages, one per key. */
+  def visitTopic(name: String): String = s"@visit:$name"
+
+  /** Codec and callback per consumed topic: inputs, loop and visits. */
+  private val consumers: Map[String, (Codec[_], ProcessCallback)] =
+    inputs.map { case (t, c, cb) => t -> (c, cb) }.toMap ++
+      loop.map(l => loopTopic -> (l.codec, l.cb)) ++
+      visitors.map { case (n, cb) => visitTopic(n) -> (Codecs.JsonValueCodec, cb) }
+
   def validate(): Unit = {
     require(group.nonEmpty, "group name must not be empty")
     require(inputs.nonEmpty, s"group $group: at least one Input is required")
@@ -158,24 +167,21 @@ final case class GroupGraph(group: String, edges: Seq[Edge]) {
     val consumed = inputs.map(_._1) ++ joins.keys ++ lookups.keys
     val dups = consumed.groupBy(identity).collect { case (t, xs) if xs.size > 1 => t }
     require(dups.isEmpty, s"group $group: topics consumed twice: ${dups.mkString(",")}")
-    val internal = Set(loopTopic, tableTopic)
+    val internal = Set(loopTopic, tableTopic) ++ visitors.keys.map(visitTopic)
     val direct = consumed ++ outputs.keys
     require(!direct.exists(internal), s"group $group: internal topics " +
-      s"($loopTopic, $tableTopic) cannot be used directly")
+      s"(${internal.mkString(", ")}) cannot be used directly")
   }
 
-  /** Codec used to decode messages of `topic` when consumed. */
-  def inputCodec(topic: String): Codec[_] =
-    if (topic == loopTopic) loop.map(_.codec).getOrElse(
-      throw new IllegalArgumentException(s"no loop edge for $topic"))
-    else inputs.collectFirst { case (t, c, _) if t == topic => c }.getOrElse(
-      throw new IllegalArgumentException(s"topic $topic not an input of $group"))
+  /** Decode codec and callback of consumed `topic`. */
+  def consumer(topic: String): (Codec[_], ProcessCallback) =
+    consumers.getOrElse(topic, throw new IllegalArgumentException(
+      s"topic $topic is not consumed by $group"))
 
-  def callbackFor(topic: String): ProcessCallback =
-    if (topic == loopTopic) loop.map(_.cb).getOrElse(
-      throw new IllegalArgumentException(s"no loop edge for $topic"))
-    else inputs.collectFirst { case (t, _, cb) if t == topic => cb }.getOrElse(
-      throw new IllegalArgumentException(s"topic $topic not an input of $group"))
+  /** Codec used to decode messages of `topic` when consumed. */
+  def inputCodec(topic: String): Codec[_] = consumer(topic)._1
+
+  def callbackFor(topic: String): ProcessCallback = consumer(topic)._2
 }
 
 object GroupGraph {

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions.col
 import graft.core._
@@ -79,27 +80,57 @@ class BatchExecutor(
     require(lookupTables.keySet == graph.lookups.keySet,
       s"lookup tables ${lookupTables.keySet} != declared ${graph.lookups.keySet}")
 
-    // Replicated lookup views -> broadcast (small by contract, like the
-    // reference's fully-copied Views); guarded so a mis-declared
-    // corpus-sized Lookup fails loudly instead of OOMing the driver.
-    val lookupMaps: Map[String, Map[String, Array[Byte]]] =
-      lookupTables.map { case (t, ds) =>
-        t -> replicateLookup(t, ds, maxLookupRows)
-      }
-    val bcLookups = spark.sparkContext.broadcast(lookupMaps)
-
     val joinTagged: Dataset[Tagged] = joinTables.map { case (t, ds) =>
       ds.filter(_.value != null)
         .map(r => Tagged(r.key, KindJoin, t, r.value, 0, 0L, 0L, 0, null))
     }.reduceOption(_ union _).getOrElse(spark.emptyDataset[Tagged])
-
-    var state: Dataset[TableRow] =
-      initialState.getOrElse(spark.emptyDataset[TableRow])
-    var pending: Dataset[Tagged] = inputs.map { case (t, ds) =>
+    val messages: Dataset[Tagged] = inputs.map { case (t, ds) =>
       ds.map(m => Tagged(m.key, KindMessage, t, m.value, m.partition,
         m.offset, tsMicros(m.timestamp), 0, m.headers))
     }.reduceOption(_ union _).getOrElse(spark.emptyDataset[Tagged])
+    fixpoint(spark, messages,
+      initialState.getOrElse(spark.emptyDataset[TableRow]), joinTagged,
+      lookupTables)
+  }
 
+  /** Run a named visitor callback over every key of `table` — the
+    * reference's `VisitAll` (`/root/reference/processor.go:954-996`). Runs
+    * as a stop-the-world batch over the state snapshot: one visit message
+    * per live key, folded like any input message, so the visitor's
+    * emissions and loopbacks land exactly as a message callback's do.
+    * Returns the new table plus any emissions. */
+  def visitAll(
+      spark: SparkSession,
+      name: String,
+      table: Dataset[TableRow],
+      meta: Any = null,
+      lookupTables: Map[String, Dataset[TableRow]] = Map.empty): BatchResult = {
+    import spark.implicits._
+    require(graph.visitors.contains(name), s"no visitor named $name")
+    val topic = graph.visitTopic(name)
+    val metaSer = Codecs.JsonValueCodec.encode(meta)
+    val visits = table.filter(_.value != null)
+      .map(r => Tagged(r.key, KindMessage, topic, metaSer, 0, 0L, 0L, 0, null))
+    fixpoint(spark, visits, table, spark.emptyDataset[Tagged], lookupTables)
+  }
+
+  /** Fold `messages` over `initialState` and the join rows, then fold
+    * the loop messages each round emits until none are left. */
+  private def fixpoint(
+      spark: SparkSession,
+      messages: Dataset[Tagged],
+      initialState: Dataset[TableRow],
+      joinTagged: Dataset[Tagged],
+      lookupTables: Map[String, Dataset[TableRow]]): BatchResult = {
+    import spark.implicits._
+    // Replicated lookup views -> broadcast (small by contract, like the
+    // reference's fully-copied Views); guarded so a mis-declared
+    // corpus-sized Lookup fails loudly instead of OOMing the driver.
+    val bcLookups = spark.sparkContext.broadcast(lookupTables.map {
+      case (t, ds) => t -> replicateLookup(t, ds, maxLookupRows)
+    })
+    var state = initialState
+    var pending = messages
     var emittedAcc: Dataset[Emitted] = spark.emptyDataset[Emitted]
     var changelogAcc: Dataset[TableRow] = spark.emptyDataset[TableRow]
     var iter = 0
@@ -152,42 +183,11 @@ class BatchExecutor(
     BatchResult(state, changelogAcc, outputs)
   }
 
-  /** Run a named visitor callback over every key of `table` — the
-    * reference's `VisitAll` (`/root/reference/processor.go:954-996`). Runs
-    * as a stop-the-world batch over the state snapshot. Returns the new
-    * table plus any emissions. */
-  def visitAll(
-      spark: SparkSession,
-      name: String,
-      table: Dataset[TableRow],
-      meta: Any = null,
-      lookupTables: Map[String, Dataset[TableRow]] = Map.empty): BatchResult = {
-    import spark.implicits._
-    require(graph.visitors.contains(name), s"no visitor named $name")
-    val bcLookups = spark.sparkContext.broadcast(
-      lookupTables.map { case (t, ds) =>
-        t -> replicateLookup(t, ds, maxLookupRows)
-      })
-    val visitTopic = s"@visit:$name"
-    val metaSer = Codecs.JsonValueCodec.encode(meta)
-    val tagged = table.filter(_.value != null).flatMap { r => Seq(
-      Tagged(r.key, KindState, graph.tableTopic, r.value, 0, 0L, 0L, 0, null),
-      Tagged(r.key, KindMessage, visitTopic, metaSer, 0, 0L, 0L, 0, null))
-    }
-    val emitted = foldOnce(spark, tagged, bcLookups).localCheckpoint()
-    val tableOut = emitted.filter(_.sink == SinkTable)
-      .map(e => TableRow(e.key, e.value))
-    val outputs = graph.outputs.keys.map { t =>
-      t -> emitted.filter(_.sink == t).map(_.toMessage(t))
-    }.toMap
-    BatchResult(tableOut.filter(_.value != null), tableOut, outputs)
-  }
-
   /** One shuffle + ordered fold pass: no loop handling, no accumulation. */
   private def foldOnce(
       spark: SparkSession,
       tagged: Dataset[Tagged],
-      bcLookups: org.apache.spark.broadcast.Broadcast[Map[String, Map[String, Array[Byte]]]])
+      bcLookups: Broadcast[Map[String, Map[String, Array[Byte]]]])
       : Dataset[Emitted] = {
     import spark.implicits._
     val g = graph
@@ -342,15 +342,10 @@ object BatchExecutor {
     }
 
     private def runCallback(row: Tagged): Unit = {
-      val isVisit = row.topic.startsWith("@visit:")
-      val cb =
-        if (isVisit) graph.visitors(row.topic.stripPrefix("@visit:"))
-        else graph.callbackFor(row.topic)
+      val (codec, cb) = graph.consumer(row.topic)
       try {
         val decoded: Any =
-          if (row.value == null) null
-          else if (isVisit) Codecs.JsonValueCodec.decode(row.value)
-          else graph.inputCodec(row.topic).decode(row.value)
+          if (row.value == null) null else codec.decode(row.value)
         val ctx = new FoldContext(row)
         cb(ctx, decoded)
       } catch {

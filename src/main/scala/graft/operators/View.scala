@@ -76,7 +76,7 @@ class View(val rows: Dataset[TableRow]) extends Serializable {
     live.filter(col("key") >= key).orderBy(col("key"))
 
   /** Persist this view's table bucketed + sorted by key and reopen it:
-    * a point read then reads the files of 1 bucket out of `numBuckets`
+    * a point read then reads the one file of 1 bucket out of `numBuckets`
     * instead of the whole table — the engine's analogue of the
     * reference's FNV-hash key→partition routing on reads
     * (`view.go:297-315`): same contract (key-hash addressed storage),
@@ -91,7 +91,9 @@ class View(val rows: Dataset[TableRow]) extends Serializable {
       path: String): View.BucketedView = {
     val spark = rows.sparkSession
     import spark.implicits._
-    rows.toDF().write.format("parquet")
+    // One writing task per bucket: hash partitioning on `key` uses the
+    // bucket id's Murmur3 pmod, so each bucket gets exactly one file.
+    rows.toDF().repartition(numBuckets, col("key")).write.format("parquet")
       .bucketBy(numBuckets, "key").sortBy("key")
       .option("path", path)
       .mode(org.apache.spark.sql.SaveMode.Overwrite)

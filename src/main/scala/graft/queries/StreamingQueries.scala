@@ -11,8 +11,8 @@ import graft.core._
 import graft.core.Codecs._
 import graft.operators.BatchExecutor.{Emitted, SinkTable, collectReplica}
 import graft.sources.Sources
-import graft.streaming.{FileLookups, LookupFile, StreamExecutor,
-  StreamSinks, StreamVisitor}
+import graft.streaming.{FileLookups, LookupFile, StaticLookups,
+  StreamExecutor, StreamSinks, StreamVisitor}
 
 /** Structured Streaming queries, oracle-checked: the events fixture is
   * replayed through the file stream source, processed by the *streaming*
@@ -596,7 +596,7 @@ object StreamingQueries {
     stageTwoBatches(spark, msgs, staging)
     val stream = messageTopic(spark, staging)
     val out = new StreamExecutor(graph).run(spark, stream,
-      lookupSnapshots = Map("bench" -> benchSet))
+      StaticLookups(Map("bench" -> benchSet)))
     val table = out.filter(_.sink == SinkTable)
       .map { e =>
         val s = codec.decode(e.value); (e.key, s.n, s.hits)
@@ -718,7 +718,7 @@ object StreamingQueries {
         typedLit(Map.empty[String, Array[Byte]]).as("headers"))
       .as[Message]
     val table = new StreamExecutor(decontamGraph)
-      .run(spark, shingleMsgs, lookupSnapshots = Map("bench" -> benchSet))
+      .run(spark, shingleMsgs, StaticLookups(Map("bench" -> benchSet)))
       .filter(_.sink == SinkTable)
       .map { e =>
         val s = decontamCodec.decode(e.value); (e.key, s.n, s.hits)
@@ -873,9 +873,8 @@ object StreamingQueries {
     val ratesFile = java.nio.file.Paths
       .get(staging, "rates.lkp").toString
     LookupFile.write(ratesFile, Map("multiplier" -> Int64Codec.encode(1L)))
-    val out = new StreamExecutor(graph).runWith(spark,
-      messageTopic(spark, staging), Map.empty,
-      FileLookups(Map("rates" -> ratesFile)))
+    val out = new StreamExecutor(graph).run(spark,
+      messageTopic(spark, staging), FileLookups(Map("rates" -> ratesFile)))
     val table = out.filter(_.sink == SinkTable)
       .map(e => (e.key, Int64Codec.decode(e.value))).toDF("key", "cnt")
     val resultDir = tempDir("graft_stream_lookup_out")

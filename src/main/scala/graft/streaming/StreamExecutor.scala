@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessorWithInitialState, TTLConfig, TimeMode, TimerValues, ValueState}
 import graft.core._
@@ -35,9 +34,10 @@ import graft.operators.NilHandling
   * sorting BEFORE messages at equal timestamps, so `ctx.join` sees
   * exactly the rows whose timestamp precedes the message — deterministic
   * regardless of how the stream is chopped into batches (the reference
-  * gives no cross-topic ordering guarantee at all). Optional
-  * `joinSnapshots` seed the initial table content, like the reference's
-  * recover-to-HWM barrier before processing starts.
+  * gives no cross-topic ordering guarantee at all). A table's initial
+  * content is its changelog too: stage its rows ahead of the messages,
+  * like the reference's recover-to-HWM barrier before processing
+  * starts.
   *
   * '''Continuously-updating lookup tables.''' Lookup views in the
   * reference also catch up forever (view-per-processor,
@@ -58,8 +58,7 @@ import graft.operators.NilHandling
   * applies ONLY to the group-table value: join-catchup state lives in a
   * separate, never-expiring state variable, because the reference's
   * join tables never expire (`partition_table.go:119-126`) — expiring a
-  * join tombstone would silently resurrect the static snapshot value it
-  * masks, and expiring a catchup value would lose changelog updates.
+  * catchup value would lose changelog updates.
   *
   * '''Loopback''' (`graph.go:395-407`) is a real feedback topic in
   * streaming: [[runWithLoopback]] appends `@loop` rows back into the
@@ -69,34 +68,22 @@ import graft.operators.NilHandling
 class StreamExecutor(
     graph: GroupGraph,
     nilHandling: NilHandling = NilHandling.Ignore,
-    stateTtl: Option[java.time.Duration] = None,
-    maxLoopRounds: Int = 50) extends Serializable {
+    stateTtl: Option[java.time.Duration] = None) extends Serializable {
 
+  /** Compile the graph over `stream` (inputs and join-table changelogs
+    * interleaved). `lookups` resolves the Lookup tables: pass
+    * [[FileLookups]] for tables that mutate while the query runs. */
   def run(
       spark: SparkSession,
       stream: Dataset[Message],
-      joinSnapshots: Map[String, Map[String, Array[Byte]]] = Map.empty,
-      lookupSnapshots: Map[String, Map[String, Array[Byte]]] = Map.empty,
-      initialState: Option[Dataset[TableRow]] = None)
-      : Dataset[Emitted] =
-    runWith(spark, stream, joinSnapshots, StaticLookups(lookupSnapshots),
-      initialState)
-
-  /** [[run]] with a pluggable lookup resolution strategy — pass
-    * [[FileLookups]] for tables that mutate while the query runs. */
-  def runWith(
-      spark: SparkSession,
-      stream: Dataset[Message],
-      joinSnapshots: Map[String, Map[String, Array[Byte]]],
-      lookups: LookupProvider,
+      lookups: LookupProvider = StaticLookups(Map.empty),
       initialState: Option[Dataset[TableRow]] = None)
       : Dataset[Emitted] = {
-    graph.validate()
     require(graph.loop.isEmpty,
       "streaming loopback needs a real feedback topic; use " +
         "runWithLoopback(spark, stagingDir, resultDir) or the " +
         "BatchExecutor's bounded fixpoint replay")
-    compile(spark, stream, joinSnapshots, lookups, initialState)
+    compile(spark, stream, lookups, initialState)
   }
 
   /** Run a graph WITH a Loop edge over a staged `Dataset[Message]`
@@ -109,8 +96,8 @@ class StreamExecutor(
     * Consumed staging files are deleted once committed
     * (`cleanSource=delete`) so a long-running loop topology pays O(1
     * round) directory-listing per trigger, not O(total rounds). Rounds
-    * are capped at `maxLoopRounds`, mirroring the batch executor's
-    * `maxLoopIterations` — a non-converging callback fails loudly
+    * are capped at [[StreamExecutor.MaxLoopRounds]], mirroring the batch
+    * executor's `maxLoopIterations` — a non-converging callback fails loudly
     * instead of appending feedback files forever.
     *
     * Blocks until the feedback drains (no pending files), then leaves
@@ -120,16 +107,14 @@ class StreamExecutor(
       spark: SparkSession,
       stagingDir: String,
       resultDir: String,
-      joinSnapshots: Map[String, Map[String, Array[Byte]]] = Map.empty,
       lookups: LookupProvider = StaticLookups(Map.empty)): Unit = {
     import spark.implicits._
-    graph.validate()
+    import StreamExecutor.MaxLoopRounds
     val stream = spark.readStream.schema(Encoders.product[Message].schema)
       .option("cleanSource", "delete")
       .parquet(stagingDir).as[Message]
-    val out = compile(spark, stream, joinSnapshots, lookups)
+    val out = compile(spark, stream, lookups)
     val g = graph
-    val maxRounds = maxLoopRounds
     val ckpt = java.nio.file.Files.createTempDirectory("graft_loop_ckpt").toString
     var rounds = 0
     val q = out.writeStream.outputMode("update")
@@ -148,10 +133,10 @@ class StreamExecutor(
             rounds = 0
           } else {
             rounds += 1
-            if (rounds > maxRounds) throw new IllegalStateException(
-              s"streaming loopback did not converge after $maxRounds rounds " +
-                s"(group=${g.group}); raise maxLoopRounds if the topology " +
-                "legitimately needs more feedback hops")
+            if (rounds > MaxLoopRounds) throw new IllegalStateException(
+              s"streaming loopback did not converge after $MaxLoopRounds " +
+                s"rounds (group=${g.group}); the loop callback keeps " +
+                "calling ctx.loopback — it must stop feeding back")
             // A few files per feedback round (parallel write, bounded
             // file count); with no maxFilesPerTrigger on the source the
             // whole round still lands in ONE trailing micro-batch,
@@ -178,12 +163,11 @@ class StreamExecutor(
   private def compile(
       spark: SparkSession,
       stream: Dataset[Message],
-      joinSnapshots: Map[String, Map[String, Array[Byte]]],
       lookups: LookupProvider,
       initialState: Option[Dataset[TableRow]] = None)
       : Dataset[Emitted] = {
     import spark.implicits._
-    val bcJoinSnaps = spark.sparkContext.broadcast(joinSnapshots)
+    graph.validate()
 
     // Seed the keyed state from an existing group table — the
     // reference's recover-from-table-topic on first start
@@ -196,7 +180,7 @@ class StreamExecutor(
       .mapValues(_.value)
 
     val proc = new StreamExecutor.GraftStatefulProcessor(
-      graph, nilHandling, bcJoinSnaps, lookups, stateTtl)
+      graph, nilHandling, lookups, stateTtl)
     // TTL needs the processing-time clock; without it the operator is
     // time-agnostic.
     val timeMode =
@@ -207,6 +191,10 @@ class StreamExecutor(
 }
 
 object StreamExecutor {
+  /** Most consecutive feedback rounds [[StreamExecutor.runWithLoopback]]
+    * runs before failing, like the batch executor's maxLoopIterations. */
+  final val MaxLoopRounds = 50
+
   /** Catchup join-table values per joined topic, as their own state
     * variable: the reference's join tables never expire
     * (`partition_table.go:119-126`), so this state is exempt from
@@ -225,12 +213,11 @@ object StreamExecutor {
     * Two typed value-state variables — the group-table value bytes
     * (TTL-eligible) and the join catchup map (never expires); the shared
     * [[FoldIterator]] kernel (also used by the batch executor and the
-    * Tester) applies state → join seeds → ordered batch rows and yields
+    * Tester) applies state → join catchup → ordered batch rows and yields
     * the emissions. */
   private[streaming] final class GraftStatefulProcessor(
       g: GroupGraph,
       nil: NilHandling,
-      bcJoinSnaps: Broadcast[Map[String, Map[String, Array[Byte]]]],
       lookups: LookupProvider,
       ttl: Option[java.time.Duration])
       extends StatefulProcessorWithInitialState[String, Message, Emitted, Array[Byte]] {
@@ -264,7 +251,6 @@ object StreamExecutor {
         key: String,
         msgs: Iterator[Message],
         timerValues: TimerValues): Iterator[Emitted] = {
-      val snaps = bcJoinSnaps.value
       val qi = getHandle.getQueryInfo
       val lookupSnap = lookups.resolve(qi.getRunId, qi.getBatchId)
       // get() is null when the variable is absent (or TTL-expired).
@@ -273,12 +259,6 @@ object StreamExecutor {
       val prevJoins: Map[String, Array[Byte]] =
         if (prevJoinsState != null) prevJoinsState.joins
         else Map.empty[String, Array[Byte]]
-      // Join values visible at batch start: static snapshot overlaid
-      // by the persisted catchup state (which may hold tombstones).
-      val seedJoins: Map[String, Array[Byte]] =
-        joinTopics.iterator.flatMap { t =>
-          snaps.get(t).flatMap(_.get(key)).map(t -> _)
-        }.toMap ++ prevJoins
       val sorted = msgs.toArray.sortBy { m =>
         (tsMicros(m.timestamp),
           if (joinTopics(m.topic)) KindJoin else KindMessage,
@@ -289,7 +269,7 @@ object StreamExecutor {
           Iterator(Tagged(key, KindState, g.tableTopic, prevValue,
             0, 0L, 0L, 0, null))
         else Iterator.empty
-      val seedRows = seedJoins.iterator.map { case (t, v) =>
+      val joinRows = prevJoins.iterator.map { case (t, v) =>
         Tagged(key, KindJoin, t, v, 0, 0L, Long.MinValue, 0, null)
       }
       val batchRows = sorted.iterator.map { m =>
@@ -298,20 +278,15 @@ object StreamExecutor {
           m.offset, tsMicros(m.timestamp), 0, m.headers)
       }
       val out = new FoldIterator(g, nil, lookupSnap,
-        stateRow ++ seedRows ++ batchRows).toVector
+        stateRow ++ joinRows ++ batchRows).toVector
       val newValue = out.find(_.sink == SinkTable)
         .map(_.value).getOrElse(prevValue)
       val joinUpdates: Map[String, Array[Byte]] =
         sorted.iterator.filter(m => joinTopics(m.topic))
           .map(m => m.topic -> m.value).toMap // ts-sorted: last wins
-      // A null (tombstone) entry only needs to persist while it
-      // masks a static snapshot value; otherwise dropping it keeps
-      // the state removable — a key whose table row AND join rows
-      // are all deleted must not pin state forever.
-      val newJoins = (prevJoins ++ joinUpdates).filter {
-        case (t, v) => v != null ||
-          snaps.get(t).exists(_.contains(key))
-      }
+      // A null (tombstone) update removes the entry, so a key whose
+      // table row AND join rows are all deleted pins no state.
+      val newJoins = (prevJoins ++ joinUpdates).filter(_._2 != null)
       if (newValue == null) { if (prevValue != null) valueState.clear() }
       else valueState.update(newValue)
       if (joinState != null) {

@@ -15,9 +15,9 @@ import graft.core.{Codecs, GroupGraph, Message}
   *      via the `statestore` data source (the latest committed
   *      checkpoint snapshot — no stop-the-world, the query keeps
   *      running);
-  *   2. one `@visit:<name>` [[Message]] per key is appended to the
-  *      query's staged source directory (in a Kafka deployment: produced
-  *      to the group's input topic with the visit marker header);
+  *   2. one [[Message]] per key on [[GroupGraph.visitTopic]] is appended
+  *      to the query's staged source directory (in a Kafka deployment:
+  *      produced to the group's input topic with the visit marker header);
   *   3. the next micro-batch interleaves visit and data messages per key
   *      in timestamp order through the same [[graft.operators.BatchExecutor.FoldIterator]]
   *      — per-key serial, exactly the reference's guarantee.
@@ -52,7 +52,7 @@ object StreamVisitor {
     // encoder's column); unwrap positionally so this survives renames.
     val keyField = state.schema("key").dataType
       .asInstanceOf[StructType].fieldNames.head
-    val topic = s"@visit:$name"
+    val topic = graph.visitTopic(name)
     val metaBytes = Codecs.JsonValueCodec.encode(meta)
     val nowTs = new java.sql.Timestamp(System.currentTimeMillis())
     val msgs: Dataset[Message] = state

@@ -2,7 +2,7 @@ package graft.testkit
 
 import scala.collection.mutable
 import graft.core._
-import graft.operators.BatchExecutor.{Emitted, FoldIterator, KindJoin, KindMessage, KindState, SinkLoop, SinkTable, Tagged}
+import graft.operators.BatchExecutor.{FoldIterator, KindJoin, KindMessage, KindState, SinkLoop, SinkTable, Tagged}
 import graft.operators.NilHandling
 
 /** In-process test harness — the engine's equivalent of the reference's
@@ -19,16 +19,14 @@ import graft.operators.NilHandling
   */
 final class Tester(
     graph: GroupGraph,
-    nilHandling: NilHandling = NilHandling.Ignore,
-    maxLoopCascade: Int = 1000) {
+    nilHandling: NilHandling = NilHandling.Ignore) {
 
   graph.validate()
 
   private val state = mutable.LinkedHashMap.empty[String, Array[Byte]]
   private val joinTables =
     mutable.Map.empty[String, mutable.Map[String, Array[Byte]]]
-  private val lookupTables =
-    mutable.Map.empty[String, mutable.Map[String, Array[Byte]]]
+  private var lookups = Map.empty[String, Map[String, Array[Byte]]]
   private val queues = mutable.Map.empty[String, mutable.Buffer[Message]]
   private var offset = 0L
 
@@ -37,11 +35,10 @@ final class Tester(
     val codec = graph.joins.get(table).orElse(graph.lookups.get(table))
       .getOrElse(throw new IllegalArgumentException(
         s"$table is not a Join/Lookup of ${graph.group}"))
-    val target =
-      if (graph.joins.contains(table))
-        joinTables.getOrElseUpdate(table, mutable.Map.empty)
-      else lookupTables.getOrElseUpdate(table, mutable.Map.empty)
-    target(key) = codec.asInstanceOf[Codec[Any]].encode(value)
+    val bytes = codec.asInstanceOf[Codec[Any]].encode(value)
+    if (graph.joins.contains(table))
+      joinTables.getOrElseUpdate(table, mutable.Map.empty)(key) = bytes
+    else lookups += table -> (lookups.getOrElse(table, Map.empty) + (key -> bytes))
   }
 
   /** Seed the group table directly (`tester/tester.go:318-326`). */
@@ -58,31 +55,27 @@ final class Tester(
     val bytes =
       if (value == null) null
       else graph.inputCodec(topic).asInstanceOf[Codec[Any]].encode(value)
-    consumeBytes(topic, key, bytes, headers)
+    consumeAll(Seq(Message(key, bytes, topic).copy(headers = headers)))
   }
 
-  /** Explicit work queue (not recursion) with a cascade cap mirroring
-    * BatchExecutor's maxLoopIterations: a non-converging loop callback
-    * fails with a clear diagnostic instead of a StackOverflow. */
-  private def consumeBytes(topic: String, key: String, bytes: Array[Byte],
-      headers: Map[String, Array[Byte]]): Unit = {
-    val work = mutable.Queue((topic, key, bytes, headers))
+  /** Explicit work queue (not recursion) seeded with `msgs`; loopbacks
+    * join its tail, capped at [[Tester.MaxLoopCascade]] like
+    * BatchExecutor's maxLoopIterations, so a non-converging loop callback
+    * fails with a clear diagnostic instead of running forever. */
+  private def consumeAll(msgs: Seq[Message]): Unit = {
+    import Tester.MaxLoopCascade
+    val work = mutable.Queue(msgs: _*)
     var cascades = 0
     while (work.nonEmpty) {
-      cascades += 1
-      require(cascades <= maxLoopCascade,
-        s"loopback cascade exceeded $maxLoopCascade messages for group " +
-          s"${graph.group} — non-converging loop callback?")
-      val (t0, k0, b0, h0) = work.dequeue()
+      val m = work.dequeue()
       offset += 1
-      val stateRow = state.get(k0).iterator.map(v =>
-        Tagged(k0, KindState, graph.tableTopic, v, 0, 0L, 0L, 0, null))
-      val joinRows = joinTables.iterator.flatMap { case (t, m) =>
-        m.get(k0).map(v => Tagged(k0, KindJoin, t, v, 0, 0L, 0L, 0, null))
+      val stateRow = state.get(m.key).iterator.map(v =>
+        Tagged(m.key, KindState, graph.tableTopic, v, 0, 0L, 0L, 0, null))
+      val joinRows = joinTables.iterator.flatMap { case (t, j) =>
+        j.get(m.key).map(v => Tagged(m.key, KindJoin, t, v, 0, 0L, 0L, 0, null))
       }
-      val msgRow = Iterator.single(Tagged(k0, KindMessage, t0, b0, 0,
-        offset, offset * 1000L, 0, h0))
-      val lookups = lookupTables.map { case (t, m) => t -> m.toMap }.toMap
+      val msgRow = Iterator.single(Tagged(m.key, KindMessage, m.topic, m.value,
+        0, offset, offset * 1000L, 0, m.headers))
       val out = new FoldIterator(graph, nilHandling, lookups,
         stateRow ++ joinRows ++ msgRow).toVector
       out.foreach { e =>
@@ -90,12 +83,13 @@ final class Tester(
           case SinkTable =>
             if (e.value == null) state.remove(e.key) else state(e.key) = e.value
           case SinkLoop =>
-            work.enqueue((graph.loopTopic, e.key, e.value,
-              Map.empty[String, Array[Byte]]))
+            cascades += 1
+            require(cascades <= MaxLoopCascade,
+              s"loopback cascade exceeded $MaxLoopCascade messages for group " +
+                s"${graph.group} — non-converging loop callback?")
+            work.enqueue(Message(e.key, e.value, graph.loopTopic))
           case t => queues.getOrElseUpdate(t, mutable.Buffer.empty) +=
-            Message(e.key, e.value, t, e.partition, offset,
-              graft.operators.BatchExecutor.microsTimestamp(e.tsMicros),
-              if (e.headers == null) Map.empty else e.headers)
+            e.toMessage(t)
         }
       }
     }
@@ -110,40 +104,22 @@ final class Tester(
 
   def tableKeys: Seq[String] = state.keys.toSeq
 
-  /** Run a named visitor over every key (`processor.go:954-996`). */
+  /** Run a named visitor over every key (`processor.go:954-996`): one
+    * visit message per key, consumed like any other message. */
   def visitAll(name: String, meta: Any = null): Long = {
-    val cb = graph.visitors.getOrElse(name,
-      throw new IllegalArgumentException(s"no visitor $name"))
+    require(graph.visitors.contains(name), s"no visitor $name")
     val metaBytes = Codecs.JsonValueCodec.encode(meta)
-    val keys = state.keys.toVector
-    keys.foreach { k =>
-      val rows = Iterator(
-        Tagged(k, KindState, graph.tableTopic, state(k), 0, 0L, 0L, 0, null),
-        Tagged(k, KindMessage, s"@visit:$name", metaBytes, 0, 0L, 0L, 0, null))
-      val lookups = lookupTables.map { case (t, m) => t -> m.toMap }.toMap
-      new FoldIterator(graph, nilHandling, lookups, rows).toVector.foreach {
-        e =>
-          if (e.sink == SinkTable) {
-            if (e.value == null) state.remove(e.key) else state(e.key) = e.value
-          }
-      }
-    }
-    keys.size.toLong
+    val visits = state.keys.toVector.map(Message(_, metaBytes, graph.visitTopic(name)))
+    consumeAll(visits)
+    visits.size.toLong
   }
 
   /** Sequential reader over an output topic's emitted messages. */
   final class QueueTracker(topic: String) {
     private var pos = 0
     def hwm: Int = queues.get(topic).map(_.size).getOrElse(0)
-    def next(): Option[(String, Any)] = {
-      val q = queues.getOrElse(topic, mutable.Buffer.empty)
-      if (pos >= q.size) None
-      else {
-        val m = q(pos); pos += 1
-        val codec = graph.outputs(topic)
-        Some((m.key, if (m.value == null) null else codec.decode(m.value)))
-      }
-    }
+    def next(): Option[(String, Any)] = nextMessage().map(m => (m.key,
+      if (m.value == null) null else graph.outputs(topic).decode(m.value)))
     def nextMessage(): Option[Message] = {
       val q = queues.getOrElse(topic, mutable.Buffer.empty)
       if (pos >= q.size) None else { val m = q(pos); pos += 1; Some(m) }
@@ -151,4 +127,9 @@ final class Tester(
   }
 
   def queueTracker(topic: String): QueueTracker = new QueueTracker(topic)
+}
+
+object Tester {
+  /** Most loopback messages one `consume` or `visitAll` may cascade. */
+  final val MaxLoopCascade = 1000
 }

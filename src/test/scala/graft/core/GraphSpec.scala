@@ -55,6 +55,23 @@ class GraphSpec extends AnyFunSuite {
     assertThrows[IllegalArgumentException](g.inputCodec("nope"))
   }
 
+  test("visit topics are internal and resolve to the visitor") {
+    val visit = GroupGraph("g", Nil).visitTopic("v")
+    assertThrows[IllegalArgumentException] {
+      GroupGraph.define("g")(Input(visit, StringCodec, noop),
+        VisitorEdge("v", noop))
+    }
+    assertThrows[IllegalArgumentException] {
+      GroupGraph.define("g")(Input("in", StringCodec, noop),
+        Output(visit, StringCodec), VisitorEdge("v", noop))
+    }
+    val visitor = ProcessCallback((_, _) => ())
+    val g = GroupGraph.define("g")(Input("in", StringCodec, noop),
+      VisitorEdge("v", visitor))
+    assert(g.inputCodec(visit) eq JsonValueCodec)
+    assert(g.callbackFor(visit) eq visitor)
+  }
+
   test("multi-topic Inputs edge expands") {
     val g = GroupGraph.define("g")(Inputs(Seq("a", "b"), StringCodec, noop))
     assert(g.inputs.map(_._1) == Seq("a", "b"))

@@ -112,4 +112,22 @@ class ViewSpec extends AnyFunSuite with SparkFixture with TempDirs {
       assert(probe.get("banana").map(new String(_)) == Some("2"))
     }
   }
+
+  test("bucketed persistence writes one file per bucket") {
+    import spark.implicits._
+    val dir = tempDir("graft_vbuck_files")
+    // Four writing partitions: without the repartition by key each of
+    // them would leave a file in every bucket.
+    val rows = spark.range(200).repartition(4)
+      .map(i => TableRow(s"k$i", i.toString.getBytes))
+    val bucketed = new View(rows)
+      .persistBucketed("viewspec_bucket_files", 8, dir.toString)
+    val dataFiles = dir.toFile.listFiles().map(_.getName)
+      .filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
+    assert(dataFiles.length == 8 &&
+      dataFiles.flatMap(BucketingUtils.getBucketId).toSet == (0 until 8).toSet,
+      dataFiles.toSeq)
+    assert(filesRead(new PlanProbe(bucketed.rows), "k42").size == 1)
+    assert(bucketed.get("k42").map(new String(_)) == Some("42"))
+  }
 }

@@ -21,6 +21,11 @@ class StreamExecutorSpec extends AnyFunSuite with SparkFixture with TempDirs {
     Message(key, value.getBytes("UTF-8"), "in", 0, offset,
       new Timestamp(offset * 1000), Map.empty)
 
+  /** A row of the `seg` join table's changelog (null value = tombstone). */
+  private def seg(key: String, value: String, offset: Long): Message =
+    Message(key, if (value == null) null else value.getBytes("UTF-8"),
+      "seg", 0, offset, new Timestamp(offset * 1000), Map.empty)
+
   test("state carries across micro-batches; changelog upserts per batch") {
     import spark.implicits._
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -92,20 +97,18 @@ class StreamExecutorSpec extends AnyFunSuite with SparkFixture with TempDirs {
       }),
       Join("seg", StringCodec),
       Persist(StringCodec))
-    def seg(key: String, value: String, offset: Long): Message =
-      Message(key, if (value == null) null else value.getBytes("UTF-8"),
-        "seg", 0, offset, new Timestamp(offset * 1000), Map.empty)
     val ms = MemoryStream[Message]
-    val out = new StreamExecutor(g).run(spark, ms.toDS(),
-      joinSnapshots = Map("seg" -> Map("k" -> "A".getBytes("UTF-8"))))
+    val out = new StreamExecutor(g).run(spark, ms.toDS())
     val q = out.filter(_.sink == SinkTable)
       .map(e => (e.key, new String(e.value, "UTF-8"))).toDF("key", "v")
       .writeStream.format("memory").queryName("sspecj")
       .outputMode("update").start()
     try {
-      // batch 1: snapshot value A gates msg@1; update to B at ts 2
-      // gates msg@3 within the SAME batch (ts-interleaved, not barrier)
-      ms.addData(msg("k", "m1", 1), seg("k", "B", 2), msg("k", "m2", 3))
+      // batch 1: the table's snapshot row A leads the stream and gates
+      // msg@1; update to B at ts 2 gates msg@3 within the SAME batch
+      // (ts-interleaved, not barrier)
+      ms.addData(seg("k", "A", 0), msg("k", "m1", 1), seg("k", "B", 2),
+        msg("k", "m2", 3))
       q.processAllAvailable()
       // batch 2: B persisted in keyed state, no seg rows at all
       ms.addData(msg("k", "m3", 4))
@@ -155,11 +158,12 @@ class StreamExecutorSpec extends AnyFunSuite with SparkFixture with TempDirs {
       Persist(StringCodec))
     val staging = tempDir("graft_lj").toString
     val results = tempDir("graft_lj_out").toString
+    // The join table's snapshot is staged as changelog rows ahead of
+    // the messages.
     spark.createDataset(Seq(
-      msg("a", "x", 1), msg("b", "y", 2)))
+      seg("a", "SEG", 0), msg("a", "x", 1), msg("b", "y", 2)))
       .write.mode("overwrite").parquet(staging)
-    new StreamExecutor(g).runWithLoopback(spark, staging, results,
-      joinSnapshots = Map("seg" -> Map("a" -> "SEG".getBytes("UTF-8"))))
+    new StreamExecutor(g).runWithLoopback(spark, staging, results)
     val table = spark.read.parquet(results)
       .where(org.apache.spark.sql.functions.col("sink") === SinkTable)
       .collect()
